@@ -307,6 +307,12 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     )
 
 
+# Materialized doc→token-set bytes per source-scan byte (the zstd text
+# ratio measured at sf0.1, r16): a property of the data encoding, not a
+# deployment setting.
+VERIFY_SET_BYTES_FACTOR = 3
+
+
 def _verify_build_hint(docs: DataFrame) -> str | None:
     """Join-strategy guard for corpus-sized verify joins (r16, VERDICT
     r15 item 7 / guide §3.1): Catalyst underestimates the doc→token-set
@@ -315,23 +321,31 @@ def _verify_build_hint(docs: DataFrame) -> str | None:
     estimate finally crosses the 10 MB threshold (~sf8) and
     self-corrects. Estimate the TRUE materialized size instead — the
     xxhash64 set arrays are ~8 bytes per token instance ≈ raw text
-    bytes ≈ ``DQE_VERIFY_SET_BYTES_FACTOR`` (default 3, the measured
-    zstd text ratio; sf0.1: 3 × ~24 MB scan ≈ 71 MB actual) times the
-    source scan size — and force SHUFFLE_HASH above
-    ``DQE_VERIFY_BROADCAST_CAP`` bytes (default 256 MB). At sf0.1 the
+    bytes ≈ ``VERIFY_SET_BYTES_FACTOR`` (the measured zstd text ratio;
+    sf0.1: 3 × ~24 MB scan ≈ 71 MB actual) times the source scan size
+    — and force SHUFFLE_HASH above ``DQE_VERIFY_BROADCAST_CAP`` bytes
+    (default 256 MB, a deployment's executor budget; a malformed or
+    non-positive value raises ValueError naming the knob). At sf0.1 the
     corrected estimate (~71 MB) stays under the cap, keeping the
     broadcast plan the r15 A/B measured fastest locally; past the cap a
     small-executor cluster gets the shuffle join instead of an OOM.
     Driver-side plan statistics only — no job."""
+    raw = os.environ.get("DQE_VERIFY_BROADCAST_CAP", str(256 * 1024**2))
+    try:
+        cap = int(raw)
+        if cap <= 0:
+            raise ValueError
+    except ValueError:
+        raise ValueError(
+            f"DQE_VERIFY_BROADCAST_CAP must be a positive byte count, got {raw!r}"
+        ) from None
     try:
         est = int(
             docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # pragma: no cover — py4j surface moved
         return None
-    factor = float(os.environ.get("DQE_VERIFY_SET_BYTES_FACTOR", "3"))
-    cap = int(os.environ.get("DQE_VERIFY_BROADCAST_CAP", str(256 * 1024**2)))
-    return "shuffle_hash" if est * factor > cap else None
+    return "shuffle_hash" if est * VERIFY_SET_BYTES_FACTOR > cap else None
 
 
 def exact_jaccard(

@@ -1102,15 +1102,12 @@ PQ_LLOYD_ITERS = 1
 
 
 def _pq_subvecs(
-    df: DataFrame,
-    dim: int,
-    m_sub: int = PQ_M_SUB,
-    keys: "tuple[str, ...]" = ("vec_id",),
+    df: DataFrame, dim: int, m_sub: int, keys: "tuple[str, ...]"
 ) -> DataFrame:
     """(*keys, m, sv): the per-subspace slices of ivec. dim must be
     divisible by m_sub (the caller probes it once — a scalar, like
-    suggest_n_cells' count()). ``keys`` generalizes the id columns —
-    the residual query side slices per (q_id, cell_id)."""
+    suggest_n_cells' count()). ``keys`` are the id columns — the
+    residual query side slices per (q_id, cell_id)."""
     sd = dim // m_sub
     return df.select(
         *keys,
@@ -1136,14 +1133,44 @@ def _pq_dist(sv_a, sv_b) -> "Column":
     )
 
 
-def _cent_mats(cent_rows):
-    """(cell_id, ivec) rows → (cell_ids asc, C float64, ||c||²)."""
+def _l2_mats(rows):
+    """(id, vec) rows → (ids asc, C float64, ||c||²): the operand of
+    :func:`_nearest_l2` for one centroid set — the coarse cells, or one
+    subspace's codebook. Rows sorted id-ascending, so first-argmin IS
+    the lowest-id tie-break."""
     import numpy as np
 
-    rows = sorted(cent_rows, key=lambda t: t[0])
-    ids = np.array([c for c, _ in rows], dtype=np.int64)
+    rows = sorted(rows, key=lambda t: t[0])
+    ids = np.array([i for i, _ in rows], dtype=np.int64)
     C = np.array([v for _, v in rows], dtype=np.float64)
     return ids, C, (C * C).sum(axis=1) if len(rows) else np.empty(0)
+
+
+def _nearest_l2(V, C, cn):
+    """Row index into ``C`` of each ``V`` row's nearest centroid by
+    squared L2, ties → lowest index — the ONE L2 argmin of the PQ
+    family: coarse assignment, codebook seeding, Lloyd training and
+    encoding all call it (the cosine :func:`_assign_to` is a different
+    metric).
+
+    EXACT, not approximate: comparing ||v−c||² across centroids is
+    comparing ||c||² − 2·v·c (||v||² is constant per row), and every
+    term is an INTEGER — fixed-point components < 2²³ keep every
+    product < 2⁴⁶ and every partial sum < 2⁵³, where float64 addition
+    is exact and order-independent — so dropping ||v||² cannot reorder
+    or un-tie anything, and the choice equals the long arithmetic the
+    oracles replay. ``C`` rows are id-ascending (:func:`_l2_mats`), so
+    ``np.argmin``'s first-minimum rule IS the historical (−dist, −id)
+    max_by tie-break. Rows are blocked so the (rows × centroids)
+    distance matrix stays ~32 MiB even at the 65536-cell cap."""
+    import numpy as np
+
+    block = max(16, (4 << 20) // max(1, len(C)))
+    best = np.empty(len(V), dtype=np.int64)
+    for i0 in range(0, len(V), block):
+        d = cn[None, :] - 2.0 * (V[i0:i0 + block].astype(np.float64) @ C.T)
+        best[i0:i0 + block] = np.argmin(d, axis=1)
+    return best
 
 
 def _collect_low_rows(base: DataFrame, k: int) -> list:
@@ -1182,21 +1209,53 @@ def _pq_seed_rows(
     ]
     out = []
     sd = dim // m_sub
-    if cent_rows is not None and rows:
-        ids, C, cn = _cent_mats(cent_rows)
+    if cent_rows is not None:
+        _, C, cn = _l2_mats(cent_rows)
     for vid, vv in rows:
         v = np.array(vv, dtype=np.int64)
         if cent_rows is not None:
-            if not len(ids):
+            if not len(C):
                 continue  # no centroids → no assignment → no seed rows
-            d = cn - 2.0 * (C @ v.astype(np.float64))
-            v = v - np.array(
-                C[int(np.argmin(d))], dtype=np.int64
-            )
+            v = v - C[_nearest_l2(v[None, :], C, cn)[0]].astype(np.int64)
         code = int(vid) - seed_lo
         for m in range(m_sub):
             out.append((m, code, [int(x) for x in v[m * sd:(m + 1) * sd]]))
     return out
+
+
+def _pq_kernel(dim: int, m_sub: int, cent_rows, cb_rows, residual: bool):
+    """The per-batch kernel body shared by encoding and Lloyd training:
+    ``encode(Vi) -> (cell_ids, R, codes)`` for an int64 (rows × dim)
+    batch — ``cell_ids`` each row's nearest coarse cell (None when
+    ``cent_rows`` is None: plain PQ), ``R`` the vectors the codebooks
+    quantize (x − c(x) when ``residual``; exact int64), and ``codes``
+    {m: (code_ids asc, nearest-code column index per row)}. Returns
+    None when nothing can be encoded (no centroids, or codebooks not
+    covering all m_sub subspaces)."""
+    import numpy as np
+
+    cents = None if cent_rows is None else _l2_mats(cent_rows)
+    by_m: dict[int, list] = {}
+    for m, code_id, c_sv in cb_rows:
+        by_m.setdefault(m, []).append((code_id, c_sv))
+    mats = {m: _l2_mats(lst) for m, lst in by_m.items()}
+    if len(mats) != m_sub or (cents is not None and not len(cents[0])):
+        return None
+    sd = dim // m_sub
+
+    def encode(Vi):
+        cell_ids = None
+        if cents is not None:
+            best = _nearest_l2(Vi, cents[1], cents[2])
+            cell_ids = cents[0][best]
+            if residual:
+                Vi = Vi - cents[1][best].astype(np.int64)
+        return cell_ids, Vi, {
+            m: (ids, _nearest_l2(Vi[:, m * sd:(m + 1) * sd], Cm, cbn))
+            for m, (ids, Cm, cbn) in mats.items()
+        }
+
+    return encode
 
 
 def _ivfpq_codes(
@@ -1211,53 +1270,32 @@ def _ivfpq_codes(
     residual) PQ encoding FUSED into one Arrow kernel pass over the
     corpus — the relation ``codes ⋈ assigned`` used to build with two
     mapInPandas stages and a corpus-sized sort-merge join (2 exchanges
-    + 2 sorts); here it is one Python stage and no exchange. Exactness
-    per :func:`_pq_assign`: every distance term is an integer < 2⁵³ in
-    float64, first-argmin over ascending ids reproduces the lowest-id
-    tie-breaks, and the residual subtraction is exact int64."""
+    + 2 sorts); here it is one Python stage and no exchange.
+    ``cent_rows=None`` is plain PQ: no coarse quantizer, and the
+    relation is (vec_id, m, code_id). Exactness per
+    :func:`_nearest_l2`; the residual subtraction is exact int64."""
     import numpy as np
     import pandas as pd
 
-    cell_ids, C, cn = _cent_mats(cent_rows)
-    Ci = C.astype(np.int64) if len(cell_ids) else None
-    mats = _pq_cb_mats(cb_rows)
-    sd = dim // m_sub
-    schema = "vec_id long, cell_id long, m int, code_id long"
+    encode = _pq_kernel(dim, m_sub, cent_rows, cb_rows, residual)
+    cell = "" if cent_rows is None else "cell_id long, "
+    schema = f"vec_id long, {cell}m int, code_id long"
 
     def _encode(batches):
-        empty = pd.DataFrame(
-            {
-                "vec_id": pd.Series(dtype="int64"),
-                "cell_id": pd.Series(dtype="int64"),
-                "m": pd.Series(dtype="int32"),
-                "code_id": pd.Series(dtype="int64"),
-            }
-        )
         for pdf in batches:
-            if pdf.empty or not len(cell_ids) or len(mats) != m_sub:
-                yield empty
+            if pdf.empty or encode is None:
                 continue
             Vi = np.stack(pdf["ivec"].to_numpy()).astype(np.int64)
-            d = cn[None, :] - 2.0 * (Vi.astype(np.float64) @ C.T)
-            best = np.argmin(d, axis=1)
-            R = Vi - Ci[best] if residual else Vi
-            n = len(Vi)
-            codes = np.empty((n, m_sub), dtype=np.int64)
-            for m in range(m_sub):
-                ids, Cm, cbn = mats[m]
-                Sm = R[:, m * sd:(m + 1) * sd].astype(np.float64)
-                dm = cbn[None, :] - 2.0 * (Sm @ Cm.T)
-                codes[:, m] = ids[np.argmin(dm, axis=1)]
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), m_sub),
-                    "cell_id": np.repeat(cell_ids[best], m_sub),
-                    "m": np.tile(
-                        np.arange(m_sub, dtype=np.int32), n
-                    ),
-                    "code_id": codes.reshape(-1),
-                }
-            )
+            cell_ids, _, codes = encode(Vi)
+            out = {"vec_id": np.repeat(pdf["vec_id"].to_numpy(), m_sub)}
+            if cell_ids is not None:
+                out["cell_id"] = np.repeat(cell_ids, m_sub)
+            out["m"] = np.tile(np.arange(m_sub, dtype=np.int32), len(Vi))
+            out["code_id"] = np.stack(
+                [ids[best] for ids, best in (codes[m] for m in range(m_sub))],
+                axis=1,
+            ).reshape(-1)
+            yield pd.DataFrame(out)
 
     return base.select("vec_id", "ivec").mapInPandas(_encode, schema)
 
@@ -1272,35 +1310,26 @@ def _pq_train_partials_base(
     """One Lloyd step's sufficient statistics straight from the PACKED
     corpus: the kernel assigns each vector's (residual when
     ``cent_rows`` is given) subvectors to their nearest codes — the
-    :func:`_pq_assign` argmin bit-identically — and emits per-(m, code)
+    encoding argmin bit-identically — and emits per-(m, code)
     component sums + counts, ≤ m_sub × k_codes rows per task. One
     corpus-scan job, no explode relation, no shuffle; per-task sums
     are exact int64, the caller merges in unbounded Python ints."""
     import numpy as np
     import pandas as pd
 
-    if cent_rows is not None:
-        cell_ids, C, cn = _cent_mats(cent_rows)
-        Ci = C.astype(np.int64) if len(cell_ids) else None
-    mats = _pq_cb_mats(cb_rows)
+    encode = _pq_kernel(dim, m_sub, cent_rows, cb_rows, residual=True)
     sd = dim // m_sub
     schema = "m int, code_id long, s_sv array<long>, c long"
 
     def _part(batches):
         acc: dict = {}
         for pdf in batches:
-            if pdf.empty or not mats:
-                continue
-            if cent_rows is not None and not len(cell_ids):
+            if pdf.empty or encode is None:
                 continue
             Vi = np.stack(pdf["ivec"].to_numpy()).astype(np.int64)
-            if cent_rows is not None:
-                d = cn[None, :] - 2.0 * (Vi.astype(np.float64) @ C.T)
-                Vi = Vi - Ci[np.argmin(d, axis=1)]
-            for m, (ids, Cm, cbn) in mats.items():
-                Sm = Vi[:, m * sd:(m + 1) * sd]
-                dm = cbn[None, :] - 2.0 * (Sm.astype(np.float64) @ Cm.T)
-                best = np.argmin(dm, axis=1)
+            _, R, codes = encode(Vi)
+            for m, (ids, best) in codes.items():
+                Sm = R[:, m * sd:(m + 1) * sd]
                 for bi in np.unique(best):
                     rmask = best == bi
                     key = (m, int(ids[bi]))
@@ -1352,11 +1381,21 @@ def _pq_codebooks_rows(
     seeds: list,
     cent_rows=None,
 ) -> list:
-    """Driver-state codebook training over the packed corpus (see
-    :func:`pq_codebooks` — same arithmetic, same seeds, same carry;
-    this variant skips the subvector explode relation and fuses the
-    residual shift into the kernels). ``seeds`` comes from
-    :func:`_pq_seed_rows`. Returns [(m, code_id, c_sv)]."""
+    """Per-subspace codebooks [(m, code_id, c_sv)]: seeds (from
+    :func:`_pq_seed_rows` — the lowest-vec_id window, deterministic and
+    oracle-replayable, the ivf_centroids 'lowest_id' discipline)
+    refined by exact-integer Lloyd steps over squared L2, on the
+    residuals x − c(x) when ``cent_rows`` is given. Empty codes keep
+    their previous centroid (the empty-cell carry from ivf_centroids).
+
+    The codebook is DRIVER-BOUNDED by construction (≤ m_sub × k_codes
+    rows of subvector-length ints — 4 KiB at the default (8, 32)
+    knobs, ~0.5 MiB at the production (16, 256)), so the Lloyd loop
+    keeps it as driver state: per iteration ONE corpus-scan job
+    computes assignment + per-code sufficient statistics inside the
+    kernel (:func:`_pq_train_partials_base`), and the mean/carry
+    arithmetic merges the per-task partials in exact unbounded Python
+    ints."""
     cb: dict = {(m, c): sv for m, c, sv in seeds}
     for _ in range(lloyd_iters):
         cb_rows = [(m, c, sv) for (m, c), sv in cb.items()]
@@ -1364,6 +1403,57 @@ def _pq_codebooks_rows(
             cb, _pq_train_partials_base(base, dim, m_sub, cent_rows, cb_rows).collect()
         )
     return [(int(m), int(c), sv) for (m, c), sv in sorted(cb.items())]
+
+
+_CENTS_SCHEMA = "cell_id long, c_ivec array<long>"
+_CB_SCHEMA = "m int, code_id long, c_sv array<long>"
+
+
+def _ivfpq_build(
+    emb: DataFrame,
+    n_cells: "int | None",
+    m_sub: int,
+    k_codes: int,
+    lloyd_iters: int,
+    residual: bool,
+):
+    """The one PQ / IVF-PQ index build: returns ``(base, dim, low_rows,
+    cent_rows, cb_rows)`` — the spread, dim-guarded corpus scan, the
+    collected lowest-id vectors, the coarse centroids as driver rows
+    (None when ``n_cells`` is None: plain PQ), and the trained
+    codebooks as driver rows.
+
+    The index relations are driver-bounded, so they are materialized
+    ONCE as driver rows (r15): one lowest-K collect serves the dim
+    probe, centroid seeds (true lowest-k — orderBy + limit, never
+    ``filter(vec_id < n_cells)``, which under-seeds to an EMPTY
+    quantizer on non-dense ids) AND codebook seeds; training runs one
+    kernel job per Lloyd step. Residual seeds skip [0, n_cells): those
+    ids ARE the coarse centroids, so their residuals are all-zero —
+    k_codes identical zero seeds would collapse Lloyd to one effective
+    code. The raw scan is spread first (dedup._spread_narrow_scan; the
+    r9 one-split lesson): a compact embeddings file arrives in 1-2
+    splits, which would single-thread the kernels."""
+    from distributed_query_engine_spark.operators.dedup import (
+        _spread_narrow_scan,
+    )
+
+    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
+        "vec_id", "ivec"
+    )
+    seed_lo = n_cells if residual else 0
+    low_rows = _collect_low_rows(narrow, max(n_cells or 0, seed_lo + k_codes))
+    if not low_rows:
+        raise ValueError("PQ: empty corpus — no vectors to index")
+    dim = len(low_rows[0][1])
+    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
+    cent_rows = None if n_cells is None else low_rows[:n_cells]
+    res_cents = cent_rows if residual else None
+    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, seed_lo, res_cents)
+    cb_rows = _pq_codebooks_rows(
+        base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=res_cents
+    )
+    return base, dim, low_rows, cent_rows, cb_rows
 
 
 def _panel_probe_qdt(
@@ -1418,198 +1508,6 @@ def _panel_probe_qdt(
                 for code, c_sv in codes:
                     qdt_rows.append((qid, m, code, d2(qsv, c_sv)))
     return probe_rows, qdt_rows
-
-
-def _pq_cb_mats(cb_rows):
-    """(m, code_id, c_sv) rows → {m: (code_ids asc, C float64 matrix,
-    ||c||² vector)} for the Arrow assign kernels. Code columns sorted
-    code-ascending so first-argmin IS the lowest-code tie-break."""
-    import numpy as np
-
-    by_m: dict[int, list] = {}
-    for m, code_id, c_sv in cb_rows:
-        by_m.setdefault(m, []).append((code_id, c_sv))
-    mats = {}
-    for m, lst in by_m.items():
-        lst.sort(key=lambda t: t[0])
-        ids = np.array([c for c, _ in lst], dtype=np.int64)
-        Cm = np.array([v for _, v in lst], dtype=np.float64)
-        mats[m] = (ids, Cm, (Cm * Cm).sum(axis=1))
-    return mats
-
-
-def _pq_train_partials(subs: DataFrame, cb_rows) -> DataFrame:
-    """One Lloyd step's sufficient statistics, computed IN the assign
-    kernel: per task, assign every (vec_id, m, sv) row to its nearest
-    code (the :func:`_pq_assign` argmin, bit-identically) and emit the
-    per-(m, code) component sums + counts — ≤ m_sub × k_codes rows per
-    task instead of a corpus-sized assignment relation. Per-task sums
-    are exact int64 (components < 2²³ × task rows); the caller merges
-    tasks in unbounded Python ints. No shuffle at all — the old form
-    exchanged twice (per-(m,code,d) partial agg + the array rebuild)."""
-    import numpy as np
-    import pandas as pd
-
-    mats = _pq_cb_mats(cb_rows)
-    schema = "m int, code_id long, s_sv array<long>, c long"
-
-    def _part(batches):
-        acc: dict = {}
-        for pdf in batches:
-            if pdf.empty or not mats:
-                continue
-            mcol = pdf["m"].to_numpy()
-            svcol = pdf["sv"].to_numpy()
-            for m, (ids, Cm, cn) in mats.items():
-                mask = mcol == m
-                if not mask.any():
-                    continue
-                Si = np.stack(svcol[mask]).astype(np.int64)
-                d = cn[None, :] - 2.0 * (Si.astype(np.float64) @ Cm.T)
-                best = np.argmin(d, axis=1)
-                for bi in np.unique(best):
-                    rmask = best == bi
-                    key = (m, int(ids[bi]))
-                    s = Si[rmask].sum(axis=0)
-                    if key in acc:
-                        acc[key][0] += s
-                        acc[key][1] += int(rmask.sum())
-                    else:
-                        acc[key] = [s, int(rmask.sum())]
-        if acc:
-            yield pd.DataFrame(
-                [
-                    {"m": m, "code_id": c, "s_sv": s.tolist(), "c": n}
-                    for (m, c), (s, n) in acc.items()
-                ]
-            )
-
-    return subs.mapInPandas(_part, schema)
-
-
-def _pq_assign(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """Nearest-code assignment per (vec_id, m): argmin squared-L2 with
-    ties → lowest code_id.
-
-    Execution (r15 optimization round): one Arrow ``mapInPandas`` scan
-    of the subvector relation against the collected codebook matrices —
-    DRIVER-BOUNDED by construction (≤ m_sub × k_codes rows of
-    subvector-length ints; 4 KiB at the default (8, 32) knobs). The
-    prior declarative form (broadcast join + partial-aggregable max_by)
-    was plan-shaped right but paid an interpreted higher-order-function
-    distance per (vector × subspace × code) — |corpus|·M·K · ~10-25 µs,
-    the dominant term of every PQ build (measured: the bench ivfpq
-    line spent ~2 s of its 3.4 s constructing/training codebooks at
-    sf0.1) — plus a |corpus|·M-row exchange for the argmin that the
-    kernel removes outright (guide §2.4/§4.2).
-
-    EXACT, not approximate (the :func:`_assign_to` proof): comparing
-    ||s−c||² across codes is comparing −2·s·c + ||c||² (the ||s||² term
-    is constant per row, and all three terms are INTEGERS — fixed-point
-    components < 2²³ keep every product < 2⁴⁶ and every partial sum
-    < 2⁵³, where float64 addition is exact and order-independent — so
-    dropping it cannot reorder or un-tie anything). Codebook columns
-    are sorted code-ascending, so ``np.argmin``'s first-minimum rule IS
-    the historical (−dist, −code_id) max_by tie-break. Rows whose ``m``
-    has no codebook entry drop, preserving the old inner-join
-    semantics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    rows = cb.select("m", "code_id", "c_sv").collect()
-    mats = _pq_cb_mats([(r["m"], r["code_id"], r["c_sv"]) for r in rows])
-
-    out_schema = T.StructType(
-        list(subs.schema.fields) + [T.StructField("code_id", T.LongType())]
-    )
-
-    def _code(batches):
-        empty = None
-        for pdf in batches:
-            if empty is None:
-                empty = pdf.iloc[0:0].assign(code_id=pd.Series(dtype="int64"))
-            if pdf.empty or not mats:
-                yield empty
-                continue
-            mcol = pdf["m"].to_numpy()
-            parts = []
-            for m, (ids, Cm, cn) in mats.items():
-                mask = mcol == m
-                if not mask.any():
-                    continue
-                Sm = np.stack(pdf["sv"].to_numpy()[mask]).astype(np.float64)
-                d = cn[None, :] - 2.0 * (Sm @ Cm.T)
-                parts.append(
-                    pdf.loc[mask].assign(code_id=ids[np.argmin(d, axis=1)])
-                )
-            yield pd.concat(parts) if parts else empty
-
-    return subs.mapInPandas(_code, out_schema).select(
-        "vec_id", "m", "sv", "code_id"
-    )
-
-
-def pq_codebooks(
-    subs: DataFrame,
-    k_codes: int = PQ_K_CODES,
-    lloyd_iters: int = PQ_LLOYD_ITERS,
-    seed_lo: int = 0,
-) -> DataFrame:
-    """Per-subspace codebooks (m, code_id, c_sv): seeds = the k_codes
-    lowest-vec_id vectors' subvectors (deterministic, oracle-
-    replayable — the ivf_centroids 'lowest_id' discipline), refined by
-    exact-integer Lloyd steps over squared L2. All M_SUB codebooks
-    train in ONE relation keyed by m — the subspace is a grouping
-    column, so adding subspaces adds rows to broadcast-sized relations,
-    never stages. Empty codes keep their previous centroid (the
-    empty-cell carry from ivf_centroids). ``seed_lo`` offsets the seed
-    id window to [seed_lo, seed_lo + k_codes): the RESIDUAL variant
-    must skip the n_cells lowest ids, whose residuals are all-zero
-    (each IS its own coarse centroid) and would collapse the seed set."""
-    # r15 optimization round: the codebook is DRIVER-BOUNDED by
-    # construction (≤ m_sub × k_codes rows of subvector-length ints —
-    # 4 KiB at the default (8, 32) knobs, ~0.5 MiB at the production
-    # (16, 256)), so the Lloyd loop keeps it as driver state — exactly
-    # the centroid-matrix discipline of the Arrow kernels. Per
-    # iteration ONE corpus-scan job computes assignment + per-code
-    # sufficient statistics inside the kernel (_pq_train_partials);
-    # the mean/carry arithmetic merges the per-task partials in exact
-    # unbounded Python ints. The old per-iteration DAG — broadcast
-    # cb + interpreted HOF argmin + |corpus|·M exchange + two more
-    # shuffles for the means + an anti-join carry that RESCANNED the
-    # corpus + an eager localCheckpoint — measured 1.7-1.9 s of the
-    # 3.4 s bench ivfpq line at sf0.1; this form is two small jobs.
-    # Arithmetic is unchanged bit-for-bit: same argmin (kernel proof),
-    # same sign-aware round-half-away mean, same empty-code carry.
-    spark = subs.sparkSession
-    seed_rows = (
-        subs.filter(
-            (F.col("vec_id") >= seed_lo) & (F.col("vec_id") < seed_lo + k_codes)
-        )
-        .select(
-            "m",
-            (F.col("vec_id") - seed_lo).alias("code_id"),
-            F.col("sv").alias("c_sv"),
-        )
-        .collect()
-    )
-    cb: dict = {
-        (r["m"], r["code_id"]): [int(x) for x in r["c_sv"]] for r in seed_rows
-    }
-    for _ in range(lloyd_iters):
-        cb_rows = [(m, c, sv) for (m, c), sv in cb.items()]
-        _lloyd_merge(cb, _pq_train_partials(subs, cb_rows).collect())
-    return spark.createDataFrame(
-        [(int(m), int(c), sv) for (m, c), sv in sorted(cb.items())],
-        "m int, code_id long, c_sv array<long>",
-    )
-
-
-def pq_encode(subs: DataFrame, cb: DataFrame) -> DataFrame:
-    """(vec_id, m, code_id): the compressed corpus — M_SUB small ints
-    per vector, the only per-vector state the ADC scan reads."""
-    return _pq_assign(subs, cb).select("vec_id", "m", "code_id")
 
 
 def _probe_dim_strict(
@@ -1713,48 +1611,104 @@ def topk_l2_pq(
     K_CODES tiny rows, broadcast), and rank candidates by the
     asymmetric-distance sum Σ_m dtable[m, code_m(v)] — approximate
     (quantization error) but fully deterministic, hence oracle-exact.
+    It is :func:`topk_l2_ivfpq` without the coarse quantizer: the same
+    build, encoding kernel and ADC scan, over every vector's codes.
 
     100 TB shape: the scan side is the CODES relation (M_SUB ints per
     vector — memory-resident at corpus scale, the point of PQ); the
     distance table is query-local and broadcast; the per-(q, vec) sum
     partial-aggregates map-side. Raw vectors are touched only at
     train/encode time (and would be re-ranked from disk for the final
-    top-k in a full IVF-PQ deployment). The raw scan is spread first
-    (dedup._spread_narrow_scan; the r9 one-split lesson): a compact
-    embeddings file arrives in 1-2 splits, which would single-thread
-    the subvector/assignment fan-outs."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
+    top-k in a full IVF-PQ deployment)."""
+    return topk_l2_ivfpq(
+        emb, query_ids, k, None, None, m_sub, k_codes, lloyd_iters
     )
 
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
-    dim, narrow = _probe_dim_strict(narrow, m_sub)
-    base = _spread_narrow_scan(narrow, key="vec_id")
-    subs = _pq_subvecs(base, dim, m_sub)
-    cb = pq_codebooks(subs, k_codes, lloyd_iters)
-    codes = pq_encode(subs, cb)
+
+def _probe_qdt(
+    q: DataFrame,
+    cents: "DataFrame | None",
+    cb: DataFrame,
+    dim: int,
+    m_sub: int,
+    n_probe: "int | None",
+    residual: bool,
+) -> "tuple[DataFrame | None, DataFrame]":
+    """In-plan probe sets and ADC distance tables for the query panel
+    ``q`` (q_id, q_ivec): each query probes its ``n_probe`` nearest
+    cells by exact-integer squared L2 (ties → lowest cell id), and its
+    table is dist[m, code] = ||q[m] − codebook[m, code]||². With
+    ``residual`` the table is per (query, probed cell): the query is
+    re-expressed in each probed cell's frame (q − c_cell) before the
+    lookup. ``cents=None`` is plain PQ: no probes, one table per query.
+    Every relation is |q|·n_probe·M·K tiny rows, broadcast by
+    :func:`_adc_topk`. Returns (probes, q_dt)."""
+    probes = None
+    if cents is not None:
+        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
+        probes = (
+            q.crossJoin(F.broadcast(cents))
+            .select(
+                "q_id",
+                "cell_id",
+                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
+            )
+            .withColumn("prn", F.row_number().over(pw))
+            .filter(F.col("prn") <= n_probe)
+            .select("q_id", "cell_id")
+        )
+    if residual:
+        keys = ("q_id", "cell_id")
+        qv = (
+            probes.join(q, "q_id")
+            .join(F.broadcast(cents), "cell_id")
+            .select(
+                *keys,
+                F.zip_with("q_ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
+            )
+        )
+    else:
+        keys = ("q_id",)
+        qv = q.select("q_id", F.col("q_ivec").alias("ivec"))
     q_dt = (
-        subs.filter(F.col("vec_id").isin(query_ids))
-        .withColumnRenamed("vec_id", "q_id")
+        _pq_subvecs(qv, dim, m_sub, keys=keys)
         .withColumnRenamed("sv", "q_sv")
         .join(F.broadcast(cb), "m")
         .select(
-            "q_id",
+            *keys,
             "m",
             "code_id",
             _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
         )
     )
+    return probes, q_dt
+
+
+def _adc_topk(
+    codes: DataFrame,
+    probes: "DataFrame | None",
+    q_dt: DataFrame,
+    k: "int | None",
+) -> DataFrame:
+    """The ADC scan: the codes relation (restricted to probed cells
+    when ``probes`` is given — dynamic partition pruning on a stored
+    index) joins the broadcast distance tables on every key they share
+    (m, code_id, plus q_id / cell_id when probed / residual), and each
+    candidate's distance is the per-(q, vec) partial-aggregated sum.
+    ``k=None`` returns that scored relation (the recall/cost
+    instrumentation path, the ivf_scored pattern); otherwise the
+    per-query top-k by (adc_dist, vec_id)."""
+    if probes is not None:
+        codes = codes.join(F.broadcast(probes), "cell_id")
     scored = (
-        codes.join(F.broadcast(q_dt), ["m", "code_id"])
+        codes.join(
+            F.broadcast(q_dt), [c for c in q_dt.columns if c in codes.columns]
+        )
         .filter(F.col("vec_id") != F.col("q_id"))
         .groupBy("q_id", "vec_id")
         .agg(F.sum("dist").alias("adc_dist"))
     )
     if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
         return scored
     w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
     return (
@@ -1764,98 +1718,16 @@ def topk_l2_pq(
     )
 
 
-_CENTS_SCHEMA = "cell_id long, c_ivec array<long>"
-
-
-def _collect_cents_rows(base: DataFrame, n_cells: int) -> list:
-    """The n_cells lowest-vec_id vectors as driver rows
-    [(cell_id, ivec), ...]. True lowest-k seeding (orderBy + limit
-    compiles to TakeOrderedAndProject, never `filter(vec_id <
-    n_cells)`, which under-seeds to an EMPTY quantizer on non-dense
-    ids; identical on the canonical table, so the pinned
-    vec_id<n_cells oracles hold). Collected once (r15 optimization
-    round): the centroid relation is driver-bounded, and the previous
-    lazy form re-ran the corpus top-k for EVERY consumer — the assign
-    kernel, each broadcast join, and the index write each triggered
-    their own scan job."""
-    return [
-        (r["cell_id"], [int(x) for x in r["c_ivec"]])
-        for r in base.orderBy("vec_id")
-        .limit(n_cells)
-        .select(F.col("vec_id").alias("cell_id"), F.col("ivec").alias("c_ivec"))
-        .collect()
-    ]
-
-
-def _assign_to_l2(base: DataFrame, cents: DataFrame) -> DataFrame:
-    """(vec_id, cell_id): nearest-centroid assignment by EXACT-INTEGER
-    squared L2 (ties → lowest cell id) — the IVF-PQ variant of
-    :func:`_assign_to` (whose cosine needs a float divide; L2 keeps the
-    whole IVF-PQ pipeline integer-pure).
-
-    Execution (r15 optimization round): the same Arrow ``mapInPandas``
-    blocked-matmul kernel as :func:`_assign_to` — centroids are
-    driver-bounded (≤ n_cells rows), the corpus scans once, no exchange
-    at all (the old crossJoin + max_by form exchanged ~|corpus| rows and
-    paid an interpreted HOF distance per vector × cell). Exactness is
-    the :func:`_pq_assign` argument: −2·v·c + ||c||² is an exact
-    integer in float64 at our fixed-point magnitudes (components < 2²³,
-    128-dim partial sums < 2⁵³), and ``np.argmin`` over cell-ascending
-    columns reproduces the (−dist, −cell_id) tie-break."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    crows = cents.select("cell_id", "c_ivec").collect()
-    crows.sort(key=lambda r: r["cell_id"])
-    cell_ids = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    C = np.array([r["c_ivec"] for r in crows], dtype=np.float64)
-    cn = (C * C).sum(axis=1) if len(crows) else np.empty(0)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("cell_id", T.LongType()),
-        ]
-    )
-
-    def _nearest_l2(batches):
-        for pdf in batches:
-            if pdf.empty or not len(cell_ids):
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pd.Series(dtype="int64"),
-                        "cell_id": pd.Series(dtype="int64"),
-                    }
-                )
-                continue
-            V = np.stack(pdf["ivec"].to_numpy()).astype(np.float64)
-            # block rows so the (rows x n_cells) distance matrix stays
-            # ~32 MiB even at the 65536-cell cap
-            block = max(16, (4 << 20) // max(1, len(cell_ids)))
-            best = np.empty(len(V), dtype=np.int64)
-            for i0 in range(0, len(V), block):
-                d = cn[None, :] - 2.0 * (V[i0:i0 + block] @ C.T)
-                best[i0:i0 + block] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(),
-                    "cell_id": cell_ids[best],
-                }
-            )
-
-    return base.select("vec_id", "ivec").mapInPandas(_nearest_l2, out_schema)
-
-
 def topk_l2_ivfpq(
     emb: DataFrame,
     query_ids: list[int],
     k: int | None = 5,
-    n_cells: int = N_CELLS,
-    n_probe: int = N_PROBE,
+    n_cells: "int | None" = N_CELLS,
+    n_probe: "int | None" = N_PROBE,
     m_sub: int = PQ_M_SUB,
     k_codes: int = PQ_K_CODES,
     lloyd_iters: int = PQ_LLOYD_ITERS,
+    residual: bool = False,
 ) -> DataFrame:
     """IVF-PQ — the composed production vector-store design (FAISS's
     default at scale): IVF bounds WHICH vectors are scanned (each query
@@ -1864,224 +1736,68 @@ def topk_l2_ivfpq(
     ranked by the ADC sum over their codes, never their raw
     embeddings). Both stages share the lowest-id/Lloyd determinism, so
     the full two-level index + search replays exactly in SQL.
+    ``n_cells=None`` drops the coarse quantizer (plain PQ,
+    :func:`topk_l2_pq`).
 
-    100 TB shape: centroids and codebooks broadcast; the scan side of
-    search is codes ⋈ cell-assignment — a few ints per vector; the
-    only corpus-sized shuffles are the two partial-aggregated argmin
-    assignments at BUILD time. Search cost = n_probe/n_cells of the
-    codes relation per query. Raw scan spread like topk_l2_pq."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
+    ``residual=True`` is what FAISS IndexIVFPQ actually quantizes: each
+    vector's code is trained/assigned on x − c(x) (its offset from the
+    coarse centroid), not on x itself. On structured corpora this is
+    the difference between a working index and a collapsed one:
+    raw-vector codebooks spend their K codes separating the corpus's
+    dominant (inter-cluster) variance, leaving nothing to rank the
+    WITHIN-cluster neighbors a top-k query actually needs — measured on
+    the planted-cluster slice (llm_similarity_pq_recall_clustered: raw
+    IVF-PQ 0.04 recall@5 vs residual's, PLANS.md r11). The ADC table
+    becomes per-(query, probed cell) — still |q|·n_probe·M·K tiny
+    broadcast rows.
 
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
+    100 TB shape: centroids, codebooks, probe sets and distance tables
+    broadcast; the search scan is the codes relation (a few ints per
+    vector, carrying its cell_id out of the one fused assign + encode
+    kernel pass, :func:`_ivfpq_codes`); no corpus-sized shuffle at
+    build or search. Search cost = n_probe/n_cells of the codes
+    relation per query."""
+    base, dim, low_rows, cent_rows, cb_rows = _ivfpq_build(
+        emb, n_cells, m_sub, k_codes, lloyd_iters, residual
     )
-    spark = narrow.sparkSession
-    # r15 optimization round: the index relations (centroids,
-    # codebooks) are driver-bounded, so they are materialized ONCE as
-    # driver rows + local relations — one lowest-K collect serves the
-    # dim probe, centroid seeds, AND codebook seeds — training runs as
-    # one kernel job per Lloyd step, and assignment + encoding FUSE
-    # into a single Arrow pass (_ivfpq_codes), which also deletes the
-    # corpus-sized codes ⋈ assigned sort-merge join (2 exchanges + 2
-    # sorts). Bench ivfpq at sf0.1: 3.76 s → see OPTIMIZATION_r15.md;
-    # results bit-identical (argmin/tie-break proofs on the kernels).
-    low_rows = _collect_low_rows(narrow, max(n_cells, k_codes))
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, 0)
-    cb_rows = _pq_codebooks_rows(base, dim, m_sub, k_codes, lloyd_iters, seeds)
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
-    enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=False)
+    spark = base.sparkSession
     low_map = dict(low_rows)
-    if all(qid in low_map for qid in query_ids):
+    if cent_rows is not None and all(qid in low_map for qid in query_ids):
         # panel vectors already collected → probes + distance tables
         # are driver-computed local relations (no extra scan branches
-        # or broadcast-build jobs in the search plan)
+        # or broadcast-build jobs in the search plan). Kept on
+        # measurement (perfbench llm_batch --trace 1, sf0.01, 4-core
+        # VM, 11 alternating runs a side): llm_similarity_ivfpq median
+        # 2.69 s vs 3.28 s in-plan (quartile spread 0.48 s), 7 vs 10
+        # exec jobs.
         probe_rows, qdt_rows = _panel_probe_qdt(
             low_map, query_ids, cent_rows, cb_rows, dim, m_sub, n_probe,
-            residual=False,
+            residual,
         )
         probes = spark.createDataFrame(probe_rows, "q_id long, cell_id long")
+        cell = "cell_id long, " if residual else ""
         q_dt = spark.createDataFrame(
-            qdt_rows, "q_id long, m int, code_id long, dist long"
+            qdt_rows, f"q_id long, {cell}m int, code_id long, dist long"
         )
     else:
+        cents = (
+            None if cent_rows is None
+            else spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
+        )
         q = base.filter(F.col("vec_id").isin(query_ids)).select(
             F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
         )
-        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "q_id",
-                "cell_id",
-                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-            )
-            .withColumn("prn", F.row_number().over(pw))
-            .filter(F.col("prn") <= n_probe)
-            .select("q_id", "cell_id")
+        probes, q_dt = _probe_qdt(
+            q,
+            cents,
+            spark.createDataFrame(cb_rows, _CB_SCHEMA),
+            dim,
+            m_sub,
+            n_probe,
+            residual,
         )
-        q_dt = (
-            _pq_subvecs(base.filter(F.col("vec_id").isin(query_ids)), dim, m_sub)
-            .withColumnRenamed("vec_id", "q_id")
-            .withColumnRenamed("sv", "q_sv")
-            .join(F.broadcast(cb), "m")
-            .select(
-                "q_id",
-                "m",
-                "code_id",
-                _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-            )
-        )
-    scored = (
-        enc.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
-
-
-def topk_l2_ivfpq_residual(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int | None = 5,
-    n_cells: int = N_CELLS,
-    n_probe: int = N_PROBE,
-    m_sub: int = PQ_M_SUB,
-    k_codes: int = PQ_K_CODES,
-    lloyd_iters: int = PQ_LLOYD_ITERS,
-) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding — what FAISS IndexIVFPQ actually
-    quantizes: each vector's code is trained/assigned on x − c(x) (its
-    offset from the coarse centroid), not on x itself. On structured
-    corpora this is the difference between a working index and a
-    collapsed one: raw-vector codebooks spend their K codes separating
-    the corpus's dominant (inter-cluster) variance, leaving nothing to
-    rank the WITHIN-cluster neighbors a top-k query actually needs —
-    measured on the planted-cluster slice (llm_similarity_pq_recall_
-    clustered: raw IVF-PQ 0.04 recall@5 vs residual's, PLANS.md r11).
-    The ADC table becomes per-(query, probed cell): dist[m, code] =
-    ||(q − c_cell)[m] − codebook[m, code]||² — still |q|·n_probe·M·K
-    tiny broadcast rows.
-
-    100 TB shape: identical to :func:`topk_l2_ivfpq` — centroids,
-    codebooks, probe sets, and distance tables broadcast; the search
-    scan is codes ⋈ assignment (a few ints per vector); the only
-    corpus-sized shuffles are the build-time argmin assignments. The
-    residual subtraction is one row-local zip_with at encode time."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
-    )
-
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
-    )
-    spark = narrow.sparkSession
-    # r15 optimization round: driver-bounded index relations from ONE
-    # lowest-K collect (dim probe + centroid seeds + codebook seeds),
-    # training one kernel job per Lloyd step, assignment + residual
-    # shift + encoding fused into _ivfpq_codes (see topk_l2_ivfpq).
-    # Seeds skip [0, n_cells): those ids ARE the coarse centroids, so
-    # their residuals are all-zero — k_codes identical zero seeds
-    # would collapse Lloyd to one effective code.
-    low_rows = _collect_low_rows(narrow, n_cells + k_codes)
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, n_cells, cent_rows)
-    cb_rows = _pq_codebooks_rows(
-        base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
-    )
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
-    enc = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
-    low_map = dict(low_rows)
-    if all(qid in low_map for qid in query_ids):
-        # panel vectors already collected → probes + per-(query,
-        # probed-cell) residual distance tables are driver-computed
-        # local relations (see topk_l2_ivfpq)
-        probe_rows, qdt_rows = _panel_probe_qdt(
-            low_map, query_ids, cent_rows, cb_rows, dim, m_sub, n_probe,
-            residual=True,
-        )
-        probes = spark.createDataFrame(probe_rows, "q_id long, cell_id long")
-        q_dt = spark.createDataFrame(
-            qdt_rows, "q_id long, cell_id long, m int, code_id long, dist long"
-        )
-    else:
-        q = base.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-        )
-        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "q_id",
-                "cell_id",
-                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-            )
-            .withColumn("prn", F.row_number().over(pw))
-            .filter(F.col("prn") <= n_probe)
-            .select("q_id", "cell_id")
-        )
-        # per-(query, probed cell) residual distance table: the query
-        # is re-expressed in each probed cell's frame before the ADC
-        # lookup
-        qres = (
-            probes.join(q, "q_id")
-            .join(F.broadcast(cents), "cell_id")
-            .select(
-                "q_id",
-                "cell_id",
-                F.zip_with("q_ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-            )
-        )
-        q_dt = (
-            _pq_subvecs(qres, dim, m_sub, keys=("q_id", "cell_id"))
-            .withColumnRenamed("sv", "q_sv")
-            .join(F.broadcast(cb), "m")
-            .select(
-                "q_id",
-                "cell_id",
-                "m",
-                "code_id",
-                _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-            )
-        )
-    scored = (
-        enc.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "cell_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    if k is None:
-        # recall/cost instrumentation path (the ivf_scored pattern)
-        return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
+    codes = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual)
+    return _adc_topk(codes, probes, q_dt, k)
 
 
 def build_ivfpq_index(
@@ -2101,35 +1817,20 @@ def build_ivfpq_index(
     100 TB of embeddings the codes relation is the only per-vector
     state a search reads, and the cell partitioning means a probe
     reads n_probe/n_cells of it. Raw vectors are touched only here
-    (train/encode) and in an optional re-rank. Returns the probed
+    (train/encode) and in an optional re-rank. The build is
+    :func:`topk_l2_ivfpq`'s (``residual=True``). Returns the probed
     vector dimensionality (stored implicitly by the codebooks)."""
-    from distributed_query_engine_spark.operators.dedup import (
-        _spread_narrow_scan,
+    base, dim, _, cent_rows, cb_rows = _ivfpq_build(
+        emb, n_cells, m_sub, k_codes, lloyd_iters, residual=True
     )
-
-    narrow = with_int_vec(emb).filter(F.size("ivec") > 0).select(
-        "vec_id", "ivec"
+    spark = base.sparkSession
+    spark.createDataFrame(cent_rows, _CENTS_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(f"{index_path}/centroids")
+    spark.createDataFrame(cb_rows, _CB_SCHEMA).write.mode("overwrite").parquet(
+        f"{index_path}/codebooks"
     )
-    spark = narrow.sparkSession
-    # r15 optimization round: same fused-kernel build as
-    # topk_l2_ivfpq_residual — the codes relation comes out of ONE
-    # Arrow pass carrying cell_id already (no corpus-sized
-    # codes ⋈ assigned join before the write).
-    low_rows = _collect_low_rows(narrow, n_cells + k_codes)
-    if not low_rows:
-        raise ValueError("PQ: empty corpus — no vectors to index")
-    dim = len(low_rows[0][1])
-    base = _spread_narrow_scan(_dim_guard(narrow, dim, m_sub), key="vec_id")
-    cent_rows = low_rows[:n_cells]
-    cents = spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
-    seeds = _pq_seed_rows(low_rows, dim, m_sub, k_codes, n_cells, cent_rows)
-    cb_rows = _pq_codebooks_rows(
-        base, dim, m_sub, k_codes, lloyd_iters, seeds, cent_rows=cent_rows
-    )
-    cb = spark.createDataFrame(cb_rows, "m int, code_id long, c_sv array<long>")
     codes = _ivfpq_codes(base, dim, m_sub, cent_rows, cb_rows, residual=True)
-    cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
-    cb.write.mode("overwrite").parquet(f"{index_path}/codebooks")
     codes.select("vec_id", "m", "code_id", "cell_id").write.mode(
         "overwrite"
     ).partitionBy("cell_id").parquet(f"{index_path}/codes")
@@ -2143,36 +1844,32 @@ def append_to_ivfpq_index(
     artifact WITHOUT retraining — the compressed-index twin of
     :func:`append_to_ivf_index`: the stored quantizer (centroids +
     codebooks) is a versioned artifact whose retrain would invalidate
-    every stored code, so ingest is (1) one broadcast of the stored
-    centroids against the batch scan (coarse assignment), (2) one
-    broadcast of the stored codebooks against the batch's residual
-    subvectors (encode), and (3) an append of part-files into the
+    every stored code, so ingest collects the stored (broadcast-sized)
+    centroids and codebooks to the driver, runs the batch through the
+    same fused assign + residual-encode kernel as the build
+    (:func:`_ivfpq_codes`), and appends part-files into the
     cell-partitioned codes layout — existing files never rewritten,
     searches see the new codes immediately through the same
     partition-pruned reads. Batch-sized work only; the corpus is never
     rescanned."""
-    cents = spark.read.parquet(f"{index_path}/centroids")
     cb = spark.read.parquet(f"{index_path}/codebooks")
     narrow = with_int_vec(emb_new).filter(F.size("ivec") > 0).select(
         "vec_id", "ivec"
     )
     dim, narrow = _probe_dim_strict(narrow, m_sub)
     _check_against_stored_index(cb, m_sub, dim, "ingest batch")
-    assigned = _assign_to_l2(narrow, cents)
-    res = (
-        narrow.join(assigned, "vec_id")
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            "vec_id",
-            F.zip_with("ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-        )
-    )
-    codes = _pq_assign(_pq_subvecs(res, dim, m_sub), cb).select(
-        "vec_id", "m", "code_id"
-    )
-    codes.join(assigned, "vec_id").write.mode("append").partitionBy(
-        "cell_id"
-    ).parquet(f"{index_path}/codes")
+    cent_rows = [
+        (r["cell_id"], [int(x) for x in r["c_ivec"]])
+        for r in spark.read.parquet(f"{index_path}/centroids").collect()
+    ]
+    cb_rows = [
+        (r["m"], r["code_id"], [int(x) for x in r["c_sv"]])
+        for r in cb.collect()
+    ]
+    codes = _ivfpq_codes(narrow, dim, m_sub, cent_rows, cb_rows, residual=True)
+    codes.select("vec_id", "m", "code_id", "cell_id").write.mode(
+        "append"
+    ).partitionBy("cell_id").parquet(f"{index_path}/codes")
 
 
 def topk_l2_ivfpq_index(
@@ -2185,13 +1882,14 @@ def topk_l2_ivfpq_index(
     m_sub: int = PQ_M_SUB,
 ) -> DataFrame:
     """Search a :func:`build_ivfpq_index` artifact — identical results
-    to :func:`topk_l2_ivfpq_residual` for the same corpus and knobs
-    (the index stores exactly the relations that function derives).
-    Centroids and codebooks broadcast; the query vectors come from one
-    point-lookup-shaped read of the embeddings relation; the codes
-    scan is restricted to probed cells by dynamic partition pruning —
-    at 100 TB a search reads n_probe/n_cells of a few-ints-per-vector
-    relation and nothing else."""
+    to ``topk_l2_ivfpq(..., residual=True)`` for the same corpus and
+    knobs (the index stores exactly the relations that function
+    derives, and the search runs the same probe / distance-table
+    builder and ADC scan). Centroids and codebooks broadcast; the query
+    vectors come from one point-lookup-shaped read of the embeddings
+    relation; the codes scan is restricted to probed cells by dynamic
+    partition pruning — at 100 TB a search reads n_probe/n_cells of a
+    few-ints-per-vector relation and nothing else."""
     cents = spark.read.parquet(f"{index_path}/centroids")
     cb = spark.read.parquet(f"{index_path}/codebooks")
     # partition-column type inference narrows small cell ids to int;
@@ -2207,52 +1905,8 @@ def topk_l2_ivfpq_index(
     dim, q_guarded = _probe_dim_strict(q_narrow, m_sub, id_col="q_id")
     _check_against_stored_index(cb, m_sub, dim, "query panel")
     q = q_guarded.select("q_id", F.col("ivec").alias("q_ivec"))
-    pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    qres = (
-        probes.join(q, "q_id")
-        .join(F.broadcast(cents), "cell_id")
-        .select(
-            "q_id",
-            "cell_id",
-            F.zip_with("q_ivec", "c_ivec", lambda x, c: x - c).alias("ivec"),
-        )
-    )
-    q_dt = (
-        _pq_subvecs(qres, dim, m_sub, keys=("q_id", "cell_id"))
-        .withColumnRenamed("sv", "q_sv")
-        .join(F.broadcast(cb), "m")
-        .select(
-            "q_id",
-            "cell_id",
-            "m",
-            "code_id",
-            _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
-        )
-    )
-    scored = (
-        codes.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q_dt), ["q_id", "cell_id", "m", "code_id"])
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum("dist").alias("adc_dist"))
-    )
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
+    probes, q_dt = _probe_qdt(q, cents, cb, dim, m_sub, n_probe, residual=True)
+    return _adc_topk(codes, probes, q_dt, k)
 
 
 # ADC shortlist size for the re-rank stage (candidates per query that
@@ -2288,16 +1942,16 @@ def topk_l2_ivfpq_rerank(
     |queries| × c relation. Deterministic end to end.
 
     ``residual=True`` takes the shortlist from the RESIDUAL-encoded ADC
-    scan (:func:`topk_l2_ivfpq_residual`) instead — the complete FAISS
-    IndexIVFPQ default (coarse cells + residual codes + exact re-rank);
-    the re-rank stage itself is encoding-agnostic."""
+    scan instead — the complete FAISS IndexIVFPQ default (coarse cells
+    + residual codes + exact re-rank); the re-rank stage itself is
+    encoding-agnostic."""
     from distributed_query_engine_spark.operators.dedup import (
         _spread_narrow_scan,
     )
 
-    adc = topk_l2_ivfpq_residual if residual else topk_l2_ivfpq
-    scored = adc(
-        emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters
+    scored = topk_l2_ivfpq(
+        emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters,
+        residual=residual,
     )
     ws = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
     shortlist = (

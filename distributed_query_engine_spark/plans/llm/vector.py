@@ -716,7 +716,7 @@ def _pq_recall_frame(e):
         )
 
     ivfpq_scored = S.topk_l2_ivfpq(e, ids, k=None)
-    ivfpqr_scored = S.topk_l2_ivfpq_residual(e, ids, k=None)
+    ivfpqr_scored = S.topk_l2_ivfpq(e, ids, k=None, residual=True)
     out = (
         rows_for(S.topk_l2_pq(e, ids, k=None), "pq")
         .unionByName(rows_for(ivfpq_scored, "ivfpq"))
@@ -813,8 +813,8 @@ def llm_similarity_ivfpq(spark, sf_dir):
 @query("llm_similarity_ivfpq_residual", oracle=_ivfpq_residual_oracle)
 def llm_similarity_ivfpq_residual(spark, sf_dir):
     """IVF-PQ with RESIDUAL encoding — FAISS IndexIVFPQ's actual
-    quantization target (operators/similarity.py::topk_l2_ivfpq_
-    residual): codes are trained and assigned on x − c(x), the offset
+    quantization target (operators/similarity.py::topk_l2_ivfpq,
+    residual=True): codes are trained and assigned on x − c(x), the offset
     from the coarse centroid, with per-(query, probed-cell) distance
     tables. This is not a refinement, it is the difference between a
     working compressed index and a collapsed one on structured data:
@@ -828,7 +828,7 @@ def llm_similarity_ivfpq_residual(spark, sf_dir):
     two-level residual index. Same 100 TB shape as llm_similarity_ivfpq:
     broadcast index relations, codes-only search scan."""
     e = Tables(spark, sf_dir).embeddings
-    return S.topk_l2_ivfpq_residual(e, _QUERY_IDS, k=5)
+    return S.topk_l2_ivfpq(e, _QUERY_IDS, k=5, residual=True)
 
 
 @query("llm_similarity_ivfpq_index", oracle=_ivfpq_residual_oracle)
@@ -844,7 +844,7 @@ def llm_similarity_ivfpq_index(spark, sf_dir):
     else; raw vectors are touched only at build (and in the optional
     re-rank stage). Results are bit-identical to the in-memory
     residual search (the index stores exactly the relations
-    topk_l2_ivfpq_residual derives), so it shares that oracle. The
+    topk_l2_ivfpq(residual=True) derives), so it shares that oracle. The
     index dir is content-addressed + atomically published
     (:func:`_content_addressed_index`): regenerated testdata changes
     the fingerprint (never a stale serve), a concurrent reader never

@@ -476,6 +476,26 @@ def _stage_docs_sliced(spark: SparkSession, sf_dir: str, n_slices: int) -> Path:
     return d
 
 
+def _prior_store_generations(store: Path, current: Path) -> list[str]:
+    """The signature store's generation dirs other than ``current``
+    (r16 layout: ``b_init`` plus one ``b<id>`` per applied batch).
+    A store from before that layout keeps its parquet files loose in
+    the root — resuming on one would hand ``spark.read.parquet`` an
+    empty list and fail opaquely, so it raises here instead."""
+    prior = sorted(
+        str(p)
+        for p in store.iterdir()
+        if p.is_dir() and p != current and not p.name.startswith("_")
+    )
+    if not prior and any(store.glob("*.parquet")):
+        raise RuntimeError(
+            f"signature store {store} predates the r16 generation layout "
+            "(loose parquet files, no b_init/b<id> generation dirs); "
+            "rebuild it with a fresh (non-resumed) run"
+        )
+    return prior
+
+
 def stream_ingest_dedup(
     spark: SparkSession,
     sf_dir: str,
@@ -599,11 +619,7 @@ def stream_ingest_dedup(
             D.signatures_rowlocal(batch_df, spread=True)
         ).write.mode("overwrite").parquet(str(store_b))
         gn = spark.read.parquet(str(store_b))
-        prior_dirs = sorted(
-            str(p)
-            for p in Path(store).iterdir()
-            if p.is_dir() and p != store_b and not p.name.startswith("_")
-        )
+        prior_dirs = _prior_store_generations(Path(store), store_b)
         report = D.incremental_dedup_from_store(
             spark,
             store,

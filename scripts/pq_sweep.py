@@ -73,8 +73,8 @@ for sf_dir in sfs:
             t0 = time.time()
             adc = {
                 (r["q_id"], r["vec_id"])
-                for r in S.topk_l2_ivfpq_residual(
-                    e, QIDS, k=K, m_sub=m_sub, k_codes=k_codes
+                for r in S.topk_l2_ivfpq(
+                    e, QIDS, k=K, m_sub=m_sub, k_codes=k_codes, residual=True
                 ).collect()
             }
             rr = {

@@ -21,8 +21,8 @@ qs = registry.all_queries()
 with warnings.catch_warnings():
     warnings.simplefilter("error")  # a non-rendering oracle fails the gate
     os_ = registry.all_oracles()
-assert len(qs) >= 131, f"registry shrank: {len(qs)} queries"
-assert len(os_) >= 129, f"oracles shrank: {len(os_)}"
+assert len(qs) >= 300, f"registry shrank: {len(qs)} queries"
+assert len(os_) >= 300, f"oracles shrank: {len(os_)}"
 print(f"gate: import OK — {len(qs)} queries, {len(os_)} oracles")
 EOF
 python -m pytest tests/ -q --collect-only >/dev/null

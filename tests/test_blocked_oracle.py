@@ -23,8 +23,6 @@ import pytest
 # slow tier (r16): sf0.01 dedup-family oracle replays; excluded from the default run (pytest.ini)
 pytestmark = pytest.mark.slow
 
-import pytest
-
 from scripts.blocked_oracle import BLOCKED, blocked_connection, filter_engine_block
 
 PIN_MOD = 3

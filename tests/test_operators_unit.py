@@ -483,7 +483,7 @@ def test_verify_build_hint_guard(spark, sf_dir, monkeypatch):
     it from the source scan instead. Below DQE_VERIFY_BROADCAST_CAP the
     local-optimal broadcast plan is kept; above it the verify joins
     must plan as SHUFFLE_HASH (OOM-safe on small executors), with
-    set-identical output either way."""
+    set-identical output either way. A malformed cap raises."""
     from pyspark.sql import functions as F
 
     from distributed_query_engine_spark.catalog import Tables
@@ -511,6 +511,13 @@ def test_verify_build_hint_guard(spark, sf_dir, monkeypatch):
     b = sorted(map(tuple, guarded.collect()))
     assert len(a) > 0
     assert a == b
+
+    # malformed or non-positive cap: a clear error naming the knob,
+    # not a bare int() crash mid-pipeline
+    for bad in ("256MB", "0", "-1"):
+        monkeypatch.setenv("DQE_VERIFY_BROADCAST_CAP", bad)
+        with pytest.raises(ValueError, match="DQE_VERIFY_BROADCAST_CAP"):
+            D._verify_build_hint(docs)
 
 
 def test_read_parquet_table_normalizes_any_timestamp_encoding(spark, tmp_path):
@@ -1272,6 +1279,44 @@ def test_ivfpq_incremental_append_never_rewrites_codes(spark, sf_dir, tmp_path):
     )
     got = S.topk_l2_ivfpq_index(spark, index, e, [0, 1, 2], k=5).collect()
     assert len(got) == 15
+
+
+@pytest.mark.parametrize("residual", [False, True])
+def test_ivfpq_out_of_window_panel_matches(spark, sf_dir, residual):
+    """Every registered IVF-PQ panel sits inside the collected
+    lowest-id window; a panel reaching past it (vec_id 400) must give
+    its in-window queries exactly the same top-k."""
+    from distributed_query_engine_spark.catalog import Tables
+
+    e = Tables(spark, sf_dir).embeddings
+
+    def rows(ids):
+        return sorted(
+            tuple(r)
+            for r in S.topk_l2_ivfpq(e, ids, k=5, residual=residual).collect()
+            if r["q_id"] in (0, 1)
+        )
+
+    want = rows([0, 1])
+    assert len(want) == 10
+    assert rows([0, 1, 400]) == want
+
+
+def test_signature_store_predating_generation_layout_raises(tmp_path):
+    """A pre-r16 signature store keeps its parquet files loose in the
+    root; resuming on one must fail with a clear message, not hand
+    spark.read.parquet an empty generation list."""
+    from distributed_query_engine_spark.streaming import ops
+
+    store = tmp_path / "sig_store"
+    store.mkdir()
+    (store / "part-00000.parquet").write_bytes(b"")
+    current = store / "b3"
+    current.mkdir()
+    with pytest.raises(RuntimeError, match="predates the r16 generation layout"):
+        ops._prior_store_generations(store, current)
+    (store / "b_init").mkdir()
+    assert ops._prior_store_generations(store, current) == [str(store / "b_init")]
 
 
 def test_ivfpq_index_rejects_mismatched_dims(spark, sf_dir, tmp_path):

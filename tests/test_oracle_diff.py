@@ -10,8 +10,6 @@ import pytest
 # slow tier (r16): full-registry oracle sweep (~23 min) — the driver's own CORRECTNESS gate runs the same comparison; builder target; excluded from the default run (pytest.ini)
 pytestmark = pytest.mark.slow
 
-import pytest
-
 from distributed_query_engine_spark.registry import all_oracles, all_queries
 from tests.oracle_diff import assert_driver_sortable, assert_same_result
 
