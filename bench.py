@@ -97,7 +97,7 @@ _POST_BASELINE_LINES = {
 # +-20% run-to-run at sf0.1 (BASELINE.md r12), which blinded regression
 # detection on the heaviest line. For these, the timing is the sum of
 # per-batch triggerExecution durations reported by the engine
-# (ops.LAST_RUN_EXEC_MS) — the deterministic work component; the
+# (ops.LAST_RUN[sink].exec_ms) — the deterministic work component; the
 # protocol change and its measured band are documented in BASELINE.md
 # r13. Maps bench name -> ops sink name.
 _EXEC_MS_LINES = {"stream_ingest_dedup": "ingest_dedup"}
@@ -198,7 +198,8 @@ def run_once(fn, spark, sf_dir, name: str | None = None) -> dict:
     if name in _EXEC_MS_LINES:
         from distributed_query_engine_spark.streaming import ops
 
-        exec_ms = ops.LAST_RUN_EXEC_MS.get(_EXEC_MS_LINES[name])
+        run = ops.LAST_RUN.get(_EXEC_MS_LINES[name])
+        exec_ms = run.exec_ms if run else None
         if exec_ms:
             sample["sec"] = exec_ms / 1000.0
             sample["wall_sec"] = wall

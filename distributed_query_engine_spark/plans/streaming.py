@@ -307,8 +307,8 @@ def stream_multibatch_progression(spark, sf_dir):
     # GENUINE multi-batch incremental processing: the source is sliced
     # into 4 files with maxFilesPerTrigger=1, so the windowed state is
     # built up across 4 micro-batches (tests assert the batch count via
-    # ops.LAST_RUN_BATCHES) rather than one AvailableNow gulp. The
-    # complete-mode final state is order-independent, hence
+    # ops.LAST_RUN["mem_multibatch"].batches) rather than one AvailableNow
+    # gulp. The complete-mode final state is order-independent, hence
     # batch-schedule-independent — which is what makes an exact batch
     # oracle possible for an incremental computation.
     from pyspark.sql import functions as F
@@ -405,7 +405,7 @@ def stream_state_store_read(spark, sf_dir):
 
     ev = ops.read_events_stream(spark, sf_dir)
     ops.run_to_memory(ops.watermark_window_agg(ev), "mem_state_read", "append")
-    st = spark.read.format("statestore").load(ops.LAST_RUN_CKPT["mem_state_read"])
+    st = spark.read.format("statestore").load(ops.LAST_RUN["mem_state_read"].ckpt)
     return st.select(
         F.col("key.window.start").alias("window_start"),
         F.col("key.window.end").alias("window_end"),

@@ -17,11 +17,14 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable, Mapping
 from contextlib import contextmanager
+from dataclasses import dataclass, replace
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from distributed_query_engine_spark.functions.deterministic import cents_sum
 
@@ -96,24 +99,6 @@ def _events_ts_unit(src: Path) -> str:
             ex,
         )
         return "us"
-
-
-def _events_stream(spark: SparkSession, src_dir: str, unit: str, **options) -> DataFrame:
-    """readStream over a staged events directory with the unit-matched
-    schema; ns sources are read as raw int64 and floor-divided to µs
-    (DuckDB's TIMESTAMP_NS → TIMESTAMP truncation, so oracles stay
-    exact)."""
-    if unit == "ns":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        reader = spark.readStream.schema(_EVENTS_SCHEMA_NS).format("parquet")
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        raw = reader.load(src_dir)
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    reader = spark.readStream.schema(_EVENTS_SCHEMA_TS).format("parquet")
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(src_dir)
 
 
 def _source_fingerprint(src: Path) -> str:
@@ -248,67 +233,149 @@ def _stage_dir(sf_dir: str) -> str:
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """readStream over the staged events file with the unit-matched
+    schema; ns sources are read as raw int64 and floor-divided to µs
+    (DuckDB's TIMESTAMP_NS → TIMESTAMP truncation, so oracles stay
+    exact)."""
     unit = _events_ts_unit(Path(sf_dir) / "events.parquet")
-    return _events_stream(spark, _stage_dir(sf_dir), unit)
-
-
-# Batches observed by the last run_to_memory call per sink name —
-# lets tests assert genuine multi-batch progression without touching
-# the query's return contract (a DataFrame).
-LAST_RUN_BATCHES: dict[str, int] = {}
-
-# Sum of per-batch triggerExecution durations (ms) for the last run,
-# per sink name: the DETERMINISTIC work component of a multi-batch
-# streaming run. Wall time additionally carries micro-batch scheduling
-# and checkpoint-commit idle gaps, which made the stream_ingest_dedup
-# bench line a +-20% noise band (VERDICT r12 item 5) — the bench
-# referees this metric instead (BASELINE.md r13 documents the band).
-LAST_RUN_EXEC_MS: dict[str, float] = {}
-
-# Total numRowsDroppedByWatermark across the last run's progress events,
-# per sink name — lets tests assert the watermark REALLY discarded rows
-# (the metric, not just a smaller emitted set).
-LAST_RUN_DROPPED: dict[str, int] = {}
-
-# Checkpoint location of the last run per sink name — the one source of
-# truth for consumers that read the checkpoint back (statestore reads);
-# reconstructing the path would silently diverge from the keying scheme.
-LAST_RUN_CKPT: dict[str, str] = {}
-
-
-# State-store partition count for stateful streaming runs. A stateful
-# operator creates ONE state store instance per shuffle partition, and
-# every micro-batch pays per-partition checkpoint I/O (delta files +
-# maintenance) whether or not the partition holds keys — so the right
-# number tracks the STATEFUL KEY population, not the batch-side core
-# count. Locally the keyed state is a few hundred windows/sessions and
-# 8 partitions measure ~0.5 s faster per run than the session's 32
-# (BASELINE.md r6); on a 100 TB deployment with millions of keys this
-# knob goes UP (state size / a few hundred MB per store), which is why
-# it is a knob and not a constant. NOTE: Spark pins the state partition
-# count at first checkpoint; it stays fixed for the checkpoint's
-# lifetime (our runners use fresh checkpoints per run, so the knob
-# takes effect every run).
-STREAM_STATE_PARTITIONS = int(os.environ.get("DQE_STREAM_STATE_PARTITIONS", "8"))
+    src_dir = _stage_dir(sf_dir)
+    if unit == "ns":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        raw = spark.readStream.schema(_EVENTS_SCHEMA_NS).format("parquet").load(src_dir)
+        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return spark.readStream.schema(_EVENTS_SCHEMA_TS).format("parquet").load(src_dir)
 
 
 @contextmanager
-def _state_partitions(spark: SparkSession, n: int = 0):
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a stateful
-    streaming run; restores the caller's batch-side setting after."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(n or STREAM_STATE_PARTITIONS)
-    )
+def _scoped_conf(spark: SparkSession, conf: Mapping[str, str]):
+    """Set ``conf`` on the session for the block, then restore every key
+    to its prior state — a key that was unset before is unset again
+    (not pinned to its default)."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-# Whether the last run_to_memory call for a sink name took the
-# flush-retry path (diagnosis surface for tests/logs).
-LAST_RUN_RETRIED: dict[str, bool] = {}
+def _state_partitions() -> dict[str, str]:
+    """Scoped conf for a stateful streaming run: the state-store
+    partition count, from ``DQE_STREAM_STATE_PARTITIONS`` (default 8).
+    A stateful operator creates ONE state store instance per shuffle
+    partition, and every micro-batch pays per-partition checkpoint I/O
+    (delta files + maintenance) whether or not the partition holds keys
+    — so the right number tracks the STATEFUL KEY population, not the
+    batch-side core count. Locally the keyed state is a few hundred
+    windows/sessions and 8 partitions measure ~0.5 s faster per run than
+    the session's 32 (BASELINE.md r6); on a 100 TB deployment with
+    millions of keys this knob goes UP (state size / a few hundred MB
+    per store), which is why it is a knob and not a constant. NOTE:
+    Spark pins the state partition count at first checkpoint; it stays
+    fixed for the checkpoint's lifetime (our runners use fresh
+    checkpoints per run, so the knob takes effect every run).
+
+    Parsed when a stateful run starts, never at import: a malformed or
+    non-positive value raises ValueError naming the knob instead of
+    breaking the registry import."""
+    raw = os.environ.get("DQE_STREAM_STATE_PARTITIONS", "8")
+    try:
+        n = int(raw)
+        if n <= 0:
+            raise ValueError
+    except ValueError:
+        raise ValueError(
+            "DQE_STREAM_STATE_PARTITIONS must be a positive partition "
+            f"count, got {raw!r}"
+        ) from None
+    return {"spark.sql.shuffle.partitions": str(n)}
+
+
+@dataclass(frozen=True)
+class StreamRun:
+    """One AvailableNow run's record: its checkpoint location, its
+    progress log (one entry per executed micro-batch — complete, since
+    :func:`_run_available_now` refuses a log that reached Spark's
+    retention cap) and whether run_to_memory's flush guard reran it."""
+
+    ckpt: str
+    progress: tuple
+    retried: bool = False
+
+    @property
+    def batches(self) -> int:
+        """Data micro-batches — lets tests assert genuine multi-batch
+        progression without touching the query's return contract."""
+        return sum(1 for p in self.progress if p["numInputRows"] > 0)
+
+    @property
+    def exec_ms(self) -> float:
+        """Sum of per-batch triggerExecution durations: the DETERMINISTIC
+        work component of a multi-batch run. Wall time additionally
+        carries micro-batch scheduling and checkpoint-commit idle gaps,
+        which made the stream_ingest_dedup bench line a +-20% noise band
+        (VERDICT r12 item 5) — the bench referees this metric instead
+        (BASELINE.md r13 documents the band)."""
+        return float(
+            sum(p["durationMs"].get("triggerExecution", 0) for p in self.progress)
+        )
+
+    @property
+    def dropped(self) -> int:
+        """Total numRowsDroppedByWatermark — lets tests assert the
+        watermark REALLY discarded rows (the metric, not just a smaller
+        emitted set)."""
+        return sum(
+            op.get("numRowsDroppedByWatermark", 0)
+            for p in self.progress
+            for op in p.get("stateOperators", [])
+        )
+
+
+# The last run per sink name. Its ``ckpt`` is the one source of truth
+# for consumers that read the checkpoint back (statestore reads);
+# reconstructing the path would silently diverge from the keying scheme.
+LAST_RUN: dict[str, StreamRun] = {}
+
+_PROGRESS_CAP = "spark.sql.streaming.numRecentProgressUpdates"
+
+
+def _run_available_now(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    name: str,
+    ckpt: Path,
+    conf: Mapping[str, str],
+) -> StreamRun:
+    """Run a configured ``writeStream`` to completion under
+    Trigger.AvailableNow from checkpoint ``ckpt``, with ``conf`` set for
+    the run only, and record it as ``LAST_RUN[name]``. Spark keeps only
+    the most recent progress entries — cap − 1 of them under a
+    ``numRecentProgressUpdates`` cap (Spark 4.1, measured) — so a full
+    log may have lost batches: the run raises rather than record an
+    undercount."""
+    cap = int(spark.conf.get(_PROGRESS_CAP))
+    with _scoped_conf(spark, conf):
+        q = (
+            writer.option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    progress = tuple(q.recentProgress)
+    if len(progress) >= cap - 1:
+        raise RuntimeError(
+            f"streaming run {name!r} filled its progress log under "
+            f"{_PROGRESS_CAP}={cap}; earlier batches may be missing from "
+            "its record — raise the cap"
+        )
+    LAST_RUN[name] = run = StreamRun(str(ckpt), progress)
+    return run
 
 
 def _needs_flush_retry(progress: list, output_mode: str) -> bool:
@@ -351,7 +418,7 @@ def run_to_memory(
     (test suite next to the grading driver) must not rmtree this one's
     live checkpoint or serve it foreign state — consumers that read the
     checkpoint back (stream_state_store_read) take the exact path from
-    LAST_RUN_CKPT instead of reconstructing it.
+    ``LAST_RUN[name].ckpt`` instead of reconstructing it.
 
     FLUSH GUARD (r13): when :func:`_needs_flush_retry` proves the run
     stopped before its final no-data batch (a load-dependent
@@ -360,68 +427,83 @@ def run_to_memory(
     the only reliable remedy, since a checkpoint resume with no new
     data executes no batch at all."""
     spark = result.sparkSession
+    writer = (
+        result.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    )
     ckpt = _pid_run_dir("checkpoints", name)
-    LAST_RUN_CKPT[name] = str(ckpt)
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    progress = list(q.recentProgress)
-    LAST_RUN_RETRIED[name] = False
-    if _retry and _needs_flush_retry(progress, output_mode):
+    run = _run_available_now(spark, writer, name, ckpt, _state_partitions())
+    if _retry and _needs_flush_retry(run.progress, output_mode):
         out = run_to_memory(result, name, output_mode, _retry=False)
-        LAST_RUN_RETRIED[name] = True
+        LAST_RUN[name] = replace(LAST_RUN[name], retried=True)
         return out
-    LAST_RUN_BATCHES[name] = len(
-        [p for p in progress if p["numInputRows"] > 0]
-    )
-    LAST_RUN_DROPPED[name] = sum(
-        op.get("numRowsDroppedByWatermark", 0)
-        for p in progress
-        for op in p.get("stateOperators", [])
-    )
     return spark.table(name)
 
 
+def _stage_slices(
+    kind: str,
+    sf_dir: str,
+    table: str,
+    tag: str,
+    build: Callable[[], tuple[DataFrame, list[Column]]],
+) -> Path:
+    """Stage a source as single-file parquet slices under
+    ``_TMP/<kind>/<staging key>`` and return that dir. ``build()``
+    returns ``(frame, predicates)`` — one slice per predicate — and runs
+    only on a (re)stage. ``flat/`` symlinks every slice's part file
+    (RESOLVED target, see _stage_dir) into the one directory the file
+    stream source walks; read one file per trigger, each slice is its
+    own micro-batch (:func:`_slice_stream`). Part mtimes are staggered
+    in slice order, so the source (oldest-first) runs the batches in
+    slice order: the straggler staging needs that order, every other
+    consumer is order-independent by contract. The ``_STAGED`` marker
+    holds ``tag`` + the source table's fingerprint, so a regenerated
+    source (or a different slice count in the tag) restages instead of
+    serving stale slices."""
+    d = _TMP / kind / _staging_key(sf_dir)
+    marker = d / "_STAGED"
+    text = f"{tag}\n{_source_fingerprint(Path(sf_dir) / f'{table}.parquet')}"
+    if marker.exists() and marker.read_text() == text:
+        return d
+    shutil.rmtree(d, ignore_errors=True)
+    frame, preds = build()
+    flat = d / "flat"
+    flat.mkdir(parents=True, exist_ok=True)
+    t0 = None
+    for i, pred in enumerate(preds):
+        out = d / f"slice_{i}"
+        frame.filter(pred).coalesce(1).write.mode("overwrite").parquet(str(out))
+        part = next(out.glob("part-*.parquet")).resolve()
+        (flat / f"slice_{i}.parquet").symlink_to(part)
+        st = part.stat()
+        t0 = t0 or st.st_mtime_ns
+        os.utime(part, ns=(st.st_atime_ns, t0 + i * 10**9))
+    marker.write_text(text)
+    return d
+
+
+def _slice_stream(spark: SparkSession, d: Path, schema: str) -> DataFrame:
+    """A staged slice dir as a MULTI-BATCH file stream: maxFilesPerTrigger=1
+    makes each slice its own micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(str(d / "flat"))
+    )
+
+
 def _stage_sliced(spark: SparkSession, sf_dir: str, n_slices: int) -> Path:
-    """Stage the events table as ``n_slices`` single-file parquet slices
-    (event_id mod n) under a flat directory the file stream source can
-    walk one-file-per-trigger. The ``_STAGED`` marker stores the source
-    fingerprint + slice count; a regenerated source (or different
-    n_slices) restages instead of serving stale slices."""
+    """The events table as ``n_slices`` slices (event_id mod n).
+    read_parquet_table normalizes ts to a proper timestamp whatever the
+    source unit, so staged slices are ALWAYS timestamp[us] and the
+    sliced stream needs no per-unit shim."""
     from distributed_query_engine_spark.catalog import read_parquet_table
 
-    src = Path(sf_dir) / "events.parquet"
-    d = _TMP / "stream_src_sliced" / _staging_key(sf_dir)
-    done = d / "_STAGED"
-    fp = f"{n_slices}\n{_source_fingerprint(src)}"
-    if not done.exists() or done.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        # read_parquet_table normalizes ts to a proper timestamp whatever
-        # the source unit, so staged slices are ALWAYS timestamp[us] and
-        # the sliced stream needs no per-unit shim.
-        raw = read_parquet_table(spark, str(src))
-        for i in range(n_slices):
-            (
-                raw.filter(F.col("event_id") % n_slices == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(d / f"slice_{i}"))
-            )
-        # flatten: the file source wants data files in one directory
-        flat = d / "flat"
-        flat.mkdir(parents=True, exist_ok=True)
-        for i in range(n_slices):
-            part = next((d / f"slice_{i}").glob("part-*.parquet"))
-            (flat / f"slice_{i}.parquet").symlink_to(part)
-        done.write_text(fp)
-    return d
+    def build():
+        raw = read_parquet_table(spark, str(Path(sf_dir) / "events.parquet"))
+        return raw, [F.col("event_id") % n_slices == i for i in range(n_slices)]
+
+    return _stage_slices("stream_src_sliced", sf_dir, "events", str(n_slices), build)
 
 
 def read_events_stream_sliced(
@@ -431,49 +513,16 @@ def read_events_stream_sliced(
     into ``n_slices`` deterministic slices (event_id mod n), and
     ``maxFilesPerTrigger=1`` makes each slice its own micro-batch — so
     state genuinely accumulates across batches instead of one
-    AvailableNow pass seeing everything. Batch ORDER is an engine
-    detail (file mtime); consumers must aggregate order-independently
-    (complete-mode aggs are), which is exactly the discipline a real
-    incremental pipeline needs."""
+    AvailableNow pass seeing everything. Consumers must aggregate
+    order-independently (complete-mode aggs are), which is exactly the
+    discipline a real incremental pipeline needs."""
     d = _stage_sliced(spark, sf_dir, n_slices)
-    # slices are staged as timestamp[us] (see _stage_sliced), so the
-    # stream schema is the plain-timestamp one regardless of source unit
-    return _events_stream(
-        spark, str(d / "flat"), "us", maxFilesPerTrigger="1"
-    )
+    return _slice_stream(spark, d, _EVENTS_SCHEMA_TS)
 
 
 _DOCS_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
-
-
-def _stage_docs_sliced(spark: SparkSession, sf_dir: str, n_slices: int) -> Path:
-    """Stage the INCOMING document batch (doc_id % 5 = 0 — the same
-    split llm_dedup_incremental uses) as ``n_slices`` single-file
-    parquet slices keyed (doc_id div 5) mod n, fingerprint-invalidated
-    like the events slices."""
-    src = Path(sf_dir) / "documents.parquet"
-    d = _TMP / "stream_docs_sliced" / _staging_key(sf_dir)
-    done = d / "_STAGED"
-    fp = f"{n_slices}\n{_source_fingerprint(src)}"
-    if not done.exists() or done.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        raw = spark.read.parquet(str(src)).filter(F.col("doc_id") % 5 == 0)
-        for i in range(n_slices):
-            (
-                raw.filter(F.expr(f"(doc_id div 5) % {n_slices}") == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(d / f"slice_{i}"))
-            )
-        flat = d / "flat"
-        flat.mkdir(parents=True, exist_ok=True)
-        for i in range(n_slices):
-            part = next((d / f"slice_{i}").glob("part-*.parquet"))
-            (flat / f"slice_{i}.parquet").symlink_to(part)
-        done.write_text(fp)
-    return d
 
 
 def _prior_store_generations(store: Path, current: Path) -> list[str]:
@@ -571,13 +620,18 @@ def stream_ingest_dedup(
             spark, corpus, str(Path(store) / "b_init"), hashed=True
         )
 
-    slices = _stage_docs_sliced(spark, sf_dir, n_slices)
-    batches = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(slices / "flat"))
+    # the INCOMING batch (doc_id % 5 = 0 — llm_dedup_incremental's split)
+    # as n slices keyed (doc_id div 5) mod n
+    def incoming_slices():
+        src = spark.read.parquet(str(Path(sf_dir) / "documents.parquet"))
+        return src.filter(F.col("doc_id") % 5 == 0), [
+            F.expr(f"(doc_id div 5) % {n_slices}") == i for i in range(n_slices)
+        ]
+
+    slices = _stage_slices(
+        "stream_docs_sliced", sf_dir, "documents", str(n_slices), incoming_slices
     )
+    batches = _slice_stream(spark, slices, _DOCS_SCHEMA)
     # sink/checkpoint keyed per sf_dir like the store — two concurrent
     # runs against different sf_dirs must not interleave one sink — and
     # per pid, so a second process never rmtrees this one's live run
@@ -664,31 +718,13 @@ def stream_ingest_dedup(
     # sf0.1). The rule only INFERS extra predicates (isnotnull,
     # transitive filters) — every filter this pipeline needs is stated
     # explicitly — so disabling it during the ingest loop is
-    # result-identical. Scoped set/restore, not a session default.
-    cp_key = "spark.sql.constraintPropagation.enabled"
-    try:
-        cp_old = spark.conf.get(cp_key)
-    except Exception:
-        cp_old = None
-    spark.conf.set(cp_key, "false")
-    try:
-        q = (
-            batches.writeStream.foreachBatch(process)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if cp_old is None:
-            spark.conf.unset(cp_key)
-        else:
-            spark.conf.set(cp_key, cp_old)
-    LAST_RUN_BATCHES[name] = len(
-        [p for p in q.recentProgress if p["numInputRows"] > 0]
-    )
-    LAST_RUN_EXEC_MS[name] = float(
-        sum(p["durationMs"].get("triggerExecution", 0) for p in q.recentProgress)
+    # result-identical. Scoped to the run, not a session default.
+    _run_available_now(
+        spark,
+        batches.writeStream.foreachBatch(process),
+        name,
+        ckpt,
+        {"spark.sql.constraintPropagation.enabled": "false"},
     )
     # recursive: batches live in sink/b<id> subdirs; _applied is
     # _-prefixed and therefore invisible to the file index
@@ -699,25 +735,18 @@ STRAGGLER_CUTOFF = "2024-01-06 00:00:00"
 STRAGGLER_MOD = 7
 
 
-def _stage_events_stragglers(spark: SparkSession, sf_dir: str) -> Path:
-    """Stage events as TWO time-skewed slices for the late-data-drop
-    demo: slice_0 = everything except the stragglers (carries the
-    global max event time), slice_1 = the stragglers (old rows:
-    ts < STRAGGLER_CUTOFF and event_id % STRAGGLER_MOD = 0). File
-    mtimes are explicitly staggered so the file source (oldest-first)
-    processes slice_0 first — making the batch order, and therefore
-    the watermark progression, DETERMINISTIC."""
-    import os
-
+def _straggler_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events as THREE time-skewed slices for the late-data-drop demo,
+    one micro-batch each: slice_0 = everything except the stragglers
+    and the tick (carries the bulk event times), slice_1 = the tick,
+    slice_2 = the stragglers (old rows: ts < STRAGGLER_CUTOFF and
+    event_id % STRAGGLER_MOD = 0). The stager's slice-order mtimes make
+    the batch order, and therefore the watermark progression,
+    DETERMINISTIC."""
     from distributed_query_engine_spark.catalog import read_parquet_table
 
-    src = Path(sf_dir) / "events.parquet"
-    d = _TMP / "stream_stragglers" / _staging_key(sf_dir)
-    done = d / "_STAGED"
-    fp = f"{STRAGGLER_CUTOFF}|{STRAGGLER_MOD}|v2\n{_source_fingerprint(src)}"
-    if not done.exists() or done.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        raw = read_parquet_table(spark, str(src))
+    def build():
+        raw = read_parquet_table(spark, str(Path(sf_dir) / "events.parquet"))
         straggler = (
             F.col("ts") < F.lit(STRAGGLER_CUTOFF).cast("timestamp")
         ) & (F.col("event_id") % STRAGGLER_MOD == 0)
@@ -732,30 +761,11 @@ def _stage_events_stragglers(spark: SparkSession, sf_dir: str) -> Path:
             raw.agg(F.max("ts")).collect()[0][0]  # one scalar action
         ).cast("timestamp")
         tick = F.col("ts") == max_ts
-        slices = (
-            (0, ~straggler & ~tick),
-            (1, ~straggler & tick),
-            (2, straggler),
-        )
-        for i, pred in slices:
-            (
-                raw.filter(pred)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(d / f"slice_{i}"))
-            )
-        flat = d / "flat"
-        flat.mkdir(parents=True, exist_ok=True)
-        now = None
-        for i, _ in slices:
-            part = next((d / f"slice_{i}").glob("part-*.parquet"))
-            (flat / f"slice_{i}.parquet").symlink_to(part)
-            # stagger mtimes: strictly increasing in slice order
-            st = part.stat()
-            now = now or st.st_mtime_ns
-            os.utime(part, ns=(st.st_atime_ns, now + i * 10**9))
-        done.write_text(fp)
-    return d
+        return raw, [~straggler & ~tick, ~straggler & tick, straggler]
+
+    tag = f"{STRAGGLER_CUTOFF}|{STRAGGLER_MOD}|v2"
+    d = _stage_slices("stream_stragglers", sf_dir, "events", tag, build)
+    return _slice_stream(spark, d, _EVENTS_SCHEMA_TS)
 
 
 def stream_late_data_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -768,13 +778,8 @@ def stream_late_data_drops(spark: SparkSession, sf_dir: str) -> DataFrame:
     NON-straggler rows only — which is precisely what the oracle
     states, and differs from the no-drop watermark query's counts, so
     the hash-match proves rows were really discarded."""
-    d = _stage_events_stragglers(spark, sf_dir)
-    ev = _events_stream(
-        spark, str(d / "flat"), "us", maxFilesPerTrigger="1"
-    )
-    return run_to_memory(
-        watermark_window_agg(ev), "mem_late_drops", "append"
-    )
+    ev = _straggler_stream(spark, sf_dir)
+    return run_to_memory(watermark_window_agg(ev), "mem_late_drops", "append")
 
 
 def run_foreach_batch_parquet(
@@ -802,15 +807,8 @@ def run_foreach_batch_parquet(
         # batch_id would key an idempotence check in a real store.
         batch_df.write.mode("overwrite").parquet(str(sink))
 
-    with _state_partitions(spark):
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = result.writeStream.foreachBatch(write_batch).outputMode(output_mode)
+    _run_available_now(spark, writer, name, ckpt, _state_partitions())
     return spark.read.parquet(str(sink))
 
 
@@ -951,7 +949,6 @@ def tws_available() -> bool:
         return False
 
 
-@contextmanager
 def _rocksdb_state_store(spark: SparkSession):
     """Temporarily pin the RocksDB state-store provider for a TWS run —
     transformWithStateInPandas keys its typed state handles on multiple
@@ -960,23 +957,10 @@ def _rocksdb_state_store(spark: SparkSession):
     RocksDB is a REQUIREMENT of the operator, not a tuning choice.
     Restores the caller's provider after (the conf is read at query
     start, so scoping it to the run is enough)."""
+    from distributed_query_engine_spark.session import _STATE_STORE_PROVIDERS
+
     key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    return _scoped_conf(spark, {key: _STATE_STORE_PROVIDERS["rocksdb"]})
 
 
 def enable_tws(spark: SparkSession) -> bool:
@@ -1232,38 +1216,6 @@ def session_window_dynamic_gap_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def _stage_cdc_sliced(spark: SparkSession, sf_dir: str, n_slices: int) -> Path:
-    """Stage the deterministic CDC batch (operators/cdc.cdc_batch over
-    the customer snapshot) as ``n_slices`` single-file parquet slices
-    keyed k mod n — a disjoint key partition, so the micro-batch merges
-    commute and the final snapshot is order-independent. Fingerprint-
-    invalidated like the other staged stream sources."""
-    from distributed_query_engine_spark.catalog import Tables
-    from distributed_query_engine_spark.operators.cdc import cdc_batch
-
-    src = Path(sf_dir) / "customer.parquet"
-    d = _TMP / "stream_cdc_sliced" / _staging_key(sf_dir)
-    done = d / "_STAGED"
-    fp = f"{n_slices}\n{_source_fingerprint(src)}"
-    if not done.exists() or done.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        cdc = cdc_batch(Tables(spark, sf_dir).customer)
-        for i in range(n_slices):
-            (
-                cdc.filter(F.pmod(F.col("k"), F.lit(n_slices)) == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(d / f"slice_{i}"))
-            )
-        flat = d / "flat"
-        flat.mkdir(parents=True, exist_ok=True)
-        for i in range(n_slices):
-            part = next((d / f"slice_{i}").glob("part-*.parquet"))
-            (flat / f"slice_{i}.parquet").symlink_to(part)
-        done.write_text(fp)
-    return d
-
-
 def stream_cdc_apply(
     spark: SparkSession, sf_dir: str, n_slices: int = 3
 ) -> DataFrame:
@@ -1284,7 +1236,7 @@ def stream_cdc_apply(
     order. The oracle is therefore the shared MERGE_ORACLE_SQL, exact,
     for a genuinely incremental multi-batch computation."""
     from distributed_query_engine_spark.catalog import Tables
-    from distributed_query_engine_spark.operators.cdc import apply_cdc
+    from distributed_query_engine_spark.operators.cdc import apply_cdc, cdc_batch
 
     name = "cdc_apply"
     run_key = f"{name}-{_staging_key(sf_dir)}"
@@ -1296,13 +1248,19 @@ def stream_cdc_apply(
     pointer = root / "CURRENT"
     pointer.write_text("v0")
 
-    slices = _stage_cdc_sliced(spark, sf_dir, n_slices)
-    batches = (
-        spark.readStream.schema("k long, op string, new_bal double")
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(slices / "flat"))
+    # the deterministic CDC batch (operators/cdc.cdc_batch over the
+    # customer snapshot) as n slices keyed k mod n — a disjoint key
+    # partition, so the micro-batch merges commute
+    def cdc_slices():
+        cdc = cdc_batch(Tables(spark, sf_dir).customer)
+        return cdc, [
+            F.pmod(F.col("k"), F.lit(n_slices)) == i for i in range(n_slices)
+        ]
+
+    slices = _stage_slices(
+        "stream_cdc_sliced", sf_dir, "customer", str(n_slices), cdc_slices
     )
+    batches = _slice_stream(spark, slices, "k long, op string, new_bal double")
     ckpt = _pid_run_dir("checkpoints", run_key)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -1311,15 +1269,8 @@ def stream_cdc_apply(
         apply_cdc(snap, batch_df).write.mode("overwrite").parquet(str(out))
         pointer.write_text(out.name)
 
-    q = (
-        batches.writeStream.foreachBatch(process)
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[name] = len(
-        [p for p in q.recentProgress if p["numInputRows"] > 0]
+    _run_available_now(
+        spark, batches.writeStream.foreachBatch(process), name, ckpt, {}
     )
     return spark.read.parquet(str(root / pointer.read_text()))
 
@@ -1434,10 +1385,9 @@ def stream_mv_refresh(
     generational full-copy is the local-parquet stand-in for a sink
     with native row upserts (Delta/Iceberg MERGE INTO, a key-value
     store); the update-rows + idempotence contract is identical."""
-    d = _stage_events_stragglers(spark, sf_dir)
-    ev = _events_stream(spark, str(d / "flat"), "us", maxFilesPerTrigger="1")
     agg = (
-        ev.withWatermark("ts", "10 minutes")
+        _straggler_stream(spark, sf_dir)
+        .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
@@ -1479,52 +1429,12 @@ def stream_mv_refresh(
             # (strictly < batch_id) and overwrites it byte-stable
             raise RuntimeError(f"injected crash after batch {batch_id}")
 
-    with _state_partitions(spark):
-        q = (
-            agg.writeStream.foreachBatch(merge)
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    LAST_RUN_BATCHES[name] = len(
-        [p for p in q.recentProgress if p["numInputRows"] > 0]
-    )
+    writer = agg.writeStream.foreachBatch(merge).outputMode("update")
+    _run_available_now(spark, writer, name, ckpt, _state_partitions())
     gens = sorted(
         int(p.name.split("=", 1)[1]) for p in Path(mv_dir).glob("gen=*")
     )
     return spark.read.parquet(str(Path(mv_dir) / f"gen={gens[-1]}"))
-
-
-def _stage_all_docs_sliced(
-    spark: SparkSession, sf_dir: str, n_slices: int
-) -> Path:
-    """Stage the WHOLE documents table as ``n_slices`` single-file
-    parquet slices (doc_id mod n) — the full-corpus streaming source
-    for index-ingest loops (vs _stage_docs_sliced, which slices only
-    the incoming 20% batch for the dedup-against-store loop)."""
-    src = Path(sf_dir) / "documents.parquet"
-    d = _TMP / "stream_docs_all_sliced" / _staging_key(sf_dir)
-    done = d / "_STAGED"
-    fp = f"{n_slices}\n{_source_fingerprint(src)}"
-    if not done.exists() or done.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        raw = spark.read.parquet(str(src))
-        for i in range(n_slices):
-            (
-                raw.filter(F.col("doc_id") % n_slices == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(str(d / f"slice_{i}"))
-            )
-        flat = d / "flat"
-        flat.mkdir(parents=True, exist_ok=True)
-        for i in range(n_slices):
-            part = next((d / f"slice_{i}").glob("part-*.parquet"))
-            (flat / f"slice_{i}.parquet").symlink_to(part.resolve())
-        done.write_text(fp)
-    return d
 
 
 # Pre-marker crash injection for the recovery tests: batch_ids listed
@@ -1613,13 +1523,15 @@ def stream_bm25_ingest(
     from distributed_query_engine_spark.operators import sparse as SP
     from distributed_query_engine_spark.plans.retrieval import _BM25_K, _Q_IDS
 
-    slices = _stage_all_docs_sliced(spark, sf_dir, n_slices)
-    batches = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(str(slices / "flat"))
+    # the WHOLE corpus as n slices (doc_id mod n)
+    def corpus_slices():
+        src = spark.read.parquet(str(Path(sf_dir) / "documents.parquet"))
+        return src, [F.col("doc_id") % n_slices == i for i in range(n_slices)]
+
+    slices = _stage_slices(
+        "stream_docs_all_sliced", sf_dir, "documents", str(n_slices), corpus_slices
     )
+    batches = _slice_stream(spark, slices, _DOCS_SCHEMA)
     name = "bm25_ingest"
     run_key = f"{name}-{_staging_key(sf_dir)}"
     base = _pid_run_dir("bm25_index_stream", run_key, keep=_resume)
@@ -1638,15 +1550,8 @@ def stream_bm25_ingest(
             # resume must hit the batch marker and no-op
             raise RuntimeError(f"injected crash after batch {batch_id}")
 
-    q = (
-        batches.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    LAST_RUN_BATCHES[name] = len(
-        [p for p in q.recentProgress if p["numInputRows"] > 0]
+    _run_available_now(
+        spark, batches.writeStream.foreachBatch(ingest), name, ckpt, {}
     )
     d = Tables(spark, sf_dir).documents
     qterms = [

@@ -64,7 +64,8 @@ SKIP = {
  # engines (the production knob is suggest_n_cells ~ sqrt(corpus),
  # which keeps the build linear-ish; the pinned-knob query is the
  # oracle-replayable rung, not the scaled deployment). Spark-side
- # latency/recall at sf0.1/sf1 measured in scripts/r13_referee.py.
+ # latency/recall at sf0.1/sf1: BASELINE.md "Round 13: sf1 ladder point
+ # for the graph rung" (see "Retired measurement scripts").
  # r15: the SCALED graph lifecycle now runs in-sweep as the
  # llm_similarity_graph_prod trio (deployment knobs, exact-cosine
  # panel oracle — linear on both engines; sf1 76 s / sf3 102 s all

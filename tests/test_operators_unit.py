@@ -249,7 +249,53 @@ def test_multibatch_progression_is_actually_incremental(spark, sf_dir):
 
     out = all_queries()["stream_multibatch_progression"](spark, sf_dir)
     assert out.count() > 0
-    assert ops.LAST_RUN_BATCHES.get("mem_multibatch") == 4
+    assert ops.LAST_RUN["mem_multibatch"].batches == 4
+
+
+def test_progress_log_at_retention_cap_raises(spark, sf_dir):
+    # Spark keeps only the most recent progress entries (cap - 1 under
+    # numRecentProgressUpdates): a 4-batch run under a cap of 2 would
+    # record 1 batch and a partial exec-ms. The runner must refuse,
+    # naming the conf.
+    from distributed_query_engine_spark.registry import all_queries
+
+    key = "spark.sql.streaming.numRecentProgressUpdates"
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
+    try:
+        with pytest.raises(RuntimeError, match=key):
+            all_queries()["stream_multibatch_progression"](spark, sf_dir)
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def test_stream_state_partitions_knob_parsed_at_use(spark, sf_dir, monkeypatch):
+    # The knob is read when a stateful run starts (an import-time parse
+    # is the failure class that breaks the whole registry): a malformed
+    # or non-positive value raises ValueError naming it, before any
+    # query starts; a valid one sizes the run's shuffle partitions.
+    from distributed_query_engine_spark.streaming import ops
+
+    for bad in ("not-a-number", "0", "-4", "2.5"):
+        monkeypatch.setenv("DQE_STREAM_STATE_PARTITIONS", bad)
+        with pytest.raises(ValueError, match="DQE_STREAM_STATE_PARTITIONS"):
+            ops.run_to_memory(
+                ops.tumbling_window_agg(ops.read_events_stream(spark, sf_dir)),
+                "mem_knob_check",
+                "complete",
+            )
+    monkeypatch.setenv("DQE_STREAM_STATE_PARTITIONS", "5")
+    assert ops._state_partitions() == {"spark.sql.shuffle.partitions": "5"}
+
+    # the scoped conf restores a key that was unset before as unset
+    key = "spark.sql.streaming.stateStore.rocksdb.compactOnCommit"
+    assert spark.conf.get(key, None) is None
+    with ops._scoped_conf(spark, {key: "true"}):
+        assert spark.conf.get(key) == "true"
+    assert spark.conf.get(key, None) is None
 
 
 def test_sink_compaction_reduces_file_count(spark, sf_dir):
@@ -655,10 +701,36 @@ def test_stream_ingest_dedup_is_multibatch_and_matches_batch_variant(spark, sf_d
 
     qs = all_queries()
     streamed = sorted(map(tuple, qs["stream_ingest_dedup"](spark, sf_dir).collect()))
-    assert ops.LAST_RUN_BATCHES.get("ingest_dedup") == 4
+    assert ops.LAST_RUN["ingest_dedup"].batches == 4
+    assert ops.LAST_RUN["ingest_dedup"].exec_ms > 0
     batch = sorted(map(tuple, qs["llm_dedup_incremental"](spark, sf_dir).collect()))
     assert len(streamed) > 0
     assert streamed == batch
+
+
+def test_stream_ingest_dedup_crash_before_marker_replays_row_identical(spark, sf_dir):
+    # Default-tier smoke of the riskiest ingest window (the full
+    # recovery suite is slow-only): a crash mid-application of batch 1
+    # (store generation written, sink not), then a resume from the
+    # surviving checkpoint must land on the clean run's sink exactly.
+    from pyspark.errors import StreamingQueryException
+
+    from distributed_query_engine_spark.streaming import ops
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    expected = rows(ops.stream_ingest_dedup(spark, sf_dir, n_slices=2))
+    ops._TEST_DEDUP_CRASH_BEFORE_MARKER.add(1)
+    try:
+        with pytest.raises((StreamingQueryException, RuntimeError)) as ei:
+            ops.stream_ingest_dedup(spark, sf_dir, n_slices=2)
+        assert "injected crash" in str(ei.value)
+    finally:
+        ops._TEST_DEDUP_CRASH_BEFORE_MARKER.discard(1)
+    got = rows(ops.stream_ingest_dedup(spark, sf_dir, n_slices=2, _resume=True))
+    assert len(expected) > 0
+    assert got == expected
 
 
 def test_incremental_dedup_empty_batch_and_empty_corpus(spark, sf_dir):
@@ -722,7 +794,7 @@ def test_late_data_drops_are_real(spark, sf_dir):
     assert 0 < dropped_rows < no_drop_rows
     # the COVERAGE.md claim, asserted for real: the straggler batch's
     # rows show up in the engine's numRowsDroppedByWatermark metric
-    assert ops.LAST_RUN_DROPPED["mem_late_drops"] > 0
+    assert ops.LAST_RUN["mem_late_drops"].dropped > 0
 
 
 def test_merge_upsert_cdc_invariants(spark, sf_dir):
@@ -828,7 +900,7 @@ def test_stream_cdc_apply_is_multibatch_and_matches_batch_merge(spark, sf_dir):
     qs = all_queries()
     streamed = qs["stream_cdc_apply"](spark, sf_dir)
     batch = qs["merge_upsert_cdc"](spark, sf_dir)
-    assert ops.LAST_RUN_BATCHES["cdc_apply"] == 3
+    assert ops.LAST_RUN["cdc_apply"].batches == 3
     assert streamed.count() == batch.count()
     assert streamed.exceptAll(batch).count() == 0
     assert batch.exceptAll(streamed).count() == 0
@@ -1684,7 +1756,7 @@ def test_stream_mv_refresh_multibatch_merge_and_drop(spark, sf_dir):
     from distributed_query_engine_spark.streaming import ops
 
     mv = all_queries()["stream_mv_refresh"](spark, sf_dir)
-    assert ops.LAST_RUN_BATCHES.get("mv_refresh") == 3
+    assert ops.LAST_RUN["mv_refresh"].batches == 3
     run_key = f"mv_refresh-{ops._staging_key(sf_dir)}"
     import os
 
@@ -1731,7 +1803,7 @@ def test_flush_retry_guard_detects_withheld_stateful_output(spark, sf_dir):
         "append",
     )
     assert healthy.count() > 0
-    assert ops.LAST_RUN_RETRIED["mem_anti_healthy"] is False
+    assert ops.LAST_RUN["mem_anti_healthy"].retried is False
 
     # detector unit: the anomaly's exact progress shape fires; healthy /
     # unwatermarked / complete-mode shapes do not
@@ -1765,7 +1837,7 @@ def test_flush_retry_guard_detects_withheld_stateful_output(spark, sf_dir):
             "mem_anti_withheld",
             "append",
         )
-        assert ops.LAST_RUN_RETRIED["mem_anti_withheld"] is True
+        assert ops.LAST_RUN["mem_anti_withheld"].retried is True
         assert res.count() == 0  # both runs withheld under the conf
     finally:
         spark.conf.set(key, prior)

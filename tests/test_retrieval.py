@@ -365,7 +365,7 @@ def test_stream_bm25_ingest_multibatch_and_matches_batch_index(spark, sf_dir):
     got = sorted(
         tuple(r) for r in _q("stream_bm25_ingest", spark, sf_dir).collect()
     )
-    assert ops.LAST_RUN_BATCHES.get("bm25_ingest") == 4
+    assert ops.LAST_RUN["bm25_ingest"].batches == 4
     want = sorted(
         tuple(r) for r in _q("llm_bm25_topk", spark, sf_dir).collect()
     )
