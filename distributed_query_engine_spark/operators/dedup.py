@@ -9,14 +9,19 @@ Design for 100 TB:
 - Hashing is deterministic integer arithmetic mod a 31-bit prime, so the
   whole pipeline (signatures, bands, candidate pairs) is reproducible in
   any engine — which is what makes an exact SQL oracle possible.
-- Token ids come in two interchangeable flavors (``signatures_for``):
-  the DEFAULT dictionary-FREE ``hashed=True`` path — a row-local
-  md5-prefix-mod-P id (``hashed_token_ids``) with no distinct, no
+- Token ids are dictionary-FREE: a row-local md5-prefix-mod-P id
+  (``hashed_token_ids`` / ``signatures_rowlocal``) with no distinct, no
   global sort, and no join (the 100 TB path; oracle-exact because md5
-  is defined identically in both engines) — and the ``hashed=False``
-  global ``row_number`` dictionary, kept as the pure-arithmetic parity
-  demo (its vocabulary sort is a single task: fine locally, fatal at
-  scale).
+  is defined identically in both engines). Only
+  ``minhash_dedup_pairs(hashed=False)`` still builds the global
+  ``row_number`` dictionary (``token_ids``), kept as the pure-arithmetic
+  parity demo (its vocabulary sort is a single task: fine locally,
+  fatal at scale).
+- Candidate generation is one banded first-collision self-join
+  (``candidate_pairs`` over ``_bands``) shared by the minhash and
+  simhash blockers, over group rows (``signature_groups``) whose
+  members are expanded back to doc pairs by ``_within_pairs`` and
+  ``_expand_cross``.
 - Candidate verification (exact Jaccard) runs only on LSH candidates:
   the quadratic blow-up is confined to near-duplicate buckets.
 """
@@ -33,6 +38,7 @@ P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 N_HASHES = 16
 N_BANDS = 4
 ROWS_PER_BAND = N_HASHES // N_BANDS
+SIG_COLS = [f"m{i}" for i in range(N_HASHES)]
 
 
 def hash_params(i: int) -> tuple[int, int]:
@@ -229,12 +235,33 @@ def minhash_signatures(tokens_tid: DataFrame) -> DataFrame:
     return tokens_tid.groupBy("doc_id").agg(*aggs)
 
 
+def _bands(df: DataFrame, id_col: str, keys: Column) -> DataFrame:
+    """(id_col, band_keys, band, band_key): one row per band of each
+    ``df`` row. Rows agreeing on a band's key collide. ``band_keys``
+    carries ALL of the row's band keys so the pairing join can dedupe
+    multi-band collisions with a codegen filter (:func:`_first_band`)
+    instead of a second (full-pair-set-sized) distinct shuffle."""
+    return df.select(id_col, keys.alias("band_keys")).select(
+        id_col, "band_keys", F.posexplode("band_keys").alias("band", "band_key")
+    )
+
+
+def _first_band() -> Column:
+    """True iff the joined rows ``a`` and ``b`` collide in no band before
+    this one: a pair colliding in several bands is kept only at its
+    first common band — set-identical to `.distinct()` but a codegen
+    filter over the carried band_keys arrays rather than a shuffle of
+    the quadratic pair set."""
+    earlier_collision = F.exists(
+        F.sequence(F.lit(0), F.col("band") - 1),
+        lambda j: F.col("a.band_keys")[j] == F.col("b.band_keys")[j],
+    )
+    return F.when(F.col("band") == 0, F.lit(True)).otherwise(~earlier_collision)
+
+
 def lsh_bands(sigs: DataFrame) -> DataFrame:
-    """Signature → (doc_id, band, band_key, band_keys). Band key is the
-    joined minhash values: docs agreeing on all rows of a band collide.
-    ``band_keys`` carries ALL of the doc's band keys so the pairing join
-    can dedupe multi-band collisions with a codegen filter instead of a
-    second (full-pair-set-sized) distinct shuffle."""
+    """Signature → (doc_id, band_keys, band, band_key). Band key is the
+    joined minhash values: docs agreeing on all rows of a band collide."""
     keys = F.array(
         *[
             F.concat_ws(
@@ -244,9 +271,12 @@ def lsh_bands(sigs: DataFrame) -> DataFrame:
             for b in range(N_BANDS)
         ]
     )
-    return sigs.select("doc_id", keys.alias("band_keys")).select(
-        "doc_id", "band_keys", F.posexplode("band_keys").alias("band", "band_key")
-    )
+    return _bands(sigs, "doc_id", keys)
+
+
+def _rep_bands(groups: DataFrame) -> DataFrame:
+    """Band relation of the group REPRESENTATIVES (rep as doc_id)."""
+    return lsh_bands(groups.select(F.col("rep").alias("doc_id"), *SIG_COLS))
 
 
 SALT_GROUPS = 16
@@ -270,10 +300,11 @@ def _explode_par() -> int:
 
 
 def candidate_pairs(bands: DataFrame) -> DataFrame:
-    """Self-join on (band, band_key) → (doc_a < doc_b) pairs, exactly
-    once per pair. The shuffle key is the band key, so only colliding
-    docs meet; the shuffle moves n_docs × N_BANDS tiny rows, never the
-    quadratic pair set.
+    """Self-join a :func:`_bands` relation on (band, band_key) → (doc_a
+    < doc_b) pairs of its ids (its first column: doc ids, group reps or
+    simhash values), exactly once per pair. The shuffle key is the band
+    key, so only colliding rows meet; the shuffle moves n_rows × n_bands
+    tiny rows, never the quadratic pair set.
 
     Two scale measures:
 
@@ -281,29 +312,54 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
       template → thousands of colliding docs); an unsalted self-join
       hands that bucket's entire k² pair explosion — and everything
       codegen'd after it — to ONE task. Side A is tagged
-      hash(doc) % SALT_GROUPS, side B is replicated across all salts
+      hash(id) % SALT_GROUPS, side B is replicated across all salts
       (bounded ×16 blow-up of the tiny linear band relation), and the
       join key becomes (band, band_key, salt): each bucket's pair
       production spreads over SALT_GROUPS tasks. Each unordered pair
-      meets exactly once — via the orientation whose A-side doc owns the
+      meets exactly once — via the orientation whose A-side id owns the
       matching salt and survives doc_a < doc_b.
-    - **First-collision-wins dedup.** A pair colliding in several bands
-      is kept only at its first common band — set-identical to
-      `.distinct()` but a codegen filter over carried band_keys arrays
-      rather than a shuffle of the quadratic pair set."""
-    a = bands.withColumn("salt", F.pmod(F.xxhash64("doc_id"), F.lit(SALT_GROUPS))).alias("a")
+    - **First-collision-wins dedup** (:func:`_first_band`)."""
+    id_col = bands.columns[0]
+    a = bands.withColumn("salt", F.pmod(F.xxhash64(id_col), F.lit(SALT_GROUPS))).alias("a")
     b = bands.withColumn(
         "salt", F.explode(F.array(*[F.lit(g) for g in range(SALT_GROUPS)]))
     ).alias("b")
-    earlier_collision = F.exists(
-        F.sequence(F.lit(0), F.col("band") - 1),
-        lambda j: F.col("a.band_keys")[j] == F.col("b.band_keys")[j],
-    )
-    first_band = F.when(F.col("band") == 0, F.lit(True)).otherwise(~earlier_collision)
     return (
         a.join(b, ["band", "band_key", "salt"])
-        .filter((F.col("a.doc_id") < F.col("b.doc_id")) & first_band)
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .filter((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & _first_band())
+        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+    )
+
+
+def _within_pairs(groups: DataFrame, par: int) -> DataFrame:
+    """(doc_a < doc_b) member pairs inside each group row. The double
+    explode is split by a repartition so a k-member group's k²
+    expansion spreads across ``par`` tasks instead of one Generate
+    task."""
+    return (
+        groups.filter(F.size("members") > 1)
+        .select("members", F.explode("members").alias("doc_a"))
+        .repartition(par, "doc_a")
+        .select("doc_a", F.explode("members").alias("doc_b"))
+        .filter(F.col("doc_a") < F.col("doc_b"))
+    )
+
+
+def _expand_cross(
+    pairs: DataFrame, ga: DataFrame, gb: DataFrame, par: int
+) -> DataFrame:
+    """Group-key pairs (doc_a, doc_b, *carried) → member pairs (*carried,
+    xa, xb): ``ga``/``gb`` are (key, members) group relations that
+    doc_a/doc_b join. Raw orientation (xa from ga's group); each caller
+    orders its own pair. The two explodes are split by a repartition,
+    same discipline as :func:`_within_pairs`."""
+    carried = [c for c in pairs.columns if c not in ("doc_a", "doc_b")]
+    return (
+        pairs.join(ga.toDF("doc_a", "ma"), "doc_a")
+        .join(gb.toDF("doc_b", "mb"), "doc_b")
+        .select(*carried, F.explode("ma").alias("xa"), "mb")
+        .repartition(par, "xa")
+        .select(*carried, "xa", F.explode("mb").alias("xb"))
     )
 
 
@@ -350,23 +406,21 @@ def _verify_build_hint(docs: DataFrame) -> str | None:
 
 def exact_jaccard(
     pairs: DataFrame,
-    tokens: DataFrame | None = None,
+    doc_sets: DataFrame,
     threshold: float | None = None,
-    doc_sets: DataFrame | None = None,
     build_hint: str | None = None,
 ) -> DataFrame:
-    """Exact set-Jaccard for given pairs from the (doc, tok) relation
-    (``tokens``) or from a precomputed doc→sorted-hash-array relation
-    (``doc_sets`` — pass :func:`doc_hash_sets_rowlocal` to skip the
-    aggregation shuffle entirely when the sets are row-derivable).
+    """Exact set-Jaccard for given pairs from a doc→sorted-hash-array
+    relation (``doc_sets``: :func:`doc_hash_sets_rowlocal` or
+    :func:`hash_sets_from_arrays` — row-derived, no aggregation
+    shuffle).
 
-    The token relation is first aggregated to one sorted array per doc
-    (a shuffle of the LINEAR token relation), then each pair row picks up
-    both arrays via two doc-keyed joins and intersects them JVM-side
-    (`array_intersect` inside whole-stage codegen). The pair set — the
-    only quadratic-ish relation — is never exploded per token and never
-    re-shuffled for aggregation; with AQE the doc→array side broadcasts
-    when small. Division of small exact ints → deterministic double.
+    Each pair row picks up both arrays via two doc-keyed joins and
+    intersects them JVM-side (`array_intersect` inside whole-stage
+    codegen). The pair set — the only quadratic-ish relation — is never
+    exploded per token and never re-shuffled for aggregation; with AQE
+    the doc→array side broadcasts when small. Division of small exact
+    ints → deterministic double.
 
     Every candidate pair is reported with its verified score, INCLUDING
     jaccard = 0: the blocking already bounded the candidate set, and a
@@ -395,13 +449,6 @@ def exact_jaccard(
     while staying deterministic: the comparison is the identical double
     division the projection computes, so survivors are bit-exactly the
     pairs whose reported jaccard passes."""
-    if tokens is None and doc_sets is None:
-        raise ValueError("exact_jaccard: pass tokens or doc_sets")
-    if doc_sets is None:
-        t64 = tokens.select("doc_id", F.xxhash64("tok").alias("t"))
-        doc_sets = t64.groupBy("doc_id").agg(
-            F.sort_array(F.collect_set("t")).alias("toks")
-        )
     # Join the SAME doc_sets relation twice (aliased, renamed only
     # ABOVE the join) instead of joining two differently-projected
     # copies: identical join inputs canonicalize to one exchange, so
@@ -429,25 +476,24 @@ def exact_jaccard(
     return base.select("doc_a", "doc_b", jac.alias("jaccard"))
 
 
-def signature_groups(sigs: DataFrame) -> DataFrame:
-    """Collapse identical-signature docs to one group row: (m0..m{n},
-    members sorted, rep = min doc_id). THE grouping contract shared by
-    every grouped candidate path (self-join, star edges, incremental) —
+def signature_groups(sigs: DataFrame, keys: list[str] = SIG_COLS) -> DataFrame:
+    """Collapse docs with identical ``keys`` (the minhash signature, or
+    the simhash value) to one group row: (*keys, members sorted, rep =
+    min doc_id). THE grouping contract shared by every grouped
+    candidate path (self-join, star edges, incremental, simhash) —
     change the member ordering or rep tiebreak HERE only, or the
     documented set-identity between grouped and per-doc candidate
     generation breaks."""
-    sig_cols = [f"m{i}" for i in range(N_HASHES)]
-    return sigs.groupBy(*sig_cols).agg(
+    return sigs.groupBy(*keys).agg(
         F.sort_array(F.collect_list("doc_id")).alias("members"),
         F.min("doc_id").alias("rep"),
     )
 
 
-def candidate_pairs_grouped(
-    sigs: DataFrame, groups: DataFrame | None = None
-) -> DataFrame:
+def candidate_pairs_grouped(groups: DataFrame) -> DataFrame:
     """Candidate pairs via SIGNATURE GROUPING — same pair set as
-    ``candidate_pairs(lsh_bands(sigs))``, built the way a boilerplate-
+    ``candidate_pairs(lsh_bands(sigs))`` for
+    ``groups = signature_groups(sigs)``, built the way a boilerplate-
     heavy corpus demands.
 
     Real corpora contain groups of documents with IDENTICAL minhash
@@ -468,41 +514,19 @@ def candidate_pairs_grouped(
       each unordered doc pair appears exactly once; least/greatest
       restores the doc_a < doc_b convention.
 
-    ``groups``: pre-materialized :func:`signature_groups` output for the
-    same ``sigs`` (caller already holds a checkpointed copy — e.g. the
-    ingest loop, which also appends it to the grouped store); passing it
-    skips a duplicate group shuffle + eager checkpoint job (r15)."""
-    sig_cols = [f"m{i}" for i in range(N_HASHES)]
-    if groups is None:
-        groups = signature_groups(sigs).localCheckpoint()
+    ``groups`` must be materialized (``localCheckpoint()`` or a parquet
+    read): it feeds several joins below, and with the row-local
+    signature projections an un-cut lineage drives Catalyst's
+    constraint propagation over the 16 aliased minhash expressions into
+    exponential ExpressionSet growth (observed as an optimizer-time
+    OOM). The groups are narrow (one row per distinct signature), so
+    the materialization is metadata-sized next to the corpus."""
     par = _explode_par()
-    within = (
-        groups.filter(F.size("members") > 1)
-        .select("members", F.explode("members").alias("doc_a"))
-        .repartition(par, "doc_a")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-    )
-    rep_sigs = groups.select(F.col("rep").alias("doc_id"), *sig_cols)
-    rep_pairs = candidate_pairs(lsh_bands(rep_sigs))
     members = groups.select("rep", "members")
-    cross = (
-        rep_pairs.join(
-            members.select(F.col("rep").alias("doc_a"), F.col("members").alias("ma")),
-            "doc_a",
-        )
-        .join(
-            members.select(F.col("rep").alias("doc_b"), F.col("members").alias("mb")),
-            "doc_b",
-        )
-        .select(F.explode("ma").alias("xa"), "mb")
-        .repartition(par, "xa")
-        .select("xa", F.explode("mb").alias("xb"))
-        .select(
-            F.least("xa", "xb").alias("doc_a"), F.greatest("xa", "xb").alias("doc_b")
-        )
-    )
-    return within.unionByName(cross)
+    cross = _expand_cross(
+        candidate_pairs(_rep_bands(groups)), members, members, par
+    ).select(F.least("xa", "xb").alias("doc_a"), F.greatest("xa", "xb").alias("doc_b"))
+    return _within_pairs(groups, par).unionByName(cross)
 
 
 def hashed_token_ids(tokens: DataFrame) -> DataFrame:
@@ -519,22 +543,6 @@ def hashed_token_ids(tokens: DataFrame) -> DataFrame:
     exact-Jaccard verification intersects the token strings themselves
     (exact_jaccard), so reported scores are unaffected."""
     return tokens.select("doc_id", _tid_expr("tok").alias("tid"))
-
-
-def signatures_for(tokens: DataFrame, hashed: bool = True) -> DataFrame:
-    """(doc, tok) relation → minhash signatures. ``hashed=True`` (the
-    default — the 100 TB path): row-local md5-mod-P ids
-    (:func:`hashed_token_ids`), no vocabulary sort. ``hashed=False``:
-    lexicographic dictionary → broadcast tid join (exact oracle parity
-    via row_number arithmetic; kept as the arithmetic demo path).
-    Either way one min-aggregate shuffle on doc_id. Shared by the
-    word-token and n-gram pipelines."""
-    if hashed:
-        tokens_tid = hashed_token_ids(tokens)
-    else:
-        dict_df = token_ids(tokens)
-        tokens_tid = tokens.join(F.broadcast(dict_df), "tok").select("doc_id", "tid")
-    return minhash_signatures(tokens_tid)
 
 
 def minhash_dedup_pairs(
@@ -554,39 +562,36 @@ def minhash_dedup_pairs(
     (linear edge count) instead of this scored-pairs report.
 
     ``hashed=True`` (the default) uses the dictionary-free md5-mod-P
-    token ids (see :func:`signatures_for`) — no global vocabulary sort;
-    ``hashed=False`` keeps the broadcast-dictionary path. Same verify
-    arithmetic either way."""
+    token ids (:func:`signatures_rowlocal`) — no global vocabulary sort;
+    ``hashed=False`` keeps the broadcast-dictionary path
+    (:func:`token_ids`). Only the candidate geometry differs: both
+    verify on the same row-local xxhash64 token sets."""
     # Hashed path: signatures AND verify token-sets are ROW-LOCAL
     # expressions (signatures_rowlocal / doc_hash_sets_rowlocal), so the
     # corpus is scanned twice with zero token-relation shuffles — the
     # historical recompute-vs-checkpoint question (r5 measurements:
     # recompute 3.34 s vs localCheckpoint 3.79 s vs persist 4.87 s)
     # dissolves, since there is no longer an exploded relation to reuse.
-    # Dictionary path keeps the exploded relation (its ids need the
-    # global vocabulary).
+    # Dictionary path explodes tokens for the signatures only (its ids
+    # need the global vocabulary).
     if hashed:
         sigs = signatures_rowlocal(docs)
-        pairs = candidate_pairs_grouped(sigs)
-        verified = exact_jaccard(
-            pairs,
-            threshold=threshold,
-            doc_sets=doc_hash_sets_rowlocal(docs),
-            build_hint=_verify_build_hint(docs),
-        )
     else:
         tokens = tokenize(docs)
-        sigs = signatures_for(tokens, hashed=False)
-        pairs = candidate_pairs_grouped(sigs)
-        verified = exact_jaccard(pairs, tokens, threshold=threshold)
+        sigs = minhash_signatures(tokens.join(F.broadcast(token_ids(tokens)), "tok"))
+    pairs = candidate_pairs_grouped(signature_groups(sigs).localCheckpoint())
+    verified = exact_jaccard(
+        pairs,
+        doc_hash_sets_rowlocal(docs),
+        threshold=threshold,
+        build_hint=_verify_build_hint(docs),
+    )
     return verified.select(
         "doc_a", "doc_b", "jaccard", (F.col("jaccard") >= threshold).alias("is_dup")
     )
 
 
-def minhash_dup_edges(
-    docs: DataFrame, threshold: float = 0.5, hashed: bool = True
-) -> DataFrame:
+def minhash_dup_edges(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Near-duplicate EDGES for clustering consumers — linear in group
     size where :func:`minhash_dedup_pairs`' candidate set is quadratic.
 
@@ -606,44 +611,31 @@ def minhash_dup_edges(
     group, and identical-signature members that fail even their rep are
     overwhelmingly not duplicates of anyone. Returns (doc_a, doc_b).
 
-    ``hashed=True`` (the default — this operator feeds multi-stage
-    clustering pipelines, so it gets the 100 TB token-id path): row-local
-    md5-mod-P ids, no global vocabulary sort. The id scheme shifts WHICH
-    docs share identical signatures / band keys (candidate recall), never
-    a reported edge's validity — every edge is exact-Jaccard-verified on
-    the token strings themselves."""
-    # Hashed path is fully row-local (see minhash_dedup_pairs) — no
-    # token-relation shuffles to reuse or checkpoint.
-    if hashed:
-        sigs = signatures_rowlocal(docs)
-        verify_kw = {
-            "doc_sets": doc_hash_sets_rowlocal(docs),
-            "build_hint": _verify_build_hint(docs),
-        }
-    else:
-        tokens = tokenize(docs)
-        sigs = signatures_for(tokens, hashed=False)
-        verify_kw = {"tokens": tokens}
-    sig_cols = [f"m{i}" for i in range(N_HASHES)]
-    groups = signature_groups(sigs).localCheckpoint()
+    This operator feeds multi-stage clustering pipelines, so it uses the
+    100 TB token-id path (row-local md5-mod-P ids, no global vocabulary
+    sort) and is fully row-local, like :func:`minhash_dedup_pairs`. The
+    id scheme shifts WHICH docs share identical signatures / band keys
+    (candidate recall), never a reported edge's validity — every edge is
+    exact-Jaccard-verified on the hashed token sets."""
+    groups = signature_groups(signatures_rowlocal(docs)).localCheckpoint()
     star = (
         groups.filter(F.size("members") > 1)
         .select(F.col("rep").alias("doc_a"), F.explode("members").alias("doc_b"))
         .filter(F.col("doc_a") < F.col("doc_b"))
     )
-    rep_sigs = groups.select(F.col("rep").alias("doc_id"), *sig_cols)
-    rep_pairs = candidate_pairs(lsh_bands(rep_sigs))
-    cand = star.unionByName(rep_pairs)
-    return exact_jaccard(cand, threshold=threshold, **verify_kw).select(
-        "doc_a", "doc_b"
-    )
+    cand = star.unionByName(candidate_pairs(_rep_bands(groups)))
+    return exact_jaccard(
+        cand,
+        doc_hash_sets_rowlocal(docs),
+        threshold=threshold,
+        build_hint=_verify_build_hint(docs),
+    ).select("doc_a", "doc_b")
 
 
 def incremental_minhash_dedup(
     corpus: DataFrame,
     incoming: DataFrame,
     threshold: float = 0.5,
-    hashed: bool = True,
 ) -> DataFrame:
     """Near-dup detection for a NEW batch against an EXISTING corpus —
     the steady-state shape of a production ingestion pipeline, where
@@ -668,31 +660,27 @@ def incremental_minhash_dedup(
     - In-batch candidates reuse :func:`candidate_pairs` (salted,
       first-collision-deduped) over the SMALL batch band relation.
     - In production the corpus side of signature generation comes from a
-      SIGNATURE STORE (a parquet sink of ``signatures_for`` keyed by
-      doc_id, appended per ingested batch) rather than re-tokenizing;
-      it is recomputed here so the operator is self-contained against
-      two raw document frames. Exact-Jaccard verification always needs
-      the token relation of BOTH sides (fetch-by-id in production).
+      SIGNATURE STORE (grouped signature rows, appended per ingested
+      batch — :func:`incremental_dedup_from_store`) rather than
+      re-tokenizing; it is recomputed here so the operator is
+      self-contained against two raw document frames. Exact-Jaccard
+      verification always needs the token sets of BOTH sides
+      (fetch-by-id in production).
 
+    Token ids are the row-local md5-mod-P path (:func:`signatures_rowlocal`).
+    The verify join's doc-set side is corpus-sized, so it carries the
+    same :func:`_verify_build_hint` guard as :func:`minhash_dedup_pairs`.
     Multi-band collisions dedup via the same earliest-common-band filter
-    as :func:`candidate_pairs` — set-identical to DISTINCT on the pair,
-    without shuffling the pair set."""
-    if hashed:
-        sigs_c = signatures_rowlocal(corpus)
-        sigs_n = signatures_rowlocal(incoming)
-        verify_kw = {
-            "doc_sets": doc_hash_sets_rowlocal(corpus).unionByName(
-                doc_hash_sets_rowlocal(incoming)
-            )
-        }
-    else:
-        tok_c = tokenize(corpus)
-        tok_n = tokenize(incoming)
-        sigs_c = signatures_for(tok_c, hashed=False)
-        sigs_n = signatures_for(tok_n, hashed=False)
-        verify_kw = {"tokens": tok_c.unionByName(tok_n)}
-    pairs = _incremental_candidates(sigs_c, sigs_n)
-    return exact_jaccard(pairs, threshold=threshold, **verify_kw).select(
+    as :func:`candidate_pairs` (:func:`_first_band`)."""
+    gc = signature_groups(signatures_rowlocal(corpus)).localCheckpoint()
+    gn = signature_groups(signatures_rowlocal(incoming)).localCheckpoint()
+    pairs, _ = _incremental_candidates(gc, gn)
+    doc_sets = doc_hash_sets_rowlocal(corpus).unionByName(
+        doc_hash_sets_rowlocal(incoming)
+    )
+    return exact_jaccard(
+        pairs, doc_sets, threshold=threshold, build_hint=_verify_build_hint(corpus)
+    ).select(
         F.col("doc_a").alias("new_doc"),
         F.col("doc_b").alias("dup_of"),
         "jaccard",
@@ -701,12 +689,8 @@ def incremental_minhash_dedup(
 
 
 def _incremental_candidates(
-    sigs_c: DataFrame | None,
-    sigs_n: DataFrame | None,
-    gc: DataFrame | None = None,
-    gn: DataFrame | None = None,
-    with_store_hits: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame]:
+    gc: DataFrame, gn: DataFrame
+) -> tuple[DataFrame, DataFrame]:
     """Candidate (batch doc, corpus-or-earlier-batch doc) pairs for the
     incremental dedup family — SIGNATURE-GROUPED on BOTH sides, for the
     same reason :func:`candidate_pairs_grouped` groups the self-join: a
@@ -715,105 +699,61 @@ def _incremental_candidates(
     size (per-doc banding measured 9.4 s vs 3.4 s grouped at sf0.1 for
     the 20% batch split — slower than the FULL all-pairs dedup until
     grouped).
-    Group each side's signatures, band-join the REPRESENTATIVES (the
-    batch's group-level band relation broadcasts; the corpus side still
-    never shuffles), then expand both member lists through repartitioned
-    explodes. Identical signatures across sides share every band key,
-    so the rep join catches them at band 0. Returns (doc_a = batch doc,
-    doc_b = corpus doc) plus in-batch pairs oriented later-as-new.
+    Band-join the group REPRESENTATIVES (the batch's group-level band
+    relation broadcasts; the corpus side never shuffles; no salt and no
+    ordering filter, only :func:`_first_band`), then expand both member
+    lists through :func:`_expand_cross`. Identical signatures across
+    sides share every band key, so the rep join catches them at band 0.
+    Returns (pairs, hit_ids): pairs are (doc_a = batch doc, doc_b =
+    corpus doc) plus in-batch pairs oriented later-as-new.
 
-    ``gc``/``gn``: pre-grouped sides. ``gc`` is the GROUPED signature
-    store read straight from parquet (r15 — the store persists group
-    rows, so the per-batch corpus regroup shuffle + eager checkpoint
-    disappear; a parquet scan's lineage is already cut, so the
-    constraint-propagation guard below is moot for it). ``gn`` is a
-    checkpointed batch-group relation the caller reuses for its own
-    store append. Group-set identity across generations is NOT required:
-    two store generations may both hold a group row for the same
-    signature — their reps band-join the batch independently (identical
-    signatures share every band key) and their member lists are
-    disjoint (each doc lives in exactly one generation), so each
-    (batch doc, store doc) pair still arises exactly once.
+    ``gc``/``gn``: materialized :func:`signature_groups` relations (see
+    :func:`candidate_pairs_grouped` for why). ``gc`` may be the GROUPED
+    signature store read straight from parquet (r15 — the store
+    persists group rows, so the per-batch corpus regroup shuffle +
+    eager checkpoint disappear). Group-set identity across generations
+    is NOT required: two store generations may both hold a group row
+    for the same signature — their reps band-join the batch
+    independently (identical signatures share every band key) and their
+    member lists are disjoint (each doc lives in exactly one
+    generation), so each (batch doc, store doc) pair still arises
+    exactly once.
 
-    ``with_store_hits=True`` additionally returns the store-side
-    candidate-hit doc ids as a second DataFrame, derived from the rep
-    band join + a member explode of the HIT GROUPS — linear in group
-    membership, never touching the quadratic pair relation. The set is
-    exactly the distinct ``doc_b`` values of the cross pairs (every
-    member of a matched store group appears as a doc_b), which is what
-    the fetch-by-id verify needs; in-batch doc_b values are omitted by
-    construction, matching the caller's anti-join of the batch (r16 —
+    ``hit_ids`` are the store-side candidate-hit doc ids, derived from
+    the rep band join + a member explode of the HIT GROUPS — linear in
+    group membership, never touching the quadratic pair relation. The
+    set is exactly the distinct ``doc_b`` values of the cross pairs
+    (every member of a matched store group appears as a doc_b), which is
+    what the fetch-by-id verify needs; in-batch doc_b values are omitted
+    by construction, matching the caller's anti-join of the batch (r16 —
     this is what lets the caller drop the pairs localCheckpoint: the
     pair relation now has exactly ONE consumer, the verify join)."""
-    sig_cols = [f"m{i}" for i in range(N_HASHES)]
-    if (sigs_c is None and gc is None) or (sigs_n is None and gn is None):
-        raise ValueError(
-            "_incremental_candidates: each side needs sigs or its "
-            "pre-grouped relation (gc/gn)"
-        )
-    # localCheckpoint for the same two reasons candidate_pairs_grouped
-    # checkpoints ITS groups: (a) the group relations feed multiple
-    # joins below, and (b) with the row-local signature projections the
-    # un-cut lineage drives Catalyst's constraint propagation over the
-    # 16 aliased minhash expressions into exponential ExpressionSet
-    # growth (observed as an optimizer-time OOM, not an execution-time
-    # one). The groups are narrow (one row per distinct signature), so
-    # the materialization is metadata-sized next to the corpus.
-    if gc is None:
-        gc = signature_groups(sigs_c).localCheckpoint()
-    if gn is None:
-        gn = signature_groups(sigs_n).localCheckpoint()
-    bands_c = lsh_bands(gc.select(F.col("rep").alias("doc_id"), *sig_cols))
-    bands_n = lsh_bands(gn.select(F.col("rep").alias("doc_id"), *sig_cols))
-    a = bands_c.alias("a")
-    b = bands_n.alias("b")
-    earlier_collision = F.exists(
-        F.sequence(F.lit(0), F.col("band") - 1),
-        lambda j: F.col("a.band_keys")[j] == F.col("b.band_keys")[j],
-    )
-    first_band = F.when(F.col("band") == 0, F.lit(True)).otherwise(
-        ~earlier_collision
-    )
     rep_pairs = (
-        a.join(F.broadcast(b), ["band", "band_key"])
-        .filter(first_band)
-        .select(
-            F.col("b.doc_id").alias("nrep"),
-            F.col("a.doc_id").alias("crep"),
-        )
+        _rep_bands(gc)
+        .alias("a")
+        .join(F.broadcast(_rep_bands(gn).alias("b")), ["band", "band_key"])
+        .filter(_first_band())
+        .select(F.col("b.doc_id").alias("doc_a"), F.col("a.doc_id").alias("doc_b"))
     )
-    par = _explode_par()
-    cross = (
-        rep_pairs.join(
-            gn.select(F.col("rep").alias("nrep"), F.col("members").alias("mn")),
-            "nrep",
-        )
-        .join(
-            gc.select(F.col("rep").alias("crep"), F.col("members").alias("mc")),
-            "crep",
-        )
-        .select(F.explode("mn").alias("doc_a"), "mc")
-        .repartition(par, "doc_a")
-        .select("doc_a", F.explode("mc").alias("doc_b"))
-    )
+    cross = _expand_cross(
+        rep_pairs,
+        gn.select("rep", "members"),
+        gc.select("rep", "members"),
+        _explode_par(),
+    ).select(F.col("xa").alias("doc_a"), F.col("xb").alias("doc_b"))
     # In-batch pairs: the grouped self-join yields doc_a < doc_b; the
     # LATER arrival is the "new" doc being flagged against the earlier.
-    # gn is exactly signature_groups(sigs_n) — reuse it so the batch is
-    # grouped (and eagerly checkpointed) once, not twice (r15).
-    within = candidate_pairs_grouped(sigs_n, groups=gn).select(
+    within = candidate_pairs_grouped(gn).select(
         F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
     )
-    pairs = cross.unionByName(within)
-    if with_store_hits:
-        # Semi join (not inner): rep_pairs repeats a crep once per
-        # matched batch group; semi keeps each hit group once. Members
-        # are disjoint across groups AND generations, so the explode is
-        # already duplicate-free — no distinct shuffle.
-        hit_ids = gc.join(
-            rep_pairs.select(F.col("crep").alias("rep")), "rep", "left_semi"
-        ).select(F.explode("members").alias("doc_id"))
-        return pairs, hit_ids
-    return pairs
+    # Semi join (not inner): rep_pairs repeats a corpus rep once per
+    # matched batch group; semi keeps each hit group once. Members are
+    # disjoint across groups AND generations, so the explode is already
+    # duplicate-free — no distinct shuffle.
+    hit_ids = gc.join(
+        rep_pairs.select(F.col("doc_b").alias("rep")), "rep", "left_semi"
+    ).select(F.explode("members").alias("doc_id"))
+    return cross.unionByName(within), hit_ids
 
 
 def incremental_dedup_from_store(
@@ -822,7 +762,6 @@ def incremental_dedup_from_store(
     corpus: DataFrame,
     incoming: DataFrame,
     threshold: float = 0.5,
-    hashed: bool = True,
     batch_groups: DataFrame | None = None,
     store_dirs: list[str] | None = None,
 ) -> DataFrame:
@@ -847,12 +786,12 @@ def incremental_dedup_from_store(
       smaller than the corpus, so the verify stage's scan cost tracks
       the batch too.
 
-    ``batch_groups``: optional pre-materialized (checkpointed or
+    Signatures (stored and batch) are the row-local md5-mod-P path
+    (:func:`signatures_rowlocal`), verified on row-local xxhash64 token
+    sets. ``batch_groups``: optional pre-materialized (checkpointed or
     parquet-backed) ``signature_groups(signatures of incoming)`` — the
     ingest loop passes the store subdir it just wrote, so the batch is
-    grouped exactly once per micro-batch. Implies ``hashed=True``:
-    grouped signatures are md5-mod-P by construction, so mixing them
-    with string-token verification would be silently wrong (ADVICE r15).
+    grouped exactly once per micro-batch.
 
     ``store_dirs``: explicit store generation dirs to read instead of a
     recursive listing of ``store_path`` — the ingest loop's write-first
@@ -862,11 +801,6 @@ def incremental_dedup_from_store(
     Same output contract as :func:`incremental_minhash_dedup`; identical
     results for identical inputs, since the store holds exactly the
     signatures the self-contained variant recomputes (grouped)."""
-    if batch_groups is not None and not hashed:
-        raise ValueError(
-            "incremental_dedup_from_store: batch_groups implies "
-            "hashed=True (grouped signatures are md5-mod-P)"
-        )
     if store_dirs is not None:
         gc = spark.read.parquet(*store_dirs)
     else:
@@ -886,12 +820,9 @@ def incremental_dedup_from_store(
     # loop): its md5 work fits one task, so the narrow-scan spread is
     # pure per-batch exchange overhead — opted out.
     if batch_groups is None:
-        sigs_n = (
+        batch_groups = signature_groups(
             signatures_rowlocal(incoming, spread=False)
-            if hashed
-            else signatures_for(tokenize(incoming), hashed=False)
-        )
-        batch_groups = signature_groups(sigs_n).localCheckpoint()
+        ).localCheckpoint()
     # The quadratic pair relation has exactly ONE consumer — the verify
     # join: the fetch-by-id hit set is derived from the LINEAR rep band
     # join + hit-group member explode inside _incremental_candidates
@@ -900,9 +831,7 @@ def incremental_dedup_from_store(
     # the gc parquet scan and the materialized batch_groups, so the
     # 16-alias constraint-propagation blowup that once forced the eager
     # checkpoint cannot occur.
-    pairs, hit_ids = _incremental_candidates(
-        None, None, gc=gc, gn=batch_groups, with_store_hits=True
-    )
+    pairs, hit_ids = _incremental_candidates(gc, batch_groups)
     corpus_hits = corpus.join(hit_ids, "doc_id", "left_semi")
     # ``corpus`` may CONTAIN the incoming docs (the caller passes the
     # full table so in-batch dup partners resolve too) — the exploded
@@ -912,23 +841,17 @@ def incremental_dedup_from_store(
     corpus_only = corpus_hits.join(
         incoming.select("doc_id"), "doc_id", "left_anti"
     )
-    if hashed:
-        # spread=False on BOTH sides: corpus_only is a join-bearing
-        # plan, so the narrow-scan spread's .rdd partition probe would
-        # force an eager AQE materialization of the semi/anti subplan
-        # (one hidden driver job per batch — the cost the
-        # _spread_narrow_scan docstring warns about), to parallelize
-        # xxhash64 work over a candidate-hit set that is batch-sized.
-        verify_kw = {
-            "doc_sets": doc_hash_sets_rowlocal(
-                corpus_only, spread=False
-            ).unionByName(doc_hash_sets_rowlocal(incoming, spread=False))
-        }
-    else:
-        verify_kw = {
-            "tokens": tokenize(corpus_only).unionByName(tokenize(incoming))
-        }
-    return exact_jaccard(pairs, threshold=threshold, **verify_kw).select(
+    # spread=False on BOTH sides: corpus_only is a join-bearing plan, so
+    # the narrow-scan spread's .rdd partition probe would force an eager
+    # AQE materialization of the semi/anti subplan (one hidden driver
+    # job per batch — the cost the _spread_narrow_scan docstring warns
+    # about), to parallelize xxhash64 work over a candidate-hit set that
+    # is batch-sized. No _verify_build_hint: that set is batch-sized
+    # too, while the hint sizes a corpus scan.
+    doc_sets = doc_hash_sets_rowlocal(corpus_only, spread=False).unionByName(
+        doc_hash_sets_rowlocal(incoming, spread=False)
+    )
+    return exact_jaccard(pairs, doc_sets, threshold=threshold).select(
         F.col("doc_a").alias("new_doc"),
         F.col("doc_b").alias("dup_of"),
         "jaccard",
@@ -936,9 +859,7 @@ def incremental_dedup_from_store(
     )
 
 
-def build_signature_store(
-    spark, docs: DataFrame, store_path: str, hashed: bool = True
-) -> None:
+def build_signature_store(spark, docs: DataFrame, store_path: str) -> None:
     """Materialize the minhash signature store for a corpus as GROUP
     rows: one parquet row (m0..m{N_HASHES-1}, members, rep) per distinct
     signature (:func:`signature_groups` output). Storing the grouped
@@ -948,12 +869,9 @@ def build_signature_store(
     ingestion date — fragmentation across appends is harmless, see
     :func:`_incremental_candidates`); here the store is (re)built whole
     for a self-contained query."""
-    sigs = (
-        signatures_rowlocal(docs)
-        if hashed
-        else signatures_for(tokenize(docs), hashed=False)
+    signature_groups(signatures_rowlocal(docs)).write.mode("overwrite").parquet(
+        store_path
     )
-    signature_groups(sigs).write.mode("overwrite").parquet(store_path)
 
 
 def connected_components(
@@ -1068,108 +986,58 @@ def simhash(docs: DataFrame) -> DataFrame:
     return base.select("doc_id", sh.alias("simhash"))
 
 
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Near-duplicate pairs by simhash: block on the top 16 bits (a real
-    LSH — Hamming-close hashes usually share the prefix), then verify
-    bit_count(xor) within blocks.
+def _simhash_pairs(docs: DataFrame, band_keys: Column, max_hamming: int) -> DataFrame:
+    """The one simhash blocker behind :func:`simhash_near_pairs` and
+    :func:`simhash_near_pairs_multiband`, which differ only in
+    ``band_keys`` (an array expression over the ``simhash`` column).
 
     Built the way a boilerplate-heavy corpus demands (the same two-level
     shape as :func:`candidate_pairs_grouped`): a template shared by k
     documents yields k IDENTICAL simhash values, so a naive per-doc
-    prefix self-join hands that value's entire k² pair production to one
+    self-join hands that value's entire k² pair production to one
     shuffle task. Instead:
 
     - **collapse** identical simhash values to one group row
-      (value, sorted members) — group count, not doc count;
+      (:func:`signature_groups` keyed on the value) — group count, not
+      doc count;
     - **within-group** (hamming = 0): every member pair qualifies by
-      definition; generated by a double explode with a repartition
-      between them, so a k-member group's k² expansion spreads across
-      the cluster instead of one Generate task;
-    - **cross-group**: prefix self-join over DISTINCT simhash values
-      only, salted exactly as :func:`candidate_pairs` (side A tagged
-      hash(value) % SALT_GROUPS, side B replicated ×SALT_GROUPS of the
-      tiny distinct-value relation), verify 0 < hamming ≤ max, then
-      expand both member lists — again repartitioning between explodes.
+      definition (:func:`_within_pairs`);
+    - **cross-group**: the salted first-collision self-join of
+      :func:`candidate_pairs` over the DISTINCT values' bands, verify
+      0 < hamming ≤ max, then expand both member lists
+      (:func:`_expand_cross`).
 
     Groups are disjoint and each doc has one simhash, so each unordered
     pair appears exactly once; set-identical to the naive join."""
-    sh = simhash(docs)
-    groups, par = _simhash_groups(sh)
-    within = _within_group_pairs(groups, par)
-    vals = groups.select("simhash", F.shiftright("simhash", 16).alias("prefix"))
-    a = vals.select(
-        F.col("simhash").alias("sh_a"),
-        "prefix",
-        F.pmod(F.xxhash64("simhash"), F.lit(SALT_GROUPS)).alias("salt"),
-    )
-    b = vals.select(
-        F.col("simhash").alias("sh_b"),
-        "prefix",
-        F.explode(F.array(*[F.lit(g) for g in range(SALT_GROUPS)])).alias("salt"),
+    groups = signature_groups(simhash(docs), ["simhash"]).localCheckpoint()
+    par = _explode_par()
+    within = _within_pairs(groups, par).withColumn(
+        "hamming", F.lit(0).cast("long")
     )
     val_pairs = (
-        a.join(b, ["prefix", "salt"])
-        .filter(F.col("sh_a") < F.col("sh_b"))
-        .select(
-            "sh_a",
-            "sh_b",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-            .cast("long")
-            .alias("hamming"),
+        candidate_pairs(_bands(groups, "simhash", band_keys))
+        .withColumn(
+            "hamming",
+            F.bit_count(F.col("doc_a").bitwiseXOR(F.col("doc_b"))).cast("long"),
         )
         .filter(F.col("hamming") <= max_hamming)
     )
-    cross = _expand_value_pairs(groups, val_pairs, par)
+    values = groups.select("simhash", "members")
+    cross = _expand_cross(val_pairs, values, values, par).select(
+        F.least("xa", "xb").alias("doc_a"),
+        F.greatest("xa", "xb").alias("doc_b"),
+        "hamming",
+    )
     return within.unionByName(cross)
 
 
-def _simhash_groups(sh: DataFrame):
-    """Collapse identical simhash values to (value, sorted members)
-    group rows — the skew shield shared by every simhash blocker."""
-    groups = (
-        sh.groupBy("simhash")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("members"))
-        .localCheckpoint()
-    )
-    return groups, SALT_GROUPS * 4
-
-
-def _within_group_pairs(groups: DataFrame, par: int) -> DataFrame:
-    """hamming = 0 pairs: every member pair of a group qualifies; the
-    double explode is split by a repartition so a k-member group's k²
-    expansion spreads across ``par`` tasks."""
-    return (
-        groups.filter(F.size("members") > 1)
-        .select("members", F.explode("members").alias("doc_a"))
-        .repartition(par, "doc_a")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.lit(0).cast("long").alias("hamming"))
-    )
-
-
-def _expand_value_pairs(
-    groups: DataFrame, val_pairs: DataFrame, par: int
-) -> DataFrame:
-    """(sh_a, sh_b, hamming) value pairs → member doc pairs, with the
-    two explodes split by a repartition (same discipline as above)."""
-    return (
-        val_pairs.join(
-            groups.select(F.col("simhash").alias("sh_a"), F.col("members").alias("ma")),
-            "sh_a",
-        )
-        .join(
-            groups.select(F.col("simhash").alias("sh_b"), F.col("members").alias("mb")),
-            "sh_b",
-        )
-        .select("hamming", F.explode("ma").alias("xa"), "mb")
-        .repartition(par, "xa")
-        .select("hamming", "xa", F.explode("mb").alias("xb"))
-        .select(
-            F.least("xa", "xb").alias("doc_a"),
-            F.greatest("xa", "xb").alias("doc_b"),
-            "hamming",
-        )
+def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
+    """Near-duplicate pairs by simhash: block on the top 16 bits (a real
+    LSH — Hamming-close hashes usually share the prefix; one band, so
+    the first-collision filter is always true), then verify
+    bit_count(xor) within blocks (:func:`_simhash_pairs`)."""
+    return _simhash_pairs(
+        docs, F.array(F.shiftright("simhash", 16)), max_hamming
     )
 
 
@@ -1190,15 +1058,10 @@ def simhash_near_pairs_multiband(
     bits fall in the prefix; this variant's oracle is therefore the
     UNRESTRICTED hamming self-join — exact completeness, stated as SQL.
 
-    Mechanics mirror :func:`candidate_pairs` exactly: the banded
-    relation is 8× the distinct-value relation (tiny), side A salted by
-    hash(value), side B replicated ×SALT_GROUPS, and a pair colliding
-    in several bands is kept only at its first agreeing band via the
-    carried band_keys arrays (codegen filter, no distinct). Identical
-    values collapse to groups first, same as the prefix variant."""
-    sh = simhash(docs)
-    groups, par = _simhash_groups(sh)
-    within = _within_group_pairs(groups, par)
+    Mechanics are :func:`candidate_pairs` exactly (via
+    :func:`_simhash_pairs`): the banded relation is 8× the
+    distinct-value relation (tiny), and a pair colliding in several
+    bands is kept only at its first agreeing band."""
     band_keys = F.array(
         *[
             F.shiftright(F.col("simhash"), i * SIMHASH_BAND_WIDTH).bitwiseAND(
@@ -1207,41 +1070,7 @@ def simhash_near_pairs_multiband(
             for i in range(SIMHASH_BANDS)
         ]
     )
-    banded = groups.select(
-        "simhash", band_keys.alias("band_keys")
-    ).select(
-        "simhash",
-        "band_keys",
-        F.posexplode("band_keys").alias("band", "band_key"),
-    )
-    a = banded.withColumn(
-        "salt", F.pmod(F.xxhash64("simhash"), F.lit(SALT_GROUPS))
-    ).alias("a")
-    b = banded.withColumn(
-        "salt",
-        F.explode(F.array(*[F.lit(g) for g in range(SALT_GROUPS)])),
-    ).alias("b")
-    earlier = F.exists(
-        F.sequence(F.lit(0), F.col("band") - 1),
-        lambda j: F.col("a.band_keys")[j] == F.col("b.band_keys")[j],
-    )
-    first_band = F.when(F.col("band") == 0, F.lit(True)).otherwise(~earlier)
-    val_pairs = (
-        a.join(b, ["band", "band_key", "salt"])
-        .filter((F.col("a.simhash") < F.col("b.simhash")) & first_band)
-        .select(
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            )
-            .cast("long")
-            .alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    cross = _expand_value_pairs(groups, val_pairs, par)
-    return within.unionByName(cross)
+    return _simhash_pairs(docs, band_keys, max_hamming)
 
 
 # --- n-gram Jaccard --------------------------------------------------------
@@ -1306,10 +1135,10 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.3) -> DataFrame:
     # magnitude wider than the word vocabulary, so the dictionary
     # path's global sort would be at its worst.
     arrays = doc_ngram_arrays(docs, 2)
-    sigs = signatures_from_arrays(arrays)
-    pairs = candidate_pairs_grouped(sigs)
+    groups = signature_groups(signatures_from_arrays(arrays)).localCheckpoint()
+    pairs = candidate_pairs_grouped(groups)
     return exact_jaccard(
-        pairs, threshold=threshold, doc_sets=hash_sets_from_arrays(arrays)
+        pairs, hash_sets_from_arrays(arrays), threshold=threshold
     ).select(
         "doc_a", "doc_b", "jaccard", (F.col("jaccard") >= threshold).alias("is_dup")
     )
@@ -1702,9 +1531,9 @@ def minhash_recall_curve(docs: DataFrame) -> DataFrame:
         # candidate_pairs_grouped / token_ids above)
         .localCheckpoint()
     )
-    cand = candidate_pairs_grouped(signatures_rowlocal(docs)).select(
-        "doc_a", "doc_b"
-    )
+    cand = candidate_pairs_grouped(
+        signature_groups(signatures_rowlocal(docs)).localCheckpoint()
+    ).select("doc_a", "doc_b")
     n_true = truth.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_true"))
     n_hit = (
         truth.join(cand, ["doc_a", "doc_b"], "left_semi")

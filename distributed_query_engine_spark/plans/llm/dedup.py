@@ -216,7 +216,7 @@ def llm_dedup_signature_store(spark, sf_dir):
     incoming = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     store = _tmp(sf_dir, "minhash_sig_store")
-    D.build_signature_store(spark, corpus, store, hashed=True)
+    D.build_signature_store(spark, corpus, store)
     return D.incremental_dedup_from_store(
         spark, store, corpus, incoming, threshold=0.5
     )

@@ -616,9 +616,7 @@ def stream_ingest_dedup(
         # generation-dir layout (r16): the initial build is one more
         # generation subdir, so each batch's store read is an explicit
         # list of PRIOR generation dirs (write-first layout below)
-        D.build_signature_store(
-            spark, corpus, str(Path(store) / "b_init"), hashed=True
-        )
+        D.build_signature_store(spark, corpus, str(Path(store) / "b_init"))
 
     # the INCOMING batch (doc_id % 5 = 0 — llm_dedup_incremental's split)
     # as n slices keyed (doc_id div 5) mod n
@@ -680,7 +678,6 @@ def stream_ingest_dedup(
             d_all,
             batch_df,
             threshold=threshold,
-            hashed=True,
             batch_groups=gn,
             store_dirs=prior_dirs,
         )

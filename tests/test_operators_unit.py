@@ -70,7 +70,12 @@ def test_exact_jaccard_reports_disjoint_pairs_as_zero(spark):
         spark, [(1, "a b c", "en"), (2, "x y z", "en"), (3, "a b q", "en")]
     )
     pairs = spark.createDataFrame([(1, 2), (1, 3)], "doc_a long, doc_b long")
-    rows = {(r.doc_a, r.doc_b): r.jaccard for r in D.exact_jaccard(pairs, D.tokenize(docs)).collect()}
+    rows = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in D.exact_jaccard(
+            pairs, doc_sets=D.doc_hash_sets_rowlocal(docs)
+        ).collect()
+    }
     assert rows[(1, 2)] == 0.0
     assert rows[(1, 3)] == 0.5  # {a,b} / {a,b,c,q}
 
@@ -542,21 +547,31 @@ def test_verify_build_hint_guard(spark, sf_dir, monkeypatch):
             df._jdf.queryExecution(), "formatted"
         )
 
+    # incremental_minhash_dedup verifies over corpus ∪ batch sets: the
+    # same corpus-sized relation, so the same guard
+    incoming = docs.filter(F.col("doc_id") % 5 == 0)
+    corpus = docs.filter(F.col("doc_id") % 5 != 0)
+
     # default cap (256 MB): unit-SF corpus stays on the broadcast plan
     assert D._verify_build_hint(docs) is None
     base = D.minhash_dedup_pairs(docs)
+    inc_base = D.incremental_minhash_dedup(corpus, incoming)
     assert "ShuffledHashJoin" not in plan_of(base)
+    assert "ShuffledHashJoin" not in plan_of(inc_base)
 
     # tripped cap: hint fires and the verify joins plan as shuffle-hash
     monkeypatch.setenv("DQE_VERIFY_BROADCAST_CAP", "1")
     assert D._verify_build_hint(docs) == "shuffle_hash"
     guarded = D.minhash_dedup_pairs(docs)
+    inc_guarded = D.incremental_minhash_dedup(corpus, incoming)
     assert "ShuffledHashJoin" in plan_of(guarded)
+    assert "ShuffledHashJoin" in plan_of(inc_guarded)
 
-    a = sorted(map(tuple, base.collect()))
-    b = sorted(map(tuple, guarded.collect()))
-    assert len(a) > 0
-    assert a == b
+    for unguarded, hinted in ((base, guarded), (inc_base, inc_guarded)):
+        a = sorted(map(tuple, unguarded.collect()))
+        b = sorted(map(tuple, hinted.collect()))
+        assert len(a) > 0
+        assert a == b
 
     # malformed or non-positive cap: a clear error naming the knob,
     # not a bare int() crash mid-pipeline
@@ -768,7 +783,7 @@ def test_incremental_dedup_equals_full_dedup_restricted(spark, sf_dir):
     inc = {
         (min(r.new_doc, r.dup_of), max(r.new_doc, r.dup_of)): r.jaccard
         for r in DD.incremental_minhash_dedup(
-            corpus, incoming, threshold=0.5, hashed=True
+            corpus, incoming, threshold=0.5
         ).collect()
     }
     full = {

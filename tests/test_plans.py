@@ -264,6 +264,12 @@ def test_simhash_pairs_salted_no_single_task_bucket(spark, sf_dir):
     ), plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    # the within-group explode spreads over the session-derived count
+    from distributed_query_engine_spark.operators import dedup as D
+
+    assert re.search(
+        rf"hashpartitioning\(doc_a#\d+L, {D._explode_par()}\)", plan
+    ), plan
 
 
 def test_semdedup_within_cell_join_is_salted(spark, sf_dir):

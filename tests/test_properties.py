@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from distributed_query_engine_spark.operators import dedup as D
@@ -46,7 +46,9 @@ def test_exact_jaccard_matches_python_sets(spark, docs):
     pairs = spark.createDataFrame(all_pairs, "doc_a long, doc_b long")
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in D.exact_jaccard(pairs, D.tokenize(df)).collect()
+        for r in D.exact_jaccard(
+            pairs, doc_sets=D.doc_hash_sets_rowlocal(df)
+        ).collect()
     }
     for a, b in all_pairs:
         sa, sb = set(docs[a]), set(docs[b])
@@ -71,6 +73,44 @@ def test_minhash_signature_matches_python_model(spark, docs):
             a, b = D.hash_params(h)
             expected = min((a * t + b) % D.P for t in tids)
             assert sigs[i][f"m{h}"] == expected, (i, h, docs)
+
+
+@SET
+@example(docs=[["a"], ["a", "b"], ["a"], ["b", "a"]])  # a 2-band collision
+@given(docs=docs_st)
+def test_grouped_candidates_equal_per_doc_banding(spark, docs):
+    """Grouped candidate generation (signature groups, rep band join,
+    member expansion) must yield exactly the per-doc banded pairs, each
+    ONCE: compared as sorted lists, so a pair emitted at two common
+    bands (a lost first-collision filter) fails as a duplicate. The
+    incremental split (even ids = corpus, odd = batch) must yield the
+    same pairs restricted to batch × (corpus ∪ earlier batch doc),
+    oriented (batch doc, other)."""
+    rows = [(i, " ".join(toks), "en") for i, toks in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id long, text string, lang string")
+    r = D.ROWS_PER_BAND
+    sig = {
+        row.doc_id: [row[c] for c in D.SIG_COLS]
+        for row in D.signatures_rowlocal(df).collect()
+    }
+    model = [
+        (a, b)
+        for a in sorted(sig)
+        for b in sorted(sig)
+        if a < b
+        and any(sig[a][k * r:(k + 1) * r] == sig[b][k * r:(k + 1) * r] for k in range(D.N_BANDS))
+    ]
+
+    def groups(part):
+        return D.signature_groups(D.signatures_rowlocal(part)).localCheckpoint()
+
+    got = sorted(map(tuple, D.candidate_pairs_grouped(groups(df)).collect()))
+    assert got == model, docs
+
+    corpus, batch = df.filter("doc_id % 2 = 0"), df.filter("doc_id % 2 = 1")
+    pairs, _ = D._incremental_candidates(groups(corpus), groups(batch))
+    want = sorted((b, a) if b % 2 else (a, b) for a, b in model if a % 2 or b % 2)
+    assert sorted(map(tuple, pairs.collect())) == want, docs
 
 
 @SET
@@ -285,7 +325,7 @@ def test_rowlocal_equals_exploded_pipeline(spark, docs):
     rl = {tuple(r) for r in D.signatures_rowlocal(df).collect()}
     ex = {
         tuple(r)
-        for r in D.signatures_for(D.tokenize(df), hashed=True).collect()
+        for r in D.minhash_signatures(D.hashed_token_ids(D.tokenize(df))).collect()
     }
     assert rl == ex
 
