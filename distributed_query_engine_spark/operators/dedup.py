@@ -20,8 +20,14 @@ Design for 100 TB:
 - Candidate generation is one banded first-collision self-join
   (``candidate_pairs`` over ``_bands``) shared by the minhash and
   simhash blockers, over group rows (``signature_groups``) whose
-  members are expanded back to doc pairs by ``_within_pairs`` and
-  ``_expand_cross``.
+  members are expanded back to doc pairs by ONE member expander
+  (``_expand_members``): within-group and cross-group rows are unioned
+  first, so each candidate relation pays one member fan-out exchange.
+- Wide row-local expressions (token ids, minhash signatures, band keys,
+  the first-band predicate, verify hash sets) are SQL text built once
+  at import and applied with one ``selectExpr``/``F.expr`` each — the
+  per-call driver cost of a streaming micro-batch is construction, not
+  data.
 - Candidate verification (exact Jaccard) runs only on LSH candidates:
   the quadratic blow-up is confined to near-duplicate buckets.
 """
@@ -116,17 +122,45 @@ def doc_token_arrays(
 def _md5_60(col) -> Column:
     """First 15 hex chars of md5 → 60-bit BIGINT: the ONE engine-portable
     row-local hash every oracle replays (`CAST(('0x' || substr(md5(x),
-    1, 15)) AS BIGINT)` on the DuckDB side). Token ids (`_tid_expr`) are
-    this mod P; span ids (`_span_gids`, `top_duplicated_spans`) use it
-    directly — sharing the expression makes the cross-site identities
-    structural rather than comment-enforced."""
+    1, 15)) AS BIGINT)` on the DuckDB side). Span ids (`_span_gids`,
+    `top_duplicated_spans`) use it directly; token ids are the same
+    expression spelled as SQL text (:func:`_tid_sql`)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def _tid_expr(tok):
-    """md5-prefix-mod-P token id of a token Column — the row-local id
-    shared (by construction, same expression) with hashed_token_ids."""
-    return _md5_60(tok) % P
+def _tid_sql(tok: str) -> str:
+    """SQL text of the md5-prefix-mod-P token id of the string expression
+    ``tok`` — THE token-id definition: :func:`_md5_60` mod P, spliced
+    into every token-id site (signatures, :func:`hashed_token_ids`,
+    simhash, the recall audit)."""
+    return f"(CAST(conv(substring(md5({tok}), 1, 15), 16, 10) AS BIGINT) % {P})"
+
+
+# Row-local expressions as SQL TEXT, built once at import: each applies
+# with ONE selectExpr / F.expr round trip, where the equivalent Column
+# tree costs one py4j call per node (building one ingest micro-batch's
+# signature groups and report took 1,472 and 3,125 calls as Column
+# trees at sf0.001, 275 and 1,009 as SQL text). Literals below
+# 2^31 parse as INT and CAST(... AS BIGINT) stands where .cast("long")
+# did, so every expression types — and evaluates — exactly as its Column
+# form; the exploded minhash_signatures aggregation keeps the Column
+# arithmetic as the independent reference.
+_TIDS_SQL = f"transform(toks, t -> {_tid_sql('t')}) AS tids"
+_MINHASH_SQL = [
+    "array_min(transform(tids, t -> (t * {} + {}) % {})) AS m{}".format(
+        *hash_params(i), P, i
+    )
+    for i in range(N_HASHES)
+]
+_BAND_KEYS_SQL = "array({})".format(
+    ", ".join(
+        "concat_ws(',', {})".format(
+            ", ".join(SIG_COLS[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND])
+        )
+        for b in range(N_BANDS)
+    )
+)
+_HASH_SET_SQL = "array_sort(array_distinct(transform(toks, t -> xxhash64(t)))) AS toks"
 
 
 def signatures_from_arrays(arrays: DataFrame) -> DataFrame:
@@ -146,22 +180,7 @@ def signatures_from_arrays(arrays: DataFrame) -> DataFrame:
     the scale default.) Works over any token-set notion — words
     (:func:`doc_token_arrays`) or n-grams (:func:`doc_ngram_arrays`).
     Measured at sf0.1: see BASELINE.md r6 row-local entry."""
-    tids = F.transform("toks", _tid_expr)
-    base = arrays.select("doc_id", tids.alias("tids"))
-
-    def affine(a, b):
-        # one-arg closure: PySpark derives the higher-order function's
-        # arity from the Python lambda's parameter count, so default
-        # args can't be used to bind (a, b) inside the lambda itself
-        return lambda t: (t * a + b) % P
-
-    mins = []
-    for i in range(N_HASHES):
-        a, b = hash_params(i)
-        mins.append(
-            F.array_min(F.transform("tids", affine(a, b))).alias(f"m{i}")
-        )
-    return base.select("doc_id", *mins)
+    return arrays.selectExpr("doc_id", _TIDS_SQL).selectExpr("doc_id", *_MINHASH_SQL)
 
 
 def signatures_rowlocal(docs: DataFrame, spread: bool = True) -> DataFrame:
@@ -173,10 +192,7 @@ def hash_sets_from_arrays(arrays: DataFrame) -> DataFrame:
     """(doc_id, toks-array) → sorted xxhash64 token-set array, row-local
     — the packed form of exact_jaccard's internal doc_sets aggregation
     (array_distinct mirrors collect_set's dedup of 64-bit collisions)."""
-    sets = F.array_sort(
-        F.array_distinct(F.transform("toks", lambda t: F.xxhash64(t)))
-    )
-    return arrays.select("doc_id", sets.alias("toks"))
+    return arrays.selectExpr("doc_id", _HASH_SET_SQL)
 
 
 def doc_hash_sets_rowlocal(docs: DataFrame, spread: bool = True) -> DataFrame:
@@ -235,68 +251,64 @@ def minhash_signatures(tokens_tid: DataFrame) -> DataFrame:
     return tokens_tid.groupBy("doc_id").agg(*aggs)
 
 
-def _bands(df: DataFrame, id_col: str, keys: Column) -> DataFrame:
-    """(id_col, band_keys, band, band_key): one row per band of each
-    ``df`` row. Rows agreeing on a band's key collide. ``band_keys``
-    carries ALL of the row's band keys so the pairing join can dedupe
-    multi-band collisions with a codegen filter (:func:`_first_band`)
-    instead of a second (full-pair-set-sized) distinct shuffle."""
-    return df.select(id_col, keys.alias("band_keys")).select(
-        id_col, "band_keys", F.posexplode("band_keys").alias("band", "band_key")
+def _bands(df: DataFrame, id_col: str, keys: str) -> DataFrame:
+    """(id, band_keys, band, band_key): one row per band of each ``df``
+    row, for ``id_col`` (a SQL select item) and ``keys`` (SQL text of
+    the row's band-key array). Rows agreeing on a band's key collide.
+    ``band_keys`` carries ALL of the row's band keys so the pairing join
+    can dedupe multi-band collisions with a codegen filter
+    (:data:`_FIRST_BAND_SQL`) instead of a second (full-pair-set-sized)
+    distinct shuffle."""
+    return df.selectExpr(id_col, f"{keys} AS band_keys").selectExpr(
+        "*", "posexplode(band_keys) AS (band, band_key)"
     )
 
 
-def _first_band() -> Column:
-    """True iff the joined rows ``a`` and ``b`` collide in no band before
-    this one: a pair colliding in several bands is kept only at its
-    first common band — set-identical to `.distinct()` but a codegen
-    filter over the carried band_keys arrays rather than a shuffle of
-    the quadratic pair set."""
-    earlier_collision = F.exists(
-        F.sequence(F.lit(0), F.col("band") - 1),
-        lambda j: F.col("a.band_keys")[j] == F.col("b.band_keys")[j],
-    )
-    return F.when(F.col("band") == 0, F.lit(True)).otherwise(~earlier_collision)
+# True iff the joined rows ``a`` and ``b`` collide in no band before
+# this one: a pair colliding in several bands is kept only at its first
+# common band — set-identical to `.distinct()` but a codegen filter over
+# the carried band_keys arrays rather than a shuffle of the quadratic
+# pair set.
+_FIRST_BAND_SQL = (
+    "CASE WHEN band = 0 THEN true ELSE NOT exists(sequence(0, band - 1), "
+    "j -> a.band_keys[j] = b.band_keys[j]) END"
+)
 
 
 def lsh_bands(sigs: DataFrame) -> DataFrame:
     """Signature → (doc_id, band_keys, band, band_key). Band key is the
     joined minhash values: docs agreeing on all rows of a band collide."""
-    keys = F.array(
-        *[
-            F.concat_ws(
-                ",",
-                *[F.col(f"m{b * ROWS_PER_BAND + r}") for r in range(ROWS_PER_BAND)],
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return _bands(sigs, "doc_id", keys)
+    return _bands(sigs, "doc_id", _BAND_KEYS_SQL)
 
 
 def _rep_bands(groups: DataFrame) -> DataFrame:
     """Band relation of the group REPRESENTATIVES (rep as doc_id)."""
-    return lsh_bands(groups.select(F.col("rep").alias("doc_id"), *SIG_COLS))
+    return _bands(groups, "rep AS doc_id", _BAND_KEYS_SQL)
 
 
 SALT_GROUPS = 16
 
 
 def _explode_par() -> int:
-    """Partition count for the repartitions that spread quadratic
-    member-explode work across the cluster: derived from the session's
-    parallelism instead of a constant (guide §2 — scale-adaptive
-    partitioning; the old SALT_GROUPS*4=64 was tuned for neither
-    local[32] nor a real cluster, and three unioned 64-way branches
-    made every downstream stage run 192 tiny tasks at bench scale).
-    Floored at SALT_GROUPS so a mega-group still spreads at least as
-    far as the salted band join does."""
+    """Partition count of the ONE member fan-out exchange each candidate
+    relation gets (:func:`_expand_members`): the repartition between the
+    two member explodes that spreads a k-member group's k² expansion
+    across the cluster. Derived from the session's parallelism (guide
+    §2 — scale-adaptive partitioning). One exchange per relation, never
+    one per branch: AQE does not coalesce a REPARTITION_BY_NUM exchange,
+    so every downstream stage (verify, sink write) runs exactly this
+    many tasks, and unioning separately repartitioned branches would
+    multiply them. Floored at SALT_GROUPS so a mega-group still spreads
+    at least as far as the salted band join does."""
     from pyspark.sql import SparkSession
 
     spark = SparkSession.getActiveSession()
     if spark is None:  # pragma: no cover — operators always run in-session
         return SALT_GROUPS * 4
     return max(spark.sparkContext.defaultParallelism, SALT_GROUPS)
+
+
+_SALTS_SQL = "array({})".format(", ".join(map(str, range(SALT_GROUPS))))
 
 
 def candidate_pairs(bands: DataFrame) -> DataFrame:
@@ -318,48 +330,56 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
       production spreads over SALT_GROUPS tasks. Each unordered pair
       meets exactly once — via the orientation whose A-side id owns the
       matching salt and survives doc_a < doc_b.
-    - **First-collision-wins dedup** (:func:`_first_band`)."""
+    - **First-collision-wins dedup** (:data:`_FIRST_BAND_SQL`)."""
     id_col = bands.columns[0]
-    a = bands.withColumn("salt", F.pmod(F.xxhash64(id_col), F.lit(SALT_GROUPS))).alias("a")
-    b = bands.withColumn(
-        "salt", F.explode(F.array(*[F.lit(g) for g in range(SALT_GROUPS)]))
-    ).alias("b")
+    a = bands.withColumn(
+        "salt", F.expr(f"pmod(xxhash64({id_col}), {SALT_GROUPS})")
+    ).alias("a")
+    b = bands.withColumn("salt", F.expr(f"explode({_SALTS_SQL})")).alias("b")
     return (
         a.join(b, ["band", "band_key", "salt"])
-        .filter((F.col(f"a.{id_col}") < F.col(f"b.{id_col}")) & _first_band())
-        .select(F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b"))
+        .filter(F.expr(f"a.{id_col} < b.{id_col} AND ({_FIRST_BAND_SQL})"))
+        .selectExpr(f"a.{id_col} AS doc_a", f"b.{id_col} AS doc_b")
     )
 
 
-def _within_pairs(groups: DataFrame, par: int) -> DataFrame:
-    """(doc_a < doc_b) member pairs inside each group row. The double
-    explode is split by a repartition so a k-member group's k²
-    expansion spreads across ``par`` tasks instead of one Generate
-    task."""
-    return (
-        groups.filter(F.size("members") > 1)
-        .select("members", F.explode("members").alias("doc_a"))
-        .repartition(par, "doc_a")
-        .select("doc_a", F.explode("members").alias("doc_b"))
-        .filter(F.col("doc_a") < F.col("doc_b"))
+def _group_rows(groups: DataFrame) -> DataFrame:
+    """Within-group rows for :func:`_expand_members`: each multi-member
+    group's member list against itself."""
+    return groups.filter(F.size("members") > 1).selectExpr(
+        "members AS ma", "members AS mb", "true AS within"
     )
 
 
-def _expand_cross(
-    pairs: DataFrame, ga: DataFrame, gb: DataFrame, par: int
-) -> DataFrame:
-    """Group-key pairs (doc_a, doc_b, *carried) → member pairs (*carried,
-    xa, xb): ``ga``/``gb`` are (key, members) group relations that
-    doc_a/doc_b join. Raw orientation (xa from ga's group); each caller
-    orders its own pair. The two explodes are split by a repartition,
-    same discipline as :func:`_within_pairs`."""
+def _pair_rows(pairs: DataFrame, ga: DataFrame, gb: DataFrame) -> DataFrame:
+    """Cross-group rows for :func:`_expand_members`: group-key pairs
+    (doc_a, doc_b, *carried) joined to their two member lists — ``ga``/
+    ``gb`` are the (key, members) group relations doc_a/doc_b join."""
     carried = [c for c in pairs.columns if c not in ("doc_a", "doc_b")]
     return (
         pairs.join(ga.toDF("doc_a", "ma"), "doc_a")
         .join(gb.toDF("doc_b", "mb"), "doc_b")
-        .select(*carried, F.explode("ma").alias("xa"), "mb")
-        .repartition(par, "xa")
-        .select(*carried, "xa", F.explode("mb").alias("xb"))
+        .select(*carried, "ma", "mb", F.lit(False).alias("within"))
+    )
+
+
+def _expand_members(rows: DataFrame) -> DataFrame:
+    """THE member expander: (ma, mb, within, *carried) rows → (*carried,
+    xa, xb) member pairs, every pair of a cross-group row and the xa < xb
+    pairs of a within-group row (:func:`_group_rows` /
+    :func:`_pair_rows`, unioned by the caller). Raw orientation; each
+    caller orders its own pair. The two explodes are split by the
+    relation's ONE fan-out exchange — a repartition to
+    :func:`_explode_par` keyed on the first-exploded member — so a
+    k-member group's k² expansion spreads across the cluster instead of
+    one Generate task."""
+    carried = [c for c in rows.columns if c not in ("ma", "mb", "within")]
+    return (
+        rows.select(*carried, "within", F.explode("ma").alias("xa"), "mb")
+        .repartition(_explode_par(), "xa")
+        .select(*carried, "within", "xa", F.explode("mb").alias("xb"))
+        .filter("NOT within OR xa < xb")
+        .drop("within")
     )
 
 
@@ -503,16 +523,15 @@ def candidate_pairs_grouped(groups: DataFrame) -> DataFrame:
     (members + min-doc representative), then
 
     - **within-group**: every member pair is a candidate by definition
-      (identical signature → collides in every band). Generated by a
-      double explode with a repartition between them, so a k-member
-      group's k² expansion spreads across the cluster instead of one
-      Generate task.
+      (identical signature → collides in every band).
     - **cross-group**: band-join the group REPRESENTATIVES only (the
       salted first-collision join of :func:`candidate_pairs` — group
-      count, not doc count), then expand the member cross-product, again
-      repartitioning between explodes. Signature groups are disjoint, so
-      each unordered doc pair appears exactly once; least/greatest
-      restores the doc_a < doc_b convention.
+      count, not doc count), then take the member cross-product.
+
+    Both kinds of row go through ONE :func:`_expand_members` call, so
+    the relation pays one member fan-out exchange. Signature groups are
+    disjoint, so each unordered doc pair appears exactly once;
+    least/greatest restores the doc_a < doc_b convention.
 
     ``groups`` must be materialized (``localCheckpoint()`` or a parquet
     read): it feeds several joins below, and with the row-local
@@ -521,12 +540,13 @@ def candidate_pairs_grouped(groups: DataFrame) -> DataFrame:
     exponential ExpressionSet growth (observed as an optimizer-time
     OOM). The groups are narrow (one row per distinct signature), so
     the materialization is metadata-sized next to the corpus."""
-    par = _explode_par()
     members = groups.select("rep", "members")
-    cross = _expand_cross(
-        candidate_pairs(_rep_bands(groups)), members, members, par
-    ).select(F.least("xa", "xb").alias("doc_a"), F.greatest("xa", "xb").alias("doc_b"))
-    return _within_pairs(groups, par).unionByName(cross)
+    rows = _group_rows(groups).unionByName(
+        _pair_rows(candidate_pairs(_rep_bands(groups)), members, members)
+    )
+    return _expand_members(rows).selectExpr(
+        "least(xa, xb) AS doc_a", "greatest(xa, xb) AS doc_b"
+    )
 
 
 def hashed_token_ids(tokens: DataFrame) -> DataFrame:
@@ -542,7 +562,7 @@ def hashed_token_ids(tokens: DataFrame) -> DataFrame:
     a collision only merges two rows of the LSH *candidate* geometry;
     exact-Jaccard verification intersects the token strings themselves
     (exact_jaccard), so reported scores are unaffected."""
-    return tokens.select("doc_id", _tid_expr("tok").alias("tid"))
+    return tokens.selectExpr("doc_id", f"{_tid_sql('tok')} AS tid")
 
 
 def minhash_dedup_pairs(
@@ -671,7 +691,7 @@ def incremental_minhash_dedup(
     The verify join's doc-set side is corpus-sized, so it carries the
     same :func:`_verify_build_hint` guard as :func:`minhash_dedup_pairs`.
     Multi-band collisions dedup via the same earliest-common-band filter
-    as :func:`candidate_pairs` (:func:`_first_band`)."""
+    as :func:`candidate_pairs` (:data:`_FIRST_BAND_SQL`)."""
     gc = signature_groups(signatures_rowlocal(corpus)).localCheckpoint()
     gn = signature_groups(signatures_rowlocal(incoming)).localCheckpoint()
     pairs, _ = _incremental_candidates(gc, gn)
@@ -701,9 +721,12 @@ def _incremental_candidates(
     grouped).
     Band-join the group REPRESENTATIVES (the batch's group-level band
     relation broadcasts; the corpus side never shuffles; no salt and no
-    ordering filter, only :func:`_first_band`), then expand both member
-    lists through :func:`_expand_cross`. Identical signatures across
-    sides share every band key, so the rep join catches them at band 0.
+    ordering filter, only :data:`_FIRST_BAND_SQL`). Identical signatures
+    across sides share every band key, so the rep join catches them at
+    band 0. The store hits and the in-batch grouped self-join
+    (:func:`candidate_pairs_grouped`'s within- and cross-group rows)
+    expand their member lists through ONE :func:`_expand_members` call —
+    one member fan-out exchange for the whole candidate relation.
     Returns (pairs, hit_ids): pairs are (doc_a = batch doc, doc_b =
     corpus doc) plus in-batch pairs oriented later-as-new.
 
@@ -728,23 +751,27 @@ def _incremental_candidates(
     by construction, matching the caller's anti-join of the batch (r16 —
     this is what lets the caller drop the pairs localCheckpoint: the
     pair relation now has exactly ONE consumer, the verify join)."""
+    gn_bands = _rep_bands(gn)
     rep_pairs = (
         _rep_bands(gc)
         .alias("a")
-        .join(F.broadcast(_rep_bands(gn).alias("b")), ["band", "band_key"])
-        .filter(_first_band())
-        .select(F.col("b.doc_id").alias("doc_a"), F.col("a.doc_id").alias("doc_b"))
+        .join(F.broadcast(gn_bands.alias("b")), ["band", "band_key"])
+        .filter(F.expr(_FIRST_BAND_SQL))
+        .selectExpr("b.doc_id AS doc_a", "a.doc_id AS doc_b")
     )
-    cross = _expand_cross(
-        rep_pairs,
-        gn.select("rep", "members"),
-        gc.select("rep", "members"),
-        _explode_par(),
-    ).select(F.col("xa").alias("doc_a"), F.col("xb").alias("doc_b"))
-    # In-batch pairs: the grouped self-join yields doc_a < doc_b; the
-    # LATER arrival is the "new" doc being flagged against the earlier.
-    within = candidate_pairs_grouped(gn).select(
-        F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
+    gn_members = gn.select("rep", "members")
+    batch_rows = _group_rows(gn).unionByName(
+        _pair_rows(candidate_pairs(gn_bands), gn_members, gn_members)
+    )
+    rows = batch_rows.withColumn("in_batch", F.lit(True)).unionByName(
+        _pair_rows(rep_pairs, gn_members, gc.select("rep", "members"))
+        .withColumn("in_batch", F.lit(False))
+    )
+    # Store hits keep (batch doc, store doc); in-batch pairs put the
+    # LATER arrival first — the "new" doc flagged against the earlier.
+    pairs = _expand_members(rows).selectExpr(
+        "IF(in_batch, greatest(xa, xb), xa) AS doc_a",
+        "IF(in_batch, least(xa, xb), xb) AS doc_b",
     )
     # Semi join (not inner): rep_pairs repeats a corpus rep once per
     # matched batch group; semi keeps each hit group once. Members are
@@ -753,7 +780,7 @@ def _incremental_candidates(
     hit_ids = gc.join(
         rep_pairs.select(F.col("doc_b").alias("rep")), "rep", "left_semi"
     ).select(F.explode("members").alias("doc_id"))
-    return cross.unionByName(within), hit_ids
+    return pairs, hit_ids
 
 
 def incremental_dedup_from_store(
@@ -962,13 +989,8 @@ def simhash(docs: DataFrame) -> DataFrame:
     per-bit sum over a doc's token set is the same arithmetic whether
     folded per row or re-grouped after an explode."""
     a, b = hash_params(0)
-
-    def affine(t):
-        return (t * a + b) % P
-
-    base = doc_token_arrays(docs).select(
-        "doc_id",
-        F.transform("toks", lambda t: affine(_tid_expr(t))).alias("hs"),
+    base = doc_token_arrays(docs).selectExpr(
+        "doc_id", f"transform(toks, t -> ({_tid_sql('t')} * {a} + {b}) % {P}) AS hs"
     )
 
     def bit_sum(j):
@@ -986,10 +1008,10 @@ def simhash(docs: DataFrame) -> DataFrame:
     return base.select("doc_id", sh.alias("simhash"))
 
 
-def _simhash_pairs(docs: DataFrame, band_keys: Column, max_hamming: int) -> DataFrame:
+def _simhash_pairs(docs: DataFrame, band_keys: str, max_hamming: int) -> DataFrame:
     """The one simhash blocker behind :func:`simhash_near_pairs` and
     :func:`simhash_near_pairs_multiband`, which differ only in
-    ``band_keys`` (an array expression over the ``simhash`` column).
+    ``band_keys`` (SQL text of an array over the ``simhash`` column).
 
     Built the way a boilerplate-heavy corpus demands (the same two-level
     shape as :func:`candidate_pairs_grouped`): a template shared by k
@@ -1001,19 +1023,18 @@ def _simhash_pairs(docs: DataFrame, band_keys: Column, max_hamming: int) -> Data
       (:func:`signature_groups` keyed on the value) — group count, not
       doc count;
     - **within-group** (hamming = 0): every member pair qualifies by
-      definition (:func:`_within_pairs`);
+      definition;
     - **cross-group**: the salted first-collision self-join of
       :func:`candidate_pairs` over the DISTINCT values' bands, verify
-      0 < hamming ≤ max, then expand both member lists
-      (:func:`_expand_cross`).
+      0 < hamming ≤ max, then take the member cross-product.
+
+    Both kinds of row expand through ONE :func:`_expand_members` call
+    (one member fan-out exchange), carrying ``hamming``.
 
     Groups are disjoint and each doc has one simhash, so each unordered
     pair appears exactly once; set-identical to the naive join."""
     groups = signature_groups(simhash(docs), ["simhash"]).localCheckpoint()
-    par = _explode_par()
-    within = _within_pairs(groups, par).withColumn(
-        "hamming", F.lit(0).cast("long")
-    )
+    within = _group_rows(groups).withColumn("hamming", F.lit(0).cast("long"))
     val_pairs = (
         candidate_pairs(_bands(groups, "simhash", band_keys))
         .withColumn(
@@ -1023,12 +1044,10 @@ def _simhash_pairs(docs: DataFrame, band_keys: Column, max_hamming: int) -> Data
         .filter(F.col("hamming") <= max_hamming)
     )
     values = groups.select("simhash", "members")
-    cross = _expand_cross(val_pairs, values, values, par).select(
-        F.least("xa", "xb").alias("doc_a"),
-        F.greatest("xa", "xb").alias("doc_b"),
-        "hamming",
+    rows = within.unionByName(_pair_rows(val_pairs, values, values))
+    return _expand_members(rows).selectExpr(
+        "least(xa, xb) AS doc_a", "greatest(xa, xb) AS doc_b", "hamming"
     )
-    return within.unionByName(cross)
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -1036,9 +1055,7 @@ def simhash_near_pairs(docs: DataFrame, max_hamming: int = 6) -> DataFrame:
     LSH — Hamming-close hashes usually share the prefix; one band, so
     the first-collision filter is always true), then verify
     bit_count(xor) within blocks (:func:`_simhash_pairs`)."""
-    return _simhash_pairs(
-        docs, F.array(F.shiftright("simhash", 16)), max_hamming
-    )
+    return _simhash_pairs(docs, "array(shiftright(simhash, 16))", max_hamming)
 
 
 SIMHASH_BANDS = 8
@@ -1062,13 +1079,11 @@ def simhash_near_pairs_multiband(
     :func:`_simhash_pairs`): the banded relation is 8× the
     distinct-value relation (tiny), and a pair colliding in several
     bands is kept only at its first agreeing band."""
-    band_keys = F.array(
-        *[
-            F.shiftright(F.col("simhash"), i * SIMHASH_BAND_WIDTH).bitwiseAND(
-                (1 << SIMHASH_BAND_WIDTH) - 1
-            )
+    band_keys = "array({})".format(
+        ", ".join(
+            f"shiftright(simhash, {i * SIMHASH_BAND_WIDTH}) & {(1 << SIMHASH_BAND_WIDTH) - 1}"
             for i in range(SIMHASH_BANDS)
-        ]
+        )
     )
     return _simhash_pairs(docs, band_keys, max_hamming)
 
@@ -1494,9 +1509,8 @@ def minhash_recall_curve(docs: DataFrame) -> DataFrame:
     (signatures_rowlocal → candidate_pairs_grouped) unchanged, and the
     hit test is a duplicate-proof LEFT SEMI join."""
     arrays = doc_token_arrays(docs)
-    tids = arrays.select(
-        "doc_id",
-        F.array_distinct(F.transform("toks", _tid_expr)).alias("tids"),
+    tids = arrays.selectExpr(
+        "doc_id", f"array_distinct(transform(toks, t -> {_tid_sql('t')})) AS tids"
     )
     td = tids.select("doc_id", F.explode("tids").alias("tid"))
     sizes = tids.select("doc_id", F.size("tids").alias("n"))

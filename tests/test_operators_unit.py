@@ -748,6 +748,76 @@ def test_stream_ingest_dedup_crash_before_marker_replays_row_identical(spark, sf
     assert got == expected
 
 
+# py4j round trips to BUILD (not run) one ingest micro-batch's two
+# DataFrames: 275 and 1,009 measured at sf0.001 with the row-local
+# expressions as SQL text, plus 10% (the Column-tree builders took
+# 1,472 and 3,125). Each Column node is one driver→JVM call (~0.2 ms), so
+# a builder that goes back to Column trees for the signatures, band
+# keys, first-band predicate or verify sets blows these by thousands.
+INGEST_SIG_GROUPS_PY4J_BUDGET = 302
+INGEST_REPORT_PY4J_BUDGET = 1109
+
+
+def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
+    import gc
+    import threading
+
+    from distributed_query_engine_spark.catalog import Tables
+
+    d_all = Tables(spark, sf_dir).documents
+    D.build_signature_store(
+        spark, d_all.filter(F.col("doc_id") % 5 != 0), str(tmp_path / "b_init")
+    )
+    batch = d_all.filter("doc_id % 5 = 0 AND (doc_id div 5) % 4 = 0")
+    store_b = str(tmp_path / "b0")
+
+    def sig_groups():
+        return D.signature_groups(D.signatures_rowlocal(batch, spread=True))
+
+    def report():
+        return D.incremental_dedup_from_store(
+            spark,
+            str(tmp_path),
+            d_all,
+            batch,
+            threshold=0.5,
+            batch_groups=spark.read.parquet(store_b),
+            store_dirs=[str(tmp_path / "b_init")],
+        )
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    builder = threading.current_thread()
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        # only the building thread's calls: py4j frees dropped proxies
+        # from a background thread too, at a pace the builder does not set
+        calls[0] += threading.current_thread() is builder
+        return send(*args, **kwargs)
+
+    def round_trips(build):
+        # cyclic garbage from earlier work would otherwise free py4j
+        # proxies (one call each) inside the counted window
+        gc.collect()
+        gc.disable()
+        calls[0] = 0
+        client.send_command = counting
+        try:
+            build()
+        finally:
+            client.send_command = send
+            gc.enable()
+        return calls[0]
+
+    sig_groups().write.mode("overwrite").parquet(store_b)
+    report()  # warm the builders' one-time lookups
+    n_sig, n_report = round_trips(sig_groups), round_trips(report)
+    print(f"py4j round trips: signature groups {n_sig}, report {n_report}")
+    assert n_sig <= INGEST_SIG_GROUPS_PY4J_BUDGET, n_sig
+    assert n_report <= INGEST_REPORT_PY4J_BUDGET, n_report
+
+
 def test_incremental_dedup_empty_batch_and_empty_corpus(spark, sf_dir):
     # Ingestion edges: the first-ever batch (empty corpus) must dedup
     # purely within itself; a quiet tick (empty batch) must return an

@@ -264,12 +264,32 @@ def test_simhash_pairs_salted_no_single_task_bucket(spark, sf_dir):
     ), plan
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the within-group explode spreads over the session-derived count
+    # the member expansion spreads over the session-derived count
     from distributed_query_engine_spark.operators import dedup as D
 
     assert re.search(
-        rf"hashpartitioning\(doc_a#\d+L, {D._explode_par()}\)", plan
+        rf"hashpartitioning\(xa#\d+L, {D._explode_par()}\)", plan
     ), plan
+
+
+def test_dedup_candidates_pay_one_member_fanout_exchange(spark, sf_dir):
+    # Each candidate relation expands its group members through ONE
+    # fan-out exchange (operators/dedup.py::_expand_members): within- and
+    # cross-group rows are unioned BEFORE the repartition. AQE never
+    # coalesces a REPARTITION_BY_NUM exchange, so a second or third
+    # per-branch fan-out would multiply every downstream stage's task
+    # count. Matched on the key: the narrow-scan spreads
+    # (_spread_narrow_scan, keyed on doc_id) may carry the same
+    # partition count on a many-core host.
+    from distributed_query_engine_spark.operators import dedup as D
+
+    fanout = re.compile(
+        rf"hashpartitioning\((\w+)#\d+L, {D._explode_par()}\), REPARTITION_BY_NUM"
+    )
+    for name in ("llm_dedup_minhash", "llm_dedup_incremental", "llm_dedup_simhash"):
+        plan = _plan(_q(name, spark, sf_dir))
+        keys = [k for k in fanout.findall(plan) if k != "doc_id"]
+        assert keys == ["xa"], (name, plan)
 
 
 def test_semdedup_within_cell_join_is_salted(spark, sf_dir):
