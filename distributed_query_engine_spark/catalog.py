@@ -12,6 +12,12 @@ is Spark's own (``DataFrameReader`` for files, JDBC metadata for
 ``jdbc`` sources — the exact machinery the reference hand-rolls at
 ``DistributedQueryEngine.diff:202-247``). Registered names become temp
 views so both the DataFrame API and ``spark.sql`` resolve them.
+
+Parquet tables (:func:`read_parquet_table`) skip Spark's inference job
+where they can: the Arrow footer the timestamp shim reads anyway maps to
+the ``StructType`` Spark would infer (:func:`footer_struct`), passed to
+the reader explicitly. The footer is read on every call; nothing is
+cached. Types the mapping does not cover fall back to inference.
 """
 
 from __future__ import annotations
@@ -22,6 +28,19 @@ import pyarrow.parquet as pa_pq
 import pyarrow.types as pa_types
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    BooleanType,
+    DoubleType,
+    FloatType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 # The driver-provided star schema (TESTDATA.md) plus pipeline tables.
 STAR_TABLES = (
@@ -51,12 +70,62 @@ def staging_key(sf_dir: str) -> str:
     return f"{p.name or 'sf'}-{hashlib.md5(str(p).encode()).hexdigest()[:8]}"
 
 
+# Arrow footer types whose Spark file-source inference is fixed, spelled
+# as ``str(pyarrow type)`` -> Spark type.
+_SCALAR_TYPES = {
+    "int32": IntegerType(),
+    "int64": LongType(),
+    "float": FloatType(),
+    "double": DoubleType(),
+    "string": StringType(),
+    "bool": BooleanType(),
+}
+# Key Spark's parquet writer puts in every footer it writes.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_type(t):
+    """The Spark type file-source inference gives Arrow type ``t``, or
+    None where the mapping is not covered (ns timestamps, decimals,
+    dates, small ints, structs, maps, ...)."""
+    if str(t) in _SCALAR_TYPES:
+        return _SCALAR_TYPES[str(t)]
+    if pa_types.is_timestamp(t) and t.unit == "us":
+        return TimestampNTZType() if t.tz is None else TimestampType()
+    if pa_types.is_list(t) and str(t.value_type) in _SCALAR_TYPES:
+        return ArrayType(_SCALAR_TYPES[str(t.value_type)], containsNull=True)
+    return None
+
+
+def footer_struct(schema) -> StructType | None:
+    """The ``StructType`` Spark infers for a parquet file with Arrow
+    footer ``schema``: every field nullable, as file-source inference
+    yields. None when any field's type is not covered or the footer was
+    written by Spark (its row metadata can carry types the Arrow view
+    does not show); the caller then lets Spark infer."""
+    if _SPARK_ROW_METADATA in (schema.metadata or {}):
+        return None
+    fields = []
+    for f in schema:
+        st = _spark_type(f.type)
+        if st is None:
+            return None
+        fields.append(StructField(f.name, st, nullable=True))
+    return StructType(fields)
+
+
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` with a timestamp-normalization shim.
+    """``spark.read.parquet`` with the schema taken from the footer and
+    a timestamp-normalization shim.
+
+    The footer is read once with pyarrow (metadata only, no data scan).
+    When :func:`footer_struct` covers every column, the read passes that
+    schema explicitly, so Spark launches no schema-inference job. Spark
+    footers, hive-style ``k=v`` directories, uncovered types and probe
+    errors fall back to Spark's own inference.
 
     The testdata generator's timestamp encoding has varied across driver
-    rounds, so BOTH hazards are handled by sniffing the footer (one
-    metadata read, no data scan):
+    rounds, so BOTH hazards are handled from the same footer:
 
     - ``TIMESTAMP(NANOS)``: Spark (through 4.x) rejects it
       (PARQUET_TYPE_ILLEGAL). Read as raw int64
@@ -72,11 +141,13 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     Either way every caller sees one timestamp type: TIMESTAMP (ltz).
     """
     ns_cols: list[str] = []
-    ntz = False
+    ntz_cols: list[str] = []
+    struct = None
     try:
         from pathlib import Path as _P
 
-        probe = _P(path)
+        probe = root = _P(path)
+        hive = False
         if probe.is_dir():
             # Spark-style directory dataset: sniff the first data file
             probe = next(
@@ -84,48 +155,55 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
                 for p in sorted(probe.rglob("*.parquet"))
                 if not p.name.startswith((".", "_"))
             )
-        schema = pa_pq.read_schema(str(probe))
-        # pyarrow reports BOTH TIMESTAMP(NANOS) and legacy INT96 as
-        # timestamp[ns]; only the former needs (or tolerates) the
-        # nanosAsLong shim — Spark reads INT96 natively as TIMESTAMP.
-        # Distinguish via the parquet PHYSICAL type (metadata-only).
-        # Read physical types from the FILE-LEVEL parquet schema, not
-        # row-group metadata: a zero-row-group file (empty table, or
-        # the first part-file of a multi-part Spark write) has no
-        # row_group(0) but its schema still carries INT96 vs INT64 —
-        # so the probe works on empty data AND can't mistake an empty
-        # INT96 part for a NANOS file (ADVICE r7 + the regression its
-        # suggested phys={} fallback would have introduced). The probe
-        # still gets its OWN try/except; on failure phys=None means
-        # UNKNOWN, and the ns branch then fails safe toward the native
-        # INT96 read (applying the nanos shim to INT96 breaks the
-        # read; skipping it on a true NANOS file merely reproduces the
-        # pre-shim loud failure). The NTZ branch never needs phys:
-        # INT96 always surfaces as timestamp[ns], so a us-unit NTZ
-        # field cannot be INT96.
-        try:
-            pschema = pa_pq.ParquetFile(str(probe)).schema
-            phys = {
-                pschema.column(i).path: pschema.column(i).physical_type
-                for i in range(len(pschema))
-            }
-        except Exception:
-            phys = None
+            hive = any(
+                "=" in p.name for p in root.rglob("*") if p.is_dir()
+            )
+        pf = pa_pq.ParquetFile(str(probe))
+        schema = pf.schema_arrow
         for f in schema:
             if pa_types.is_timestamp(f.type):
                 if f.type.unit == "ns":
-                    if phys is not None and phys.get(f.name) != "INT96":
-                        ns_cols.append(f.name)
+                    ns_cols.append(f.name)
                 elif f.type.tz is None:
-                    ntz = True
+                    ntz_cols.append(f.name)
+        if ns_cols:
+            # pyarrow reports BOTH TIMESTAMP(NANOS) and legacy INT96 as
+            # timestamp[ns]; only the former needs (or tolerates) the
+            # nanosAsLong shim — Spark reads INT96 natively as
+            # TIMESTAMP. Distinguish via the parquet PHYSICAL type from
+            # the FILE-LEVEL schema, not row-group metadata: a
+            # zero-row-group file (empty table, or the first part-file
+            # of a multi-part Spark write) has no row_group(0) but its
+            # schema still carries INT96 vs INT64 (ADVICE r7). The
+            # probe gets its OWN try/except; on failure every ns field
+            # is taken as INT96, failing safe toward the native read
+            # (applying the nanos shim to INT96 breaks the read;
+            # skipping it on a true NANOS file merely reproduces the
+            # pre-shim loud failure).
+            try:
+                pschema = pf.schema
+                phys = {
+                    pschema.column(i).path: pschema.column(i).physical_type
+                    for i in range(len(pschema))
+                }
+            except Exception:
+                phys = {c: "INT96" for c in ns_cols}
+            ns_cols = [c for c in ns_cols if phys.get(c) != "INT96"]
+        elif not hive:
+            struct = footer_struct(schema)
     except Exception:
         pass
+    if struct is not None:
+        df = spark.read.schema(struct).parquet(path)
+        for c in ntz_cols:
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+        return df
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
-    if ntz:
+    if ntz_cols:
         for f in df.schema.fields:
             if f.dataType.typeName() == "timestamp_ntz":
                 df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))

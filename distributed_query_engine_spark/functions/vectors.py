@@ -25,22 +25,38 @@ from pyspark.sql import functions as F
 SCALE = 1 << 20
 
 
-def int_vec(col: Column | str) -> Column:
-    """array<float> → array<long>, fixed-point at 2^20."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: F.round(x.cast("double") * SCALE).cast("long"))
+def _q(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
-def dot_long(a: Column, b: Column) -> Column:
-    """Exact integer dot product of two array<long> columns."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+# The exact-integer expressions are SQL text applied with ONE ``F.expr``
+# each: a Column tree with Python lambdas costs one py4j call per node
+# (~0.2 ms each), rebuilt by every query. INT literals and
+# ``CAST(... AS BIGINT)`` keep the types the Column forms had. These are
+# Spark SQL strings; the DuckDB oracle keeps its own (:func:`sql_int_vec`).
+def dot_long_sql(a: str, b: str) -> str:
+    """Spark SQL text of :func:`dot_long` over columns ``a`` and ``b``."""
+    return (
+        f"aggregate(zip_with({_q(a)}, {_q(b)}, (x, y) -> x * y), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
     )
 
 
-def norm_sq_long(a: Column) -> Column:
+def int_vec(col: str) -> Column:
+    """array<float> column ``col`` → array<long>, fixed-point at 2^20."""
+    return F.expr(
+        f"transform({_q(col)}, "
+        f"x -> CAST(round(CAST(x AS DOUBLE) * {SCALE}) AS BIGINT))"
+    )
+
+
+def dot_long(a: str, b: str) -> Column:
+    """Exact integer dot product of two array<long> columns."""
+    return F.expr(dot_long_sql(a, b))
+
+
+def norm_sq_long(a: str) -> Column:
     return dot_long(a, a)
 
 

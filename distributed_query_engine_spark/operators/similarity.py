@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 from distributed_query_engine_spark.functions.vectors import (
     cosine_from_ints,
     dot_long,
+    dot_long_sql,
     int_vec,
     norm_sq_long,
 )
@@ -102,16 +103,27 @@ def suggest_n_cells(n_vectors: int) -> int:
     return min(65536, max(4, int(math.isqrt(max(n_vectors, 1)))))
 
 
-def plane_sign(j, d):
-    """Deterministic ±1 weight for hyperplane j, dimension d (Column
-    in, Column out): sign of a 32-bit multiplicative mix."""
-    mixed = ((j * PLANE_STRIDE + d + 1) * MIX) % M32
-    return F.when(mixed < M32 // 2, 1).otherwise(-1)
+def _plane_dot_sql(j: int) -> str:
+    """Spark SQL text of the exact-integer dot of the array<long>
+    ``ivec`` column with hyperplane ``j``: Σ_d ivec[d] · sign(j, d), the
+    deterministic ±1 weight being the sign of a 32-bit multiplicative
+    mix of (j, d). The one plane definition the LSH bucketer and the
+    random projection share (the oracle replays it in
+    plans/llm/_shared.py)."""
+    sign = (
+        f"CASE WHEN (({j} * {PLANE_STRIDE} + d + 1) * {MIX}) % {M32} "
+        f"< {M32 // 2} THEN 1 ELSE -1 END"
+    )
+    return (
+        "aggregate(zip_with(ivec, sequence(0, size(ivec) - 1), "
+        f"(x, d) -> x * CAST({sign} AS BIGINT)), "
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    )
 
 
 def with_int_vec(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return df.withColumn("ivec", int_vec(vec_col)).withColumn(
-        "nsq", norm_sq_long(F.col("ivec"))
+        "nsq", norm_sq_long("ivec")
     )
 
 
@@ -123,21 +135,17 @@ def lsh_bucket(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     shuffles. The previous formulation exploded a (vec, dim, plane)
     relation and re-aggregated it twice: a 512× row blow-up plus three
     shuffles, per corpus scan, for something that is a pure row-local
-    function of the vector."""
-    dims = F.sequence(F.lit(0), F.size("ivec") - 1)
-    bucket = F.lit(0).cast("long")
-    for j in range(n_planes):
-        pdot = F.aggregate(
-            F.zip_with(
-                F.col("ivec"), dims, lambda x, d: x * plane_sign(F.lit(j), d).cast("long")
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        bucket = bucket + F.when(pdot > 0, F.lit(1 << j).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return df.withColumn("bucket", bucket)
+    function of the vector. The sum is one SQL expression, bits added
+    left to right from bit 0."""
+    bucket = " + ".join(
+        ["CAST(0 AS BIGINT)"]
+        + [
+            f"CASE WHEN {_plane_dot_sql(j)} > 0 "
+            f"THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+            for j in range(n_planes)
+        ]
+    )
+    return df.withColumn("bucket", F.expr(bucket))
 
 
 def topk_cosine(
@@ -160,7 +168,7 @@ def topk_cosine(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
+                dot_long("q_ivec", "ivec"),
                 F.col("q_nsq"),
                 F.col("nsq"),
             ).alias("cosine"),
@@ -231,7 +239,7 @@ def _lsh_scored(
         "q_ivec",
         "q_nsq",
         "q_bucket",
-        F.explode(F.array(*[F.lit(m) for m in masks])).alias("mask"),
+        F.expr(f"explode(array({', '.join(map(str, masks))}))").alias("mask"),
     ).select(
         "q_id",
         "q_ivec",
@@ -245,7 +253,7 @@ def _lsh_scored(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
+                dot_long("q_ivec", "ivec"),
                 F.col("q_nsq"),
                 F.col("nsq"),
             ).alias("cosine"),
@@ -513,7 +521,7 @@ def kmeans_cell_stats(
         assigned.join(F.broadcast(cents), "cell_id")
         .select(
             "cell_id",
-            dot_long(F.col("ivec"), F.col("c_ivec")).alias("m_dot"),
+            dot_long("ivec", "c_ivec").alias("m_dot"),
         )
         .groupBy("cell_id")
         .agg(
@@ -571,7 +579,7 @@ def hard_negatives(
         "q_id",
         "vec_id",
         cosine_from_ints(
-            dot_long(F.col("q_ivec"), F.col("ivec")),
+            dot_long("q_ivec", "ivec"),
             F.col("q_nsq"),
             F.col("nsq"),
         ).alias("cosine"),
@@ -669,7 +677,7 @@ def topk_cosine_ivf_filtered(
             "q_id",
             "cell_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")),
+                dot_long("q_ivec", "c_ivec"),
                 F.col("q_nsq"),
                 F.col("c_nsq"),
             ).alias("p_cos"),
@@ -690,7 +698,7 @@ def topk_cosine_ivf_filtered(
             "vec_id",
             "label",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
+                dot_long("q_ivec", "ivec"),
                 F.col("q_nsq"),
                 F.col("nsq"),
             ).alias("cosine"),
@@ -806,7 +814,7 @@ def _ivf_search(
             "q_id",
             "cell_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")), F.col("q_nsq"), F.col("c_nsq")
+                dot_long("q_ivec", "c_ivec"), F.col("q_nsq"), F.col("c_nsq")
             ).alias("p_cos"),
         )
         .withColumn("prn", F.row_number().over(pw))
@@ -821,7 +829,7 @@ def _ivf_search(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")), F.col("q_nsq"), F.col("nsq")
+                dot_long("q_ivec", "ivec"), F.col("q_nsq"), F.col("nsq")
             ).alias("cosine"),
         )
     )
@@ -1001,7 +1009,7 @@ def semdedup(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .filter(
             cosine_from_ints(
-                dot_long(F.col("ivec_a"), F.col("ivec_b")),
+                dot_long("ivec_a", "ivec_b"),
                 F.col("nsq_a"),
                 F.col("nsq_b"),
             )
@@ -1069,7 +1077,7 @@ def cosine_near_dup_pairs(
             "vec_b",
             F.col("bucket"),
             cosine_from_ints(
-                dot_long(F.col("ivec_a"), F.col("ivec_b")),
+                dot_long("ivec_a", "ivec_b"),
                 F.col("nsq_a"),
                 F.col("nsq_b"),
             ).alias("cosine"),
@@ -1125,11 +1133,13 @@ def _pq_subvecs(
     ).select(*keys, "s.m", "s.sv")
 
 
-def _pq_dist(sv_a, sv_b) -> "Column":
-    """Exact-integer squared L2 between two fixed-point subvectors:
-    ||a||² − 2·a·b + ||b||² (each term a long)."""
-    return (
-        norm_sq_long(sv_a) - 2 * dot_long(sv_a, sv_b) + norm_sq_long(sv_b)
+def _pq_dist(sv_a: str, sv_b: str) -> "Column":
+    """Exact-integer squared L2 between two fixed-point subvector
+    columns: ||a||² − 2·a·b + ||b||² (each term a long), one SQL
+    expression."""
+    return F.expr(
+        f"{dot_long_sql(sv_a, sv_a)} - {dot_long_sql(sv_a, sv_b)} * 2 "
+        f"+ {dot_long_sql(sv_b, sv_b)}"
     )
 
 
@@ -1651,7 +1661,7 @@ def _probe_qdt(
             .select(
                 "q_id",
                 "cell_id",
-                _pq_dist(F.col("q_ivec"), F.col("c_ivec")).alias("p_dist"),
+                _pq_dist("q_ivec", "c_ivec").alias("p_dist"),
             )
             .withColumn("prn", F.row_number().over(pw))
             .filter(F.col("prn") <= n_probe)
@@ -1678,7 +1688,7 @@ def _probe_qdt(
             *keys,
             "m",
             "code_id",
-            _pq_dist(F.col("q_sv"), F.col("c_sv")).alias("dist"),
+            _pq_dist("q_sv", "c_sv").alias("dist"),
         )
     )
     return probes, q_dt
@@ -1972,7 +1982,7 @@ def topk_l2_ivfpq_rerank(
         .select(
             "q_id",
             "vec_id",
-            _pq_dist(F.col("q_ivec"), F.col("ivec")).alias("l2_dist"),
+            _pq_dist("q_ivec", "ivec").alias("l2_dist"),
         )
     )
     w = Window.partitionBy("q_id").orderBy("l2_dist", "vec_id")
@@ -1989,7 +1999,7 @@ RP_DIMS = 16  # random-projection output dimensionality
 def random_projection(emb: DataFrame, k: int = RP_DIMS) -> DataFrame:
     """JOHNSON–LINDENSTRAUSS RANDOM PROJECTION to ``k`` dims with the
     deterministic ±1 plane hash (Achlioptas-style sign matrix — the
-    same :func:`plane_sign` family the LSH bucketer uses, so the
+    same :func:`_plane_dot_sql` planes the LSH bucketer uses, so the
     "random" matrix is reproducible in any engine): y_j = Σ_d x_d ·
     sign(j, d) over the FIXED-POINT integer vectors, so every projected
     coordinate is an exact long. Entirely ROW-LOCAL (k integer folds
@@ -2003,29 +2013,15 @@ def random_projection(emb: DataFrame, k: int = RP_DIMS) -> DataFrame:
     )
 
 
-def _plane_dot_term(j: int):
-    # one-arg-per-param closures: PySpark derives lambda arity from the
-    # Python signature (see dedup.signatures_from_arrays)
-    return lambda x, d: x * plane_sign(F.lit(j), d).cast("long")
-
-
 def project_vectors(emb: DataFrame, k: int = RP_DIMS) -> DataFrame:
     """(vec_id, yvec array<long>, ynsq): the packed projected vectors +
     exact squared norm — the form downstream similarity search
     consumes (random_projection's tidy output is its posexplode)."""
-    dims = F.sequence(F.lit(0), F.size("ivec") - 1)
-    ys = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(F.col("ivec"), dims, _plane_dot_term(j)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            for j in range(k)
-        ]
+    ys = F.expr(
+        "array(" + ", ".join(_plane_dot_sql(j) for j in range(k)) + ")"
     )
     out = with_int_vec(emb).select("vec_id", ys.alias("yvec"))
-    return out.withColumn("ynsq", norm_sq_long(F.col("yvec")))
+    return out.withColumn("ynsq", norm_sq_long("yvec"))
 
 
 # ---------------------------------------------------------------------------
@@ -2243,7 +2239,7 @@ def _graph_search(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
+                dot_long("q_ivec", "ivec"),
                 F.col("q_nsq"),
                 F.col("nsq"),
             ).alias("cosine"),
@@ -2438,7 +2434,7 @@ def topk_cosine_sq8(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFra
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
+                dot_long("q_uvec", "uvec"),
                 F.col("q_unsq"),
                 F.col("unsq"),
             ).alias("cosine"),
@@ -2494,7 +2490,7 @@ def topk_cosine_ivf_sq8(
             "q_id",
             "cell_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("c_ivec")),
+                dot_long("q_ivec", "c_ivec"),
                 F.col("q_nsq"),
                 F.col("c_nsq"),
             ).alias("p_cos"),
@@ -2516,7 +2512,7 @@ def topk_cosine_ivf_sq8(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
+                dot_long("q_uvec", "uvec"),
                 F.col("q_unsq"),
                 F.col("unsq"),
             ).alias("sq_cos"),
@@ -2535,7 +2531,7 @@ def topk_cosine_ivf_sq8(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_ivec"), F.col("ivec")),
+                dot_long("q_ivec", "ivec"),
                 F.col("q_nsq"),
                 F.col("nsq"),
             ).alias("cosine"),
@@ -2722,7 +2718,7 @@ def sq8_encode(emb: DataFrame, stats: DataFrame) -> DataFrame:
         lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span_arr"],
     )
     out = withc.select("vec_id", "codes", u.alias("uvec"))
-    return out.withColumn("unsq", dot_long(F.col("uvec"), F.col("uvec")))
+    return out.withColumn("unsq", dot_long("uvec", "uvec"))
 
 
 def build_sq8_index(emb: DataFrame, index_path: str) -> None:
@@ -2769,7 +2765,7 @@ def topk_cosine_sq8_index(
         lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span"],
     )
     qz = z.select("vec_id", u.alias("uvec")).withColumn(
-        "unsq", dot_long(F.col("uvec"), F.col("uvec"))
+        "unsq", dot_long("uvec", "uvec")
     )
     q = qz.filter(F.col("vec_id").isin(query_ids)).select(
         F.col("vec_id").alias("q_id"),
@@ -2783,7 +2779,7 @@ def topk_cosine_sq8_index(
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
+                dot_long("q_uvec", "uvec"),
                 F.col("q_unsq"),
                 F.col("unsq"),
             ).alias("cosine"),

@@ -83,6 +83,26 @@ def tf_dl_relation(docs: DataFrame) -> DataFrame:
     return tf.join(dl, "doc_id")
 
 
+def panel_qterms(docs: DataFrame, ids: list[int]) -> list[tuple[int, str]]:
+    """The query panel's distinct (q_id, term) pairs for docs ``ids`` —
+    the set :func:`tf_dl_relation` yields for them, from ONE narrow
+    collect of each panel doc's distinct tokens (no aggregate, no join).
+    Null text gives no terms."""
+    rows = (
+        docs.filter(F.col("doc_id").isin(ids))
+        .select("doc_id", F.array_distinct(T.words(F.col("text"))).alias("toks"))
+        .collect()
+    )
+    return sorted({(r["doc_id"], t) for r in rows for t in r["toks"] or ()})
+
+
+# Schemas of the stats/corpus relations write_bm25_index (and the
+# append/compact passes) produce: search and compaction read them
+# without a schema-inference job.
+_STATS_SCHEMA = "tok string, df long"
+_CORPUS_SCHEMA = "n_docs long, a_tok long"
+
+
 def write_bm25_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -234,12 +254,15 @@ def bm25_search_index(
     # pushes the literal IN into the stats parquet scan, so the
     # vocabulary-sized relation is pruned at the source (§6).
     stats = (
-        spark.read.parquet(str(base / f"stats{sfx}"))
+        spark.read.schema(_STATS_SCHEMA)
+        .parquet(str(base / f"stats{sfx}"))
         .filter(F.col("tok").isin(terms))
         .groupBy("tok")
         .agg(F.sum("df").alias("df"))
     )
-    corpus = spark.read.parquet(str(base / f"corpus{sfx}")).agg(
+    corpus = spark.read.schema(_CORPUS_SCHEMA).parquet(
+        str(base / f"corpus{sfx}")
+    ).agg(
         F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok")
     )
     q = spark.createDataFrame(qterms, "q_id long, tok string")
@@ -338,7 +361,8 @@ def compact_bm25_index(
         .saveAsTable(ctbl)
     )
     (
-        spark.read.parquet(str(base / "stats"))
+        spark.read.schema(_STATS_SCHEMA)
+        .parquet(str(base / "stats"))
         .groupBy("tok")
         .agg(F.sum("df").alias("df"))
         .coalesce(1)
@@ -346,7 +370,8 @@ def compact_bm25_index(
         .parquet(str(base / "stats_compact"))
     )
     (
-        spark.read.parquet(str(base / "corpus"))
+        spark.read.schema(_CORPUS_SCHEMA)
+        .parquet(str(base / "corpus"))
         .agg(F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok"))
         .coalesce(1)
         .write.mode("overwrite")

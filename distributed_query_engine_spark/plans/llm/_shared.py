@@ -120,7 +120,7 @@ nv AS (
 # Random-hyperplane LSH bucket per vector (operators/similarity.py::
 # lsh_bucket replayed in SQL). Zipped unnest iterates the ACTUAL vector
 # length — PLANE_STRIDE is the hash's mixing stride, a constant of the
-# plane_sign definition, not a dimensionality assumption. Requires the
+# _plane_dot_sql definition, not a dimensionality assumption. Requires the
 # nv CTE; yields buckets(vec_id, bucket). The final left join from nv
 # keeps zero-length vectors at bucket 0, matching the Spark side
 # (lsh_bucket's null pdots fail `pdot > 0`, leaving bucket = 0) — an

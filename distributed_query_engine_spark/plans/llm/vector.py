@@ -676,7 +676,7 @@ def _pq_recall_frame(e):
 
     l2 = (
         F.col("q_nsq")
-        - 2 * dot_long(F.col("q_ivec"), F.col("ivec"))
+        - 2 * dot_long("q_ivec", "ivec")
         + F.col("nsq")
     )
     from pyspark.sql.window import Window
@@ -1010,7 +1010,7 @@ def llm_embedding_quantize(spark, sf_dir):
 
 @query(
     "llm_embedding_random_projection",
-    # Replays the deterministic ±1 sign matrix (the plane_sign hash) and
+    # Replays the deterministic ±1 sign matrix (the _plane_dot_sql hash) and
     # the exact integer dot products over the fixed-point vectors.
     oracle=lambda: f"""
     WITH {_IVEC_CTE},
@@ -1135,7 +1135,7 @@ def llm_similarity_projected_recall(spark, sf_dir):
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_yvec"), F.col("yvec")),
+                dot_long("q_yvec", "yvec"),
                 F.col("q_ynsq"),
                 F.col("ynsq"),
             ).alias("pcos"),
@@ -1333,7 +1333,7 @@ def llm_similarity_matryoshka_recall(spark, sf_dir):
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_vec"), F.col(vec_col)),
+                dot_long("q_vec", vec_col),
                 F.col("q_nsq"),
                 F.col(nsq_col),
             ).alias("cosine"),
@@ -1356,7 +1356,7 @@ def llm_similarity_matryoshka_recall(spark, sf_dir):
         "vec_id",
         F.slice("ivec", 1, F.col("dims")).alias("tvec"),
     )
-    trunc = trunc.withColumn("tnsq", dot_long(F.col("tvec"), F.col("tvec")))
+    trunc = trunc.withColumn("tnsq", dot_long("tvec", "tvec"))
     t_top = top5(trunc, "tvec", "tnsq", ["dims"])
     hits = (
         t_top.alias("t")
@@ -2248,7 +2248,7 @@ def llm_similarity_sq8_recall(spark, sf_dir):
             "q_id",
             "vec_id",
             cosine_from_ints(
-                dot_long(F.col("q_uvec"), F.col("uvec")),
+                dot_long("q_uvec", "uvec"),
                 F.col("q_unsq"),
                 F.col("unsq"),
             ).alias("cosine"),

@@ -383,12 +383,7 @@ def llm_bm25_index(spark, sf_dir):
 
     d = Tables(spark, sf_dir).documents
     SP.build_bm25_index(spark, d, sf_dir)
-    qterms = [
-        (r["q_id"], r["tok"])
-        for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(_Q_IDS)))
-        .select(F.col("doc_id").alias("q_id"), "tok")
-        .collect()
-    ]
+    qterms = SP.panel_qterms(d, _Q_IDS)
     return SP.bm25_search_index(spark, sf_dir, qterms, k=_BM25_K)
 
 
@@ -448,12 +443,7 @@ def llm_bm25_index_incremental(spark, sf_dir):
     tbl = f"bm25_incr_{key}_{_os.getpid()}"
     SP.write_bm25_index(spark, d.filter(~is_new), base, tbl)
     SP.append_to_bm25_index(spark, d.filter(is_new), base, tbl)
-    qterms = [
-        (r["q_id"], r["tok"])
-        for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(_Q_IDS)))
-        .select(F.col("doc_id").alias("q_id"), "tok")
-        .collect()
-    ]
+    qterms = SP.panel_qterms(d, _Q_IDS)
     res = SP.bm25_search_index(
         spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=tbl
     )
@@ -511,12 +501,7 @@ def llm_bm25_index_compact(spark, sf_dir):
     SP.write_bm25_index(spark, d.filter(~is_new), base, tbl)
     SP.append_to_bm25_index(spark, d.filter(is_new), base, tbl)
     ctbl = SP.compact_bm25_index(spark, base, tbl)
-    qterms = [
-        (r["q_id"], r["tok"])
-        for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(_Q_IDS)))
-        .select(F.col("doc_id").alias("q_id"), "tok")
-        .collect()
-    ]
+    qterms = SP.panel_qterms(d, _Q_IDS)
     res = SP.bm25_search_index(
         spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=ctbl, compacted=True
     )

@@ -133,9 +133,12 @@ def _shuffle_partitions_explicitly_set(spark: SparkSession) -> bool:
     """True iff ``spark.sql.shuffle.partitions`` was EXPLICITLY
     configured (builder conf or a runtime ``spark.conf.set``), as
     opposed to merely resolving to Spark's built-in 200 default — so a
-    user who deliberately set 200 is respected (ADVICE r3)."""
+    user who deliberately set 200 is respected (ADVICE r3).
+
+    ``_conf`` wraps the context's live SparkConf, so ``contains`` is one
+    py4j call; ``getConf()`` would copy every entry across first."""
     key = "spark.sql.shuffle.partitions"
-    if spark.sparkContext.getConf().contains(key):
+    if spark.sparkContext._conf.contains(key):
         return True
     try:
         # SQLConf.settings holds only explicitly-set entries; resolving

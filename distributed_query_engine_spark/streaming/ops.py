@@ -1561,12 +1561,7 @@ def stream_bm25_ingest(
         spark, batches.writeStream.foreachBatch(ingest), name, ckpt, {}
     )
     d = Tables(spark, sf_dir).documents
-    qterms = [
-        (r["q_id"], r["tok"])
-        for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(_Q_IDS)))
-        .select(F.col("doc_id").alias("q_id"), "tok")
-        .collect()
-    ]
+    qterms = SP.panel_qterms(d, _Q_IDS)
     return SP.bm25_search_index(
         spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=tbl
     )

@@ -52,7 +52,7 @@ def exact_top(e):
         F.col("nsq").alias("q_nsq"),
     )
     l2 = (
-        F.col("q_nsq") - 2 * dot_long(F.col("q_ivec"), F.col("ivec")) + F.col("nsq")
+        F.col("q_nsq") - 2 * dot_long("q_ivec", "ivec") + F.col("nsq")
     )
     w = Window.partitionBy("q_id").orderBy("d", "vec_id")
     return {

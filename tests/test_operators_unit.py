@@ -645,6 +645,131 @@ def test_read_parquet_table_handles_zero_row_group_files(spark, tmp_path):
     assert df.count() == 0
 
 
+def _inference_read(spark, path):
+    """Spark's own schema inference plus the catalog's NTZ shim: what
+    read_parquet_table returned before it derived schemas from footers."""
+    df = spark.read.parquet(path)
+    for f in df.schema.fields:
+        if f.dataType.typeName() == "timestamp_ntz":
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    return df
+
+
+def _catalog_read_jobs(spark, path, group):
+    """(DataFrame, Spark job ids) of one read_parquet_table call, the
+    jobs counted by a job group set around the call only."""
+    from distributed_query_engine_spark.catalog import read_parquet_table
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        df = read_parquet_table(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return df, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_read_parquet_table_footer_schema_equals_inference_with_no_job(spark):
+    """Every star table at every test scale: the footer-derived schema
+    is exactly the one Spark infers (nullability and containsNull
+    included), and the catalog read launches no Spark job."""
+    from pathlib import Path
+
+    from distributed_query_engine_spark.catalog import STAR_TABLES
+    from tests.conftest import SF_MID
+
+    root = Path(SF_MID).parent
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        for t in STAR_TABLES:
+            path = str(root / sf / f"{t}.parquet")
+            df, jobs = _catalog_read_jobs(spark, path, f"footer-{sf}-{t}")
+            assert jobs == [], (sf, t)
+            assert df.schema == _inference_read(spark, path).schema, (sf, t)
+
+
+def test_read_parquet_table_covered_types_and_fallbacks(spark, tmp_path):
+    """Covered Arrow types read with an explicit schema (no job); a
+    Spark-written directory, NANOS and INT96 timestamps, a decimal
+    column and a hive-partitioned directory fall back to inference.
+    Either way the schema and rows equal the inference read's."""
+    import datetime
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from distributed_query_engine_spark.catalog import footer_struct
+
+    ts = [datetime.datetime(2024, 1, 1, 12, 0, 0, 123456), None]
+    covered = str(tmp_path / "covered.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "i": pa.array([1, None], pa.int32()),
+                "l": pa.array([2, 3], pa.int64()),
+                "f": pa.array([1.5, None], pa.float32()),
+                "d": pa.array([2.25, 3.0], pa.float64()),
+                "s": pa.array(["a", None]),
+                "b": pa.array([True, None]),
+                "ntz": pa.array(ts, pa.timestamp("us")),
+                "utc": pa.array(ts, pa.timestamp("us", "UTC")),
+                "vf": pa.array([[1.0, None], None], pa.list_(pa.float32())),
+                "vl": pa.array([[1, 2], []], pa.list_(pa.int64())),
+            }
+        ),
+        covered,
+    )
+    assert footer_struct(pq.read_schema(covered)) is not None
+    df, jobs = _catalog_read_jobs(spark, covered, "footer-covered")
+    assert jobs == []
+    want = _inference_read(spark, covered)
+    assert df.schema == want.schema
+    assert df.schema["ntz"].dataType.typeName() == "timestamp"
+    assert _rows(df) == _rows(want)
+
+    spark_dir = str(tmp_path / "spark_dir")
+    spark.range(6).selectExpr(
+        "id", "CAST(id AS INT) AS i", "CAST(id AS STRING) AS s"
+    ).write.parquet(spark_dir)
+    decimal = str(tmp_path / "decimal.parquet")
+    pq.write_table(
+        pa.table({"id": [1, 2], "x": pa.array([Decimal("1.25"), None],
+                                              pa.decimal128(10, 2))}),
+        decimal,
+    )
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ts, pa.timestamp("us"))}),
+        int96,
+        use_deprecated_int96_timestamps=True,
+    )
+    hive = str(tmp_path / "hive")
+    pq.write_to_dataset(
+        pa.table({"id": [1, 2, 3], "k": [1, 1, 2]}), hive, partition_cols=["k"]
+    )
+    for path in (spark_dir, decimal, int96, hive):
+        df, _jobs = _catalog_read_jobs(spark, path, "footer-fallback")
+        want = _inference_read(spark, path)
+        assert df.schema == want.schema, path
+        assert _rows(df) == _rows(want), path
+    assert "k" in _catalog_read_jobs(spark, hive, "footer-hive")[0].columns
+
+    # NANOS cannot be read by plain inference at all; the fallback's
+    # nanos shim must still surface microsecond TIMESTAMPs
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(
+        pa.table({"id": [1, 2], "ts": pa.array(ts, pa.timestamp("ns"))}), nanos
+    )
+    assert footer_struct(pq.read_schema(nanos)) is None
+    df, _jobs = _catalog_read_jobs(spark, nanos, "footer-nanos")
+    assert df.schema["ts"].dataType.typeName() == "timestamp"
+    assert _rows(df) == [(1, ts[0]), (2, None)]
+
+
 def test_release_gram_cache_unpersists(spark, sf_dir):
     """r10 ADVICE: the persisted span-gram relations accumulate one
     cache entry per (corpus plan, k) with no release path —
@@ -759,10 +884,8 @@ INGEST_REPORT_PY4J_BUDGET = 1109
 
 
 def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
-    import gc
-    import threading
-
     from distributed_query_engine_spark.catalog import Tables
+    from tests.py4j_count import py4j_round_trips
 
     d_all = Tables(spark, sf_dir).documents
     D.build_signature_store(
@@ -785,37 +908,70 @@ def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
             store_dirs=[str(tmp_path / "b_init")],
         )
 
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    builder = threading.current_thread()
-    calls = [0]
-
-    def counting(*args, **kwargs):
-        # only the building thread's calls: py4j frees dropped proxies
-        # from a background thread too, at a pace the builder does not set
-        calls[0] += threading.current_thread() is builder
-        return send(*args, **kwargs)
-
-    def round_trips(build):
-        # cyclic garbage from earlier work would otherwise free py4j
-        # proxies (one call each) inside the counted window
-        gc.collect()
-        gc.disable()
-        calls[0] = 0
-        client.send_command = counting
-        try:
-            build()
-        finally:
-            client.send_command = send
-            gc.enable()
-        return calls[0]
-
     sig_groups().write.mode("overwrite").parquet(store_b)
     report()  # warm the builders' one-time lookups
-    n_sig, n_report = round_trips(sig_groups), round_trips(report)
+    n_sig = py4j_round_trips(spark, sig_groups)
+    n_report = py4j_round_trips(spark, report)
     print(f"py4j round trips: signature groups {n_sig}, report {n_report}")
     assert n_sig <= INGEST_SIG_GROUPS_PY4J_BUDGET, n_sig
     assert n_report <= INGEST_REPORT_PY4J_BUDGET, n_report
+
+
+# py4j round trips to BUILD (not run) three llm_batch queries through
+# the registry wrapper at sf0.001 — session tuning, catalog reads and
+# builder, plus the BM25 panel-term collect: measured 658, 490 and 808
+# with footer-derived schemas, the one-call SparkConf lookup, the vector
+# expressions as SQL text and the one-job panel terms, plus 10%. The
+# Column-lambda builders, the SparkConf copy and the aggregated
+# panel-term collect took 2,517, 919 and 1,063.
+LLM_BUILDER_PY4J_BUDGET = {
+    "llm_similarity_ann_lsh": 724,
+    "llm_similarity_topk": 539,
+    "llm_bm25_index": 889,
+}
+
+
+def test_llm_builder_py4j_round_trip_budget(spark, sf_dir):
+    from distributed_query_engine_spark.registry import all_queries
+    from tests.py4j_count import py4j_round_trips
+
+    qs = all_queries()
+    got = {}
+    for name in LLM_BUILDER_PY4J_BUDGET:
+        qs[name](spark, sf_dir)  # warm: index build, one-time lookups
+        got[name] = py4j_round_trips(spark, lambda: qs[name](spark, sf_dir))
+    print(f"py4j round trips: {got}")
+    assert all(got[n] <= b for n, b in LLM_BUILDER_PY4J_BUDGET.items()), got
+
+
+def test_tune_session_keeps_explicit_200_in_one_conf_lookup(spark):
+    """A runtime-set ``spark.sql.shuffle.partitions=200`` survives
+    tune_session even when the SparkConf does not carry the key (the
+    session-settings lookup decides), and the explicit-set check costs
+    at most 2 py4j round trips (copying the SparkConf took ~165)."""
+    from distributed_query_engine_spark.session import (
+        _shuffle_partitions_explicitly_set,
+        tune_session,
+    )
+    from tests.py4j_count import py4j_round_trips
+
+    key = "spark.sql.shuffle.partitions"
+    sconf = spark.sparkContext._conf
+    prior, prior_sconf = spark.conf.get(key), sconf.get(key, None)
+    try:
+        n = py4j_round_trips(
+            spark, lambda: _shuffle_partitions_explicitly_set(spark)
+        )
+        assert n <= 2, n
+        if prior_sconf is not None:
+            sconf._jconf.remove(key)
+        spark.conf.set(key, "200")
+        tune_session(spark)
+        assert spark.conf.get(key) == "200"
+    finally:
+        if prior_sconf is not None:
+            sconf.set(key, prior_sconf)
+        spark.conf.set(key, prior)
 
 
 def test_incremental_dedup_empty_batch_and_empty_corpus(spark, sf_dir):

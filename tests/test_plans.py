@@ -178,7 +178,7 @@ def test_pq_adc_scan_broadcasts_tables_and_partial_aggregates(spark, sf_dir):
     base = (
         Tables(spark, sf_dir)
         .embeddings.select("vec_id", int_vec("embedding").alias("ivec"))
-        .withColumn("nsq", norm_sq_long(F.col("ivec")))
+        .withColumn("nsq", norm_sq_long("ivec"))
     )
     q = base.filter(F.col("vec_id").isin([0, 1, 2, 3, 4])).select(
         F.col("vec_id").alias("q_id"),
@@ -187,7 +187,7 @@ def test_pq_adc_scan_broadcasts_tables_and_partial_aggregates(spark, sf_dir):
     )
     l2 = (
         F.col("q_nsq")
-        - 2 * dot_long(F.col("q_ivec"), F.col("ivec"))
+        - 2 * dot_long("q_ivec", "ivec")
         + F.col("nsq")
     )
     w = Window.partitionBy("q_id").orderBy("d", "vec_id")

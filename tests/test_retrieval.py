@@ -281,6 +281,36 @@ def test_bm25_append_is_batch_only_and_appends_partials(spark, sf_dir, tmp_path)
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
+def test_panel_qterms_equal_tf_dl_terms_in_one_job(spark, sf_dir):
+    """The panel's (q_id, term) literals are the (doc_id, tok) pairs the
+    index's tf_dl relation holds for the panel docs, null and empty
+    text included, and they come from one Spark job."""
+    from distributed_query_engine_spark.catalog import Tables
+    from distributed_query_engine_spark.operators import sparse as SP
+    from distributed_query_engine_spark.plans.retrieval import _Q_IDS
+
+    real = Tables(spark, sf_dir).documents.select("doc_id", "text")
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, ""), (-3, "a  a b")], "doc_id long, text string"
+    )
+    d = real.unionByName(edge)
+    ids = list(_Q_IDS) + [-1, -2, -3]
+    sc = spark.sparkContext
+    sc.setJobGroup("panel-qterms", "panel-qterms")
+    try:
+        got = SP.panel_qterms(d, ids)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("panel-qterms")) == 1
+    want = {
+        (r["doc_id"], r["tok"])
+        for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(ids))).collect()
+    }
+    assert got == sorted(want)
+    assert {t for q, t in got if q < 0} == {"", "a", "b"}
+    assert {q for q, _ in got} >= set(_Q_IDS)
+
+
 def test_bm25_compaction_one_file_per_bucket_same_results(spark, sf_dir, tmp_path):
     """Compaction contract: post-compact postings hold exactly one file
     per non-empty bucket (appends had accumulated one per bucket per
@@ -313,12 +343,7 @@ def test_bm25_compaction_one_file_per_bucket_same_results(spark, sf_dir, tmp_pat
             for p in (base / "postings_compact").glob("part-*.parquet")
         ]
         assert len(buckets) == len(set(buckets))
-        qterms = [
-            (r["q_id"], r["tok"])
-            for r in SP.tf_dl_relation(d.filter(F.col("doc_id").isin(_Q_IDS)))
-            .select(F.col("doc_id").alias("q_id"), "tok")
-            .collect()
-        ]
+        qterms = SP.panel_qterms(d, _Q_IDS)
         before = sorted(
             tuple(r)
             for r in SP.bm25_search_index(
