@@ -60,10 +60,15 @@ def norm_sq_long(a: str) -> Column:
     return dot_long(a, a)
 
 
-def cosine_from_ints(dot: Column, na_sq: Column, nb_sq: Column) -> Column:
-    """cosine from exact integer dot/norms; deterministic double result."""
-    return dot.cast("double") / (
-        F.sqrt(na_sq.cast("double")) * F.sqrt(nb_sq.cast("double"))
+def cosine_from_ints(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of array<long> columns ``a``/``b`` from their exact integer
+    dot and squared norms ``na``/``nb``; deterministic double result.
+    ``try_divide``: a zero norm scores NULL instead of raising
+    DIVIDE_BY_ZERO under ANSI mode — it ranks after every scored
+    candidate (DESC NULLS LAST) and passes no threshold."""
+    return F.expr(
+        f"try_divide(CAST({dot_long_sql(a, b)} AS DOUBLE), "
+        f"sqrt(CAST({_q(na)} AS DOUBLE)) * sqrt(CAST({_q(nb)} AS DOUBLE)))"
     )
 
 

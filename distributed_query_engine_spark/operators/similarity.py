@@ -21,6 +21,7 @@ docstring).
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -148,6 +149,52 @@ def lsh_bucket(df: DataFrame, n_planes: int = N_PLANES) -> DataFrame:
     return df.withColumn("bucket", F.expr(bucket))
 
 
+def _qpanel(rel: DataFrame, query_ids: list[int], *cols: str) -> DataFrame:
+    """The broadcast query panel: ``rel``'s query rows as (q_id,
+    q_<c> for each c in ``cols``)."""
+    return rel.filter(F.col("vec_id").isin(query_ids)).select(
+        F.col("vec_id").alias("q_id"), *[F.col(c).alias(f"q_{c}") for c in cols]
+    )
+
+
+def _rank_cut(df: DataFrame, n: int, *order) -> DataFrame:
+    """The first ``n`` rows of each q_id by ``order``, numbered ``rn`` (a
+    long) — every per-query cut of this module (final top-k, probe set,
+    shortlist, graph seeds); callers select their own columns."""
+    w = Window.partitionBy("q_id").orderBy(*order)
+    return df.withColumn("rn", F.row_number().over(w).cast("long")).filter(
+        F.col("rn") <= n
+    )
+
+
+def _cosine_topk(scored: DataFrame, k: "int | None") -> DataFrame:
+    """Top-k of a (q_id, vec_id, ..., cosine) candidate relation by
+    (cosine DESC NULLS LAST, vec_id) — deterministic tiebreak on
+    candidate vec_id; ``k=None`` returns the candidates themselves (the
+    recall/cost instrumentation path, fed to :func:`topk_with_count`)."""
+    if k is None:
+        return scored
+    return _rank_cut(scored, k, F.desc("cosine"), "vec_id")
+
+
+def _brute_topk(
+    rel: DataFrame, query_ids: list[int], k: int, v: str, n: str
+) -> DataFrame:
+    """Brute-force cosine top-k over a (vec_id, ``v``, ``n``) relation —
+    vectors and their squared norms: the panel broadcast, the corpus
+    scanned once, never shuffled."""
+    scored = (
+        rel.crossJoin(F.broadcast(_qpanel(rel, query_ids, v, n)))
+        .filter(F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            "vec_id",
+            cosine_from_ints(f"q_{v}", v, f"q_{n}", n).alias("cosine"),
+        )
+    )
+    return _cosine_topk(scored, k)
+
+
 def topk_cosine(
     emb: DataFrame,
     query_ids: list[int],
@@ -156,36 +203,13 @@ def topk_cosine(
     """Exact brute-force cosine top-k for the given query vec_ids.
     Deterministic tiebreak on candidate vec_id."""
     base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    scored = (
-        base.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _brute_topk(base, query_ids, k, "ivec", "nsq")
 
 
 def topk_cosine_ann(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
+    k: int | None = 5,
     n_planes: int | None = N_PLANES,
     multiprobe_h: int = MULTIPROBE_H,
 ) -> DataFrame:
@@ -195,46 +219,23 @@ def topk_cosine_ann(
     expansion happens on the broadcast query side (|queries| × |masks|
     tiny rows); the corpus is still scanned once and hash-joined on its
     bucket id — no index shuffles. Each (query, candidate) pair meets at
-    exactly one mask, so no dedup pass is needed. Approximate (may miss
-    beyond-radius neighbors) but every step is deterministic, so results
-    are still oracle-exact.
+    exactly one mask, so no dedup pass is needed and a plain count of
+    the ``k=None`` candidates is the candidate-set size (the measured
+    COST of the probe radius). Approximate (may miss beyond-radius
+    neighbors) but every step is deterministic, so results are still
+    oracle-exact.
 
     ``n_planes=None`` derives the plane count from the corpus size
     (:func:`suggest_n_planes`; one count() action) — the scale default.
     The registered query pins ``n_planes=N_PLANES`` so the oracle can
     replay the arithmetic."""
-    scored = _lsh_scored(emb, query_ids, n_planes, multiprobe_h)
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
-
-
-def _lsh_scored(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_planes: int | None = N_PLANES,
-    multiprobe_h: int = MULTIPROBE_H,
-) -> DataFrame:
-    """The (q_id, vec_id, cosine) candidate relation behind
-    :func:`topk_cosine_ann` — factored out so the recall query can
-    count candidates (the measured COST of the probe radius) from the
-    same relation the search ranks."""
     if n_planes is None:
         n_planes = suggest_n_planes(emb.count())
     masks = probe_masks(n_planes, multiprobe_h)
     base = lsh_bucket(
         with_int_vec(emb).select("vec_id", "ivec", "nsq"), n_planes=n_planes
     )
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("bucket").alias("q_bucket"),
-    )
-    probes = q.select(
+    probes = _qpanel(base, query_ids, "ivec", "nsq", "bucket").select(
         "q_id",
         "q_ivec",
         "q_nsq",
@@ -246,37 +247,16 @@ def _lsh_scored(
         "q_nsq",
         F.col("q_bucket").bitwiseXOR(F.col("mask")).alias("probe_bucket"),
     )
-    return (
+    scored = (
         base.join(F.broadcast(probes), F.col("bucket") == F.col("probe_bucket"))
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
+            cosine_from_ints("q_ivec", "ivec", "q_nsq", "nsq").alias("cosine"),
         )
     )
-
-
-def lsh_candidate_counts(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_planes: int | None = N_PLANES,
-    multiprobe_h: int = MULTIPROBE_H,
-) -> DataFrame:
-    """(q_id, n_candidates): how many corpus vectors each query's
-    multi-probe neighborhood actually scanned — the denominator of the
-    recall/cost trade the knobs buy. Each (query, candidate) pair
-    meets at exactly one XOR mask, so a plain count is the candidate-
-    set size."""
-    return (
-        _lsh_scored(emb, query_ids, n_planes, multiprobe_h)
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-    )
+    return _cosine_topk(scored, k)
 
 
 def topk_with_count(scored: DataFrame, k: int) -> DataFrame:
@@ -297,18 +277,6 @@ def topk_with_count(scored: DataFrame, k: int) -> DataFrame:
         .filter(F.col("rn") <= k)
         .select("q_id", "vec_id", "n_candidates")
     )
-
-
-def lsh_scored(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_planes: int | None = N_PLANES,
-    multiprobe_h: int = MULTIPROBE_H,
-) -> DataFrame:
-    """Public alias of the LSH candidate relation (see
-    :func:`_lsh_scored`) for callers composing top-k and cost in one
-    pass via :func:`topk_with_count`."""
-    return _lsh_scored(emb, query_ids, n_planes, multiprobe_h)
 
 
 # r9 retune (VERDICT r8 item 2): the r8 point (16 cells, probe 4) sat
@@ -461,8 +429,19 @@ def _assign_to(
     crows = cents.select("cell_id", "c_ivec", "c_nsq").collect()
     crows.sort(key=lambda r: r["cell_id"])
     cell_ids = np.array([r["cell_id"] for r in crows], dtype=np.int64)
-    C = np.array([r["c_ivec"] for r in crows], dtype=np.float64)
-    cn = np.sqrt(np.array([r["c_nsq"] for r in crows], dtype=np.float64))
+    dim = max((len(r["c_ivec"]) for r in crows), default=0)
+
+    def _dense(vecs, nsq):
+        # (rows x dim) float64 + norms. A row of another length (empty,
+        # or a mismatched dim: its SQL cosine is NULL) is a zero row of
+        # zero norm, so like a zero-norm row it scores NaN below.
+        ok = np.fromiter(map(len, vecs), np.int64, len(vecs)) == dim
+        M = np.zeros((len(vecs), dim))
+        if ok.any():
+            M[ok] = np.stack([v for v, o in zip(vecs, ok) if o])
+        return M, np.sqrt(np.asarray(nsq, dtype=np.float64)) * ok
+
+    C, cn = _dense([r["c_ivec"] for r in crows], [r["c_nsq"] for r in crows])
 
     out_schema = T.StructType(
         list(base.schema.fields) + [T.StructField("cell_id", T.LongType())]
@@ -473,22 +452,46 @@ def _assign_to(
             if pdf.empty:
                 yield pdf.assign(cell_id=pd.Series(dtype="int64"))
                 continue
-            nv = np.sqrt(pdf["nsq"].to_numpy().astype(np.float64))
-            V = np.stack(pdf["ivec"].to_numpy()).astype(np.float64)
+            V, nv = _dense(pdf["ivec"].to_numpy(), pdf["nsq"].to_numpy())
             # block rows so the (rows x n_cells) score matrix stays
             # ~32 MiB even at the 65536-cell cap
             block = max(16, (4 << 20) // max(1, len(cell_ids)))
             best = np.empty(len(V), dtype=np.int64)
             for i0 in range(0, len(V), block):
-                cos = (V[i0:i0 + block] @ C.T) / (
-                    nv[i0:i0 + block, None] * cn[None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = (V[i0:i0 + block] @ C.T) / (
+                        nv[i0:i0 + block, None] * cn[None, :]
+                    )
+                # a NaN (zero-norm) score ranks last, like SQL's NULL; a
+                # row scoring NaN everywhere takes the lowest cell
+                best[i0:i0 + block] = np.argmax(
+                    np.where(np.isnan(cos), -np.inf, cos), axis=1
                 )
-                best[i0:i0 + block] = np.argmax(cos, axis=1)
             yield pdf.assign(cell_id=cell_ids[best])
 
     return base.mapInPandas(_nearest, out_schema).select(
         "vec_id", "ivec", "nsq", *meta_cols, "cell_id"
     )
+
+
+def _ivf_fit(
+    emb: DataFrame,
+    n_cells: "int | None",
+    strategy: str = "lowest_id",
+    lloyd_iters: int = 0,
+    meta_cols: "tuple[str, ...]" = (),
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """The one IVF quantizer fit → ``(base, cents, assigned)``: the
+    (vec_id, ivec, nsq, *meta_cols) corpus, its centroids
+    (:func:`ivf_centroids`) and the nearest-centroid assignment
+    (:func:`_assign_to`, carrying ``meta_cols``). ``n_cells=None``
+    derives the cell count from the corpus size
+    (:func:`suggest_n_cells`; one count() action)."""
+    base = with_int_vec(emb).select("vec_id", "ivec", "nsq", *meta_cols)
+    if n_cells is None:
+        n_cells = suggest_n_cells(base.count())
+    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
+    return base, cents, _assign_to(base, cents, meta_cols)
 
 
 def kmeans_cell_stats(
@@ -514,9 +517,7 @@ def kmeans_cell_stats(
     aggregate bounded at n_cells × dim rows post-agg; the stats pass is
     the same assignment scan with a per-cell aggregate. The corpus is
     never collected — only n_cells-row centroid relations checkpoint."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
+    _, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
     member = (
         assigned.join(F.broadcast(cents), "cell_id")
         .select(
@@ -564,32 +565,16 @@ def hard_negatives(
     then one more scan with the tiny query panel broadcast and a
     cell-inequality predicate evaluated scan-side — the corpus never
     shuffles except the per-query top-k window on (q_id)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("cell_id").alias("q_cell"),
-    )
+    _, _, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
+    q = _qpanel(assigned, query_ids, "ivec", "nsq", "cell_id")
     scored = assigned.join(
-        F.broadcast(q), F.col("cell_id") != F.col("q_cell")
+        F.broadcast(q), F.col("cell_id") != F.col("q_cell_id")
     ).select(
         "q_id",
         "vec_id",
-        cosine_from_ints(
-            dot_long("q_ivec", "ivec"),
-            F.col("q_nsq"),
-            F.col("nsq"),
-        ).alias("cosine"),
+        cosine_from_ints("q_ivec", "ivec", "q_nsq", "nsq").alias("cosine"),
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _cosine_topk(scored, k)
 
 
 def ivf_assign(
@@ -609,17 +594,13 @@ def ivf_assign(
     centroids broadcast, the corpus is scanned once, and the only
     shuffle is the per-vector argmax (bounded at |corpus| × n_cells rows
     pre-aggregation)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    return _assign_to(base, cents)
+    return _ivf_fit(emb, n_cells, strategy, lloyd_iters)[2]
 
 
 def topk_cosine_ivf(
     emb: DataFrame,
     query_ids: list[int],
-    k: int = 5,
+    k: int | None = 5,
     n_probe: int = N_PROBE,
     n_cells: int | None = N_CELLS,
     strategy: str = "lowest_id",
@@ -632,12 +613,11 @@ def topk_cosine_ivf(
     corpus instead of all of it — the knobs a 100 TB deployment turns
     (``n_cells=None`` derives ~sqrt(corpus) via
     :func:`suggest_n_cells`; ``strategy``/``lloyd_iters`` pick and
-    refine the quantizer, :func:`ivf_centroids`)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
+    refine the quantizer, :func:`ivf_centroids`). ``k=None`` returns
+    the probed-cell candidates (q_id, vec_id, cosine) — the
+    recall/cost instrumentation path, always the same index as the
+    search."""
+    _, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
     return _ivf_search(cents, assigned, query_ids, k, n_probe)
 
 
@@ -659,59 +639,8 @@ def topk_cosine_ivf_filtered(
     than k in-filter candidates in the probed cells → fewer rows for
     that query (approximate by the same contract as the unfiltered
     IVF; a production store widens n_probe on shortfall)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq", "label")
-    cents = ivf_centroids(base.select("vec_id", "ivec", "nsq"), n_cells)
-    assigned = _assign_to(base, cents, meta_cols=("label",))
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-        F.col("label").alias("q_label"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(
-        F.col("p_cos").desc(), F.col("cell_id")
-    )
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "c_ivec"),
-                F.col("q_nsq"),
-                F.col("c_nsq"),
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    scored = (
-        assigned.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(q), "q_id")
-        .filter(
-            (F.col("vec_id") != F.col("q_id"))
-            & (F.col("label") == F.col("q_label"))
-        )
-        .select(
-            "q_id",
-            "vec_id",
-            "label",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "label", "cosine", "rn")
-    )
+    _, cents, assigned = _ivf_fit(emb, n_cells, meta_cols=("label",))
+    return _ivf_search(cents, assigned, query_ids, k, n_probe, match=("label",))
 
 
 def topk_cosine_ivf_deleted(
@@ -731,9 +660,7 @@ def topk_cosine_ivf_deleted(
     compaction would eventually rewrite cells whose tombstone fraction
     crosses a threshold (the append_to_ivf_index twin closes the CRUD
     triangle: build → append → delete)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells)
-    assigned = _assign_to(base, cents)
+    _, cents, assigned = _ivf_fit(emb, n_cells)
     corpus = assigned.join(
         F.broadcast(tombstones.select("vec_id")), "vec_id", "left_anti"
     )
@@ -759,9 +686,7 @@ def ivf_compaction_report(
     the flagged cells' files are rewritten (they are hive partitions
     of the codes/assignments layout); unflagged cells keep paying the
     anti-join at read — the same threshold economics as LSM stores."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    cents = ivf_centroids(base, n_cells)
-    assigned = _assign_to(base, cents)
+    _, _, assigned = _ivf_fit(emb, n_cells)
     flagged = assigned.join(
         F.broadcast(tombstones.select("vec_id").withColumn("_t", F.lit(1))),
         "vec_id",
@@ -786,6 +711,19 @@ def ivf_compaction_report(
     )
 
 
+def _probe_cells(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """(q_id, cell_id): each panel query's ``n_probe`` nearest cells by
+    cosine over the broadcast centroids, ties → lowest cell id — the
+    one cosine probe stage."""
+    p_cos = cosine_from_ints("q_ivec", "c_ivec", "q_nsq", "c_nsq")
+    probes = q.crossJoin(F.broadcast(cents)).select(
+        "q_id", "cell_id", p_cos.alias("p_cos")
+    )
+    return _rank_cut(probes, n_probe, F.desc("p_cos"), "cell_id").select(
+        "q_id", "cell_id"
+    )
+
+
 def _ivf_search(
     cents: DataFrame,
     assigned: DataFrame,
@@ -793,95 +731,35 @@ def _ivf_search(
     k: int | None,
     n_probe: int,
     corpus: "DataFrame | None" = None,
+    match: "tuple[str, ...]" = (),
 ) -> DataFrame:
     """The IVF search given its two index relations: probe selection
     over broadcast centroids, exact ranking within probed cells. Query
     vectors come from the assignment relation itself (an index lookup),
     so search needs NOTHING beyond the index. ``corpus`` overrides the
     SCANNED side only (tombstone-excluded view for the delete
-    lifecycle) while queries still resolve from the full index."""
+    lifecycle) while queries still resolve from the full index.
+    ``match`` names metadata columns a candidate must share with its
+    query (the filtered search's ``label``); they ride into the output
+    after vec_id."""
     if corpus is None:
         corpus = assigned
-    q = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cell_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "c_ivec"), F.col("q_nsq"), F.col("c_nsq")
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
+    q = _qpanel(assigned, query_ids, "ivec", "nsq", *match)
+    keep = F.col("vec_id") != F.col("q_id")
+    for c in match:
+        keep = keep & (F.col(c) == F.col(f"q_{c}"))
     scored = (
-        corpus.join(F.broadcast(probes), "cell_id")
+        corpus.join(F.broadcast(_probe_cells(q, cents, n_probe)), "cell_id")
         .join(F.broadcast(q), "q_id")
-        .filter(F.col("vec_id") != F.col("q_id"))
+        .filter(keep)
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"), F.col("q_nsq"), F.col("nsq")
-            ).alias("cosine"),
+            *match,
+            cosine_from_ints("q_ivec", "ivec", "q_nsq", "nsq").alias("cosine"),
         )
     )
-    if k is None:
-        # recall/cost instrumentation path: the raw candidate relation
-        return scored
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
-
-
-def ivf_scored(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_cells: int | None = N_CELLS,
-    n_probe: int = N_PROBE,
-    strategy: str = "lowest_id",
-    lloyd_iters: int = 0,
-) -> DataFrame:
-    """The IVF candidate relation (q_id, vec_id, cosine) — same index
-    construction as :func:`topk_cosine_ivf` (knobs forwarded so cost
-    measurements can never silently describe a different index than
-    the search)."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    return _ivf_search(cents, assigned, query_ids, None, n_probe)
-
-
-def ivf_candidate_counts(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_cells: int | None = N_CELLS,
-    n_probe: int = N_PROBE,
-    strategy: str = "lowest_id",
-    lloyd_iters: int = 0,
-) -> DataFrame:
-    """(q_id, n_candidates) for the IVF path — the vectors inside each
-    query's ``n_probe`` probed cells (cost twin of
-    :func:`lsh_candidate_counts`; index knobs forwarded like
-    :func:`topk_cosine_ivf` so the counts always describe the same
-    index as the search being measured)."""
-    return (
-        ivf_scored(emb, query_ids, n_cells, n_probe, strategy, lloyd_iters)
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
-    )
+    return _cosine_topk(scored, k)
 
 
 def build_ivf_index(
@@ -897,14 +775,19 @@ def build_ivf_index(
     the corpus, PARTITIONED BY cell so a probe reads only its cells'
     files). Built once per corpus version; queries then pay index reads
     only, never a corpus re-embed/re-assign."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
+    _, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         f"{index_path}/assignments"
+    )
+
+
+def _read_assignments(spark, index_path: str) -> DataFrame:
+    """An index's stored assignment relation. Partition-column type
+    inference narrows small cell ids to int; the cast restores the long
+    the in-memory relations carry."""
+    return spark.read.parquet(f"{index_path}/assignments").withColumn(
+        "cell_id", F.col("cell_id").cast("long")
     )
 
 
@@ -942,12 +825,9 @@ def topk_cosine_ivf_index(
     the probe set is known — at 100 TB that is the difference between
     reading n_probe/n_cells of the index and reading all of it."""
     cents = spark.read.parquet(f"{index_path}/centroids")
-    # partition-column type inference narrows small cell ids to int;
-    # restore the long the in-memory relations carry
-    assigned = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
+    return _ivf_search(
+        cents, _read_assignments(spark, index_path), query_ids, k, n_probe
     )
-    return _ivf_search(cents, assigned, query_ids, k, n_probe)
 
 
 def semdedup(
@@ -1008,12 +888,7 @@ def semdedup(
         a.hint("shuffle_hash").join(b, ["cell_id", "salt"])
         .filter(F.col("vec_a") < F.col("vec_b"))
         .filter(
-            cosine_from_ints(
-                dot_long("ivec_a", "ivec_b"),
-                F.col("nsq_a"),
-                F.col("nsq_b"),
-            )
-            >= threshold
+            cosine_from_ints("ivec_a", "ivec_b", "nsq_a", "nsq_b") >= threshold
         )
         .select(F.col("vec_b").alias("vec_id"))
         .distinct()
@@ -1076,11 +951,7 @@ def cosine_near_dup_pairs(
             "vec_a",
             "vec_b",
             F.col("bucket"),
-            cosine_from_ints(
-                dot_long("ivec_a", "ivec_b"),
-                F.col("nsq_a"),
-                F.col("nsq_b"),
-            ).alias("cosine"),
+            cosine_from_ints("ivec_a", "ivec_b", "nsq_a", "nsq_b").alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
@@ -1655,17 +1526,11 @@ def _probe_qdt(
     :func:`_adc_topk`. Returns (probes, q_dt)."""
     probes = None
     if cents is not None:
-        pw = Window.partitionBy("q_id").orderBy("p_dist", "cell_id")
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .select(
-                "q_id",
-                "cell_id",
-                _pq_dist("q_ivec", "c_ivec").alias("p_dist"),
-            )
-            .withColumn("prn", F.row_number().over(pw))
-            .filter(F.col("prn") <= n_probe)
-            .select("q_id", "cell_id")
+        probes = q.crossJoin(F.broadcast(cents)).select(
+            "q_id", "cell_id", _pq_dist("q_ivec", "c_ivec").alias("p_dist")
+        )
+        probes = _rank_cut(probes, n_probe, "p_dist", "cell_id").select(
+            "q_id", "cell_id"
         )
     if residual:
         keys = ("q_id", "cell_id")
@@ -1706,7 +1571,7 @@ def _adc_topk(
     (m, code_id, plus q_id / cell_id when probed / residual), and each
     candidate's distance is the per-(q, vec) partial-aggregated sum.
     ``k=None`` returns that scored relation (the recall/cost
-    instrumentation path, the ivf_scored pattern); otherwise the
+    instrumentation path, as ``topk_cosine_ivf(k=None)``); otherwise the
     per-query top-k by (adc_dist, vec_id)."""
     if probes is not None:
         codes = codes.join(F.broadcast(probes), "cell_id")
@@ -1720,12 +1585,7 @@ def _adc_topk(
     )
     if k is None:
         return scored
-    w = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "adc_dist", "rn")
-    )
+    return _rank_cut(scored, k, "adc_dist", "vec_id")
 
 
 def topk_l2_ivfpq(
@@ -1794,11 +1654,8 @@ def topk_l2_ivfpq(
             None if cent_rows is None
             else spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
         )
-        q = base.filter(F.col("vec_id").isin(query_ids)).select(
-            F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-        )
         probes, q_dt = _probe_qdt(
-            q,
+            _qpanel(base, query_ids, "ivec"),
             cents,
             spark.createDataFrame(cb_rows, _CB_SCHEMA),
             dim,
@@ -1963,34 +1820,23 @@ def topk_l2_ivfpq_rerank(
         emb, query_ids, None, n_cells, n_probe, m_sub, k_codes, lloyd_iters,
         residual=residual,
     )
-    ws = Window.partitionBy("q_id").orderBy("adc_dist", "vec_id")
-    shortlist = (
-        scored.withColumn("crn", F.row_number().over(ws))
-        .filter(F.col("crn") <= c)
-        .select("q_id", "vec_id")
+    shortlist = _rank_cut(scored, c, "adc_dist", "vec_id").select(
+        "q_id", "vec_id"
     )
     base = _spread_narrow_scan(
         with_int_vec(emb).filter(F.size("ivec") > 0).select("vec_id", "ivec"),
         key="vec_id",
     )
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"), F.col("ivec").alias("q_ivec")
-    )
     reranked = (
         base.join(F.broadcast(shortlist), "vec_id")
-        .join(F.broadcast(q), "q_id")
+        .join(F.broadcast(_qpanel(base, query_ids, "ivec")), "q_id")
         .select(
             "q_id",
             "vec_id",
             _pq_dist("q_ivec", "ivec").alias("l2_dist"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy("l2_dist", "vec_id")
-    return (
-        reranked.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "l2_dist", "rn")
-    )
+    return _rank_cut(reranked, k, "l2_dist", "vec_id")
 
 
 RP_DIMS = 16  # random-projection output dimensionality
@@ -2215,45 +2061,23 @@ def _graph_search(
     (``k=None`` returns the raw rerank candidate relation for
     cost/recall instrumentation)."""
     cand = _ivf_search(cents, assigned, query_ids, None, n_probe)
-    sw = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    seed_rel = (
-        cand.withColumn("srn", F.row_number().over(sw))
-        .filter(F.col("srn") <= seeds)
-        .select("q_id", "vec_id")
-    )
+    seed_rel = _cosine_topk(cand, seeds).select("q_id", "vec_id")
     expanded = seed_rel.join(
         edges.select("src_id", "dst_id"), seed_rel["vec_id"] == F.col("src_id")
     ).select("q_id", F.col("dst_id").alias("vec_id"))
     allc = seed_rel.unionByName(expanded).distinct()
     base = assigned.select("vec_id", "ivec", "nsq")
-    q = base.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
     scored = (
         allc.join(base, "vec_id")
-        .join(F.broadcast(q), "q_id")
+        .join(F.broadcast(_qpanel(base, query_ids, "ivec", "nsq")), "q_id")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
+            cosine_from_ints("q_ivec", "ivec", "q_nsq", "nsq").alias("cosine"),
         )
     )
-    if k is None:
-        # recall/cost instrumentation path: the raw candidate relation
-        return scored
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _cosine_topk(scored, k)
 
 
 def topk_cosine_ivf_graph(
@@ -2272,7 +2096,9 @@ def topk_cosine_ivf_graph(
     the top-``seeds`` IVF candidates per query, EXPAND each seed to its
     ``g`` graph neighbors (one join against the bounded-degree graph —
     neighbors may live in unprobed cells), then exact-rerank the union
-    to top-``k``. Deterministic end to end, so the oracle replays it.
+    to top-``k`` (``k=None``: the rerank candidates, for the recall
+    ladder's candidate counts).
+    Deterministic end to end, so the oracle replays it.
 
     The centroid/assignment relations are derived ONCE and shared by the
     probe stage and the graph build (knn_graph takes them precomputed —
@@ -2284,35 +2110,24 @@ def topk_cosine_ivf_graph(
     to the corpus relation for their vectors (index lookup shape) with
     the query panel broadcast. No stage touches more than
     |seeds|*(1+g) candidates per query after the probe stage."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
-    graph = knn_graph(
-        emb, g=g, n_cells=n_cells, n_planes=n_planes,
-        strategy=strategy, lloyd_iters=lloyd_iters, assigned=assigned,
-    )
+    _, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
+    graph = knn_graph(emb, g=g, n_planes=n_planes, assigned=assigned)
     return _graph_search(cents, assigned, graph, query_ids, k, n_probe, seeds)
 
 
-def ivf_graph_scored(
-    emb: DataFrame,
-    query_ids: list[int],
-    n_probe: int = N_PROBE,
-    seeds: int = GRAPH_SEEDS,
-    g: int = KNN_G,
-    n_cells: int | None = N_CELLS,
-    n_planes: int = N_PLANES,
-) -> DataFrame:
-    """The graph-refined candidate relation (q_id, vec_id, cosine) —
-    cost/recall instrumentation twin of :func:`topk_cosine_ivf_graph`
-    (same construction, no final top-k), mirroring ivf_scored /
-    lsh_scored so the recall ladder can count candidates."""
-    return topk_cosine_ivf_graph(
-        emb, query_ids, k=None, n_probe=n_probe, seeds=seeds, g=g,
-        n_cells=n_cells, n_planes=n_planes,
-    )
+def _publish_edges(index_path: str, name: str, keep: "tuple[str, ...]") -> None:
+    """Point a graph index's ``EDGES_CURRENT`` marker at edge directory
+    ``name`` — written to a tmp file, then one atomic ``os.replace``, the
+    publish point — and garbage-collect every other edge generation
+    except ``keep``."""
+    marker = os.path.join(index_path, "EDGES_CURRENT")
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(name)
+    os.replace(tmp, marker)
+    for d in os.listdir(index_path):
+        if (d == "edges" or d.startswith("edges_v")) and d not in (name, *keep):
+            shutil.rmtree(os.path.join(index_path, d), ignore_errors=True)
 
 
 def build_graph_index(
@@ -2332,25 +2147,19 @@ def build_graph_index(
     the expensive stage (two salted within-group self-joins) — exactly
     what build-once/search-many amortizes; searches then pay index
     reads only."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
+    _, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
     # Materialize the assignment ONCE: it is consumed twice below (the
     # partitioned write and the edge build), and without the checkpoint
     # the edge job re-runs the corpus × n_cells argmax from scratch
     # (measured sf1: ~26 s of silent recompute).
-    assigned = _assign_to(base, cents).localCheckpoint()
+    assigned = assigned.localCheckpoint()
     cents.write.mode("overwrite").parquet(f"{index_path}/centroids")
     assigned.write.mode("overwrite").partitionBy("cell_id").parquet(
         f"{index_path}/assignments"
     )
-    knn_graph(
-        emb, g=g, n_cells=n_cells, n_planes=n_planes,
-        strategy=strategy, lloyd_iters=lloyd_iters, assigned=assigned,
-    ).select("src_id", "dst_id").write.mode("overwrite").parquet(
-        f"{index_path}/edges"
-    )
+    knn_graph(emb, g=g, n_planes=n_planes, assigned=assigned).select(
+        "src_id", "dst_id"
+    ).write.mode("overwrite").parquet(f"{index_path}/edges")
     # Rebuilding into a previously-compacted index_path must repoint the
     # generation marker, or readers (edges_dir) and append_to_graph_index
     # keep resolving a stale edges_v<N> from the OLD corpus while the
@@ -2358,16 +2167,7 @@ def build_graph_index(
     # the same tmp+os.replace discipline as compact_graph_index, then GC
     # the old-corpus generations — centroids/assignments were already
     # overwritten above, so no reader grace applies to a full rebuild.
-    marker = os.path.join(index_path, "EDGES_CURRENT")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write("edges")
-    os.replace(tmp, marker)
-    import shutil as _sh
-
-    for d in os.listdir(index_path):
-        if d.startswith("edges_v"):
-            _sh.rmtree(os.path.join(index_path, d), ignore_errors=True)
+    _publish_edges(index_path, "edges", keep=())
 
 
 def topk_cosine_graph_index(
@@ -2387,9 +2187,7 @@ def topk_cosine_graph_index(
     cell-partitioned assignments; nothing touches the embeddings
     table."""
     cents = spark.read.parquet(f"{index_path}/centroids")
-    assigned = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
+    assigned = _read_assignments(spark, index_path)
     edges = spark.read.parquet(edges_dir(index_path))
     return _graph_search(cents, assigned, edges, query_ids, k, n_probe, seeds)
 
@@ -2421,31 +2219,7 @@ def topk_cosine_sq8(emb: DataFrame, query_ids: list[int], k: int = 5) -> DataFra
     twin of topk_cosine (same broadcast-panel scan shape, 4x smaller
     vectors at rest). Approximate in VALUES (quantization error), exact
     in ARITHMETIC — fully oracle-replayable."""
-    qz = sq8_quantized(emb)
-    q = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
-    scored = (
-        qz.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long("q_uvec", "uvec"),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _brute_topk(sq8_quantized(emb), query_ids, k, "uvec", "unsq")
 
 
 SQ_RERANK_C = 25  # SQ8 shortlist size handed to the exact rerank
@@ -2470,79 +2244,32 @@ def topk_cosine_ivf_sq8(
     with the trained PQ codebooks swapped for the training-free scalar
     grid — same three-stage plan shape: broadcast probe, pruned
     compressed scan, id-join rerank."""
-    base = with_int_vec(emb).select("vec_id", "ivec", "nsq")
-    if n_cells is None:
-        n_cells = suggest_n_cells(base.count())
-    cents = ivf_centroids(base, n_cells, strategy=strategy, lloyd_iters=lloyd_iters)
-    assigned = _assign_to(base, cents)
+    base, cents, assigned = _ivf_fit(emb, n_cells, strategy, lloyd_iters)
     qz = sq8_quantized(emb).join(
         assigned.select("vec_id", "cell_id"), "vec_id"
     )
-    q_full = assigned.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("ivec").alias("q_ivec"),
-        F.col("nsq").alias("q_nsq"),
-    )
-    pw = Window.partitionBy("q_id").orderBy(F.col("p_cos").desc(), F.col("cell_id"))
-    probes = (
-        q_full.crossJoin(F.broadcast(cents))
-        .select(
-            "q_id",
-            "cell_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "c_ivec"),
-                F.col("q_nsq"),
-                F.col("c_nsq"),
-            ).alias("p_cos"),
-        )
-        .withColumn("prn", F.row_number().over(pw))
-        .filter(F.col("prn") <= n_probe)
-        .select("q_id", "cell_id")
-    )
-    qq = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
+    q_full = _qpanel(assigned, query_ids, "ivec", "nsq")
     sq_scored = (
-        qz.join(F.broadcast(probes), "cell_id")
-        .join(F.broadcast(qq), "q_id")
+        qz.join(F.broadcast(_probe_cells(q_full, cents, n_probe)), "cell_id")
+        .join(F.broadcast(_qpanel(qz, query_ids, "uvec", "unsq")), "q_id")
         .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_uvec", "uvec"),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("sq_cos"),
+            cosine_from_ints("q_uvec", "uvec", "q_unsq", "unsq").alias("cosine"),
         )
     )
-    cw = Window.partitionBy("q_id").orderBy(F.col("sq_cos").desc(), F.col("vec_id"))
-    shortlist = (
-        sq_scored.withColumn("crn", F.row_number().over(cw))
-        .filter(F.col("crn") <= c)
-        .select("q_id", "vec_id")
-    )
+    shortlist = _cosine_topk(sq_scored, c).select("q_id", "vec_id")
     rer = (
         shortlist.join(base, "vec_id")
         .join(F.broadcast(q_full), "q_id")
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_ivec", "ivec"),
-                F.col("q_nsq"),
-                F.col("nsq"),
-            ).alias("cosine"),
+            cosine_from_ints("q_ivec", "ivec", "q_nsq", "nsq").alias("cosine"),
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        rer.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    return _cosine_topk(rer, k)
 
 
 def edges_dir(index_path: str) -> str:
@@ -2596,9 +2323,7 @@ def append_to_graph_index(
     b_assigned.write.mode("append").partitionBy("cell_id").parquet(
         f"{index_path}/assignments"
     )
-    full = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
+    full = _read_assignments(spark, index_path)
     full_grouped = _two_groupings(full, n_planes)
     batch_grouped = _two_groupings(b_assigned, n_planes)
     _knn_edges(batch_grouped, full_grouped, g).select(
@@ -2632,30 +2357,14 @@ def compact_graph_index(
     rmtree+move left a window where ``edges/`` did not exist at all).
     The immediately-previous generation is kept as reader grace; older
     generations are garbage-collected."""
-    full = spark.read.parquet(f"{index_path}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
-    grouped = _two_groupings(full, n_planes)
-    cur = edges_dir(index_path)
-    cur_name = os.path.basename(cur)
+    grouped = _two_groupings(_read_assignments(spark, index_path), n_planes)
+    cur_name = os.path.basename(edges_dir(index_path))
     gen = int(cur_name.rsplit("_v", 1)[1]) if "_v" in cur_name else 0
     new_name = f"edges_v{gen + 1}"
     _knn_edges(grouped, grouped, g).select("src_id", "dst_id").write.mode(
         "overwrite"
     ).parquet(os.path.join(index_path, new_name))
-    marker = os.path.join(index_path, "EDGES_CURRENT")
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(new_name)
-    os.replace(tmp, marker)  # the atomic publish point
-    import shutil as _sh
-
-    for d in os.listdir(index_path):
-        if (d == "edges" or d.startswith("edges_v")) and d not in (
-            new_name,
-            cur_name,
-        ):
-            _sh.rmtree(os.path.join(index_path, d), ignore_errors=True)
+    _publish_edges(index_path, new_name, keep=(cur_name,))
 
 
 def sq8_dim_stats(emb: DataFrame) -> DataFrame:
@@ -2680,6 +2389,28 @@ def sq8_dim_stats(emb: DataFrame) -> DataFrame:
     )
 
 
+def _sq8_u(
+    df: DataFrame, stats: DataFrame, codes: "Column | None" = None
+) -> DataFrame:
+    """(vec_id, codes, uvec, unsq): ``df``'s codes — or ``codes``,
+    computed over ``df`` joined to the broadcast 1-row quantizer
+    ``stats`` with its per-dimension span ``span_arr`` — reconstructed
+    as u = mn*255 + q*span = 255*dequant, exact int64. The one SQ8
+    reconstruction: encoding and the index search both end here."""
+    z = df.crossJoin(F.broadcast(stats)).withColumn(
+        "span_arr", F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b)
+    )
+    if codes is not None:
+        z = z.withColumn("codes", codes)
+    u = F.zip_with(
+        "codes",
+        F.arrays_zip("mn_arr", "span_arr"),
+        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span_arr"],
+    )
+    out = z.select("vec_id", "codes", u.alias("uvec"))
+    return out.withColumn("unsq", dot_long("uvec", "uvec"))
+
+
 def sq8_encode(emb: DataFrame, stats: DataFrame) -> DataFrame:
     """Encode vectors against GIVEN quantizer stats, CLAMPING each value
     to the stored per-dimension range first: the quantizer is a
@@ -2687,38 +2418,22 @@ def sq8_encode(emb: DataFrame, stats: DataFrame) -> DataFrame:
     corpus defined at build time, and clamping (not re-deriving) is
     what keeps every previously stored code valid. For the defining
     corpus the clamp is the identity. Returns (vec_id, codes, uvec,
-    unsq) — u = mn*255 + q*span = 255*dequant, exact int64."""
-    base = with_int_vec(emb).select("vec_id", "ivec")
-    z = base.crossJoin(F.broadcast(stats))
-    spans = F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b)
+    unsq) (:func:`_sq8_u`)."""
     clamped = F.zip_with(
         "ivec",
         F.arrays_zip("mn_arr", "mx_arr"),
         lambda x, s: F.least(F.greatest(x, s["mn_arr"]), s["mx_arr"]),
     )
-    withc = z.select(
-        "vec_id",
-        "mn_arr",
-        spans.alias("span_arr"),
-        F.zip_with(
-            clamped,
-            F.arrays_zip(
-                "mn_arr",
-                F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b).alias("span"),
-            ),
-            lambda x, s: F.when(
-                s["span"] > 0,
-                F.floor(((x - s["mn_arr"]) * SQ_LEVELS) / s["span"]).cast("long"),
-            ).otherwise(F.lit(0).cast("long")),
-        ).alias("codes"),
-    )
-    u = F.zip_with(
-        "codes",
+    codes = F.zip_with(
+        clamped,
         F.arrays_zip("mn_arr", "span_arr"),
-        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span_arr"],
+        lambda x, s: F.when(
+            s["span_arr"] > 0,
+            F.floor(((x - s["mn_arr"]) * SQ_LEVELS) / s["span_arr"]).cast("long"),
+        ).otherwise(F.lit(0).cast("long")),
     )
-    out = withc.select("vec_id", "codes", u.alias("uvec"))
-    return out.withColumn("unsq", dot_long("uvec", "uvec"))
+    base = with_int_vec(emb).select("vec_id", "ivec")
+    return _sq8_u(base, stats, codes)
 
 
 def build_sq8_index(emb: DataFrame, index_path: str) -> None:
@@ -2754,40 +2469,5 @@ def topk_cosine_sq8_index(
     no shuffle); query vectors are index lookups. Same plan shape as
     topk_cosine_sq8 reading 4x fewer bytes at rest."""
     stats = spark.read.parquet(f"{index_path}/dims")
-    codes = spark.read.parquet(f"{index_path}/codes")
-    z = codes.crossJoin(F.broadcast(stats))
-    u = F.zip_with(
-        "codes",
-        F.arrays_zip(
-            "mn_arr",
-            F.zip_with("mx_arr", "mn_arr", lambda a, b: a - b).alias("span"),
-        ),
-        lambda q, s: s["mn_arr"] * SQ_LEVELS + q * s["span"],
-    )
-    qz = z.select("vec_id", u.alias("uvec")).withColumn(
-        "unsq", dot_long("uvec", "uvec")
-    )
-    q = qz.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("uvec").alias("q_uvec"),
-        F.col("unsq").alias("q_unsq"),
-    )
-    scored = (
-        qz.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "vec_id",
-            cosine_from_ints(
-                dot_long("q_uvec", "uvec"),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "vec_id", "cosine", "rn")
-    )
+    qz = _sq8_u(spark.read.parquet(f"{index_path}/codes"), stats)
+    return _brute_topk(qz, query_ids, k, "uvec", "unsq")

@@ -631,8 +631,8 @@ def llm_similarity_recall(spark, sf_dir):
     # other consumer (r8 review catch — the first cut evaluated the
     # LSH probe join and the IVF index build twice each).
     for method, ann in (
-        ("lsh", S.topk_with_count(S.lsh_scored(e, _RECALL_QUERY_IDS), k)),
-        ("ivf", S.topk_with_count(S.ivf_scored(e, _RECALL_QUERY_IDS), k)),
+        ("lsh", S.topk_with_count(S.topk_cosine_ann(e, _RECALL_QUERY_IDS, None), k)),
+        ("ivf", S.topk_with_count(S.topk_cosine_ivf(e, _RECALL_QUERY_IDS, None), k)),
     ):
         j = exact.withColumn("ex", F.lit(1)).join(
             ann.withColumn("hit", F.lit(1)), ["q_id", "vec_id"], "outer"

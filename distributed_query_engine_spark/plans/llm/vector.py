@@ -1120,10 +1120,7 @@ def llm_similarity_projected_recall(spark, sf_dir):
         F.col("yvec").alias("q_yvec"),
         F.col("ynsq").alias("q_ynsq"),
     )
-    from distributed_query_engine_spark.functions.vectors import (
-        cosine_from_ints,
-        dot_long,
-    )
+    from distributed_query_engine_spark.functions.vectors import cosine_from_ints
 
     w = Window.partitionBy("q_id").orderBy(
         F.col("pcos").desc(), F.col("vec_id")
@@ -1134,11 +1131,7 @@ def llm_similarity_projected_recall(spark, sf_dir):
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_yvec", "yvec"),
-                F.col("q_ynsq"),
-                F.col("ynsq"),
-            ).alias("pcos"),
+            cosine_from_ints("q_yvec", "yvec", "q_ynsq", "ynsq").alias("pcos"),
         )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
@@ -1332,11 +1325,7 @@ def llm_similarity_matryoshka_recall(spark, sf_dir):
             *[F.col(f"q_{c}").alias(c) for c in extra_part],
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_vec", vec_col),
-                F.col("q_nsq"),
-                F.col(nsq_col),
-            ).alias("cosine"),
+            cosine_from_ints("q_vec", vec_col, "q_nsq", nsq_col).alias("cosine"),
         )
         w = Window.partitionBy(*extra_part, "q_id").orderBy(
             F.col("cosine").desc(), F.col("vec_id")
@@ -1559,10 +1548,10 @@ def llm_similarity_graph_recall(spark, sf_dir):
     exact = S.topk_cosine(e, _RECALL_QUERY_IDS, k=k).select("q_id", "vec_id")
     out = None
     for method, ann in (
-        ("ivf", S.topk_with_count(S.ivf_scored(e, _RECALL_QUERY_IDS), k)),
+        ("ivf", S.topk_with_count(S.topk_cosine_ivf(e, _RECALL_QUERY_IDS, None), k)),
         (
             "ivf_graph",
-            S.topk_with_count(S.ivf_graph_scored(e, _RECALL_QUERY_IDS), k),
+            S.topk_with_count(S.topk_cosine_ivf_graph(e, _RECALL_QUERY_IDS, None), k),
         ),
     ):
         j = exact.withColumn("ex", F.lit(1)).join(
@@ -2236,10 +2225,7 @@ def llm_similarity_sq8_recall(spark, sf_dir):
         F.col("uvec").alias("q_uvec"),
         F.col("unsq").alias("q_unsq"),
     )
-    from distributed_query_engine_spark.functions.vectors import (
-        cosine_from_ints,
-        dot_long,
-    )
+    from distributed_query_engine_spark.functions.vectors import cosine_from_ints
 
     scored = (
         qz.crossJoin(F.broadcast(q))
@@ -2247,11 +2233,7 @@ def llm_similarity_sq8_recall(spark, sf_dir):
         .select(
             "q_id",
             "vec_id",
-            cosine_from_ints(
-                dot_long("q_uvec", "uvec"),
-                F.col("q_unsq"),
-                F.col("unsq"),
-            ).alias("cosine"),
+            cosine_from_ints("q_uvec", "uvec", "q_unsq", "unsq").alias("cosine"),
         )
     )
     ann = S.topk_with_count(scored, k)

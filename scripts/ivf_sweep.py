@@ -14,8 +14,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 os.environ.setdefault("SPARK_GRAFT_CPUS", "16")
 
-from pyspark.sql import functions as F
-
 from distributed_query_engine_spark.session import get_spark
 from distributed_query_engine_spark.operators import similarity as S
 
@@ -31,18 +29,17 @@ GRID = [(8, 2), (8, 3), (16, 4), (16, 5), (16, 6), (32, 8), (32, 10), (32, 12), 
 for sf in sfs:
     emb = spark.read.parquet(f"/root/testdata/{sf}/embeddings.parquet")
     n = emb.count()
-    exact = S.topk_cosine(emb, QIDS, k=K).select("q_id", "vec_id").cache()
-    exact.count()
+    exact = {
+        (r.q_id, r.vec_id)
+        for r in S.topk_cosine(emb, QIDS, k=K).select("q_id", "vec_id").collect()
+    }
     for n_cells, n_probe in GRID:
-        scored = S.ivf_scored(emb, QIDS, n_cells=n_cells, n_probe=n_probe)
-        ann = S.topk_with_count(scored, K)
-        j = exact.join(ann.select("q_id", "vec_id"), ["q_id", "vec_id"], "inner")
-        hits = j.count()
-        cand = (
-            S.ivf_candidate_counts(emb, QIDS, n_cells=n_cells, n_probe=n_probe)
-            .agg(F.sum("n_candidates"))
-            .collect()[0][0]
-        ) or 0
+        # one index build per grid point: the top-k rows carry their
+        # query's candidate count (topk_with_count)
+        scored = S.topk_cosine_ivf(emb, QIDS, None, n_probe=n_probe, n_cells=n_cells)
+        ann = S.topk_with_count(scored, K).collect()
+        hits = sum((r.q_id, r.vec_id) in exact for r in ann)
+        cand = sum({r.q_id: r.n_candidates for r in ann}.values())
         recall = hits / (len(QIDS) * K)
         frac = cand / (len(QIDS) * (n - 1))
         print(
@@ -50,4 +47,3 @@ for sf in sfs:
             f"recall={recall:.3f} cand_frac={frac:.3f}",
             flush=True,
         )
-    exact.unpersist()

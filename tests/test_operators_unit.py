@@ -125,6 +125,66 @@ def test_cosine_near_dup_skips_empty_embeddings(spark):
     assert {(r.vec_a, r.vec_b) for r in rows} == {(0, 1)}
 
 
+def test_zero_norm_embeddings_score_null_and_rank_last(spark):
+    # A zero or empty vector has no cosine: the SQL-text cosine divides
+    # with try_divide, so it scores NULL (ANSI mode used to raise
+    # DIVIDE_BY_ZERO), ranks after every scored candidate, and is never
+    # flagged a semantic duplicate — even at a threshold every real
+    # cosine passes. A row scoring NULL against every centroid takes
+    # the lowest cell.
+    import math
+
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.5, 0.5]), (3, [])],
+        "vec_id long, embedding array<float>",
+    )
+
+    def rows(df):
+        return [tuple(r) for r in df.orderBy("q_id", "rn").collect()]
+
+    # ivec = x * 2^20: dot(v0, v2) = 2^39, nsq0 = 2^40, nsq2 = 2^39
+    cos02 = float(2**39) / (math.sqrt(2**40) * math.sqrt(2**39))
+    assert rows(S.topk_cosine(emb, [0], 3)) == [
+        (0, 2, cos02, 1), (0, 1, None, 2), (0, 3, None, 3),
+    ]
+    assert rows(S.topk_cosine(emb, [1], 3)) == [
+        (1, 0, None, 1), (1, 2, None, 2), (1, 3, None, 3),
+    ]
+    sq8 = rows(S.topk_cosine_sq8(emb, [0], 3))
+    assert [r[1] for r in sq8] == [2, 1, 3]
+    assert sq8[0][2] is not None and sq8[1][2] is None and sq8[2][2] is None
+    kept = {
+        r.vec_id: (r.cell_id, r.kept)
+        for r in S.semdedup(emb, threshold=-2.0).collect()
+    }
+    assert kept == {0: (0, True), 1: (0, True), 2: (2, True), 3: (0, True)}
+
+
+def test_cosine_searches_topk_is_ranked_cut_of_candidates(spark, sf_dir):
+    # The one ranked cut: each search's k=5 rows are exactly a Python
+    # ranking of its own k=None candidates by (-cosine, vec_id), with
+    # rn a long numbered 1..5 (bit-exact cosines).
+    from distributed_query_engine_spark.catalog import Tables
+
+    e = Tables(spark, sf_dir).embeddings
+    panel = [0, 1, 2, 3, 4]
+    for search in (S.topk_cosine_ann, S.topk_cosine_ivf, S.topk_cosine_ivf_graph):
+        by_q: dict = {}
+        for r in search(e, panel, None).collect():
+            by_q.setdefault(r.q_id, []).append((-r.cosine, r.vec_id))
+        assert sorted(by_q) == panel, search.__name__
+        want = sorted(
+            (q, v, -c, i + 1)
+            for q, cands in by_q.items()
+            for i, (c, v) in enumerate(sorted(cands)[:5])
+        )
+        top = search(e, panel, 5)
+        assert dict(top.dtypes)["rn"] == "bigint", search.__name__
+        got = sorted(tuple(r) for r in top.collect())
+        assert got == want, search.__name__
+        assert all(sum(r[0] == q for r in got) == 5 for q in panel)
+
+
 def test_lsh_bucket_keeps_empty_vector_at_zero(spark):
     # Zero-length vector: every plane dot is null, `pdot > 0` is false,
     # bucket stays 0 and the row is KEPT. The oracle's buckets CTE must
@@ -919,14 +979,15 @@ def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
 
 # py4j round trips to BUILD (not run) three llm_batch queries through
 # the registry wrapper at sf0.001 — session tuning, catalog reads and
-# builder, plus the BM25 panel-term collect: measured 658, 490 and 808
+# builder, plus the BM25 panel-term collect: measured 519, 351 and 808
 # with footer-derived schemas, the one-call SparkConf lookup, the vector
-# expressions as SQL text and the one-job panel terms, plus 10%. The
+# expressions and the cosine as SQL text and the one-job panel terms,
+# plus 10%. The cosine as a Column tree took 658 and 490; the
 # Column-lambda builders, the SparkConf copy and the aggregated
 # panel-term collect took 2,517, 919 and 1,063.
 LLM_BUILDER_PY4J_BUDGET = {
-    "llm_similarity_ann_lsh": 724,
-    "llm_similarity_topk": 539,
+    "llm_similarity_ann_lsh": 571,
+    "llm_similarity_topk": 387,
     "llm_bm25_index": 889,
 }
 
