@@ -58,11 +58,10 @@ STAR_TABLES = (
 
 
 def staging_key(sf_dir: str) -> str:
-    """Staging-dir key for ANY per-sf_dir derived artifact (streaming
-    stage dirs, sink round-trips, signature stores, IVF indexes):
-    basename for readability + a hash of the FULL resolved path, so two
-    sf_dirs sharing a basename cannot collide. One definition — batch
-    and streaming staging must never fork their keying scheme."""
+    """Key of everything derived from ``sf_dir`` under ``.tmp/``
+    (``staging.key`` is its identifier-safe form): basename for
+    readability + a hash of the FULL resolved path, so two sf_dirs
+    sharing a basename cannot collide."""
     import hashlib
     from pathlib import Path
 

@@ -2277,7 +2277,7 @@ def edges_dir(index_path: str) -> str:
 
     Compaction publishes generationally (``edges_v<N>`` + an
     ``EDGES_CURRENT`` pointer file flipped with an atomic rename — the
-    BM25 ``_PUBLISHED`` discipline applied to edges), so a concurrent
+    staging publish discipline applied to edges), so a concurrent
     reader always resolves either the old or the new generation, never
     a missing or half-written directory. A fresh build (no pointer yet)
     resolves to the original ``edges/``."""

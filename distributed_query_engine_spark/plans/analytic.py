@@ -13,11 +13,10 @@ power sums so Spark and the DuckDB oracle produce bit-identical doubles.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions.deterministic import dsum, sql_dsum
 from distributed_query_engine_spark.registry import query
@@ -811,62 +810,38 @@ def agg_multi_distinct(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _bucket_stage(sf_dir):
-    """Content-addressed staging for the bucketed tables (VERDICT r10
-    item 4, the pid-dir lesson applied to shared derived data): the dir
-    and table tag embed a hash of (path, mtime_ns, size) of the two
-    SOURCE parquet files, so (a) regenerated testdata gets a fresh dir
-    and fresh catalog tables instead of silently serving stale buckets
-    (the streaming `_STAGED`-marker discipline, ADVICE r3), and (b)
-    stale siblings — same sf key, different content hash — plus the
-    pre-r11 basename-keyed legacy dirs are swept here, the one place
-    every bucketed consumer passes through. Sweeping a stale dir is
-    race-benign: its source no longer exists in that form, so no
-    correct process can be reading it."""
-    import hashlib
-    import shutil
-    from pathlib import Path
-
-    from distributed_query_engine_spark.catalog import staging_key
-
-    key = staging_key(sf_dir).replace(".", "_").replace("-", "_")
-    parts = []
-    for name in ("lineitem", "orders"):
-        f = Path(sf_dir) / f"{name}.parquet"
-        st = f.stat()
-        parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    fp = hashlib.md5(";".join(parts).encode()).hexdigest()[:8]
-    tmp = Path(__file__).resolve().parents[2] / ".tmp"
-    tag = f"{key}_{fp}"
-    current = tmp / f"bucketed_{tag}"
-    for d in tmp.glob(f"bucketed_{key}_*"):
-        if d != current:
-            shutil.rmtree(d, ignore_errors=True)
-    legacy = tmp / (
-        "bucketed_" + os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    )
-    shutil.rmtree(legacy, ignore_errors=True)
-    return current, tag
-
-
 def _bucketed_tables(spark, sf_dir):
-    base, tag = _bucket_stage(sf_dir)
+    """The bucketed lineitem/orders tables: written once per source
+    fingerprint as a staging generation, registered over its files in
+    every process (the catalog is in-memory, so a new process must not
+    rewrite files a concurrent one may be scanning)."""
     t = Tables(spark, sf_dir)
     specs = [("lineitem", t.lineitem, "l_orderkey"), ("orders", t.orders, "o_orderkey")]
-    names = []
-    for name, df, key in specs:
-        tbl = f"bkt_{name}_{tag}"
-        if not spark.catalog.tableExists(tbl):
+    n = 8
+    gen = staging.generation("bucketed", sf_dir, ("lineitem", "orders"), str(n))
+
+    def build(p):
+        for name, df, key in specs:
+            tbl = f"bkt_{name}_{gen.tag}"
             (
                 df.write.format("parquet")
-                .bucketBy(8, key)
+                .bucketBy(n, key)
                 .sortBy(key)
-                .option("path", str(base / name))
+                .option("path", str(p / name))
                 .mode("overwrite")
                 .saveAsTable(tbl)
             )
-        names.append(tbl)
-    return [spark.table(n) for n in names]
+            spark.sql(f"DROP TABLE {tbl}")  # external: the files stay
+
+    base = staging.publish(gen, build, spark, ("bkt_lineitem_", "bkt_orders_"))
+    out = []
+    for name, df, key in specs:
+        tbl = f"bkt_{name}_{gen.tag}"
+        staging.register_bucketed(
+            spark, tbl, base / name, df.schema.toDDL(), key, n
+        )
+        out.append(spark.table(tbl))
+    return out
 
 
 @query(

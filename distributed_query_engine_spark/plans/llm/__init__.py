@@ -40,7 +40,6 @@ from distributed_query_engine_spark.plans.llm.dedup import (  # noqa: F401
 )
 from distributed_query_engine_spark.plans.llm.similarity import *  # noqa: F401,F403
 from distributed_query_engine_spark.plans.llm.similarity import (  # noqa: F401
-    _content_addressed_index,
     _ivf_incr_index_dir,
 )
 from distributed_query_engine_spark.plans.llm.vector import *  # noqa: F401,F403

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
@@ -210,12 +211,10 @@ def llm_dedup_signature_store(spark, sf_dir):
     (semi-join), so verify scan cost tracks the batch too. Identical
     output to llm_dedup_incremental — same signatures, same candidates,
     same verification (operators/dedup.py::incremental_dedup_from_store)."""
-    from distributed_query_engine_spark.plans.sources import _tmp
-
     d = Tables(spark, sf_dir).documents
     incoming = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
-    store = _tmp(sf_dir, "minhash_sig_store")
+    store = staging.artifact_dir(sf_dir, "minhash_sig_store")
     D.build_signature_store(spark, corpus, store)
     return D.incremental_dedup_from_store(
         spark, store, corpus, incoming, threshold=0.5

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
@@ -295,58 +296,6 @@ def llm_similarity_ivf_compact(spark, sf_dir):
     )
 
 
-def _content_addressed_index(sf_dir, name: str, knobs: str, build) -> str:
-    """Build-once, content-addressed ANN index staging (r12: VERDICT
-    r11 item 4 + ADVICE item 4). The generation directory is keyed by
-    a hash of (build knobs, source parquet fingerprint = per-file
-    path+mtime_ns+size — the same self-invalidation contract as the
-    ``bucketed_*``/streaming staging): regenerating the testdata
-    changes the fingerprint, so a stale index can never be served. The
-    build writes into a pid-suffixed scratch dir and PUBLISHES with one
-    atomic ``os.rename`` — a concurrent reader either sees the complete
-    previous generation or the complete new one, never a mixed
-    centroids/codebooks/codes state (plain sequential overwrites only
-    converge eventually, not for in-flight readers). A lost publish
-    race discards the scratch build (both builders produce identical
-    content — the build is deterministic in the source). Superseded
-    ``gen-*`` siblings are swept best-effort after publish; a
-    fingerprint hit skips the rebuild entirely."""
-    import hashlib
-    import os
-    import shutil
-    from pathlib import Path
-
-    from distributed_query_engine_spark.plans.sources import _tmp
-    from distributed_query_engine_spark.streaming.ops import (
-        _source_fingerprint,
-    )
-
-    src = Path(sf_dir) / "embeddings.parquet"
-    fp = hashlib.md5(
-        f"{knobs}\n{_source_fingerprint(src)}".encode()
-    ).hexdigest()[:16]
-    root = Path(_tmp(sf_dir, name))
-    final = root / f"gen-{fp}"
-    if (final / "_BUILT").is_file():
-        return str(final)
-    scratch = root / f".build-{fp}-{os.getpid()}"
-    if scratch.exists():
-        shutil.rmtree(scratch)
-    build(str(scratch))
-    (scratch / "_BUILT").write_text(f"{name}\n{knobs}\n{fp}\n")
-    try:
-        os.rename(scratch, final)
-    except OSError:
-        # lost the publish race — identical content already live
-        shutil.rmtree(scratch, ignore_errors=True)
-    for sib in root.glob("gen-*"):
-        if sib != final:
-            shutil.rmtree(sib, ignore_errors=True)
-    return str(final)
-
-
-
-
 @query(
     "llm_similarity_ivf_index",
     # The index stores exactly the relations topk_cosine_ivf derives,
@@ -396,16 +345,14 @@ def llm_similarity_ivf_index(spark, sf_dir):
     results to llm_similarity_ivf; the build-once/search-many split is
     what a 100 TB deployment actually operates
     (operators/similarity.py::build_ivf_index / topk_cosine_ivf_index).
-    The index dir is content-addressed + atomically published
-    (:func:`_content_addressed_index`): fingerprint hit → search only."""
+    The index dir is a staging generation (:func:`staging.publish`):
+    fingerprint hit → search only."""
     e = Tables(spark, sf_dir).embeddings
-    index = _content_addressed_index(
-        sf_dir,
-        "ivf_index",
-        f"ivf:{S.N_CELLS}:lowest_id:0",
-        lambda p: S.build_ivf_index(e, p),
+    gen = staging.generation(
+        "ivf_index", sf_dir, ("embeddings",), f"ivf:{S.N_CELLS}:lowest_id:0"
     )
-    return S.topk_cosine_ivf_index(spark, index, _QUERY_IDS, k=5)
+    index = staging.publish(gen, lambda p: S.build_ivf_index(e, str(p)))
+    return S.topk_cosine_ivf_index(spark, str(index), _QUERY_IDS, k=5)
 
 def _ivf_incr_index_dir(sf_dir: str) -> str:
     """Per-PROCESS staging dir for the append-mode incremental IVF
@@ -413,14 +360,11 @@ def _ivf_incr_index_dir(sf_dir: str) -> str:
     mutated with ``write.mode('append')``, so two concurrent driver
     processes sharing one path could interleave (A appends, B's
     rebuild wipes it, B appends again) and serve duplicated or
-    missing new-batch rows — the exact phantom-row class the pid-keyed
-    run dirs in streaming/ops.py exist for. Plain-overwrite indexes
+    missing new-batch rows — the exact phantom-row class pid-keyed run
+    dirs exist for. Plain-overwrite indexes
     (llm_similarity_ivf_index) converge under races and stay shared;
-    this one is keyed '<sf-key>-<pid>' with the same dead-pid sweep."""
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    return str(_pid_run_dir("ivf_index_incr", staging_key(sf_dir)))
+    this one is a :func:`staging.run_dir`."""
+    return str(staging.run_dir("ivf_index_incr", staging.key(sf_dir)))
 
 
 @query(

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
@@ -23,10 +24,6 @@ from distributed_query_engine_spark.plans.llm._shared import (  # noqa: F401
     _LSH_BUCKET_CTES, _PROBE_MASKS_SQL, _sql_lang_hits, _sql_lang_predict,
     _QUERY_IDS, _RECALL_QUERY_IDS, _RECALL_IDS_SQL, _IVF_NEW_MOD,
     _IVF_NEW_LO, _COS,
-)
-
-from distributed_query_engine_spark.plans.llm.similarity import (  # noqa: F401
-    _content_addressed_index,
 )
 
 
@@ -846,17 +843,18 @@ def llm_similarity_ivfpq_index(spark, sf_dir):
     residual search (the index stores exactly the relations
     topk_l2_ivfpq(residual=True) derives), so it shares that oracle. The
     index dir is content-addressed + atomically published
-    (:func:`_content_addressed_index`): regenerated testdata changes
+    (:func:`staging.publish`): regenerated testdata changes
     the fingerprint (never a stale serve), a concurrent reader never
     observes a mixed centroids/codebooks/codes generation, and a
     fingerprint hit skips the rebuild."""
     e = Tables(spark, sf_dir).embeddings
-    index = _content_addressed_index(
-        sf_dir,
+    gen = staging.generation(
         "ivfpq_index",
+        sf_dir,
+        ("embeddings",),
         f"ivfpq:{S.N_CELLS}:{S.PQ_M_SUB}:{S.PQ_K_CODES}:{S.PQ_LLOYD_ITERS}",
-        lambda p: S.build_ivfpq_index(e, p),
     )
+    index = str(staging.publish(gen, lambda p: S.build_ivfpq_index(e, str(p))))
     return S.topk_l2_ivfpq_index(spark, index, e, _QUERY_IDS, k=5)
 
 
@@ -897,12 +895,9 @@ def llm_similarity_ivfpq_incremental(spark, sf_dir):
     served from the freshly ingested batch. The index dir is pid-keyed
     (append-mode stores do not converge under process races — the r11
     ADVICE lesson applied at birth)."""
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    index = str(_pid_run_dir("ivfpq_index_incr", staging_key(sf_dir)))
+    index = str(staging.run_dir("ivfpq_index_incr", staging.key(sf_dir)))
     S.build_ivfpq_index(e.filter(~is_new), index)
     S.append_to_ivfpq_index(spark, e.filter(is_new), index)
     res = S.topk_l2_ivfpq_index(spark, index, e, _QUERY_IDS, k=5)
@@ -1606,12 +1601,13 @@ def llm_similarity_graph_index(spark, sf_dir):
     production-viable — same build-once/search-many economics the BM25
     index measured at 2.51x/query (BASELINE.md r12)."""
     e = Tables(spark, sf_dir).embeddings
-    index = _content_addressed_index(
-        sf_dir,
+    gen = staging.generation(
         "graph_index",
+        sf_dir,
+        ("embeddings",),
         f"graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
-        lambda p: S.build_graph_index(e, p),
     )
+    index = str(staging.publish(gen, lambda p: S.build_graph_index(e, str(p))))
     return S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5)
 
 
@@ -1809,10 +1805,7 @@ def llm_similarity_graph_incremental(spark, sf_dir):
     predicate rather than pretending ingest equals a rebuild."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    index = str(_pid_run_dir("graph_index_incr", staging_key(sf_dir)))
+    index = str(staging.run_dir("graph_index_incr", staging.key(sf_dir)))
     S.build_graph_index(e.filter(~is_new), index)
     S.append_to_graph_index(spark, e.filter(is_new), index)
     res = S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5)
@@ -1854,10 +1847,7 @@ def llm_similarity_graph_compact(spark, sf_dir):
     ingest serves."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    index = str(_pid_run_dir("graph_index_compact", staging_key(sf_dir)))
+    index = str(staging.run_dir("graph_index_compact", staging.key(sf_dir)))
     S.build_graph_index(e.filter(~is_new), index)
     S.append_to_graph_index(spark, e.filter(is_new), index)
     S.compact_graph_index(spark, index)
@@ -1938,16 +1928,20 @@ def llm_similarity_graph_prod(spark, sf_dir):
     regime's n^2/32 — the scale sweeps run THIS trio at 10x+."""
     e = Tables(spark, sf_dir).embeddings
     n_cells, n_planes, n_probe = _prod_graph_knobs(e.count())
-    index = _content_addressed_index(
-        sf_dir,
+    gen = staging.generation(
         "graph_index_prod",
+        sf_dir,
+        ("embeddings",),
         f"graph:{S.KNN_G}:{n_cells}:{n_planes}:lowest_id:0",
+    )
+    index = staging.publish(
+        gen,
         lambda p: S.build_graph_index(
-            e, p, n_cells=n_cells, n_planes=n_planes
+            e, str(p), n_cells=n_cells, n_planes=n_planes
         ),
     )
     return S.topk_cosine_graph_index(
-        spark, index, _QUERY_IDS, k=5, n_probe=n_probe
+        spark, str(index), _QUERY_IDS, k=5, n_probe=n_probe
     )
 
 
@@ -1985,10 +1979,7 @@ def llm_similarity_graph_prod_incremental(spark, sf_dir):
     n_cells, n_planes, n_probe = _prod_graph_knobs(
         e.filter(~is_new).count()
     )
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    index = str(_pid_run_dir("graph_index_prod_incr", staging_key(sf_dir)))
+    index = str(staging.run_dir("graph_index_prod_incr", staging.key(sf_dir)))
     S.build_graph_index(
         e.filter(~is_new), index, n_cells=n_cells, n_planes=n_planes
     )
@@ -2036,10 +2027,7 @@ def llm_similarity_graph_prod_compact(spark, sf_dir):
     n_cells, n_planes, n_probe = _prod_graph_knobs(
         e.filter(~is_new).count()
     )
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    index = str(_pid_run_dir("graph_index_prod_cpt", staging_key(sf_dir)))
+    index = str(staging.run_dir("graph_index_prod_cpt", staging.key(sf_dir)))
     S.build_graph_index(
         e.filter(~is_new), index, n_cells=n_cells, n_planes=n_planes
     )
@@ -2120,10 +2108,7 @@ def llm_similarity_sq8_incremental(spark, sf_dir):
     immediately searchable at full SQ8 quality."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    from distributed_query_engine_spark.catalog import staging_key
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
-
-    index = str(_pid_run_dir("sq8_index_incr", staging_key(sf_dir)))
+    index = str(staging.run_dir("sq8_index_incr", staging.key(sf_dir)))
     S.build_sq8_index(e.filter(~is_new), index)
     S.append_to_sq8_index(spark, e.filter(is_new), index)
     res = S.topk_cosine_sq8_index(spark, index, _QUERY_IDS, k=5)

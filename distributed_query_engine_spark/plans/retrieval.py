@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.operators import similarity as S
@@ -432,15 +433,12 @@ def llm_bm25_index_incremental(spark, sf_dir):
     appends (plan-asserted in tests/test_retrieval.py)."""
     import os as _os
 
-    from distributed_query_engine_spark.catalog import staging_key
     from distributed_query_engine_spark.operators import sparse as SP
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
 
     d = Tables(spark, sf_dir).documents
     is_new = F.pmod(F.col("doc_id"), F.lit(_BM25_NEW_MOD)) == _BM25_NEW_ID
-    base = _pid_run_dir("bm25_index_incr", staging_key(sf_dir))
-    key = staging_key(sf_dir).replace(".", "_").replace("-", "_")
-    tbl = f"bm25_incr_{key}_{_os.getpid()}"
+    base = staging.run_dir("bm25_index_incr", staging.key(sf_dir))
+    tbl = f"bm25_incr_{staging.key(sf_dir)}_{_os.getpid()}"
     SP.write_bm25_index(spark, d.filter(~is_new), base, tbl)
     SP.append_to_bm25_index(spark, d.filter(is_new), base, tbl)
     qterms = SP.panel_qterms(d, _Q_IDS)
@@ -489,15 +487,12 @@ def llm_bm25_index_compact(spark, sf_dir):
     off-peak, exactly the economics of ivf_compact's cell rewrites."""
     import os as _os
 
-    from distributed_query_engine_spark.catalog import staging_key
     from distributed_query_engine_spark.operators import sparse as SP
-    from distributed_query_engine_spark.streaming.ops import _pid_run_dir
 
     d = Tables(spark, sf_dir).documents
     is_new = F.pmod(F.col("doc_id"), F.lit(_BM25_NEW_MOD)) == _BM25_NEW_ID
-    base = _pid_run_dir("bm25_index_compact", staging_key(sf_dir))
-    key = staging_key(sf_dir).replace(".", "_").replace("-", "_")
-    tbl = f"bm25_cmp_{key}_{_os.getpid()}"
+    base = staging.run_dir("bm25_index_compact", staging.key(sf_dir))
+    tbl = f"bm25_cmp_{staging.key(sf_dir)}_{_os.getpid()}"
     SP.write_bm25_index(spark, d.filter(~is_new), base, tbl)
     SP.append_to_bm25_index(spark, d.filter(is_new), base, tbl)
     ctbl = SP.compact_bm25_index(spark, base, tbl)

@@ -8,7 +8,7 @@ and RDBMS scans with projection/predicate pushdown (``RDBMSScan`` /
 ``pushToRdbms``, ``diff:104-141``) — all expressed through Spark's
 DataFrameReader/DSv2, which implements that machinery natively.
 
-Round-trips write under ``<repo>/.tmp/`` (gitignored); each query is
+Round-trips write under :func:`staging.artifact_dir`; each query is
 idempotent (overwrite mode, deterministic paths).
 """
 
@@ -18,23 +18,9 @@ from pathlib import Path
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import SourceCatalog, Tables
 from distributed_query_engine_spark.registry import query
-
-_TMP = Path(__file__).resolve().parent.parent.parent / ".tmp"
-
-
-def _tmp(sf_dir: str, name: str) -> str:
-    # Keyed on basename + full-path hash (catalog.staging_key — the ONE
-    # keying scheme shared with streaming staging): two sf_dirs sharing
-    # a basename must not overwrite each other's staged artifacts
-    # (minhash_sig_store, ivf_index, roundtrip sinks, ...).
-    from distributed_query_engine_spark.catalog import staging_key
-
-    p = _TMP / staging_key(sf_dir) / name
-    p.parent.mkdir(parents=True, exist_ok=True)
-    return str(p)
-
 
 @query("scan_csv_infer", oracle="SELECT * FROM nation")
 def scan_csv_infer(spark, sf_dir):
@@ -42,7 +28,7 @@ def scan_csv_infer(spark, sf_dir):
     # format behind the inferrer SPI, diff:11,154). Small-int columns
     # infer as INT, matching the parquet-derived oracle schema.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "nation_csv")
+    path = staging.artifact_dir(sf_dir, "nation_csv")
     t.nation.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
     return (
         spark.read.option("header", True)
@@ -63,7 +49,7 @@ def scan_json_infer(spark, sf_dir):
     # JSON inference widens integers to BIGINT — the oracle casts to
     # match, documenting the deviation rather than hiding it.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "region_json")
+    path = staging.artifact_dir(sf_dir, "region_json")
     t.region.coalesce(1).write.mode("overwrite").json(path)
     return spark.read.json(path).select("r_regionkey", "r_name")
 
@@ -103,7 +89,7 @@ def sink_parquet(spark, sf_dir):
     # at scale the writer parallelism = upstream partitioning, no
     # coalesce(1) bottleneck.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "orders_sink")
+    path = staging.artifact_dir(sf_dir, "orders_sink")
     (
         t.orders.filter(F.col("o_totalprice") > 50000)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -125,7 +111,7 @@ def sink_partitioned(spark, sf_dir):
     # physical design lever for 100 TB fact tables. Read-back moves the
     # partition column last; re-select restores canonical order.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "orders_part")
+    path = staging.artifact_dir(sf_dir, "orders_part")
     (
         t.orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.mode("overwrite")
@@ -170,7 +156,7 @@ def sink_overwrite_dynamic(spark, sf_dir):
     (diff:140-143) — partition-scoped maintenance is a capability the
     Spark re-expression adds, not ports."""
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "orders_dynpart")
+    path = staging.artifact_dir(sf_dir, "orders_dynpart")
     cols = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"]
     base = t.orders.select(*cols)
     corrupted = base.withColumn(
@@ -217,7 +203,7 @@ def sink_orc_roundtrip(spark, sf_dir):
     # ORC is Spark's second native columnar format (predicate pushdown,
     # column pruning, zstd) — same physical-design levers as parquet.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "lineitem_orc")
+    path = staging.artifact_dir(sf_dir, "lineitem_orc")
     (
         t.lineitem.filter(F.col("l_returnflag") == "R")
         .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
@@ -241,7 +227,7 @@ def sink_xml_roundtrip(spark, sf_dir):
     # formats) — here: write the dimension out as XML, read it back,
     # prove lossless round-trip against the parquet original.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "nation_xml")
+    path = staging.artifact_dir(sf_dir, "nation_xml")
     (
         t.nation.select("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite")
@@ -273,7 +259,7 @@ def scan_binaryfile(spark, sf_dir):
     # Here: stage the corpus as one text blob, read it back as binary,
     # and account for every byte (each line = utf-8 text + '\n').
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "docs_txt")
+    path = staging.artifact_dir(sf_dir, "docs_txt")
     t.documents.select("text").coalesce(1).write.mode("overwrite").text(path)
     bf = (
         spark.read.format("binaryFile")
@@ -300,7 +286,7 @@ def scan_partition_pruned(spark, sf_dir):
     # first-order scan optimization at 100 TB. tests/test_plans.py
     # asserts the pruned plan shape.
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "orders_part")
+    path = staging.artifact_dir(sf_dir, "orders_part")
     (
         t.orders.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus")
         .write.mode("overwrite")
@@ -342,7 +328,7 @@ def scan_jdbc_dialect_dispatch(spark, sf_dir):
     from distributed_query_engine_spark import federation as FED
 
     t = Tables(spark, sf_dir)
-    db_path = _tmp(sf_dir, "derby_supplier_db")
+    db_path = staging.artifact_dir(sf_dir, "derby_supplier_db")
     derby = FED.DerbyDatabase(name="suppliers", host="", port=0, database=db_path)
     (
         t.supplier.select("s_suppkey", "s_name", "s_nationkey")
@@ -427,7 +413,7 @@ def scan_jdbc_pushdown(spark, sf_dir):
     machinery the reference hand-rolls. The filter below ships to Derby
     as SQL (visible as PushedFilters in .explain())."""
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    db = _tmp(sf_dir, "derby_nation_db")
+    db = staging.artifact_dir(sf_dir, "derby_nation_db")
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": driver}
     t = Tables(spark, sf_dir)
@@ -471,7 +457,7 @@ def scan_jdbc_agg_pushdown(spark, sf_dir):
     cached URL. Aggregates chosen (count / integer min / max) are exact
     in any engine, keeping the oracle hash-identical."""
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    db = _tmp(sf_dir, "derby_supplier_agg_db")
+    db = staging.artifact_dir(sf_dir, "derby_supplier_agg_db")
     url = f"jdbc:derby:{db};create=true"
     t = Tables(spark, sf_dir)
     (
@@ -641,8 +627,8 @@ def sink_compacted(spark, sf_dir):
     rewrite is content-preserving; the unit test asserts the file-count
     drop."""
     t = Tables(spark, sf_dir)
-    scattered = _tmp(sf_dir, "lineitem_scattered")
-    compacted = _tmp(sf_dir, "lineitem_compacted")
+    scattered = staging.artifact_dir(sf_dir, "lineitem_scattered")
+    compacted = staging.artifact_dir(sf_dir, "lineitem_compacted")
     cols = ["l_orderkey", "l_returnflag", "l_extendedprice"]
     # the "bad" layout: one file per shuffle partition of a wide shuffle
     t.lineitem.select(*cols).repartition(32, "l_orderkey").write.mode(
@@ -970,7 +956,7 @@ def scan_csv_permissive(spark, sf_dir):
     import os as _os
 
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "nation_dirty_csv")
+    path = staging.artifact_dir(sf_dir, "nation_dirty_csv")
     (
         t.nation.select("n_nationkey", "n_name", "n_regionkey")
         .coalesce(1)
@@ -1031,7 +1017,7 @@ def scan_text_lines(spark, sf_dir):
     normalization, so a future generator emitting multi-line docs
     round-trips instead of silently diverging."""
     t = Tables(spark, sf_dir)
-    path = _tmp(sf_dir, "docs_txt_lines")
+    path = staging.artifact_dir(sf_dir, "docs_txt_lines")
     (
         t.documents.filter(F.col("text").isNotNull())
         .select(F.regexp_replace("text", r"[\r\n]", " ").alias("text"))
@@ -1305,7 +1291,7 @@ def scan_schema_evolution_merge(spark, sf_dir):
     the oracle states the merged result directly over the source
     table."""
     t = Tables(spark, sf_dir)
-    base = _tmp(sf_dir, "nation_evolution")
+    base = staging.artifact_dir(sf_dir, "nation_evolution")
     n = t.nation
     v0 = n.filter(F.col("n_nationkey") % 2 == 0).select(
         "n_nationkey", "n_name", F.lit(0).alias("gen")

@@ -26,9 +26,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.functions.deterministic import cents_sum
-
-_TMP = Path(__file__).resolve().parent.parent.parent / ".tmp"
 
 # The streaming file source needs an explicit schema. The events table's
 # ts precision is a GENERATOR detail that has changed across driver runs
@@ -101,129 +100,23 @@ def _events_ts_unit(src: Path) -> str:
         return "us"
 
 
-def _source_fingerprint(src: Path) -> str:
-    """Content fingerprint of a parquet source file/dir: (path, mtime_ns,
-    size) per data file. Regenerating the parquet changes mtime/size, so
-    staged derivatives keyed on this string self-invalidate (ADVICE r3:
-    a basename-keyed marker never noticed a rewritten source). Paths are
-    RESOLVED first (r13): staging_key already resolves, so a relative
-    and an absolute spelling of the same sf_dir share one staging dir —
-    an unresolved fingerprint made them thrash each other's ``_STAGED``
-    marker and restage on every alternation."""
-    src = src.resolve()
-    files = sorted(src.rglob("*")) if src.is_dir() else [src]
-    parts = []
-    for f in files:
-        if f.is_file():
-            st = f.stat()
-            parts.append(f"{f}:{st.st_mtime_ns}:{st.st_size}")
-    return ";".join(parts)
-
-
-def _staging_key(sf_dir: str) -> str:
-    """Shared path-keying helper — single definition in
-    catalog.staging_key (batch and streaming staging must agree)."""
-    from distributed_query_engine_spark.catalog import staging_key
-
-    return staging_key(sf_dir)
-
-
-# Parents that hold '<name>-<pid>' / '<name>-<key>-<pid>' run dirs. Each
-# run rmtrees only its OWN pid's dirs (a concurrent process must never
-# clear a live run's store — the r9 phantom-pair bug), so dirs of
-# crashed/finished processes would otherwise accumulate forever (r10
-# ADVICE). Swept once per process by _sweep_dead_pid_dirs().
-_PID_KEYED_PARENTS = (
-    "sig_store_stream",
-    "fb_sink",
-    "checkpoints",
-    "cdc_dim",
-    # append-mode IVF / IVF-PQ indexes staged by the incremental-ingest
-    # queries (r11 ADVICE: plain-overwrite indexes converge under
-    # process races, append-mode ones do not — so the incremental
-    # indexes are pid-keyed like every other mutable run store)
-    "ivf_index_incr",
-    "ivfpq_index_incr",
-    # streaming BM25 ingest's append-mutated index + the batch-compact
-    # staging (r13)
-    "bm25_index_stream",
-    "bm25_index_compact",
-    "bm25_index_incr",
-    "mv_state",
-    # append-mode incremental graph index (r13, same rationale as
-    # ivf_index_incr) + its compaction staging
-    "graph_index_incr",
-    "graph_index_compact",
-    "sq8_index_incr",
-)
-_SWEPT = False
-
-
-def _sweep_dead_pid_dirs() -> int:
-    """Remove pid-suffixed run dirs whose owning process is gone.
-    Race-benign: a LIVE process's dir is never touched (os.kill(pid, 0)
-    raises nothing), a pid recycled by another user skips the sweep
-    (PermissionError), and at worst a dir created between listdir and
-    the kill-probe belongs to a live pid and passes the probe. Runs
-    once per process, lazily, before the first pid-keyed dir is
-    created. Returns the number of dirs removed (for tests)."""
-    global _SWEPT
-    _SWEPT = True
-    removed = 0
-    for parent in _PID_KEYED_PARENTS:
-        p = _TMP / parent
-        if not p.exists():
-            continue
-        for d in p.iterdir():
-            pid_s = d.name.rsplit("-", 1)[-1]
-            if not pid_s.isdigit() or int(pid_s) == os.getpid():
-                continue
-            try:
-                os.kill(int(pid_s), 0)
-            except ProcessLookupError:
-                shutil.rmtree(d, ignore_errors=True)
-                removed += 1
-            except PermissionError:
-                pass  # alive under another uid — not ours to clear
-    return removed
-
-
-def _pid_run_dir(parent: str, key: str, keep: bool = False) -> "Path":
-    """A '<key>-<pid>' run dir under ``_TMP/parent``, cleared of any
-    previous run of THIS pid and with dead siblings swept (once per
-    process). Every pid-keyed path must come through here so the sweep
-    list and the keying scheme can't drift apart. ``keep=True`` returns
-    the SAME path without clearing — the crash-recovery resume path
-    (the restarted query must see the prior attempt's checkpoint, sink,
-    and store exactly as the crash left them)."""
-    global _SWEPT
-    if not _SWEPT:
-        _sweep_dead_pid_dirs()
-    d = _TMP / parent / f"{key}-{os.getpid()}"
-    if not keep:
-        shutil.rmtree(d, ignore_errors=True)
-    return d
-
-
 def _stage_dir(sf_dir: str) -> str:
-    """The file stream source requires a *directory*; stage one holding
-    a symlink to the events parquet (no data copy). The ``_STAGED``
-    marker records the source fingerprint — a regenerated source
-    restages instead of silently serving the old link."""
+    """The file stream source requires a *directory*: a generation
+    holding a symlink to the events parquet (no data copy), so a
+    regenerated source stages a new one instead of serving the old
+    link."""
     src = Path(sf_dir) / "events.parquet"
-    d = _TMP / "stream_src" / _staging_key(sf_dir)
-    marker = d / "_STAGED"
-    fp = _source_fingerprint(src)
-    if not marker.exists() or marker.read_text() != fp:
-        shutil.rmtree(d, ignore_errors=True)
-        d.mkdir(parents=True, exist_ok=True)
+
+    def build(d: Path) -> None:
+        d.mkdir()
         # RESOLVED target (r13 sf3-sweep root cause): a relative sf_dir
         # used to produce a relative symlink TARGET, which the OS
         # resolves against the SYMLINK'S directory — a broken link the
         # file stream source read as silently-zero rows (the anti join
         # "emitted" 0 of 589 410 rows with no error anywhere).
         (d / "events.parquet").symlink_to(src.resolve())
-        marker.write_text(fp)
+
+    d = staging.publish(staging.generation("stream_src", sf_dir, ("events",)), build)
     link = d / "events.parquet"
     if not link.exists():  # exists() follows the link — loud, not 0 rows
         raise FileNotFoundError(
@@ -430,7 +323,7 @@ def run_to_memory(
     writer = (
         result.writeStream.format("memory").queryName(name).outputMode(output_mode)
     )
-    ckpt = _pid_run_dir("checkpoints", name)
+    ckpt = staging.run_dir("checkpoints", name)
     run = _run_available_now(spark, writer, name, ckpt, _state_partitions())
     if _retry and _needs_flush_retry(run.progress, output_mode):
         out = run_to_memory(result, name, output_mode, _retry=False)
@@ -446,39 +339,35 @@ def _stage_slices(
     tag: str,
     build: Callable[[], tuple[DataFrame, list[Column]]],
 ) -> Path:
-    """Stage a source as single-file parquet slices under
-    ``_TMP/<kind>/<staging key>`` and return that dir. ``build()``
-    returns ``(frame, predicates)`` — one slice per predicate — and runs
-    only on a (re)stage. ``flat/`` symlinks every slice's part file
-    (RESOLVED target, see _stage_dir) into the one directory the file
-    stream source walks; read one file per trigger, each slice is its
-    own micro-batch (:func:`_slice_stream`). Part mtimes are staggered
-    in slice order, so the source (oldest-first) runs the batches in
-    slice order: the straggler staging needs that order, every other
-    consumer is order-independent by contract. The ``_STAGED`` marker
-    holds ``tag`` + the source table's fingerprint, so a regenerated
-    source (or a different slice count in the tag) restages instead of
-    serving stale slices."""
-    d = _TMP / kind / _staging_key(sf_dir)
-    marker = d / "_STAGED"
-    text = f"{tag}\n{_source_fingerprint(Path(sf_dir) / f'{table}.parquet')}"
-    if marker.exists() and marker.read_text() == text:
-        return d
-    shutil.rmtree(d, ignore_errors=True)
-    frame, preds = build()
-    flat = d / "flat"
-    flat.mkdir(parents=True, exist_ok=True)
-    t0 = None
-    for i, pred in enumerate(preds):
-        out = d / f"slice_{i}"
-        frame.filter(pred).coalesce(1).write.mode("overwrite").parquet(str(out))
-        part = next(out.glob("part-*.parquet")).resolve()
-        (flat / f"slice_{i}.parquet").symlink_to(part)
-        st = part.stat()
-        t0 = t0 or st.st_mtime_ns
-        os.utime(part, ns=(st.st_atime_ns, t0 + i * 10**9))
-    marker.write_text(text)
-    return d
+    """Stage a source as single-file parquet slices in a generation of
+    ``kind`` (:func:`staging.generation`, knobs ``tag``) and return its
+    dir. ``build()`` returns ``(frame, predicates)`` — one slice per
+    predicate — and runs only when no generation is published for the
+    source's fingerprint and ``tag`` (a regenerated source or another
+    slice count stages a new one). ``flat/`` links every slice's part
+    file into the one directory the file stream source walks; read one
+    file per trigger, each slice is its own micro-batch
+    (:func:`_slice_stream`). The links are relative to ``flat/``, so they
+    survive the publishing rename. Part mtimes are staggered in slice
+    order, so the source (oldest-first) runs the batches in slice order:
+    the straggler staging needs that order, every other consumer is
+    order-independent by contract."""
+
+    def stage(d: Path) -> None:
+        frame, preds = build()
+        flat = d / "flat"
+        flat.mkdir(parents=True)
+        t0 = None
+        for i, pred in enumerate(preds):
+            out = d / f"slice_{i}"
+            frame.filter(pred).coalesce(1).write.mode("overwrite").parquet(str(out))
+            part = next(out.glob("part-*.parquet"))
+            (flat / f"slice_{i}.parquet").symlink_to(Path("..", out.name, part.name))
+            st = part.stat()
+            t0 = t0 or st.st_mtime_ns
+            os.utime(part, ns=(st.st_atime_ns, t0 + i * 10**9))
+
+    return staging.publish(staging.generation(kind, sf_dir, (table,), tag), stage)
 
 
 def _slice_stream(spark: SparkSession, d: Path, schema: str) -> DataFrame:
@@ -604,13 +493,13 @@ def stream_ingest_dedup(
 
     d_all = Tables(spark, sf_dir).documents
     corpus = d_all.filter(F.col("doc_id") % 5 != 0)
-    # pid-keyed like sink/ckpt below — unlike the _tmp artifacts that
+    # pid-keyed like sink/ckpt below — unlike the artifact dirs that
     # are rebuilt idempotently per call, this store MUTATES during the
     # run (per-batch appends), so a concurrent process sharing the path
     # rmtrees/appends under this run's feet and the sink gains phantom
     # pairs (observed r9: two concurrent driver sims → 24397 vs 22319).
     store = str(
-        _pid_run_dir("sig_store_stream", _staging_key(sf_dir), keep=_resume)
+        staging.run_dir("sig_store_stream", staging.key(sf_dir), keep=_resume)
     )
     if not _resume:
         # generation-dir layout (r16): the initial build is one more
@@ -634,9 +523,9 @@ def stream_ingest_dedup(
     # runs against different sf_dirs must not interleave one sink — and
     # per pid, so a second process never rmtrees this one's live run
     name = "ingest_dedup"
-    run_key = f"{name}-{_staging_key(sf_dir)}"
-    sink = _pid_run_dir("fb_sink", run_key, keep=_resume)
-    ckpt = _pid_run_dir("checkpoints", run_key, keep=_resume)
+    run_key = f"{name}-{staging.key(sf_dir)}"
+    sink = staging.run_dir("fb_sink", run_key, keep=_resume)
+    ckpt = staging.run_dir("checkpoints", run_key, keep=_resume)
     applied = sink / "_applied"  # _-prefixed: invisible to parquet reads
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -806,8 +695,8 @@ def run_foreach_batch_parquet(
     spark = result.sparkSession
     # pid-keyed like run_to_memory: a concurrent second process must not
     # rmtree this one's live checkpoint/sink
-    ckpt = _pid_run_dir("checkpoints", name)
-    sink = _pid_run_dir("fb_sink", name)
+    ckpt = staging.run_dir("checkpoints", name)
+    sink = staging.run_dir("fb_sink", name)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Overwrite: complete-mode batches supersede each other; the
@@ -1246,8 +1135,8 @@ def stream_cdc_apply(
     from distributed_query_engine_spark.operators.cdc import apply_cdc, cdc_batch
 
     name = "cdc_apply"
-    run_key = f"{name}-{_staging_key(sf_dir)}"
-    root = _pid_run_dir("cdc_dim", run_key)
+    run_key = f"{name}-{staging.key(sf_dir)}"
+    root = staging.run_dir("cdc_dim", run_key)
     (root).mkdir(parents=True, exist_ok=True)
     Tables(spark, sf_dir).customer.write.mode("overwrite").parquet(
         str(root / "v0")
@@ -1268,7 +1157,7 @@ def stream_cdc_apply(
         "stream_cdc_sliced", sf_dir, "customer", str(n_slices), cdc_slices
     )
     batches = _slice_stream(spark, slices, "k long, op string, new_bal double")
-    ckpt = _pid_run_dir("checkpoints", run_key)
+    ckpt = staging.run_dir("checkpoints", run_key)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         snap = spark.read.parquet(str(root / pointer.read_text()))
@@ -1411,9 +1300,9 @@ def stream_mv_refresh(
         )
     )
     name = "mv_refresh"
-    run_key = f"{name}-{_staging_key(sf_dir)}"
-    mv_dir = _pid_run_dir("mv_state", run_key, keep=_resume)
-    ckpt = _pid_run_dir("checkpoints", run_key, keep=_resume)
+    run_key = f"{name}-{staging.key(sf_dir)}"
+    mv_dir = staging.run_dir("mv_state", run_key, keep=_resume)
+    ckpt = staging.run_dir("checkpoints", run_key, keep=_resume)
     keys = ["window_start", "event_type"]
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -1540,10 +1429,10 @@ def stream_bm25_ingest(
     )
     batches = _slice_stream(spark, slices, _DOCS_SCHEMA)
     name = "bm25_ingest"
-    run_key = f"{name}-{_staging_key(sf_dir)}"
-    base = _pid_run_dir("bm25_index_stream", run_key, keep=_resume)
-    ckpt = _pid_run_dir("checkpoints", run_key, keep=_resume)
-    tbl = f"bm25_stream_{_staging_key(sf_dir).replace('.', '_').replace('-', '_')}_{os.getpid()}"
+    run_key = f"{name}-{staging.key(sf_dir)}"
+    base = staging.run_dir("bm25_index_stream", run_key, keep=_resume)
+    ckpt = staging.run_dir("checkpoints", run_key, keep=_resume)
+    tbl = f"bm25_stream_{staging.key(sf_dir)}_{os.getpid()}"
     if not _resume:
         # the run dir was just cleared; a same-process rerun must not
         # see the previous run's catalog entry and skip the batch-0

@@ -370,18 +370,16 @@ def test_sink_compaction_reduces_file_count(spark, sf_dir):
     # oracle checks that part).
     from pathlib import Path
 
-    from distributed_query_engine_spark.plans.sources import (
-        _COMPACT_TARGET_FILES,
-        _tmp,
-    )
+    from distributed_query_engine_spark.plans.sources import _COMPACT_TARGET_FILES
     from distributed_query_engine_spark.registry import all_queries
+    from distributed_query_engine_spark.staging import artifact_dir
 
     all_queries()["sink_compacted"](spark, sf_dir).collect()
     n_scattered = len(
-        list(Path(_tmp(sf_dir, "lineitem_scattered")).glob("part-*.parquet"))
+        list(Path(artifact_dir(sf_dir, "lineitem_scattered")).glob("part-*.parquet"))
     )
     n_compacted = len(
-        list(Path(_tmp(sf_dir, "lineitem_compacted")).glob("part-*.parquet"))
+        list(Path(artifact_dir(sf_dir, "lineitem_compacted")).glob("part-*.parquet"))
     )
     assert n_compacted == _COMPACT_TARGET_FILES
     assert n_scattered > n_compacted
@@ -485,13 +483,15 @@ def test_semdedup_kept_set_consistent_across_strategies(spark, sf_dir):
             assert lowest["kept"]
 
 def test_staged_stream_slices_invalidate_on_source_change(spark, tmp_path):
-    # ADVICE r3: the _STAGED marker used to key only on the sf_dir
+    # ADVICE r3: the staging marker used to key only on the sf_dir
     # basename and never invalidate — a regenerated events.parquet (or a
     # second sf_dir sharing a basename) silently served stale slices.
-    # Now the marker stores a (mtime, size) fingerprint + slice count.
+    # Now the generation is keyed on a (mtime, size) fingerprint + slice
+    # count.
     import os
     import shutil as sh
 
+    from distributed_query_engine_spark import staging
     from distributed_query_engine_spark.streaming import ops
 
     src_dir = tmp_path / "sfX"
@@ -499,20 +499,20 @@ def test_staged_stream_slices_invalidate_on_source_change(spark, tmp_path):
     sh.copy(f"{SF_UNIT}/events.parquet", src_dir / "events.parquet")
 
     d1 = ops._stage_sliced(spark, str(src_dir), 2)
-    marker = d1 / "_STAGED"
-    fp1 = marker.read_text()
+    marker = d1 / staging.MARKER
     stamp1 = marker.stat().st_mtime_ns
 
     # Unchanged source: served from cache, marker untouched.
-    ops._stage_sliced(spark, str(src_dir), 2)
+    assert ops._stage_sliced(spark, str(src_dir), 2) == d1
     assert marker.stat().st_mtime_ns == stamp1
 
-    # Regenerated source (new mtime): restaged, fingerprint changes.
+    # Regenerated source (new mtime): restaged into a new generation,
+    # the superseded one swept.
     st = (src_dir / "events.parquet").stat()
     os.utime(src_dir / "events.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
     d2 = ops._stage_sliced(spark, str(src_dir), 2)
-    assert d2 == d1
-    assert (d2 / "_STAGED").read_text() != fp1
+    assert d2 != d1 and not d1.exists()
+    assert (d2 / staging.MARKER).is_file()
 
     # Different slice count: also restages.
     d3 = ops._stage_sliced(spark, str(src_dir), 3)
@@ -856,39 +856,51 @@ def test_release_gram_cache_unpersists(spark, sf_dir):
     assert not (df.storageLevel.useMemory or df.storageLevel.useDisk)
 
 
-def test_dead_pid_run_dirs_are_swept():
-    """r10 ADVICE: pid-keyed run dirs (signature stores, foreachBatch
-    sinks, checkpoints) are only ever cleared by their own pid, so
-    crashed/finished processes leave one abandoned dir each forever.
-    _pid_run_dir sweeps dead siblings once per process — a dir named
-    with a no-longer-running pid is removed; the current pid's and a
-    live pid's dirs are kept."""
+def _assert_dead_pid_run_dirs_swept(parent: str) -> None:
+    """Plant run dirs of a dead pid, this pid and a live pid under
+    ``parent``; the process's first run_dir call for that parent removes
+    the dead pid's dir and keeps the other two."""
     import os
+    import shutil
     import subprocess
 
-    from distributed_query_engine_spark.streaming import ops
+    from distributed_query_engine_spark import staging
 
     # a real, definitely-dead pid (its process has been waited on)
     p = subprocess.Popen(["true"])
     p.wait()
-    dead_pid = p.pid
-    parent = ops._TMP / "checkpoints"
-    parent.mkdir(parents=True, exist_ok=True)
-    dead = parent / f"_sweep_test-{dead_pid}"
-    mine = parent / f"_sweep_test-{os.getpid()}"
-    live = parent / f"_sweep_test-{os.getppid()}"  # parent process lives
+    dead, mine, live = (
+        staging.TMP / parent / f"_sweep_test-{pid}"
+        for pid in (p.pid, os.getpid(), os.getppid())  # parent process lives
+    )
     for d in (dead, mine, live):
-        d.mkdir(exist_ok=True)
+        d.mkdir(parents=True, exist_ok=True)
+    staging._SWEPT.discard(parent)  # as if this process had not asked yet
     try:
-        removed = ops._sweep_dead_pid_dirs()
-        assert removed >= 1
+        staging.run_dir(parent, "_sweep_probe")
         assert not dead.exists()
         assert mine.exists() and live.exists()
     finally:
         for d in (dead, mine, live):
-            import shutil
-
             shutil.rmtree(d, ignore_errors=True)
+
+
+def test_dead_pid_run_dirs_are_swept():
+    """r10 ADVICE: pid-keyed run dirs (signature stores, foreachBatch
+    sinks, checkpoints) are only ever cleared by their own pid, so
+    crashed/finished processes leave one abandoned dir each forever.
+    run_dir sweeps a parent's dead siblings once per process — a dir
+    named with a no-longer-running pid is removed; the current pid's and
+    a live pid's dirs are kept."""
+    _assert_dead_pid_run_dirs_swept("checkpoints")
+
+
+@pytest.mark.parametrize("parent", ["graph_index_prod_incr", "graph_index_prod_cpt"])
+def test_vector_run_dir_parents_are_swept(parent):
+    """The deployment-knob graph lifecycle queries' run dirs were missing
+    from a hand-kept sweep list, so their dead-pid dirs accumulated;
+    run_dir sweeps whichever parent it is asked for."""
+    _assert_dead_pid_run_dirs_swept(parent)
 
 
 def test_stream_ingest_dedup_is_multibatch_and_matches_batch_variant(spark, sf_dir):
@@ -1542,17 +1554,17 @@ def test_release_prefix_cache_frees_entries(spark):
 def test_ivf_incremental_index_dir_is_pid_keyed_and_swept():
     """r11 ADVICE: the append-mode incremental IVF index must be keyed
     per process (overwrite-mode indexes converge under races; append-
-    mode ones interleave into phantom/missing rows) and its parent must
-    be in the dead-pid sweep list so abandoned indexes don't accumulate."""
+    mode ones interleave into phantom/missing rows) and its parent's
+    dead-pid dirs must be swept so abandoned indexes don't accumulate."""
     import os
 
+    from distributed_query_engine_spark import staging
     from distributed_query_engine_spark.plans.llm import _ivf_incr_index_dir
-    from distributed_query_engine_spark.streaming import ops
 
     d = _ivf_incr_index_dir("/root/testdata/sf0.001")
     assert d.endswith(f"-{os.getpid()}")
-    assert "ivf_index_incr" in ops._PID_KEYED_PARENTS
-    assert str(ops._TMP / "ivf_index_incr") in d
+    assert str(staging.TMP / "ivf_index_incr") in d
+    _assert_dead_pid_run_dirs_swept("ivf_index_incr")
 
 
 def test_pq_mixed_dim_corpus_raises_instead_of_mis_slicing(spark):
@@ -1588,35 +1600,38 @@ def test_bucket_stage_is_content_addressed_and_sweeps_stale(tmp_path, spark):
     """VERDICT r10 item 4: the bucketed staging dir must embed a
     fingerprint of the SOURCE parquet files (regenerated testdata gets
     a fresh dir + fresh tables instead of stale buckets) and stale
-    siblings of the same sf key — plus the pre-r11 basename-keyed
-    legacy dir — must be swept."""
+    siblings of the same sf key must be swept."""
     import shutil
-    from pathlib import Path
 
-    from distributed_query_engine_spark.plans.analytic import _bucket_stage
+    from distributed_query_engine_spark import staging
+    from distributed_query_engine_spark.plans.analytic import _bucketed_tables
 
     src = tmp_path / "sfX"
     src.mkdir()
     for n in ("lineitem", "orders"):
         shutil.copy(f"{SF_UNIT}/{n}.parquet", src / f"{n}.parquet")
-    base1, tag1 = _bucket_stage(str(src))
-    tmp = Path(base1).parent
-    # plant a stale sibling (same sf key, different hash) + a legacy dir
-    key_prefix = base1.name.rsplit("_", 1)[0]
-    stale = tmp / f"{key_prefix}_deadbeef"
-    legacy = tmp / "bucketed_sfX"
-    stale.mkdir(parents=True, exist_ok=True)
-    legacy.mkdir(parents=True, exist_ok=True)
-    base1b, tag1b = _bucket_stage(str(src))
-    assert (base1b, tag1b) == (base1, tag1)  # unchanged source -> same key
-    assert not stale.exists() and not legacy.exists()
-    # regenerating a source changes the fingerprint -> fresh dir,
-    # and the old dir is now the stale sibling that gets swept
-    base1.mkdir(parents=True, exist_ok=True)
+    parent = staging.TMP / "bucketed"
+    key = staging.key(str(src))
+
+    def generations():
+        return sorted(parent.glob(f"{key}_*"))
+
+    _bucketed_tables(spark, str(src))
+    (gen1,) = generations()
+    _bucketed_tables(spark, str(src))
+    assert generations() == [gen1]  # unchanged source -> same generation
+    # plant a stale sibling (same sf key, different hash); regenerating a
+    # source changes the fingerprint -> fresh dir and tables, and both
+    # the stale sibling and the old generation (with its tables) are swept
+    stale = parent / f"{key}_deadbeef0000"
+    stale.mkdir()
     (src / "orders.parquet").touch()  # bump mtime
-    base2, tag2 = _bucket_stage(str(src))
-    assert base2 != base1 and tag2 != tag1
-    assert not base1.exists()
+    _bucketed_tables(spark, str(src))
+    (gen2,) = generations()
+    assert gen2 != gen1 and not gen1.exists() and not stale.exists()
+    assert not spark.catalog.tableExists(f"bkt_orders_{gen1.name}")
+    assert spark.catalog.tableExists(f"bkt_orders_{gen2.name}")
+    shutil.rmtree(gen2)
 
 
 def test_ivfpq_incremental_append_never_rewrites_codes(spark, sf_dir, tmp_path):
@@ -1729,9 +1744,11 @@ def test_content_addressed_index_invalidates_on_regenerated_source(
     import time
     from pathlib import Path
 
-    from distributed_query_engine_spark.plans.llm import (
-        _content_addressed_index,
-    )
+    from distributed_query_engine_spark import staging
+
+    def _content_addressed_index(sf_dir, kind, knobs, build):
+        gen = staging.generation(kind, sf_dir, ("embeddings",), knobs)
+        return staging.publish(gen, build)
 
     sf = tmp_path / "sf"
     sf.mkdir()
@@ -1751,7 +1768,7 @@ def test_content_addressed_index_invalidates_on_regenerated_source(
     g1 = _content_addressed_index(str(sf), "catest_index", "k:1", build)
     g1_again = _content_addressed_index(str(sf), "catest_index", "k:1", build)
     assert g1 == g1_again and len(builds) == 1  # fingerprint hit: no rebuild
-    assert (Path(g1) / "_BUILT").is_file()
+    assert (Path(g1) / staging.MARKER).is_file()
 
     # regenerate the source (content + mtime change)
     time.sleep(0.05)
@@ -2054,15 +2071,14 @@ def test_stream_mv_refresh_multibatch_merge_and_drop(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from distributed_query_engine_spark import staging
     from distributed_query_engine_spark.registry import all_queries
     from distributed_query_engine_spark.streaming import ops
 
     mv = all_queries()["stream_mv_refresh"](spark, sf_dir)
     assert ops.LAST_RUN["mv_refresh"].batches == 3
-    run_key = f"mv_refresh-{ops._staging_key(sf_dir)}"
-    import os
-
-    mv_dir = ops._TMP / "mv_state" / f"{run_key}-{os.getpid()}"
+    run_key = f"mv_refresh-{staging.key(sf_dir)}"
+    mv_dir = staging.run_dir("mv_state", run_key, keep=True)
     gens = sorted(
         int(p.name.split("=", 1)[1]) for p in Path(mv_dir).glob("gen=*")
     )
@@ -2163,20 +2179,16 @@ def test_graph_index_matches_inplan_search_and_skips_rebuild(spark, sf_dir):
     )
     assert idx == inplan
     # fingerprint hit: second call serves the published generation
-    from distributed_query_engine_spark.plans.llm import (
-        _content_addressed_index,
-    )
+    from distributed_query_engine_spark import staging
 
     calls = []
-    p = _content_addressed_index(
-        sf_dir, "graph_index",
+    gen = staging.generation(
+        "graph_index", sf_dir, ("embeddings",),
         f"graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
-        lambda path: calls.append(path),
     )
+    p = staging.publish(gen, lambda path: calls.append(path))
     assert calls == []  # build skipped on hit
-    import pathlib
-
-    assert (pathlib.Path(p) / "_BUILT").is_file()
+    assert (p / staging.MARKER).is_file()
 
 
 def test_stage_dir_relative_sf_dir_stages_working_symlink(spark, sf_dir):

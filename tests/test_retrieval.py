@@ -161,11 +161,12 @@ def test_bm25_index_matches_scan_everything(spark, sf_dir):
 
 
 def test_bm25_index_fingerprint_skip_and_stale_sweep(spark, sf_dir, tmp_path):
-    # A fingerprint hit skips the rebuild (the _PUBLISHED marker
+    # A fingerprint hit skips the rebuild (the generation's marker
     # persists); a regenerated corpus gets a fresh tag and the stale
     # sibling dir is swept.
     import shutil
 
+    from distributed_query_engine_spark import staging
     from distributed_query_engine_spark.operators import sparse as SP
 
     src = tmp_path / "corpus"
@@ -174,8 +175,8 @@ def test_bm25_index_fingerprint_skip_and_stale_sweep(spark, sf_dir, tmp_path):
     d.toPandas().to_parquet(src / "documents.parquet")
     docs = spark.read.parquet(str(src / "documents.parquet"))
     tag1 = SP.build_bm25_index(spark, docs, str(src))
-    base1, _, _ = SP._stage(str(src))
-    marker = base1 / "_PUBLISHED"
+    base1, _ = SP._generation(str(src))
+    marker = base1 / staging.MARKER
     mtime1 = marker.stat().st_mtime_ns
     assert SP.build_bm25_index(spark, docs, str(src)) == tag1
     assert marker.stat().st_mtime_ns == mtime1  # no rebuild on hit
@@ -188,8 +189,8 @@ def test_bm25_index_fingerprint_skip_and_stale_sweep(spark, sf_dir, tmp_path):
     # r13: the sweep also DROPs the stale catalog entry, so no table can
     # dangle on a deleted path (r12 ADVICE)
     assert not spark.catalog.tableExists(f"bm25_postings_{tag1}")
-    base2, _, _ = SP._stage(str(src))
-    assert (base2 / "_PUBLISHED").exists()
+    base2, _ = SP._generation(str(src))
+    assert (base2 / staging.MARKER).exists()
     shutil.rmtree(base2, ignore_errors=True)
     spark.sql(f"DROP TABLE IF EXISTS bm25_postings_{tag1}")
     spark.sql(f"DROP TABLE IF EXISTS bm25_postings_{tag2}")

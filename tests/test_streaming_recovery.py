@@ -30,6 +30,7 @@ pytestmark = pytest.mark.slow
 
 from pyspark.errors import StreamingQueryException
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.streaming import ops
 
 
@@ -52,8 +53,8 @@ def test_ingest_dedup_crash_after_batch2_resumes_row_identical(spark, sf_dir):
     assert got == expected
     # the resume replayed batch 2 as a marker no-op and still ran the
     # remaining batches: every batch marker must exist exactly once
-    sink = ops._pid_run_dir(
-        "fb_sink", f"ingest_dedup-{ops._staging_key(sf_dir)}", keep=True
+    sink = staging.run_dir(
+        "fb_sink", f"ingest_dedup-{staging.key(sf_dir)}", keep=True
     )
     markers = sorted(p.name for p in (sink / "_applied").iterdir())
     assert markers == [f"batch-{i}" for i in range(len(markers))]
@@ -92,9 +93,7 @@ def test_ingest_dedup_crash_MID_application_resumes_row_identical(spark, sf_dir)
     # the store holds each batch's signatures exactly once (r15 grouped
     # store: one row per distinct signature per generation, docs carried
     # in the members array — a double-applied batch would repeat ids)
-    store = ops._pid_run_dir(
-        "sig_store_stream", ops._staging_key(sf_dir), keep=True
-    )
+    store = staging.run_dir("sig_store_stream", staging.key(sf_dir), keep=True)
     from pyspark.sql import functions as F
 
     sigs = (
