@@ -211,12 +211,13 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
 
 @dataclass(frozen=True)
 class Source:
-    """A named external data source (cf. ``RDBMSDatabase(name, vendor,
-    host, port, database, ...)``, ``DistributedQueryEngine.diff:20-62``)."""
+    """A named external file source (cf. ``RDBMSDatabase(name, vendor,
+    host, port, database, ...)``, ``DistributedQueryEngine.diff:20-62``;
+    JDBC databases register in ``federation.RdbmsRegistry`` instead)."""
 
     name: str
-    fmt: str  # "parquet" | "csv" | "json" | "jdbc" | "binaryFile" | ...
-    path: str  # file path, directory, or JDBC URL
+    fmt: str  # "parquet" | "csv" | "json" | "binaryFile" | ...
+    path: str  # file path or directory
     options: dict[str, str] = field(default_factory=dict)
     schema_ddl: str | None = None  # explicit schema (else inferred)
 
@@ -257,8 +258,6 @@ class SourceCatalog:
             reader = reader.schema(src.schema_ddl)
         if src.options:
             reader = reader.options(**src.options)
-        if src.fmt == "jdbc":
-            return reader.format("jdbc").option("url", src.path).load()
         if src.fmt == "parquet" and not src.options and not src.schema_ddl:
             return read_parquet_table(self.spark, src.path)
         return reader.format(src.fmt).load(src.path)

@@ -34,11 +34,11 @@ Design for 100 TB:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from distributed_query_engine_spark.session import positive_int_env
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
 N_HASHES = 16
@@ -406,15 +406,7 @@ def _verify_build_hint(docs: DataFrame) -> str | None:
     broadcast plan the r15 A/B measured fastest locally; past the cap a
     small-executor cluster gets the shuffle join instead of an OOM.
     Driver-side plan statistics only — no job."""
-    raw = os.environ.get("DQE_VERIFY_BROADCAST_CAP", str(256 * 1024**2))
-    try:
-        cap = int(raw)
-        if cap <= 0:
-            raise ValueError
-    except ValueError:
-        raise ValueError(
-            f"DQE_VERIFY_BROADCAST_CAP must be a positive byte count, got {raw!r}"
-        ) from None
+    cap = positive_int_env("DQE_VERIFY_BROADCAST_CAP", 256 * 1024**2)
     try:
         est = int(
             docs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()

@@ -310,7 +310,8 @@ def scan_partition_pruned(spark, sf_dir):
 def scan_jdbc_dialect_dispatch(spark, sf_dir):
     """Multi-vendor federation with dialect dispatch — the reference's
     actual subject (``ApacheHiveDatabase`` + ``HiveSqlPrettyPrinter`` +
-    ``vendorFromConnStr``, diff:49-66,113-127):
+    ``vendorFromConnStr``, diff:49-66,113-127; here the ``apache-hive``
+    vendor entry and the hive2 dialect):
 
     1. a named-connector registry holds a Derby AND a Hive entry and
        round-trips through JSON (diff:14-19 Jackson subtype tags);
@@ -329,7 +330,7 @@ def scan_jdbc_dialect_dispatch(spark, sf_dir):
 
     t = Tables(spark, sf_dir)
     db_path = staging.artifact_dir(sf_dir, "derby_supplier_db")
-    derby = FED.DerbyDatabase(name="suppliers", host="", port=0, database=db_path)
+    derby = FED.make_database(FED.DERBY, name="suppliers", database=db_path)
     (
         t.supplier.select("s_suppkey", "s_name", "s_nationkey")
         .coalesce(1)
@@ -341,8 +342,12 @@ def scan_jdbc_dialect_dispatch(spark, sf_dir):
     registry = FED.RdbmsRegistry()
     registry.register(derby)
     registry.register(
-        FED.ApacheHiveDatabase(
-            name="warehouse", host="hive-host", port=10000, database="default"
+        FED.make_database(
+            FED.HIVE,
+            name="warehouse",
+            host="hive-host",
+            port=10000,
+            database="default",
         )
     )
     # JSON round-trip before use — the registry the scan consults is the
@@ -376,7 +381,7 @@ def scan_hive2_thrift(spark, sf_dir):
     a global temp view, the connector entry is looked up from the
     registry by name, the pushdown SELECT is generated by the hive2
     backtick dialect, and the scan goes over the wire through the
-    actual Hive JDBC driver (org.apache.hive.jdbc.HiveDriver) — dialect
+    actual Hive JDBC driver (the ``apache-hive`` vendor's) — dialect
     dispatch, SQL generation, connection-string shaping, and the
     HiveDriver handshake all run for real, not just unit-tested."""
     from distributed_query_engine_spark import federation as FED
@@ -386,8 +391,12 @@ def scan_hive2_thrift(spark, sf_dir):
     t.nation.createOrReplaceGlobalTempView("nation_hive2_fed")
     registry = FED.RdbmsRegistry()
     registry.register(
-        FED.ApacheHiveDatabase(
-            name="spark_thrift", host="localhost", port=port, database="default"
+        FED.make_database(
+            FED.HIVE,
+            name="spark_thrift",
+            host="localhost",
+            port=port,
+            database="default",
         )
     )
     return FED.federated_scan(
@@ -412,16 +421,20 @@ def scan_jdbc_pushdown(spark, sf_dir):
     pruning and filter pushdown with the source, which is exactly the
     machinery the reference hand-rolls. The filter below ships to Derby
     as SQL (visible as PushedFilters in .explain())."""
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    db = staging.artifact_dir(sf_dir, "derby_nation_db")
-    url = f"jdbc:derby:{db};create=true"
-    props = {"driver": driver}
+    from distributed_query_engine_spark import federation as FED
+
+    db = FED.make_database(
+        FED.DERBY,
+        name="nation",
+        database=staging.artifact_dir(sf_dir, "derby_nation_db"),
+    )
+    url, props = db.connection_string(), db.jdbc_properties()
     t = Tables(spark, sf_dir)
     (
         t.nation.select("n_nationkey", "n_name")
         .coalesce(1)
         .write.mode("overwrite")
-        .option("driver", driver)
+        .option("driver", db.driver)
         .option("createTableColumnTypes", "n_name VARCHAR(64)")
         .jdbc(url, "nation_fed", properties=props)
     )
@@ -451,37 +464,36 @@ def scan_jdbc_agg_pushdown(spark, sf_dir):
     At 100 TB federation scale this is the difference between moving a
     fact table over JDBC and moving |groups| rows. The V1 `read.jdbc`
     path (scan_jdbc_pushdown) can push only projections and filters;
-    aggregate pushdown needs the V2 ``JDBCTableCatalog``. The catalog
+    aggregate pushdown needs the V2 JDBC table catalog. The catalog
     name embeds the sf tag because Spark caches catalog instances by
     name for the session lifetime — two scale factors must not share a
     cached URL. Aggregates chosen (count / integer min / max) are exact
     in any engine, keeping the oracle hash-identical."""
-    driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    db = staging.artifact_dir(sf_dir, "derby_supplier_agg_db")
-    url = f"jdbc:derby:{db};create=true"
+    from distributed_query_engine_spark import federation as FED
+
+    db = FED.make_database(
+        FED.DERBY,
+        name="supplier_agg",
+        database=staging.artifact_dir(sf_dir, "derby_supplier_agg_db"),
+    )
     t = Tables(spark, sf_dir)
     (
         t.supplier.select("s_suppkey", "s_nationkey")
         .coalesce(1)
         .write.mode("overwrite")
-        .option("driver", driver)
-        .jdbc(url, "supplier_agg", properties={"driver": driver})
+        .option("driver", db.driver)
+        .jdbc(db.connection_string(), "supplier_agg", properties=db.jdbc_properties())
     )
     cat = "fed_agg_" + (Path(sf_dir).name or "sf").replace(".", "_")
-    spark.conf.set(
-        f"spark.sql.catalog.{cat}",
-        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
-    )
-    spark.conf.set(f"spark.sql.catalog.{cat}.url", url)
-    spark.conf.set(f"spark.sql.catalog.{cat}.driver", driver)
-    spark.conf.set(f"spark.sql.catalog.{cat}.pushDownAggregate", "true")
     # WRONG-RESULTS GUARD (measured, tests/test_federation.py): with
     # pushDownLimit=true (Spark's default) a .limit(k) over this catalog
     # plans `PushedTopN`, drops the local TakeOrdered, and Derby returns
     # the UNLIMITED relation — limit(3) yields 100 rows. The dialect
     # claims limit support it doesn't deliver; disable until the remote
     # provably honors its limit clause.
-    spark.conf.set(f"spark.sql.catalog.{cat}.pushDownLimit", "false")
+    FED.register_jdbc_catalog(
+        spark, cat, db, pushDownAggregate="true", pushDownLimit="false"
+    )
     fed = spark.table(f"{cat}.APP.SUPPLIER_AGG")
     return (
         fed.groupBy("s_nationkey")
@@ -509,7 +521,7 @@ def scan_jdbc_agg_pushdown(spark, sf_dir):
 )
 def scan_jdbc_limit_offset_pushdown(spark, sf_dir):
     """Federated LIMIT/OFFSET (paging) pushdown through the DSv2
-    ``JDBCTableCatalog`` — completing ``pushToRdbms`` parity
+    JDBC table catalog — completing ``pushToRdbms`` parity
     (``DistributedQueryEngine.diff:121`` pushes operators generally;
     filters and aggregates are covered by scan_jdbc_pushdown /
     scan_jdbc_agg_pushdown). The remote here is the in-process Spark
@@ -543,18 +555,16 @@ def scan_jdbc_limit_offset_pushdown(spark, sf_dir):
         "o_orderkey", "o_custkey", "o_totalprice"
     ).createOrReplaceGlobalTempView(view)
     cat = f"fed_lim_{tag}"
-    url = (
-        f"jdbc:hive2://localhost:{port}/default"
-        "?spark.sql.ansi.doubleQuotedIdentifiers=true"
+    FED.register_jdbc_catalog(
+        spark,
+        cat,
+        FED.make_database(
+            FED.HIVE, name=cat, host="localhost", port=port, database="default"
+        ),
+        session_conf={"spark.sql.ansi.doubleQuotedIdentifiers": "true"},
+        pushDownLimit="true",
+        pushDownOffset="true",
     )
-    spark.conf.set(
-        f"spark.sql.catalog.{cat}",
-        "org.apache.spark.sql.execution.datasources.v2.jdbc.JDBCTableCatalog",
-    )
-    spark.conf.set(f"spark.sql.catalog.{cat}.url", url)
-    spark.conf.set(f"spark.sql.catalog.{cat}.driver", "org.apache.hive.jdbc.HiveDriver")
-    spark.conf.set(f"spark.sql.catalog.{cat}.pushDownLimit", "true")
-    spark.conf.set(f"spark.sql.catalog.{cat}.pushDownOffset", "true")
     fed = spark.table(f"{cat}.global_temp.{view}")
     return (
         fed.filter(F.col("o_orderkey") >= 100)

@@ -54,8 +54,22 @@ _DEFAULTS = {
 }
 
 
+def positive_int_env(name: str, default: int) -> int:
+    """The positive integer in env knob ``name`` (``default`` when unset),
+    read at use and never at import: a malformed or non-positive value
+    raises ValueError naming the knob."""
+    raw = os.environ.get(name, str(default))
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise ValueError(f"{name} must be a positive integer, got {raw!r}")
+    return n
+
+
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return positive_int_env("SPARK_GRAFT_CPUS", 32)
 
 
 # Streaming state store backend. The default HDFS-backed provider keeps

@@ -28,6 +28,7 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.functions.deterministic import cents_sum
+from distributed_query_engine_spark.session import positive_int_env
 
 # The streaming file source needs an explicit schema. The events table's
 # ts precision is a GENERATOR detail that has changed across driver runs
@@ -176,16 +177,7 @@ def _state_partitions() -> dict[str, str]:
     Parsed when a stateful run starts, never at import: a malformed or
     non-positive value raises ValueError naming the knob instead of
     breaking the registry import."""
-    raw = os.environ.get("DQE_STREAM_STATE_PARTITIONS", "8")
-    try:
-        n = int(raw)
-        if n <= 0:
-            raise ValueError
-    except ValueError:
-        raise ValueError(
-            "DQE_STREAM_STATE_PARTITIONS must be a positive partition "
-            f"count, got {raw!r}"
-        ) from None
+    n = positive_int_env("DQE_STREAM_STATE_PARTITIONS", 8)
     return {"spark.sql.shuffle.partitions": str(n)}
 
 

@@ -32,7 +32,7 @@ def test_duckdb_vendor_registry_roundtrip(tmp_path):
     db = FED.make_database(
         "duckdb", name="lake", host="", port=0, database=str(tmp_path / "x.db")
     )
-    assert isinstance(db, FED.DuckDbDatabase)
+    assert (db.vendor, db.driver) == (FED.DUCKDB, "org.duckdb.DuckDBDriver")
     assert db.connection_string() == f"jdbc:duckdb:{tmp_path}/x.db"
     assert db.jdbc_properties()["driver"] == "org.duckdb.DuckDBDriver"
     assert FED.vendor_from_connection_string(db.connection_string()) == "duckdb"
@@ -43,7 +43,6 @@ def test_duckdb_vendor_registry_roundtrip(tmp_path):
 
 def test_duckdb_dialect_golden():
     d = FED.dialect_for("jdbc:duckdb:/data/x.db")
-    assert isinstance(d, FED.DuckDbDialect)
     # ANSI double quotes + native LIMIT/OFFSET paging (not the base
     # class's OFFSET/FETCH form)
     assert (
@@ -87,7 +86,7 @@ def test_duckdb_live_wire(spark, tmp_path):
     )
     con.close()
 
-    db = FED.DuckDbDatabase(name="lake", host="", port=0, database=path)
+    db = FED.make_database(FED.DUCKDB, name="lake", host="", port=0, database=path)
     jconn = FED.jdbc_connect_via_jar(
         spark, JAR, db.driver, db.connection_string()
     )
@@ -107,8 +106,8 @@ def test_duckdb_live_wire(spark, tmp_path):
         )
         assert _rows(st().executeQuery(sql)) == [(2, "BRAZIL"), (3, "CANADA")]
 
-        # standalone OFFSET (no LIMIT) — DuckDbDialect's divergence
-        # from the ANSI base paging
+        # standalone OFFSET (no LIMIT) — the DuckDB dialect's divergence
+        # from the ANSI paging
         sql2 = dialect.select_sql(
             "nation_fed", columns=["n_nationkey"], order_by=["n_nationkey"],
             offset=4,
@@ -117,7 +116,7 @@ def test_duckdb_live_wire(spark, tmp_path):
 
         # the wrong dialect's paging grammar must FAIL on this wire:
         # Hive's `LIMIT offset, rows` comma form is not DuckDB SQL
-        bad = FED.HiveDialect().select_sql(
+        bad = FED.dialect_for("jdbc:hive2://h:10000/d").select_sql(
             "nation_fed", columns=["n_nationkey"], order_by=["n_nationkey"],
             limit=2, offset=1,
         )

@@ -337,6 +337,19 @@ def test_progress_log_at_retention_cap_raises(spark, sf_dir):
             spark.conf.set(key, prior)
 
 
+@pytest.mark.parametrize("bad", ["eight", "0", "-1"])
+def test_spark_graft_cpus_knob_rejects_non_positive_int(monkeypatch, bad):
+    # every query's tune_session sizes shuffle partitions from this knob:
+    # a malformed value must name it, and 0 must not become local[0]
+    from distributed_query_engine_spark import session as S
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
+        S.default_parallelism()
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert S.default_parallelism() == 6
+
+
 def test_stream_state_partitions_knob_parsed_at_use(spark, sf_dir, monkeypatch):
     # The knob is read when a stateful run starts (an import-time parse
     # is the failure class that breaks the whole registry): a malformed
