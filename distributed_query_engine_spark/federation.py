@@ -268,8 +268,8 @@ def _hive_paging(limit: int | None, offset: int) -> str:
         # can exceed 2^31 rows). Refuse instead of lying.
         raise ValueError(
             "HiveQL cannot express OFFSET without LIMIT; pass an "
-            "explicit limit (MySQL endpoints: MysqlDialect uses the "
-            "documented unbounded-LIMIT idiom)"
+            "explicit limit (MySQL endpoints: dialect_for(\"jdbc:mysql:…\") "
+            "uses the documented unbounded-LIMIT idiom)"
         )
     if offset:
         return f"LIMIT {int(offset)}, {int(limit)}"

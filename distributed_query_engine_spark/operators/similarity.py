@@ -281,8 +281,8 @@ def topk_with_count(scored: DataFrame, k: int) -> DataFrame:
 
 # r9 retune (VERDICT r8 item 2): the r8 point (16 cells, probe 4) sat
 # at recall 0.77-0.82 for ~25% scanned — just under the >=0.8 bar at
-# sf0.01. The r9 sweep (scripts/ivf_sweep.py; grid cells 8..64 x probe
-# at 25/31/37% fractions, 25-query panel, all three SFs) found the
+# sf0.01. The r9 sweep (PLANS.md "r9 IVF retune"; grid cells 8..64 x
+# probe at 25/31/37% fractions, 25-query panel, all three SFs) found the
 # finer quantizer strictly dominates: 32 cells / probe 8 measures
 # recall@5 = 0.936 / 0.944 / 0.992 at sf0.001 / 0.01 / 0.1 for ~24.5%
 # candidate fraction — same cost as the r8 point, +0.17 recall. 64
@@ -967,7 +967,7 @@ def cosine_near_dup_pairs(
 # fit in RAM. All arithmetic is exact integer (fixed-point subvectors,
 # squared-L2 decomposes across subspaces), so a SQL oracle replays
 # codebook training, encoding, and the ADC scan bit-for-bit.
-# r11 knob sweep (scripts/pq_sweep.py, PLANS.md r11): recall rises
+# r11 knob sweep (PLANS.md "r11 knob sweep"): recall rises
 # monotonically with code budget on BOTH corpus shapes; (8, 32) =
 # 5 bytes/vector on the 64-dim corpus (51x smaller than the raw float
 # vector) lifts residual+re-rank recall@5 to 0.904 raw / 0.928

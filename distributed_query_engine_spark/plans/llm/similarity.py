@@ -555,8 +555,8 @@ def llm_similarity_recall(spark, sf_dir):
 
     r9 headline (PLANS.md has the sweeps): **IVF is the recommended
     default** — published by the `recommended` column. After the r9
-    retune (N_CELLS 32, N_PROBE 8; scripts/ivf_sweep.py) IVF measures
-    recall@5 = 0.936 / 0.944 / 0.992 at sf0.001/0.01/0.1 for ~24.5%
+    retune (N_CELLS 32, N_PROBE 8; PLANS.md "r9 IVF retune") IVF
+    measures recall@5 = 0.936 / 0.944 / 0.992 at sf0.001/0.01/0.1 for ~24.5%
     candidate fraction. The LSH alternative (5 planes, H=3) measures
     0.82-0.87 at ~71% — on THIS corpus (isotropic noise, no cluster
     structure) every data-blind family swept (multi-table LSH,

@@ -360,7 +360,8 @@ def llm_similarity_ivfpq_residual_rerank(spark, sf_dir):
 
 # Production code width (VERDICT r11 item 5): FAISS's default stores
 # 8-BIT codes (k_codes=256); the r11 ladder stopped at (8, 32). The r12
-# sweep (scripts/pq_sweep.py, sf0.1, recall@5 adc / +re-rank):
+# sweep (PLANS.md "PQ at production code width"; sf0.1, recall@5
+# adc / +re-rank):
 #   (8, 128) = 7 B/vec: raw 0.18/0.91, clustered 0.39/0.98
 #   (8, 256) = 8 B/vec: raw 0.20/0.94, clustered 0.42/1.00
 #   (16,256) = 16 B/vec: raw 0.41/0.96, clustered 0.59/1.00
@@ -381,7 +382,8 @@ def llm_similarity_ivfpq_prod(spark, sf_dir):
     (m_sub=16, k_codes=256 — FAISS IndexIVFPQ's 8-bit default): same
     assembled ladder as llm_similarity_ivfpq_residual_rerank, bigger
     code budget. Measured recall@5 at sf0.1: 0.96 raw / 1.00 clustered
-    (scripts/pq_sweep.py r12 rows) — the >= 0.95-on-both-shapes rung.
+    (PLANS.md "PQ at production code width") — the >= 0.95-on-both-shapes
+    rung.
     The codebook relation grows to 16x256 rows — still broadcast-sized
     (the ONLY broadcast relations are centroids + codebooks); the
     codes relation stays a per-vector handful of small ints, so every

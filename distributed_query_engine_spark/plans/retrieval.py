@@ -150,7 +150,7 @@ def llm_inverted_index(spark, sf_dir):
             # serialized to a scalar: a top-level ARRAY column is not
             # driver-canonicalizable (pandas sort_values factorize dies
             # on unhashable cells — the round-4 agg_collect_nested
-            # lesson, enforced by tests/oracle_diff.assert_driver_sortable)
+            # lesson, enforced by scripts/oracle.unsortable)
             F.concat_ws(
                 ",", F.sort_array(F.collect_list("doc_id"))
             ).alias("postings_head")

@@ -2,6 +2,7 @@
 """Regenerate QUERIES.md — the browsable index of every registered
 query/operator (name, module, one-line summary from the docstring,
 oracle status). Run from the repo root: python scripts/gen_query_index.py
+tests/test_registry.py checks that the committed file equals ``render()``.
 """
 from __future__ import annotations
 
@@ -25,13 +26,16 @@ def first_sentence(doc: str | None) -> str:
     return text[:160]
 
 
-def main() -> None:
+OUT = Path(__file__).resolve().parents[1] / "QUERIES.md"
+
+
+def render() -> str:
+    """The text of QUERIES.md for the registry as it stands."""
     rows = []
     for name, fn in sorted(registry._QUERIES.items()):
         mod = getattr(fn, "__module__", "?").rsplit(".", 1)[-1]
         # wrapped functions carry the original __doc__
         rows.append((name, mod, first_sentence(fn.__doc__)))
-    out = Path(__file__).resolve().parents[1] / "QUERIES.md"
     lines = [
         "# Query / operator index",
         "",
@@ -44,8 +48,12 @@ def main() -> None:
     for name, mod, summary in rows:
         summary = summary.replace("|", "\\|")
         lines.append(f"| `{name}` | {mod} | {summary} |")
-    out.write_text("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(rows)} queries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    OUT.write_text(render())
+    print(f"wrote {OUT} ({len(registry._QUERIES)} queries)")
 
 
 if __name__ == "__main__":

@@ -1,20 +1,19 @@
 """Shared fixtures: one SparkSession per test session, a DuckDB
-connection with the star-schema views registered (mirroring the driver's
-oracle harness), and sf-dir paths."""
+connection over the sf-dir tables (``scripts/oracle.py``'s ``duck``), and
+sf-dir paths."""
 
 from __future__ import annotations
 
 import sys
 from pathlib import Path
 
-import duckdb
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-from distributed_query_engine_spark.catalog import STAR_TABLES  # noqa: E402
 from distributed_query_engine_spark.session import get_spark  # noqa: E402
+from scripts import oracle  # noqa: E402
 
 import os  # noqa: E402
 
@@ -36,17 +35,8 @@ def sf_dir() -> str:
     return SF_UNIT
 
 
-def make_duck(sf: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in STAR_TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
-    return con
-
-
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = make_duck(sf_dir)
+    con = oracle.duck(sf_dir)
     yield con
     con.close()

@@ -335,8 +335,9 @@ def test_paging_forms_across_remaining_vendors():
     # idiom; Spark-Thrift emits a standalone OFFSET clause.
     hive = FED.dialect_for("jdbc:hive2://h:10000/d")
     assert hive.paginate_clause(7, 3) == "LIMIT 3, 7"
-    with pytest.raises(ValueError, match="cannot express OFFSET"):
+    with pytest.raises(ValueError, match="cannot express OFFSET") as err:
         hive.paginate_clause(None, 3)
+    assert 'dialect_for("jdbc:mysql:…")' in str(err.value)
     my = FED.dialect_for("jdbc:mysql://h:3306/d")
     assert my.paginate_clause(None, 3) == "LIMIT 3, 18446744073709551615"
     assert my.paginate_clause(None, 0) == ""

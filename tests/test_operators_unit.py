@@ -8,6 +8,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from scripts import oracle
 from tests.conftest import SF_UNIT
 from distributed_query_engine_spark.operators import dedup as D
 from distributed_query_engine_spark.operators import multimodal as MM
@@ -1327,7 +1328,6 @@ def test_pareto_running_share_exact_past_double_digits(spark, tmp_path):
     against DuckDB on a synthetic corpus whose CUMULATIVE micros pass
     2^53 while every PER-SUPPLIER revenue stays inside dsum's
     documented exact envelope (< 2^53/10^6 dollars)."""
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1357,17 +1357,9 @@ def test_pareto_running_share_exact_past_double_digits(spark, tmp_path):
     }
     pq.write_table(pa.table(rows), str(tmp_path / "lineitem.parquet"))
     df = all_queries()["pareto_abc_classification"](spark, str(tmp_path))
-    srows = sorted(tuple(map(repr, r)) for r in df.collect())
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/lineitem.parquet')"
-    )
-    drows = sorted(
-        tuple(map(repr, r))
-        for r in con.sql(all_oracles()["pareto_abc_classification"]).fetchall()
-    )
-    assert srows == drows
+    con = oracle.duck(tmp_path)
+    rel = con.sql(all_oracles()["pareto_abc_classification"])
+    assert oracle.compare(df, rel) == (n, [])
 
 
 def test_bpe_encode_matches_python_model(spark):
@@ -1419,7 +1411,6 @@ def test_bpe_train_degenerate_corpus_stops_early_and_matches_oracle(
     # r8 review catch: a corpus that runs out of adjacent pairs before
     # K merges must truncate the merge table (not IndexError), and the
     # oracle's scalar-subquery replay must degrade to the same rows.
-    import duckdb
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -1437,17 +1428,11 @@ def test_bpe_train_degenerate_corpus_stops_early_and_matches_oracle(
         }),
         str(tmp_path / "documents.parquet"),
     )
-    got = [
-        tuple(r)
-        for r in llm_bpe_train(spark, str(tmp_path)).collect()
-    ]
-    assert got == [(1, "a", "b", "ab", 3)]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/documents.parquet')"
-    )
-    assert [tuple(r) for r in con.sql(_bpe_train_oracle()).fetchall()] == got
+    df = llm_bpe_train(spark, str(tmp_path))
+    assert [tuple(r) for r in df.collect()] == [(1, "a", "b", "ab", 3)]
+    con = oracle.duck(tmp_path)
+    rel = con.sql(_bpe_train_oracle())
+    assert oracle.compare(df, rel) == (1, [])
 
 
 def test_substring_mask_consistent_with_report(spark):
@@ -1989,7 +1974,6 @@ def test_asof_nearest_duplicate_ts_deterministic_and_oracle_exact(spark, tmp_pat
     in both engine and oracle. With the p_value tie-breaker, the engine
     must pick max-value backward / min-value forward, and the oracle's
     direction-signed CASE key must replay the same choice."""
-    import duckdb
     import pandas as pd
 
     from distributed_query_engine_spark.registry import _ORACLES, _QUERIES
@@ -2017,22 +2001,13 @@ def test_asof_nearest_duplicate_ts_deterministic_and_oracle_exact(spark, tmp_pat
     pdf["props"] = pdf["props"].astype("string")
     pdf.to_parquet(tmp_path / "events.parquet")
 
-    got = {
-        r["event_id"]: r["purchase_value"]
-        for r in _QUERIES["join_asof_nearest"](spark, str(tmp_path)).collect()
-    }
+    df = _QUERIES["join_asof_nearest"](spark, str(tmp_path))
+    got = {r["event_id"]: r["purchase_value"] for r in df.collect()}
     assert got == {1: 9.0, 2: 5.0, 3: 3.0}
 
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{tmp_path}/events.parquet')"
-    )
-    oracle = {
-        r[0]: r[4] for r in con.execute(_ORACLES["join_asof_nearest"]).fetchall()
-    }
-    con.close()
-    assert oracle == got
+    con = oracle.duck(tmp_path)
+    rel = con.sql(_ORACLES["join_asof_nearest"])
+    assert oracle.compare(df, rel) == (3, [])
 
 
 def test_knn_graph_degree_bounded_and_directed(spark, sf_dir):

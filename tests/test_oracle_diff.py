@@ -1,7 +1,8 @@
 """The local mirror of the driver's correctness gate: every registered
 query with an oracle runs on Spark AND DuckDB at sf0.001 and must match
-exactly (count + schema + order-insensitive values). Queries without an
-oracle are smoke-run (plan executes, returns rows)."""
+exactly by ``scripts/oracle.py``'s rule (names, Arrow-level types,
+driver sortability, repr-exact rows with no float rounding). Queries
+without an oracle are smoke-run (plan executes, returns rows)."""
 
 from __future__ import annotations
 
@@ -11,7 +12,7 @@ import pytest
 pytestmark = pytest.mark.slow
 
 from distributed_query_engine_spark.registry import all_oracles, all_queries
-from tests.oracle_diff import assert_driver_sortable, assert_same_result
+from scripts import oracle
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -21,12 +22,12 @@ ORACLES = all_oracles()
 def test_query_matches_oracle(name, spark, duck, sf_dir):
     df = QUERIES[name](spark, sf_dir)
     if name in ORACLES:
-        assert_same_result(df, duck.sql(ORACLES[name]))
+        _, problems = oracle.compare(df, duck.sql(ORACLES[name]))
+        assert not problems, problems
     else:
         # smoke: plan executes end-to-end AND the output would survive the
         # driver's pandas canonicalizer (rows-only checks still canon).
-        rows = [tuple(r) for r in df.limit(200).collect()]
-        assert_driver_sortable(rows, df.columns)
+        assert oracle.unsortable(df.columns, df.limit(200).collect()) is None
 
 
 def test_every_oracle_has_query():

@@ -43,6 +43,16 @@ def test_registry_counts_match_docs():
     assert f"{len(os_)} with DuckDB oracles" in text
 
 
+def test_query_index_matches_generator():
+    """QUERIES.md is generated; a query added, renamed or re-documented
+    without rerunning scripts/gen_query_index.py leaves it stale."""
+    from scripts.gen_query_index import OUT, render
+
+    assert OUT.read_text() == render(), (
+        "QUERIES.md is stale: run python scripts/gen_query_index.py"
+    )
+
+
 def test_broken_lazy_oracle_degrades_to_rows_only():
     """A callable oracle that raises must not break all_queries() or
     all_oracles(); it warns and drops only its own entry."""
@@ -105,40 +115,14 @@ def test_driver_order_fronts_unverified_queries():
             "an unverified/changed query is sorted behind a verified-green "
             "one — it would rotate out of the driver's check window"
         )
-    # every rotation-list name must be a real registered query — a typo
-    # here silently no-ops (the `if n in names` guards below would skip
-    # it) and the intended query never reaches the driver window
-    for n in (*registry._PRIORITY, *registry._DEFER_NEW, *registry._CHANGED):
-        assert n in names, f"rotation list references unknown query {n!r}"
-    # priority names lead the window (while they remain unverified):
-    # assert RELATIVE order, not absolute indices — once the driver
-    # verifies some priority names, the remaining unverified ones shift
-    # forward, which is correct behavior (ADVICE r7).
-    unverified_priority = [
-        n for n in registry._PRIORITY if n in names and not green(n)
-    ]
-    prio_idx = [names.index(n) for n in unverified_priority]
-    assert prio_idx == sorted(prio_idx), (
-        "unverified priority names must keep their _PRIORITY order"
-    )
-    if prio_idx:
-        non_priority_front = [
-            i for i in fronted if names[i] not in registry._PRIORITY
-        ]
-        if non_priority_front:
-            assert max(prio_idx) < min(non_priority_front), (
-                "unverified priority names must precede every other "
-                "unverified query"
-            )
-    # deferred-new queries sort after every other unverified query
-    non_defer_front = [
-        i for i in fronted if names[i] not in registry._DEFER_NEW
-    ]
-    for n in registry._DEFER_NEW:
-        if n in names and not green(n) and non_defer_front:
-            assert names.index(n) > max(non_defer_front), (
-                f"{n} must not displace backlog queries from the window"
-            )
+    # every stamped name must be a real registered query — a typo here
+    # silently no-ops and the changed query never re-fronts
+    for n in registry._CHANGED:
+        assert n in names, f"_CHANGED references unknown query {n!r}"
+    # never-checked queries lead the unverified group
+    no_row = [i for i in fronted if names[i] not in rows]
+    if no_row and len(no_row) < len(fronted):
+        assert max(no_row) < min(set(fronted) - set(no_row))
     # a changed-stamped query with only a PRE-stamp green row is fronted
     for n, stamp in registry._CHANGED.items():
         if n in names:
@@ -231,30 +215,16 @@ def test_stalest_rows_fit_inside_driver_window():
 
 
 def test_scale_sweep_skip_list_names_are_registered():
-    """A typo'd name in scripts/verify_at_scale.py's quadratic-oracle
-    SKIP list silently un-skips the intended query (the sweep would
-    then hang on a quadratic replay) — same guard as the rotation
-    lists."""
-    import re
-    from pathlib import Path
+    """A typo'd name in the scale sweep's quadratic-oracle skip lists
+    silently un-skips the intended query (the sweep would then hang on
+    a quadratic replay): r15's sf10 BPE skip shipped as
+    "pack_sequences_bpe" and un-skipped llm_pack_sequences_bpe for 15+
+    minutes of oracle grinding. The blocked names must be registered
+    for the same reason."""
+    from scripts import oracle
 
-    src = (
-        Path(__file__).resolve().parents[1] / "scripts" / "verify_at_scale.py"
-    ).read_text()
-    # include conditional `SKIP |= {...}` additions — r15's sf10 BPE
-    # skip shipped as "pack_sequences_bpe" (missing the llm_ prefix)
-    # and silently un-skipped llm_pack_sequences_bpe for 15+ minutes
-    # of oracle grinding: exactly this test's failure mode, outside
-    # its old regex
-    body = " ".join(
-        m.group(1)
-        for m in re.finditer(r"SKIP \|?= \{(.*?)\}", src, re.S)
-    )
-    names = set(re.findall(r'"([a-z0-9_]+)"', body))
-    # lower bound only guards against the regex silently matching
-    # nothing; the list legitimately SHRINKS as names move to blocked
-    # oracles (r15, VERDICT r14 item 3)
-    assert len(names) >= 15
-    registered = set(registry.all_queries())
-    unknown = names - registered
-    assert not unknown, f"SKIP list references unknown queries: {unknown}"
+    assert oracle.skip_list(".tmp/sf1") == oracle.SKIP
+    assert oracle.skip_list(".tmp/sf10skew") == oracle.SKIP | oracle.SKIP_100X
+    names = oracle.SKIP | oracle.SKIP_100X | set(oracle.BLOCKED)
+    unknown = names - set(registry.all_queries())
+    assert not unknown, f"scale sweep lists unknown queries: {unknown}"

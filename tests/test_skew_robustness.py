@@ -23,7 +23,8 @@ import subprocess
 import sys
 from pathlib import Path
 
-from tests.conftest import SF_UNIT, make_duck
+from scripts import oracle
+from tests.conftest import SF_UNIT
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -69,7 +70,7 @@ def skew_dir(tmp_path_factory) -> str:
 
 @pytest.fixture(scope="module")
 def skew_duck(skew_dir):
-    con = make_duck(skew_dir)
+    con = oracle.duck(skew_dir)
     yield con
     con.close()
 
@@ -78,16 +79,8 @@ def skew_duck(skew_dir):
 def test_skewed_corpus_oracle_exact(name, spark, skew_dir, skew_duck):
     from distributed_query_engine_spark.registry import all_oracles, all_queries
 
-    df = all_queries()[name](spark, skew_dir)
-    srows = [tuple(r) for r in df.collect()]
-    rel = skew_duck.sql(all_oracles()[name])
-    drows = rel.fetchall()
-    scols = [c.lower() for c in df.columns]
-    dcols = [c.lower() for c in rel.columns]
-    assert sorted(scols) == sorted(dcols), (scols, dcols)
-    oi = sorted(range(len(scols)), key=lambda i: scols[i])
-    od = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    ss = sorted(tuple(repr(r[i]) for i in oi) for r in srows)
-    dd = sorted(tuple(repr(r[i]) for i in od) for r in drows)
-    assert len(srows) > 0  # 0 rows vacuously matches any oracle
-    assert ss == dd, f"{name}: {len(ss)} spark vs {len(dd)} oracle rows"
+    n, problems = oracle.compare(
+        all_queries()[name](spark, skew_dir), skew_duck.sql(all_oracles()[name])
+    )
+    assert n > 0  # 0 rows vacuously matches any oracle
+    assert not problems, f"{name}: {problems}"

@@ -25,7 +25,7 @@ from distributed_query_engine_spark.session import (
     _STATE_STORE_PROVIDERS,
     state_store_provider,
 )
-from tests.oracle_diff import assert_same_result
+from scripts import oracle
 
 QUERIES = all_queries()
 ORACLES = all_oracles()
@@ -51,7 +51,8 @@ def rocksdb_session(spark):
 def test_streaming_query_green_under_rocksdb(name, rocksdb_session, duck, sf_dir):
     df = QUERIES[name](rocksdb_session, sf_dir)
     if name in ORACLES:
-        assert_same_result(df, duck.sql(ORACLES[name]))
+        _, problems = oracle.compare(df, duck.sql(ORACLES[name]))
+        assert not problems, problems
     else:
         assert df.count() >= 0  # smoke: executes end-to-end under RocksDB
 
