@@ -16,5 +16,18 @@ the DataFrame API so Catalyst/Tungsten/AQE pick the physical strategy.
 
 __version__ = "0.1.0"
 
-from distributed_query_engine_spark.session import get_spark  # noqa: F401
-from distributed_query_engine_spark.catalog import SourceCatalog, Tables  # noqa: F401
+# Resolved on first use, so importing a submodule (the Python-worker
+# daemon entry, worker_daemon) does not import pyspark.
+_EXPORTS = {
+    "get_spark": "session",
+    "SourceCatalog": "catalog",
+    "Tables": "catalog",
+}
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    return getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)

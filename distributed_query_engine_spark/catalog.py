@@ -24,13 +24,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 import pyarrow.parquet as pa_pq
 import pyarrow.types as pa_types
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DataType,
     DoubleType,
     FloatType,
     IntegerType,
@@ -111,6 +114,22 @@ def footer_struct(schema) -> StructType | None:
             return None
         fields.append(StructField(f.name, st, nullable=True))
     return StructType(fields)
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """Driver-side ``rows`` in the schema ``ddl`` as a DataFrame that
+    plans as a ``LocalTableScan``: the rows ride inside the plan as one
+    Arrow table. ``createDataFrame`` of a Python list plans as a Python
+    RDD instead, so every job that reads it (a broadcast build included)
+    runs Python-worker tasks. Values convert exactly: Python ints, NaN
+    and nulls come back as they went in."""
+    schema = to_arrow_schema(DataType.fromDDL(ddl))
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_query_engine_spark.catalog import local_rows
 from distributed_query_engine_spark.functions.vectors import (
     cosine_from_ints,
     dot_long,
@@ -1644,20 +1645,20 @@ def topk_l2_ivfpq(
             low_map, query_ids, cent_rows, cb_rows, dim, m_sub, n_probe,
             residual,
         )
-        probes = spark.createDataFrame(probe_rows, "q_id long, cell_id long")
+        probes = local_rows(spark, probe_rows, "q_id long, cell_id long")
         cell = "cell_id long, " if residual else ""
-        q_dt = spark.createDataFrame(
-            qdt_rows, f"q_id long, {cell}m int, code_id long, dist long"
+        q_dt = local_rows(
+            spark, qdt_rows, f"q_id long, {cell}m int, code_id long, dist long"
         )
     else:
         cents = (
             None if cent_rows is None
-            else spark.createDataFrame(cent_rows, _CENTS_SCHEMA)
+            else local_rows(spark, cent_rows, _CENTS_SCHEMA)
         )
         probes, q_dt = _probe_qdt(
             _qpanel(base, query_ids, "ivec"),
             cents,
-            spark.createDataFrame(cb_rows, _CB_SCHEMA),
+            local_rows(spark, cb_rows, _CB_SCHEMA),
             dim,
             m_sub,
             n_probe,

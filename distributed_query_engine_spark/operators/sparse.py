@@ -14,8 +14,16 @@ serve stale postings):
   — one directory per token would melt the namenode; N fixed bucket
   files is the standard layout. ``dl`` rides denormalized in the posting
   row so scoring never joins a doc-length table.
-- ``stats`` — (tok, df): vocabulary-sized, broadcast at query time.
+- ``stats`` — (tok, df): vocabulary-sized; a search reads only its
+  query terms' rows.
 - ``corpus`` — (n_docs, a_tok): one row.
+
+Both may hold one partial per ingest batch. A search collects its query
+terms' df partials and the corpus partials in one job and sums them on
+the driver: |query terms| x |partials| rows, request-sized at any
+vocabulary or corpus size. The scoring plan then broadcasts that small
+local relation to the postings scan and runs no stats or corpus
+aggregate, exchange or nested-loop join.
 
 Query-time: the query's terms are DRIVER-SIDE LITERALS (a search query
 is request metadata, like the panel ids every similarity query takes) —
@@ -34,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from distributed_query_engine_spark import staging
+from distributed_query_engine_spark.catalog import local_rows
 from distributed_query_engine_spark.functions import text as T
 
 N_BUCKETS = 32
@@ -125,8 +134,8 @@ def append_to_bm25_index(
       scan reads old+new files of only the query terms' buckets.
     - ``stats`` / ``corpus``: per-batch PARTIALS append; document sets
       of batches are disjoint, so df / n_docs / a_tok merge by SUM at
-      read time (bm25_search_index aggregates the vocabulary-sized
-      relation before broadcasting — pennies). No read-modify-write
+      read time (bm25_search_index sums the query terms' partials on
+      the driver — a request-sized collect). No read-modify-write
       cycle anywhere: ingest cost is ONE scan of the BATCH, never a
       rewrite of existing index files.
 
@@ -192,9 +201,13 @@ def bm25_search_index(
     query searches its pid-keyed, append-mutated index).
 
     stats/corpus may hold per-ingest-batch PARTIALS (append_to_bm25_
-    index): df / n_docs / a_tok are summed here — a vocabulary-sized
-    aggregate feeding a broadcast, so merge-at-read costs nothing at
-    any scale and keeps the index artifact append-only."""
+    index): the query terms' df partials and the corpus partials come
+    back in ONE collect and are summed here in Python ints (exact). That
+    result is request-sized, |query terms| x |partials| rows, whatever
+    the vocabulary or corpus size, so merge-at-read stays cheap at any
+    scale and the index artifact stays append-only. The postings join
+    the summed (q_id, tok, df, n_docs, a_tok) rows as one broadcast local
+    relation: no stats/corpus aggregate or exchange per search."""
     if milli_sql is None:
         from distributed_query_engine_spark.plans.retrieval import _BM25_MILLI_SQL
 
@@ -202,42 +215,52 @@ def bm25_search_index(
     if base is None or tbl is None:
         base, tag = _generation(sf_dir)
         tbl = f"bm25_postings_{tag}"
-    postings = spark.table(tbl)
-    # compacted=True reads the folded single-relation stats a
-    # compact_bm25_index pass produced (the SUM below is then a no-op
-    # over one partial — kept for one uniform plan shape).
+    # compacted=True reads the folded single-partial stats a
+    # compact_bm25_index pass produced (the sums below then add one
+    # partial each — kept for one uniform path).
     sfx = "_compact" if compacted else ""
-    terms = sorted({t for _, t in qterms})
-    # Only the query terms' df values are consumed (the q join below
-    # restricts to them anyway) — filtering BEFORE the merge aggregate
-    # pushes the literal IN into the stats parquet scan, so the
-    # vocabulary-sized relation is pruned at the source (§6).
+    # One literal IN (a py4j call per term) serves both scans: it pushes
+    # into the stats parquet scan, so only the query terms' partials are
+    # read, and it bucket-prunes the postings scan.
+    in_terms = F.col("tok").isin(sorted({t for _, t in qterms}))
+    # A null tok marks the corpus rows.
+    null_long = F.lit(None).cast("long")
     stats = (
         spark.read.schema(_STATS_SCHEMA)
         .parquet(str(base / f"stats{sfx}"))
-        .filter(F.col("tok").isin(terms))
-        .groupBy("tok")
-        .agg(F.sum("df").alias("df"))
+        .filter(in_terms)
+        .select("tok", "df", null_long.alias("n_docs"), null_long.alias("a_tok"))
     )
-    corpus = spark.read.schema(_CORPUS_SCHEMA).parquet(
-        str(base / f"corpus{sfx}")
-    ).agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok")
+    corpus = (
+        spark.read.schema(_CORPUS_SCHEMA)
+        .parquet(str(base / f"corpus{sfx}"))
+        .select(F.lit(None).cast("string").alias("tok"), null_long.alias("df"), "*")
     )
-    q = spark.createDataFrame(qterms, "q_id long, tok string")
-    # ONE broadcast relation (q_id, tok, df, n_docs, a_tok) instead of
-    # three (q, stats, corpus): the inner joins are associative, so
-    # pre-joining the query terms with the vocabulary stats and corpus
-    # scalars is result-identical, and the postings-side plan carries a
-    # single broadcast hash join — one broadcast build job per search
-    # where there were three, and a smaller plan for the bucket-pruned
-    # planner pass (r16, guide §2.4/§5; measured in OPTIMIZATION_r16.md).
-    # The build stays a distributed aggregate feeding a broadcast — at
-    # scale the vocabulary-sized stats never lands on the driver.
-    q_stats = q.join(stats, "tok").crossJoin(corpus)
+    doc_freq: dict[str, int] = {}
+    n_docs = a_tok = 0
+    for r in stats.unionByName(corpus).collect():
+        if r["tok"] is None:
+            n_docs += r["n_docs"]
+            a_tok += r["a_tok"]
+        else:
+            doc_freq[r["tok"]] = doc_freq.get(r["tok"], 0) + r["df"]
+    # Inner-join semantics: a query term absent from the stats has no
+    # postings either, so it drops out here.
+    q_stats = local_rows(
+        spark,
+        [(q, t, doc_freq[t], n_docs, a_tok) for q, t in qterms if t in doc_freq],
+        "q_id long, tok string, df long, n_docs long, a_tok long",
+    )
+    # A bucketed scan plans one task per bucket, pruned or not; a narrow
+    # coalesce to the session's parallelism keeps the scan bucketed and
+    # its SelectedBucketsCount, and drops the empty tasks.
+    postings = (
+        spark.table(tbl)
+        .filter(in_terms)
+        .coalesce(spark.sparkContext.defaultParallelism)
+    )
     scored = (
-        postings.filter(F.col("tok").isin(terms))
-        .join(F.broadcast(q_stats), "tok")
+        postings.join(F.broadcast(q_stats), "tok")
         .filter(F.col("doc_id") != F.col("q_id"))
         .groupBy("q_id", "doc_id")
         .agg(F.sum(F.expr(milli_sql)).cast("long").alias("score_milli"))

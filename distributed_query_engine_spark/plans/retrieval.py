@@ -374,8 +374,9 @@ def llm_bm25_index(spark, sf_dir):
     """BM25 search against a MATERIALIZED inverted index
     (operators/sparse.py): postings bucketed by token (bucket pruning at
     query time — the sparse analog of the IVF index's cell-partition
-    pruning; plan-asserted SelectedBucketsCount), vocabulary stats
-    broadcast, corpus scalars one row. The query panel's terms are
+    pruning; plan-asserted SelectedBucketsCount); the query terms' df
+    and the corpus scalars come from one request-sized collect of the
+    stats/corpus partials. The query panel's terms are
     collected ONCE as driver-side literals — a search query is request
     metadata, the same class as the similarity family's panel ids — so
     the IN predicate is literal and prunes at planning. Content-

@@ -9,8 +9,11 @@ shuffle-partition sizing, and Arrow for the Python boundary.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+from distributed_query_engine_spark import worker_daemon
 
 # Defaults chosen for 100 TB readiness, not just local green-ness:
 #  - AQE on: coalesces small post-shuffle partitions at sf0.01 AND splits
@@ -72,6 +75,38 @@ def default_parallelism() -> int:
     return positive_int_env("SPARK_GRAFT_CPUS", 32)
 
 
+def memory_env(name: str, default: str) -> str:
+    """The JVM memory size in env knob ``name`` (``default`` when unset),
+    read at use: digits plus an optional k/m/g/t suffix. A malformed or
+    zero value raises ValueError naming the knob, where passing it on
+    would fail later as an opaque gateway-launch error."""
+    raw = os.environ.get(name, default)
+    m = re.fullmatch(r"([0-9]+)[kmgt]?", raw, re.IGNORECASE)
+    if not m or int(m.group(1)) == 0:
+        raise ValueError(
+            f"{name} must be a positive size in digits with an optional "
+            f"k/m/g/t suffix (e.g. 512m, 8g), got {raw!r}"
+        )
+    return raw
+
+
+def python_daemon_conf() -> dict[str, str]:
+    """``spark.python.daemon.module`` set to :mod:`worker_daemon` when
+    the Python workers can use it, else nothing: ``$SPARK_HOME/python``
+    must hold the same pyspark as ``lib/pyspark.zip``, and the module
+    must import from where the workers start (the JVM inherits this
+    process's cwd, which ``python -m`` puts first on the path, and its
+    PYTHONPATH). A static conf: it applies only to a JVM that
+    :func:`get_spark` launches."""
+    home = os.environ.get("SPARK_HOME")
+    if not home or worker_daemon.unzipped_pyspark(home) is None:
+        return {}
+    dirs = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    if not worker_daemon.importable_from([d for d in dirs if d]):
+        return {}
+    return {"spark.python.daemon.module": worker_daemon.__name__}
+
+
 # Streaming state store backend. The default HDFS-backed provider keeps
 # every store's state in executor heap (plus checkpoint deltas) — fine
 # for bounded local state, but at 100 TB-scale key populations the
@@ -131,8 +166,11 @@ def get_spark(
     # must scale with data × parallelism — on a real cluster the same
     # knob is spark.executor.memory per node. Only effective when this
     # call launches the JVM (ignored with a warning on reuse).
-    conf["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    conf["spark.driver.memory"] = memory_env("SPARK_GRAFT_DRIVER_MEM", "8g")
     conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
+    # Workers import pyspark from the unzipped tree, so a reused worker
+    # stops re-reading pyspark.zip on every task (worker_daemon).
+    conf.update(python_daemon_conf())
     provider = state_store_provider()
     if provider:
         conf["spark.sql.streaming.stateStore.providerClass"] = provider

@@ -7,9 +7,10 @@
 # collection, so an entire round of green work scores zero. This gate is
 # cheap (~10s) and catches exactly that class: the full registry must
 # import, every oracle must render, and pytest must collect. The import
-# runs with every integer knob malformed (DQE_STREAM_STATE_PARTITIONS,
-# DQE_VERIFY_BROADCAST_CAP, SPARK_GRAFT_CPUS): knobs are parsed at use,
-# so a bad value must never break import.
+# runs with every integer or size knob malformed
+# (DQE_STREAM_STATE_PARTITIONS, DQE_VERIFY_BROADCAST_CAP, SPARK_GRAFT_CPUS,
+# SPARK_GRAFT_DRIVER_MEM): knobs are parsed at use, so a bad value must
+# never break import.
 #
 # Installed as .git/hooks/pre-commit (see scripts/install_hooks.sh); also
 # runnable by hand. A failing gate means the commit would be invisible to
@@ -17,7 +18,7 @@
 set -e
 cd "$(git rev-parse --show-toplevel)"
 DQE_STREAM_STATE_PARTITIONS=not-a-number DQE_VERIFY_BROADCAST_CAP=not-a-number \
-SPARK_GRAFT_CPUS=not-a-number python - <<'EOF'
+SPARK_GRAFT_CPUS=not-a-number SPARK_GRAFT_DRIVER_MEM=not-a-size python - <<'EOF'
 import warnings
 from distributed_query_engine_spark import registry
 

@@ -765,6 +765,33 @@ def test_read_parquet_table_footer_schema_equals_inference_with_no_job(spark):
             assert df.schema == _inference_read(spark, path).schema, (sf, t)
 
 
+def test_local_rows_plan_in_the_jvm_with_list_schema_and_values(spark):
+    """local_rows gives the schema and rows createDataFrame of the same
+    list gives (ints past 2**53, NaN, nulls, arrays, the empty list),
+    but plans as a LocalTableScan, which reading needs no Python worker
+    for, with the Arrow conf on or off."""
+    import math
+
+    from distributed_query_engine_spark.catalog import local_rows
+
+    ddl = "q_id long, m int, v array<long>, s string, d double"
+    rows = [(2**62 + 1, 2, [3, 4], "x", 0.1), (None,) * 5, (5, 6, [], "", math.nan)]
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prior = spark.conf.get(key)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(key, arrow)
+            for rs in (rows, []):
+                got = local_rows(spark, rs, ddl)
+                want = spark.createDataFrame(rs, ddl)
+                assert got.schema == want.schema
+                assert repr(got.collect()) == repr(want.collect())
+                plan = got._jdf.queryExecution().executedPlan().toString()
+                assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_read_parquet_table_covered_types_and_fallbacks(spark, tmp_path):
     """Covered Arrow types read with an explicit schema (no job); a
     Spark-written directory, NANOS and INT96 timestamps, a decimal

@@ -145,8 +145,43 @@ def test_bm25_index_scan_bucket_prunes(spark, sf_dir):
     plan = _plan(_q("llm_bm25_index", spark, sf_dir))
     m = re.search(r"SelectedBucketsCount: (\d+) out of (\d+)", plan)
     assert m, plan
-    assert int(m.group(1)) <= int(m.group(2))
+    assert int(m.group(1)) < int(m.group(2)), m.group(0)
     assert "Bucketed: true" in plan
+
+
+def test_bm25_search_plan_scans_only_the_postings(spark, sf_dir):
+    # The stats and corpus partials resolve before planning, so the
+    # search plan reads one parquet relation (the bucketed postings,
+    # coalesced) and joins the local query-stats relation by key: no
+    # nested-loop join for the corpus scalars.
+    plan = _plan(_q("llm_bm25_index", spark, sf_dir))
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "bm25_postings_" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Coalesce" in plan
+
+
+def test_bm25_search_resolves_stats_in_one_job(spark, sf_dir):
+    """Building the search runs one Spark job (the collect of the query
+    terms' stats partials plus the corpus partials), and a query term
+    the index never saw drops out without changing the result."""
+    from distributed_query_engine_spark.catalog import Tables
+    from distributed_query_engine_spark.operators import sparse as SP
+    from distributed_query_engine_spark.plans.retrieval import _BM25_K, _Q_IDS
+
+    d = Tables(spark, sf_dir).documents
+    SP.build_bm25_index(spark, d, sf_dir)
+    qterms = SP.panel_qterms(d, _Q_IDS)
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-search", "bm25-search")
+    try:
+        res = SP.bm25_search_index(spark, sf_dir, qterms, k=_BM25_K)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("bm25-search")) == 1
+    absent = qterms + [(_Q_IDS[0], "zz-not-in-the-corpus")]
+    got = SP.bm25_search_index(spark, sf_dir, absent, k=_BM25_K)
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, res.collect()))
 
 
 def test_bm25_index_matches_scan_everything(spark, sf_dir):
