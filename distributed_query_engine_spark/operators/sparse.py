@@ -2,28 +2,31 @@
 production search deployment maintains, as the sparse sibling of
 operators/similarity.py::build_ivf_index.
 
-Layout (all content-addressed by the source corpus fingerprint and
-published under a per-fingerprint tag, so regenerated testdata can never
-serve stale postings):
+Layout: an index store (distributed_query_engine_spark/index_store.py)
+with no quantizer and three relations per segment:
 
-- ``postings`` — (tok, doc_id, tf, dl), written ``bucketBy(N, tok)`` +
-  ``sortBy(tok)``: a query's term set selects only its terms' buckets
-  (``SelectedBucketsCount`` in the scan — plan-asserted), the bucket-file
-  read is the sparse analog of the IVF index's cell-partition pruning.
-  Buckets, not hive partitions: a real vocabulary is millions of tokens
-  — one directory per token would melt the namenode; N fixed bucket
-  files is the standard layout. ``dl`` rides denormalized in the posting
-  row so scoring never joins a doc-length table.
+- ``postings`` — (tok, doc_id, tf, dl), bucketed by tok and read as one
+  table ``PARTITIONED BY (seg) CLUSTERED BY (tok)``: a query's term set
+  selects only its terms' buckets in every committed segment
+  (``SelectedBucketsCount`` in the scan — plan-asserted), the sparse
+  analog of the IVF index's cell-partition pruning. Buckets, not hive
+  partitions: a real vocabulary is millions of tokens — one directory
+  per token would melt the namenode; N fixed bucket files is the
+  standard layout. ``dl`` rides denormalized in the posting row so
+  scoring never joins a doc-length table.
 - ``stats`` — (tok, df): vocabulary-sized; a search reads only its
   query terms' rows.
 - ``corpus`` — (n_docs, a_tok): one row.
 
-Both may hold one partial per ingest batch. A search collects its query
-terms' df partials and the corpus partials in one job and sums them on
-the driver: |query terms| x |partials| rows, request-sized at any
-vocabulary or corpus size. The scoring plan then broadcasts that small
-local relation to the postings scan and runs no stats or corpus
-aggregate, exchange or nested-loop join.
+A build writes segment 0 and each ingest batch its own segment over a
+disjoint document set, so stats and corpus hold one partial per segment
+and merge by SUM. A search collects its query terms' df partials and the
+corpus partials in one job and sums them on the driver: |query terms| x
+|segments| rows, request-sized at any vocabulary or corpus size. The
+scoring plan then broadcasts that small local relation to the postings
+scan and runs no stats or corpus aggregate, exchange or nested-loop
+join. Compaction folds the segments into one base segment with one
+postings file per bucket and single stats and corpus partials.
 
 Query-time: the query's terms are DRIVER-SIDE LITERALS (a search query
 is request metadata, like the panel ids every similarity query takes) —
@@ -35,19 +38,16 @@ result is bit-identical to the scan-everything llm_bm25_topk.
 
 from __future__ import annotations
 
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_query_engine_spark import index_store as IS
 from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import local_rows
 from distributed_query_engine_spark.functions import text as T
 
-N_BUCKETS = 32
-
-_POSTINGS_SCHEMA = "tok STRING, doc_id BIGINT, tf BIGINT, dl BIGINT"
+N_BUCKETS = IS.KINDS["bm25"].relations["postings"].bucket[1]
 
 
 def _generation(sf_dir: str) -> staging.Generation:
@@ -56,7 +56,7 @@ def _generation(sf_dir: str) -> staging.Generation:
     search path must never remove a generation a concurrent process may
     still be scanning (r12 ADVICE)."""
     return staging.generation(
-        "bm25_index", sf_dir, ("documents",), f"bm25:{N_BUCKETS}"
+        "bm25_index", sf_dir, ("documents",), f"{IS.LAYOUT}:bm25:{N_BUCKETS}"
     )
 
 
@@ -82,102 +82,47 @@ def panel_qterms(docs: DataFrame, ids: list[int]) -> list[tuple[int, str]]:
     return sorted({(r["doc_id"], t) for r in rows for t in r["toks"] or ()})
 
 
-# Schemas of the stats/corpus relations write_bm25_index (and the
-# append/compact passes) produce: search and compaction read them
-# without a schema-inference job.
-_STATS_SCHEMA = "tok string, df long"
-_CORPUS_SCHEMA = "n_docs long, a_tok long"
-
-
-def write_bm25_index(
-    spark: SparkSession,
-    docs: DataFrame,
-    base: Path,
-    tbl: str,
-    n_buckets: int = N_BUCKETS,
-) -> None:
-    """Overwrite-build the three index relations for ``docs`` into
-    ``base`` and register the bucketed postings table as ``tbl``."""
+def _segment(docs: DataFrame) -> dict[str, DataFrame]:
+    """One segment's three relations for the documents ``docs``."""
     rel = tf_dl_relation(docs)
-    (
-        rel.select("tok", "doc_id", "tf", "dl")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "tok")
-        .sortBy("tok")
-        .option("path", str(base / "postings"))
-        .mode("overwrite")
-        .saveAsTable(tbl)
-    )
-    rel.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).write.mode(
-        "overwrite"
-    ).parquet(str(base / "stats"))
-    rel.groupBy().agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum("tf").alias("a_tok"),
-    ).write.mode("overwrite").parquet(str(base / "corpus"))
+    return {
+        "postings": rel,
+        "stats": rel.groupBy("tok").agg(F.count(F.lit(1)).alias("df")),
+        # (0, 0), not (0, NULL), for an empty batch: the search sums these
+        "corpus": rel.groupBy().agg(
+            F.countDistinct("doc_id").alias("n_docs"),
+            F.coalesce(F.sum("tf"), F.lit(0).cast("long")).alias("a_tok"),
+        ),
+    }
 
 
-def append_to_bm25_index(
-    spark: SparkSession,
-    docs_new: DataFrame,
-    base: Path,
-    tbl: str,
-    n_buckets: int = N_BUCKETS,
-) -> None:
+def write_bm25_index(docs: DataFrame, base) -> None:
+    """Build a fresh index for ``docs`` at ``base``: segment 0."""
+    IS.build(base, "bm25", {}, lambda: _segment(docs))
+
+
+def append_to_bm25_index(docs_new: DataFrame, base, seg: int) -> None:
     """Ingest a NEW document batch into an EXISTING index WITHOUT a
     rebuild — the sparse sibling of similarity.append_to_ivf_index
-    (VERDICT r12 item 2): the index artifact is APPEND-ONLY.
-
-    - ``postings``: the batch's (tok, doc_id, tf, dl) rows append as new
-      part-files into the SAME bucket layout (saveAsTable validates the
-      bucket spec), so query-time bucket pruning keeps working — the
-      scan reads old+new files of only the query terms' buckets.
-    - ``stats`` / ``corpus``: per-batch PARTIALS append; document sets
-      of batches are disjoint, so df / n_docs / a_tok merge by SUM at
-      read time (bm25_search_index sums the query terms' partials on
-      the driver — a request-sized collect). No read-modify-write
-      cycle anywhere: ingest cost is ONE scan of the BATCH, never a
-      rewrite of existing index files.
+    (VERDICT r12 item 2): the batch becomes segment ``seg``, committed
+    only after all three of its relations are written, and a replay of
+    a committed ``seg`` is a no-op. Ingest cost is ONE scan of the
+    BATCH, never a rewrite of existing index files.
 
     Doc lengths (dl) are per-document, so batch-local computation is
     exact; idf/avgdl come from the SUMMED stats, hence search over an
     incrementally-ingested index is bit-identical to a full rebuild."""
-    rel = tf_dl_relation(docs_new)
-    (
-        rel.select("tok", "doc_id", "tf", "dl")
-        .write.format("parquet")
-        .bucketBy(n_buckets, "tok")
-        .sortBy("tok")
-        .option("path", str(base / "postings"))
-        .mode("append")
-        .saveAsTable(tbl)
-    )
-    rel.groupBy("tok").agg(F.count(F.lit(1)).alias("df")).write.mode(
-        "append"
-    ).parquet(str(base / "stats"))
-    rel.groupBy().agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.sum("tf").alias("a_tok"),
-    ).write.mode("append").parquet(str(base / "corpus"))
+    IS.append(base, "bm25", seg, lambda: _segment(docs_new))
 
 
 def build_bm25_index(spark: SparkSession, docs: DataFrame, sf_dir: str) -> str:
-    """Materialize the index as a staging generation and register its
-    postings table; returns the table's tag. A fingerprint hit skips the
-    build, so a process that finds the generation another one published
-    only registers the bucketed table over the existing files — a
-    rebuild would rewrite postings a concurrent reader is mid-scan on
-    (observed r13)."""
+    """Materialize the index as a staging generation; returns its tag. A
+    fingerprint hit skips the build, so a process that finds the
+    generation another one published only reads it — a rebuild would
+    rewrite postings a concurrent reader is mid-scan on (observed r13)."""
     gen = _generation(sf_dir)
-    tbl = f"bm25_postings_{gen.tag}"
-
-    def build(p: Path) -> None:
-        write_bm25_index(spark, docs, p, tbl)
-        spark.sql(f"DROP TABLE {tbl}")  # external: the files stay
-
-    base = staging.publish(gen, build, spark, ("bm25_postings_",))
-    staging.register_bucketed(
-        spark, tbl, base / "postings", _POSTINGS_SCHEMA, "tok", N_BUCKETS
+    staging.publish(
+        gen, lambda p: write_bm25_index(docs, p), spark, ("bm25_postings_",)
     )
     return gen.tag
 
@@ -188,25 +133,24 @@ def bm25_search_index(
     qterms: list[tuple[int, str]],
     k: int = 5,
     milli_sql: str | None = None,
-    base: Path | None = None,
+    base=None,
     tbl: str | None = None,
-    compacted: bool = False,
 ) -> DataFrame:
     """BM25 top-k against the materialized index. ``qterms`` is the
     tokenized query panel as (q_id, term) literals — request metadata,
     so the ``tok IN`` predicate is literal and the postings scan bucket-
     prunes. ``milli_sql`` is the per-term integer score expression
     (defaults to the shared plans/retrieval.py fragment). ``base``/
-    ``tbl`` override the content-addressed staging (the incremental
-    query searches its pid-keyed, append-mutated index).
+    ``tbl`` name another index and its postings table than the
+    content-addressed staging one (the lifecycle queries search their
+    pid-keyed run dirs).
 
-    stats/corpus may hold per-ingest-batch PARTIALS (append_to_bm25_
-    index): the query terms' df partials and the corpus partials come
-    back in ONE collect and are summed here in Python ints (exact). That
-    result is request-sized, |query terms| x |partials| rows, whatever
-    the vocabulary or corpus size, so merge-at-read stays cheap at any
-    scale and the index artifact stays append-only. The postings join
-    the summed (q_id, tok, df, n_docs, a_tok) rows as one broadcast local
+    The query terms' df partials and the corpus partials of every
+    committed segment come back in ONE collect and are summed here in
+    Python ints (exact). That result is request-sized, |query terms| x
+    |segments| rows, whatever the vocabulary or corpus size, so
+    merge-at-read stays cheap at any scale. The postings join the
+    summed (q_id, tok, df, n_docs, a_tok) rows as one broadcast local
     relation: no stats/corpus aggregate or exchange per search."""
     if milli_sql is None:
         from distributed_query_engine_spark.plans.retrieval import _BM25_MILLI_SQL
@@ -215,10 +159,6 @@ def bm25_search_index(
     if base is None or tbl is None:
         base, tag = _generation(sf_dir)
         tbl = f"bm25_postings_{tag}"
-    # compacted=True reads the folded single-partial stats a
-    # compact_bm25_index pass produced (the sums below then add one
-    # partial each — kept for one uniform path).
-    sfx = "_compact" if compacted else ""
     # One literal IN (a py4j call per term) serves both scans: it pushes
     # into the stats parquet scan, so only the query terms' partials are
     # read, and it bucket-prunes the postings scan.
@@ -226,15 +166,12 @@ def bm25_search_index(
     # A null tok marks the corpus rows.
     null_long = F.lit(None).cast("long")
     stats = (
-        spark.read.schema(_STATS_SCHEMA)
-        .parquet(str(base / f"stats{sfx}"))
+        IS.read(spark, base, "bm25", "stats")
         .filter(in_terms)
         .select("tok", "df", null_long.alias("n_docs"), null_long.alias("a_tok"))
     )
-    corpus = (
-        spark.read.schema(_CORPUS_SCHEMA)
-        .parquet(str(base / f"corpus{sfx}"))
-        .select(F.lit(None).cast("string").alias("tok"), null_long.alias("df"), "*")
+    corpus = IS.read(spark, base, "bm25", "corpus").select(
+        F.lit(None).cast("string").alias("tok"), null_long.alias("df"), "*"
     )
     doc_freq: dict[str, int] = {}
     n_docs = a_tok = 0
@@ -255,7 +192,7 @@ def bm25_search_index(
     # coalesce to the session's parallelism keeps the scan bucketed and
     # its SelectedBucketsCount, and drops the empty tasks.
     postings = (
-        spark.table(tbl)
+        IS.bucketed(spark, base, "bm25", "postings", tbl)
         .filter(in_terms)
         .coalesce(spark.sparkContext.defaultParallelism)
     )
@@ -303,60 +240,28 @@ def force_bucket_pruned(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def compact_bm25_index(
-    spark: SparkSession, base: Path, tbl: str, n_buckets: int = N_BUCKETS
-) -> str:
-    """COMPACT an append-accumulated index: rewrite the postings into
-    exactly one file per token bucket and fold the per-ingest
-    stats/corpus partials into single relations — the background half
-    of the ingest lifecycle (LSM-style: appends keep ingest cheap,
-    compaction restores read efficiency), sparse sibling of
-    similarity.ivf_compaction_report's rewrite phase.
+def compact_bm25_index(spark: SparkSession, base) -> None:
+    """COMPACT an append-accumulated index into one base segment — the
+    background half of the ingest lifecycle (LSM-style: appends keep
+    ingest cheap, compaction restores read efficiency), sparse sibling
+    of similarity.ivf_compaction_report's rewrite phase.
 
-    Mechanics: rows are repartitioned ON THE BUCKET ID itself
-    (``pmod(hash(tok), n)`` — the writer's own bucket function), which
-    makes every shuffle partition bucket-atomic, so the bucketed writer
-    emits ONE file per non-empty bucket (each append had added a file
-    per bucket per writing task; plain ``repartition(n, tok)`` does NOT
-    align with the bucket-id layout — measured 47 files for 32
-    buckets); stats/corpus merge by the same SUM the search path
-    applies at read, so post-compaction reads skip the merge. The
-    compacted table is registered as ``<tbl>_compact`` beside new
-    ``postings_compact`` / ``stats_compact`` / ``corpus_compact`` dirs —
-    a search against it is bit-identical to one against the appended
-    layout (same rows, same stats totals). Returns the compacted table
-    name.
+    The postings are rewritten into exactly one file per token bucket
+    (the store regroups them on the writer's own bucket function; each
+    append had added a file per bucket per writing task), and the
+    per-segment stats/corpus partials fold by the same SUM the search
+    path applies at read. A search after it is bit-identical to one
+    before (same rows, same stats totals) and still bucket-prunes.
 
     100 TB: only file COUNT changes, never content — the rewrite is one
     corpus-index-sized shuffle scheduled off-peak, and bucket pruning
     serves queries identically before and after."""
-    rel = spark.table(tbl).repartition(
-        n_buckets, F.pmod(F.hash("tok"), F.lit(n_buckets))
+    IS.compact(
+        spark,
+        base,
+        "bm25",
+        stats=lambda s: s.groupBy("tok").agg(F.sum("df").alias("df")).coalesce(1),
+        corpus=lambda c: c.agg(
+            F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok")
+        ).coalesce(1),
     )
-    ctbl = f"{tbl}_compact"
-    (
-        rel.write.format("parquet")
-        .bucketBy(n_buckets, "tok")
-        .sortBy("tok")
-        .option("path", str(base / "postings_compact"))
-        .mode("overwrite")
-        .saveAsTable(ctbl)
-    )
-    (
-        spark.read.schema(_STATS_SCHEMA)
-        .parquet(str(base / "stats"))
-        .groupBy("tok")
-        .agg(F.sum("df").alias("df"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(base / "stats_compact"))
-    )
-    (
-        spark.read.schema(_CORPUS_SCHEMA)
-        .parquet(str(base / "corpus"))
-        .agg(F.sum("n_docs").alias("n_docs"), F.sum("a_tok").alias("a_tok"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(base / "corpus_compact"))
-    )
-    return ctbl

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from distributed_query_engine_spark import staging
-from distributed_query_engine_spark.catalog import Tables
+from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions.deterministic import dsum, sql_dsum
 from distributed_query_engine_spark.registry import query
 
@@ -2478,8 +2478,8 @@ def graph_triangle_count(spark, sf_dir):
     # coefficient as 0 instead of dividing by zero (oracle mirrors).
     n_wedges = int(n_wedges or 0)
     clustering_milli = 3000 * n_tri // n_wedges if n_wedges else 0
-    spark = t.lineitem.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        t.lineitem.sparkSession,
         [
             (
                 int(n_nodes),

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from distributed_query_engine_spark import staging
-from distributed_query_engine_spark.catalog import Tables
+from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
 from distributed_query_engine_spark.operators import dedup as D
@@ -831,8 +831,8 @@ def llm_curation_funnel_report(spark, sf_dir):
     n_pass = pass_.count()
     n_uniq = uniq.count()
     n_final = kept.count()
-    spark_ = d.sparkSession
-    return spark_.createDataFrame(
+    return local_rows(
+        d.sparkSession,
         [
             (
                 int(n_raw),

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import index_store as IS
 from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables
 from distributed_query_engine_spark.functions import text as T
@@ -337,10 +338,11 @@ def llm_similarity_ivf_compact(spark, sf_dir):
     """,
 )
 def llm_similarity_ivf_index(spark, sf_dir):
-    """IVF ANN against a PERSISTED index artifact: centroids + corpus
-    assignments materialized to parquet (assignments hive-partitioned
-    by cell_id, so probing n_probe cells partition-prunes the scan to
-    those cells' files), then searched without touching the embeddings
+    """IVF ANN against a PERSISTED index artifact: an index store of
+    the quantizer's centroids + the corpus assignments (hive-partitioned
+    by cell_id inside each segment, so probing n_probe cells
+    partition-prunes the scan to those cells' files), then searched
+    without touching the embeddings
     table at all — query vectors are index lookups too. Identical
     results to llm_similarity_ivf; the build-once/search-many split is
     what a 100 TB deployment actually operates
@@ -349,20 +351,21 @@ def llm_similarity_ivf_index(spark, sf_dir):
     fingerprint hit → search only."""
     e = Tables(spark, sf_dir).embeddings
     gen = staging.generation(
-        "ivf_index", sf_dir, ("embeddings",), f"ivf:{S.N_CELLS}:lowest_id:0"
+        "ivf_index",
+        sf_dir,
+        ("embeddings",),
+        f"{IS.LAYOUT}:ivf:{S.N_CELLS}:lowest_id:0",
     )
     index = staging.publish(gen, lambda p: S.build_ivf_index(e, str(p)))
     return S.topk_cosine_ivf_index(spark, str(index), _QUERY_IDS, k=5)
 
 def _ivf_incr_index_dir(sf_dir: str) -> str:
-    """Per-PROCESS staging dir for the append-mode incremental IVF
-    index (r11 ADVICE): the index is built with overwrite then
-    mutated with ``write.mode('append')``, so two concurrent driver
-    processes sharing one path could interleave (A appends, B's
-    rebuild wipes it, B appends again) and serve duplicated or
-    missing new-batch rows — the exact phantom-row class pid-keyed run
-    dirs exist for. Plain-overwrite indexes
-    (llm_similarity_ivf_index) converge under races and stay shared;
+    """Per-PROCESS dir for the incremental IVF index (r11 ADVICE): an
+    index store has one writer, and two driver processes building and
+    appending into one path would clear each other's segments (A
+    appends, B's rebuild wipes it, B appends again) — the race class
+    pid-keyed run dirs exist for. Build-once indexes
+    (llm_similarity_ivf_index) are published whole and stay shared;
     this one is a :func:`staging.run_dir`."""
     return str(staging.run_dir("ivf_index_incr", staging.key(sf_dir)))
 
@@ -415,30 +418,28 @@ def llm_similarity_ivf_incremental(spark, sf_dir):
     """IVF index LIFECYCLE — ingest a new vector batch WITHOUT
     rebuilding (VERDICT r9 item 4): build the index from the existing
     90% of the corpus (operators/similarity.py::build_ivf_index), then
-    assign the new 10% batch to the EXISTING learned cells and append
-    its part-files into the cell-partitioned assignments relation
+    assign the new 10% batch to the EXISTING learned cells and commit it
+    as segment 1 of the cell-partitioned assignments relation
     (::append_to_ivf_index — one broadcast-centroid scan of just the
     batch), then search the updated index. Because the quantizer is
     unchanged, search results are exactly what a full rebuild would
     return — the is_new column marks hits served from the freshly
-    ingested batch, proving new vectors are immediately searchable.
+    ingested batch, proving new vectors are searchable as soon as their
+    segment commits.
 
     100 TB: this is the shape a production vector store runs daily —
     index build is amortized over many ingest batches; each batch
     costs one scan of the BATCH (not the corpus) against broadcast
-    centroids plus an append into the partition layout the probed
+    centroids plus a new segment in the partition layout the probed
     reads already prune on. Retraining the quantizer (which would
     invalidate every stored assignment) is a separate, rarer event."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
     index = _ivf_incr_index_dir(sf_dir)
     S.build_ivf_index(e.filter(~is_new), index)
-    S.append_to_ivf_index(spark, e.filter(is_new), index)
+    S.append_to_ivf_index(spark, e.filter(is_new), index, seg=1)
     res = S.topk_cosine_ivf_index(spark, index, _QUERY_IDS, k=5)
-    return res.withColumn(
-        "is_new",
-        F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO,
-    )
+    return res.withColumn("is_new", is_new)
 
 
 @query(

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_query_engine_spark.catalog import Tables
+from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
 from distributed_query_engine_spark.operators import dedup as D
@@ -448,7 +448,8 @@ def llm_bpe_train(spark, sf_dir):
     exact-checked without hardcoding what it learns."""
     d = Tables(spark, sf_dir).documents
     rows_out = _train_bpe_merges(d)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows_out,
         "merge_rank bigint, pair_left string, pair_right string, "
         "merged string, n bigint",

@@ -8,8 +8,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from distributed_query_engine_spark import index_store as IS
 from distributed_query_engine_spark import staging
-from distributed_query_engine_spark.catalog import Tables
+from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
 from distributed_query_engine_spark.operators import dedup as D
@@ -834,9 +835,10 @@ def llm_similarity_ivfpq_residual(spark, sf_dir):
 def llm_similarity_ivfpq_index(spark, sf_dir):
     """MATERIALIZED residual IVF-PQ index — the artifact a production
     vector store maintains on disk (operators/similarity.py::
-    build_ivfpq_index / topk_l2_ivfpq_index): broadcast-sized
-    ``centroids/`` and ``codebooks/`` plus a ``codes/`` relation of
-    M_SUB small ints per vector PARTITIONED BY cell_id, so the search
+    build_ivfpq_index / topk_l2_ivfpq_index), an index store: the
+    broadcast-sized quantizer (``centroids`` and ``codebooks``) plus a
+    ``codes`` relation of M_SUB small ints per vector PARTITIONED BY
+    cell_id inside each segment, so the search
     scan is restricted to probed cells by dynamic partition pruning
     (plan-asserted, like llm_similarity_ivf_index) — at 100 TB a
     search reads n_probe/n_cells of the compressed index and nothing
@@ -854,7 +856,7 @@ def llm_similarity_ivfpq_index(spark, sf_dir):
         "ivfpq_index",
         sf_dir,
         ("embeddings",),
-        f"ivfpq:{S.N_CELLS}:{S.PQ_M_SUB}:{S.PQ_K_CODES}:{S.PQ_LLOYD_ITERS}",
+        f"{IS.LAYOUT}:ivfpq:{S.N_CELLS}:{S.PQ_M_SUB}:{S.PQ_K_CODES}:{S.PQ_LLOYD_ITERS}",
     )
     index = str(staging.publish(gen, lambda p: S.build_ivfpq_index(e, str(p))))
     return S.topk_l2_ivfpq_index(spark, index, e, _QUERY_IDS, k=5)
@@ -888,25 +890,23 @@ def llm_similarity_ivfpq_incremental(spark, sf_dir):
     from the existing 90% of the corpus, ingest the new 10% batch by
     assigning it to the STORED cells and encoding it with the STORED
     codebooks (operators/similarity.py::append_to_ivfpq_index — two
-    broadcast passes over the BATCH, an append of part-files into the
+    broadcast passes over the BATCH, committed as segment 1 of the
     cell-partitioned codes layout, existing files never rewritten),
     then search the updated index. The quantizer is a versioned
     artifact — retraining would invalidate every stored code — so the
     oracle replays exactly that contract: Lloyd trains on the existing
     side only, everything is encoded and searchable. is_new marks hits
     served from the freshly ingested batch. The index dir is pid-keyed
-    (append-mode stores do not converge under process races — the r11
-    ADVICE lesson applied at birth)."""
+    (an index store has one writer; two processes building and
+    appending into one path would clear each other's segments — the
+    r11 ADVICE lesson applied at birth)."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
     index = str(staging.run_dir("ivfpq_index_incr", staging.key(sf_dir)))
     S.build_ivfpq_index(e.filter(~is_new), index)
-    S.append_to_ivfpq_index(spark, e.filter(is_new), index)
+    S.append_to_ivfpq_index(spark, e.filter(is_new), index, seg=1)
     res = S.topk_l2_ivfpq_index(spark, index, e, _QUERY_IDS, k=5)
-    return res.withColumn(
-        "is_new",
-        F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO,
-    )
+    return res.withColumn("is_new", is_new)
 
 
 @query("llm_similarity_pq", oracle=_pq_oracle)
@@ -1334,9 +1334,7 @@ def llm_similarity_matryoshka_recall(spark, sf_dir):
         )
 
     exact = top5(base, "ivec", "nsq", [])
-    dims_df = spark.range(0).sparkSession.createDataFrame(
-        [(d,) for d in _MATRYOSHKA_DIMS], "dims int"
-    )
+    dims_df = local_rows(spark, [(d,) for d in _MATRYOSHKA_DIMS], "dims int")
     trunc = base.crossJoin(F.broadcast(dims_df)).select(
         "dims",
         "vec_id",
@@ -1594,9 +1592,10 @@ def llm_similarity_graph_recall(spark, sf_dir):
 def llm_similarity_graph_index(spark, sf_dir):
     """Graph-refined ANN against a PERSISTED index artifact
     (operators/similarity.py::build_graph_index /
-    topk_cosine_graph_index): centroids + cell-partitioned assignments
-    + the bounded-degree edge relation materialized once
-    (content-addressed, atomically published — fingerprint hit skips
+    topk_cosine_graph_index): an index store of the centroids, the
+    cell-partitioned assignments and the bounded-degree edge relation,
+    materialized once (content-addressed, atomically published —
+    fingerprint hit skips
     the build), then searched without touching the embeddings table.
     The graph build's two salted self-joins are the expensive stage;
     amortizing them across queries is what makes the refinement rung
@@ -1607,7 +1606,7 @@ def llm_similarity_graph_index(spark, sf_dir):
         "graph_index",
         sf_dir,
         ("embeddings",),
-        f"graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
+        f"{IS.LAYOUT}:graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
     )
     index = str(staging.publish(gen, lambda p: S.build_graph_index(e, str(p))))
     return S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5)
@@ -1768,7 +1767,7 @@ def llm_similarity_ivf_sq8(spark, sf_dir):
     # Same chain as llm_similarity_graph_refine with the ASYMMETRIC
     # edge-membership predicate: an existing src (vec_id%100 < 90) only
     # knows existing dsts (its edges were built before the batch); a
-    # batch src knows the full corpus (its edges were appended against
+    # batch src knows the full corpus (its edges were computed against
     # existing ∪ batch). Centroid seeds (vec_id < N_CELLS) are all
     # existing under the mod-100 split, so the quantizer — and hence
     # cells, probes, and seed candidates — matches the stored index
@@ -1793,27 +1792,43 @@ def llm_similarity_graph_incremental(spark, sf_dir):
     """Graph-index LIFECYCLE — ingest a new vector batch WITHOUT
     rebuilding (the graph leg of the incremental triangle after IVF and
     BM25): build the index from the existing 90% (build_graph_index),
-    append the new 10% (append_to_graph_index — batch assigned to the
-    STORED centroids; batch-source edges computed against the full
-    corpus in one bounded group join), then search. is_new marks hits
-    served from the fresh batch — new vectors are immediately
-    reachable both as probe candidates (assignments appended) and as
-    expansion targets (any seed landing on them).
+    append the new 10% as segment 1 (append_to_graph_index — batch
+    assigned to the STORED centroids; batch-source edges computed
+    against the full corpus in one bounded group join), then search.
+    is_new marks hits served from the fresh batch — once its segment
+    commits, new vectors are reachable both as probe candidates (the
+    segment's assignments) and as expansion targets (any seed landing
+    on them).
 
     The honest asymmetry (documented, oracle-modeled): existing nodes'
     edge lists don't gain pointers INTO the batch until the periodic
     rebuild — the standard staleness tradeoff every incremental graph
     store makes; the exact oracle encodes it with one membership
     predicate rather than pretending ingest equals a rebuild."""
+    run = staging.run_dir("graph_index_incr", staging.key(sf_dir))
+    return _graph_lifecycle(spark, sf_dir, str(run))
+
+
+def _graph_lifecycle(
+    spark, sf_dir: str, index: str, compact: bool = False, prod: bool = False
+):
+    """The graph index lifecycle in ``index``, a pid-keyed run dir (an
+    index store has one writer): build from the existing 90% as segment
+    0, commit the new 10% as segment 1, compact when asked, search;
+    is_new flags the batch's hits. ``prod`` sizes the knobs from the
+    existing count (:func:`_prod_graph_knobs` — ingest never retrains);
+    otherwise they are the pinned ones the replaying oracles use."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    index = str(staging.run_dir("graph_index_incr", staging.key(sf_dir)))
-    S.build_graph_index(e.filter(~is_new), index)
-    S.append_to_graph_index(spark, e.filter(is_new), index)
-    res = S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5)
-    return res.withColumn(
-        "is_new", F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    )
+    n_cells, n_planes, n_probe = S.N_CELLS, S.N_PLANES, S.N_PROBE
+    if prod:
+        n_cells, n_planes, n_probe = _prod_graph_knobs(e.filter(~is_new).count())
+    S.build_graph_index(e.filter(~is_new), index, n_cells=n_cells, n_planes=n_planes)
+    S.append_to_graph_index(spark, e.filter(is_new), index, seg=1, n_planes=n_planes)
+    if compact:
+        S.compact_graph_index(spark, index, n_planes=n_planes)
+    res = S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5, n_probe=n_probe)
+    return res.withColumn("is_new", is_new)
 
 
 @query(
@@ -1839,7 +1854,8 @@ def llm_similarity_graph_compact(spark, sf_dir):
     (build -> incremental ingest -> compact -> search): after ingest,
     existing nodes' edge lists are stale (no pointers into the batch);
     compact_graph_index recomputes the full symmetric edge relation
-    over the current assignments and atomically swaps it in. The
+    over the committed assignments into one base segment and flips the
+    index MANIFEST to it. The
     CHECKABLE contract: post-compaction search is bit-identical to the
     symmetric full-corpus graph (the refine query's oracle verbatim) —
     the asymmetry the incremental oracle had to model is gone. One
@@ -1847,16 +1863,8 @@ def llm_similarity_graph_compact(spark, sf_dir):
     EXISTING-side one (centroid seeds all land existing under the
     mod-100 split), exactly what a deployment that never retrains on
     ingest serves."""
-    e = Tables(spark, sf_dir).embeddings
-    is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    index = str(staging.run_dir("graph_index_compact", staging.key(sf_dir)))
-    S.build_graph_index(e.filter(~is_new), index)
-    S.append_to_graph_index(spark, e.filter(is_new), index)
-    S.compact_graph_index(spark, index)
-    res = S.topk_cosine_graph_index(spark, index, _QUERY_IDS, k=5)
-    return res.withColumn(
-        "is_new", F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    )
+    run = staging.run_dir("graph_index_compact", staging.key(sf_dir))
+    return _graph_lifecycle(spark, sf_dir, str(run), compact=True)
 
 
 # ---- graph lifecycle at DEPLOYMENT knobs (r15, VERDICT r14 item 4) ----
@@ -1934,7 +1942,7 @@ def llm_similarity_graph_prod(spark, sf_dir):
         "graph_index_prod",
         sf_dir,
         ("embeddings",),
-        f"graph:{S.KNN_G}:{n_cells}:{n_planes}:lowest_id:0",
+        f"{IS.LAYOUT}:graph:{S.KNN_G}:{n_cells}:{n_planes}:lowest_id:0",
     )
     index = staging.publish(
         gen,
@@ -1974,26 +1982,10 @@ def llm_similarity_graph_prod_incremental(spark, sf_dir):
     count — ingest never retrains), append the 10% batch, search. The
     exact-panel oracle makes the recall claim UNDER the documented
     ingest asymmetry: new vectors must be found through the IVF probe
-    (assignments appended at once) even though existing nodes' edge
-    lists don't point at them yet."""
-    e = Tables(spark, sf_dir).embeddings
-    is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    n_cells, n_planes, n_probe = _prod_graph_knobs(
-        e.filter(~is_new).count()
-    )
-    index = str(staging.run_dir("graph_index_prod_incr", staging.key(sf_dir)))
-    S.build_graph_index(
-        e.filter(~is_new), index, n_cells=n_cells, n_planes=n_planes
-    )
-    S.append_to_graph_index(
-        spark, e.filter(is_new), index, n_planes=n_planes
-    )
-    res = S.topk_cosine_graph_index(
-        spark, index, _QUERY_IDS, k=5, n_probe=n_probe
-    )
-    return res.withColumn(
-        "is_new", F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    )
+    (the batch's segment is searchable once it commits) even though
+    existing nodes' edge lists don't point at them yet."""
+    run = staging.run_dir("graph_index_prod_incr", staging.key(sf_dir))
+    return _graph_lifecycle(spark, sf_dir, str(run), prod=True)
 
 
 @query(
@@ -2020,29 +2012,12 @@ def llm_similarity_graph_prod_incremental(spark, sf_dir):
 def llm_similarity_graph_prod_compact(spark, sf_dir):
     """Deployment-knob graph lifecycle, compaction leg: build 90%,
     ingest 10%, compact (full symmetric edge recompute over the stored
-    quantizer, generationally published), search — still exact against
+    quantizer, published by the MANIFEST flip), search — still exact against
     the brute-force panel. Closes the lifecycle at the knobs a
     deployment serves; the pinned-knob trio keeps the fully-replayed
     edge-set oracle at sf0.01."""
-    e = Tables(spark, sf_dir).embeddings
-    is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    n_cells, n_planes, n_probe = _prod_graph_knobs(
-        e.filter(~is_new).count()
-    )
-    index = str(staging.run_dir("graph_index_prod_cpt", staging.key(sf_dir)))
-    S.build_graph_index(
-        e.filter(~is_new), index, n_cells=n_cells, n_planes=n_planes
-    )
-    S.append_to_graph_index(
-        spark, e.filter(is_new), index, n_planes=n_planes
-    )
-    S.compact_graph_index(spark, index, n_planes=n_planes)
-    res = S.topk_cosine_graph_index(
-        spark, index, _QUERY_IDS, k=5, n_probe=n_probe
-    )
-    return res.withColumn(
-        "is_new", F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    )
+    run = staging.run_dir("graph_index_prod_cpt", staging.key(sf_dir))
+    return _graph_lifecycle(spark, sf_dir, str(run), compact=True, prod=True)
 
 
 @query(
@@ -2100,23 +2075,22 @@ def llm_similarity_sq8_incremental(spark, sf_dir):
     """SQ8 index LIFECYCLE — ingest a batch WITHOUT re-deriving the
     quantizer (operators/similarity.py::build_sq8_index /
     append_to_sq8_index / topk_cosine_sq8_index): per-dim min/max are
-    learned from the existing 90% and stored as the versioned ``dims``
-    artifact; the new 10% encodes against them with CLAMPING (an
+    learned from the existing 90% and stored as the quantizer's ``dims``
+    relation; the new 10% encodes against them, as segment 1, with
+    CLAMPING (an
     out-of-range value saturates at the learned grid edge — the
     standard scalar-quantizer ingest rule, same reason IVF never
     retrains centroids on append: re-deriving ranges would invalidate
     every stored code). Search serves entirely from codes + the 1-row
     dims relation; is_new marks batch hits — ingested vectors are
-    immediately searchable at full SQ8 quality."""
+    searchable at full SQ8 quality as soon as their segment commits."""
     e = Tables(spark, sf_dir).embeddings
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
     index = str(staging.run_dir("sq8_index_incr", staging.key(sf_dir)))
     S.build_sq8_index(e.filter(~is_new), index)
-    S.append_to_sq8_index(spark, e.filter(is_new), index)
+    S.append_to_sq8_index(spark, e.filter(is_new), index, seg=1)
     res = S.topk_cosine_sq8_index(spark, index, _QUERY_IDS, k=5)
-    return res.withColumn(
-        "is_new", F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
-    )
+    return res.withColumn("is_new", is_new)
 
 
 def _sq8_u_ctes(existing_only: bool = False) -> str:

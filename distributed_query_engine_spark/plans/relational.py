@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from distributed_query_engine_spark.catalog import Tables
+from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions.deterministic import (
     davg,
     dsum,
@@ -353,7 +353,8 @@ def join_theta_range(spark, sf_dir):
     # with only |bins| comparisons per row. The 100 TB-safe shape for
     # binning: never shuffle the fact table.
     e = Tables(spark, sf_dir).events
-    bins = spark.createDataFrame(
+    bins = local_rows(
+        spark,
         [("low", -1e18, 25.0), ("mid", 25.0, 50.0), ("high", 50.0, 75.0), ("top", 75.0, 1e18)],
         "label string, lo double, hi double",
     )
@@ -865,8 +866,8 @@ def join_null_safe_eq(spark, sf_dir):
         "c_custkey",
         F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")).alias("seg"),
     )
-    spark_ = c.sparkSession
-    d = spark_.createDataFrame(
+    d = local_rows(
+        c.sparkSession,
         [("AUTOMOBILE", "cars"), ("MACHINERY", "machines"), (None, "unsegmented")],
         "seg string, label string",
     )

@@ -19,7 +19,7 @@ from pathlib import Path
 from pyspark.sql import functions as F
 
 from distributed_query_engine_spark import staging
-from distributed_query_engine_spark.catalog import SourceCatalog, Tables
+from distributed_query_engine_spark.catalog import SourceCatalog, Tables, local_rows
 from distributed_query_engine_spark.registry import query
 
 @query("scan_csv_infer", oracle="SELECT * FROM nation")
@@ -608,7 +608,8 @@ def scan_observed_metrics(spark, sf_dir):
     )
     observed.write.mode("overwrite").format("noop").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [(m["n_rows"], m["n_bad_value"], m["value_cents"])],
         "n_rows long, n_bad_value long, value_cents long",
     )

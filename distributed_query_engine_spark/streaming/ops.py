@@ -467,8 +467,8 @@ def stream_ingest_dedup(
     crash at ANY point — between the store write and the sink write,
     or between the sink write and the marker touch — leaves nothing a
     replay cannot erase: the marker is a fast-skip, not the correctness
-    mechanism (contrast _bm25_ingest_batch, whose shared-layout appends
-    retain a documented post-append pre-marker window for batches > 0).
+    mechanism (the BM25 stream gets the same guarantee from the index
+    store's MANIFEST commit, distributed_query_engine_spark/index_store.py).
     The report additionally reads the store through an EXPLICIT list of
     prior generation dirs (never its own ``store/b<id>``, which under
     the r16 write-first layout exists before the report runs), so even
@@ -1325,62 +1325,11 @@ def stream_mv_refresh(
     return spark.read.parquet(str(Path(mv_dir) / f"gen={gens[-1]}"))
 
 
-# Pre-marker crash injection for the recovery tests: batch_ids listed
-# here raise once AFTER application, BEFORE the marker touch — the
-# residual at-least-once window the batch-0 rebuild closes.
-_TEST_CRASH_BEFORE_MARKER: set[int] = set()
-
-# stream_ingest_dedup's analogue: raise once BETWEEN the sink write and
-# the store write — mid-application, the point clean-before-apply must
-# recover from (resolved at call time; defined here beside its sibling).
+# Crash injection for the stream_ingest_dedup recovery test: batch_ids
+# listed here raise once BETWEEN the sink write and the store write —
+# mid-application, the point clean-before-apply must recover from
+# (resolved at call time).
 _TEST_DEDUP_CRASH_BEFORE_MARKER: set[int] = set()
-
-
-def _bm25_ingest_batch(
-    spark: SparkSession, batch_df: DataFrame, batch_id: int, base: Path, tbl: str
-) -> None:
-    """One idempotent ingest step for the streaming BM25 loop. A
-    foreachBatch body is at-least-once (a restart between the sink
-    write and the checkpoint commit re-delivers the batch under the
-    SAME batch_id), and a replayed append would double that batch's
-    postings and stats partials — silently corrupting every df /
-    n_docs / a_tok and hence every score (r13 review). The per-batch_id
-    marker makes replays no-ops; the residual window is a crash BETWEEN
-    the final append and the marker touch, which a transactional sink
-    (Delta/Iceberg MERGE keyed on batch_id) closes entirely — this is
-    the plain-parquet emulation of that discipline, same as
-    stream_mv_refresh's generational writes.
-
-    Batch 0 is special-cased (r14, ADVICE r13): keying its bootstrap
-    on tableExists meant a crash after write_bm25_index but before the
-    marker touch sent the REPLAY of batch 0 down the append branch,
-    doubling every batch-0 posting/stat — and unlike the later-batch
-    window this one is fully avoidable, because a from-scratch rebuild
-    of batch 0 is idempotent under any number of replays. So batch 0
-    always drops the table, clears the partial artifacts, and writes
-    fresh; the marker discipline stays for the append batches (the
-    checkpoint guarantees batch 0 committed before batch 1 ran, so a
-    batch-0 replay can never clobber later batches' appends)."""
-    applied = base / "_applied"
-    applied.mkdir(parents=True, exist_ok=True)
-    marker = applied / f"batch-{batch_id}"
-    if marker.exists():
-        return  # replayed batch: already fully applied
-    from distributed_query_engine_spark.operators import sparse as SP
-
-    if batch_id == 0:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        for sub in ("postings", "stats", "corpus"):
-            shutil.rmtree(base / sub, ignore_errors=True)
-        SP.write_bm25_index(spark, batch_df, base, tbl)
-    else:
-        SP.append_to_bm25_index(spark, batch_df, base, tbl)
-    if batch_id in _TEST_CRASH_BEFORE_MARKER:
-        # test hook: reproduce the applied-but-unmarked window (crash
-        # between the final write and the marker touch)
-        _TEST_CRASH_BEFORE_MARKER.discard(batch_id)
-        raise RuntimeError(f"injected crash before marker, batch {batch_id}")
-    marker.touch()
 
 
 def stream_bm25_ingest(
@@ -1395,11 +1344,15 @@ def stream_bm25_ingest(
     search deployment, end-to-end: document batches arrive as
     micro-batches (maxFilesPerTrigger=1 over doc_id-mod slices of the
     FULL corpus), and each ``foreachBatch`` body tokenizes ONLY the
-    batch and appends its postings into the shared token-bucket layout
-    plus its stats/corpus partials (operators/sparse.py::
-    write_bm25_index for batch 0, ::append_to_bm25_index after) — the
-    same batch-sized ingest cost the batch-incremental query pays, now
-    driven by the streaming engine with checkpointed offsets.
+    batch and commits it as index segment ``batch_id`` — postings in the
+    token-bucket layout plus its stats/corpus partials
+    (operators/sparse.py::append_to_bm25_index) — the same batch-sized
+    ingest cost the batch-incremental query pays, now driven by the
+    streaming engine with checkpointed offsets. foreachBatch is
+    at-least-once: a batch re-delivered under the same batch_id finds its
+    segment committed and no-ops, and one that crashed before its
+    MANIFEST commit is cleared and written again, so a replay can never
+    double a batch's postings or stats.
 
     The INDEX CONTENT is append-order-independent (postings rows are
     per-(doc,tok) facts; stats merge by SUM), so the post-run search
@@ -1425,17 +1378,12 @@ def stream_bm25_ingest(
     base = staging.run_dir("bm25_index_stream", run_key, keep=_resume)
     ckpt = staging.run_dir("checkpoints", run_key, keep=_resume)
     tbl = f"bm25_stream_{staging.key(sf_dir)}_{os.getpid()}"
-    if not _resume:
-        # the run dir was just cleared; a same-process rerun must not
-        # see the previous run's catalog entry and skip the batch-0
-        # bootstrap (on _resume the table IS the surviving index)
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
-        _bm25_ingest_batch(spark, batch_df, batch_id, base, tbl)
+        SP.append_to_bm25_index(batch_df, base, seg=batch_id)
         if _crash_after_batch is not None and batch_id == _crash_after_batch:
-            # post-application, pre-checkpoint-commit — the replay on
-            # resume must hit the batch marker and no-op
+            # post-commit, pre-checkpoint-commit — the replay on resume
+            # finds the segment committed and no-ops
             raise RuntimeError(f"injected crash after batch {batch_id}")
 
     _run_available_now(

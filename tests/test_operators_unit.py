@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from scripts import oracle
 from tests.conftest import SF_UNIT
+from distributed_query_engine_spark import index_store as IS
 from distributed_query_engine_spark.operators import dedup as D
 from distributed_query_engine_spark.operators import multimodal as MM
 from distributed_query_engine_spark.operators import similarity as S
@@ -432,10 +433,10 @@ def test_ivf_hash_spread_and_lloyd_refinement(spark, sf_dir):
 
 def test_ivf_incremental_append_matches_full_rebuild(spark, sf_dir, tmp_path):
     """Batch ingest without rebuild (append_to_ivf_index): new vectors
-    assigned to the EXISTING learned cells land as appended part-files
-    inside the cell-partitioned layout, and search over the updated
-    index returns exactly what a full rebuild over old+new would —
-    the quantizer is unchanged, so the contract is equality."""
+    assigned to the EXISTING learned cells land as a new segment of the
+    cell-partitioned layout, and search over the updated index returns
+    exactly what a full rebuild over old+new would — the quantizer is
+    unchanged, so the contract is equality."""
     from pathlib import Path
 
     from pyspark.sql import functions as F
@@ -449,14 +450,19 @@ def test_ivf_incremental_append_matches_full_rebuild(spark, sf_dir, tmp_path):
     is_new = F.pmod(F.col("vec_id"), F.lit(100)) >= 90
     index = str(tmp_path / "ivf_index")
     S.build_ivf_index(e.filter(~is_new), index, n_cells=8)
-    files_before = set(Path(index, "assignments").rglob("*.parquet"))
-    S.append_to_ivf_index(spark, e.filter(is_new), index)
-    files_after = set(Path(index, "assignments").rglob("*.parquet"))
-    # append adds part-files, never rewrites existing ones
-    assert files_before < files_after
-    # appended files land under ALREADY-EXISTING cell partition dirs
-    old_cells = {f.parent.name for f in files_before}
-    assert {f.parent.name for f in files_after - files_before} <= old_cells
+    stamps = {
+        f: f.stat().st_mtime_ns for f in Path(index, "assignments").rglob("*.parquet")
+    }
+    S.append_to_ivf_index(spark, e.filter(is_new), index, seg=1)
+    assert IS.segments(index) == [0, 1]
+    # append adds a segment, never rewrites existing files
+    for f, m in stamps.items():
+        assert f.stat().st_mtime_ns == m
+    new = set(Path(index, "assignments", "seg=1").rglob("*.parquet"))
+    assert new
+    # the new segment's files sit under ALREADY-EXISTING cells
+    old_cells = {f.parent.name for f in stamps}
+    assert {f.parent.name for f in new} <= old_cells
     got = sorted(
         map(
             tuple,
@@ -1661,8 +1667,8 @@ def test_bucket_stage_is_content_addressed_and_sweeps_stale(tmp_path, spark):
 
 def test_ivfpq_incremental_append_never_rewrites_codes(spark, sf_dir, tmp_path):
     """Compressed-index ingest (append_to_ivfpq_index): the new batch's
-    codes land as APPENDED part-files under already-existing cell
-    partition dirs — existing files untouched — and every ingested
+    codes land as a new segment under already-existing cells — existing
+    files untouched — and every ingested
     vector is immediately searchable through the partition-pruned
     reads (its code rows exist and the search returns its id for a
     query that IS a new vector: self-excluded but siblings findable)."""
@@ -1676,14 +1682,16 @@ def test_ivfpq_incremental_append_never_rewrites_codes(spark, sf_dir, tmp_path):
     is_new = F.pmod(F.col("vec_id"), F.lit(100)) >= 90
     index = str(tmp_path / "ivfpq_index")
     S.build_ivfpq_index(e.filter(~is_new), index)
-    files_before = set(Path(index, "codes").rglob("*.parquet"))
-    S.append_to_ivfpq_index(spark, e.filter(is_new), index)
-    files_after = set(Path(index, "codes").rglob("*.parquet"))
-    assert files_before < files_after
-    old_cells = {f.parent.name for f in files_before}
-    assert {f.parent.name for f in files_after - files_before} <= old_cells
+    stamps = {f: f.stat().st_mtime_ns for f in Path(index, "codes").rglob("*.parquet")}
+    S.append_to_ivfpq_index(spark, e.filter(is_new), index, seg=1)
+    for f, m in stamps.items():
+        assert f.stat().st_mtime_ns == m
+    new = set(Path(index, "codes", "seg=1").rglob("*.parquet"))
+    assert new
+    old_cells = {f.parent.name for f in stamps}
+    assert {f.parent.name for f in new} <= old_cells
     # every ingested vector has exactly M_SUB code rows in the index
-    codes = spark.read.parquet(f"{index}/codes")
+    codes = IS.read(spark, index, "ivfpq", "codes")
     n_new = e.filter(is_new).count()
     assert (
         codes.join(
@@ -1750,7 +1758,7 @@ def test_ivfpq_index_rejects_mismatched_dims(spark, sf_dir, tmp_path):
         "embedding", F.slice("embedding", 1, S.PQ_M_SUB * 2)
     )
     with pytest.raises(Exception, match="shape mismatch"):
-        S.append_to_ivfpq_index(spark, wrong, index)
+        S.append_to_ivfpq_index(spark, wrong, index, seg=1)
     with pytest.raises(Exception, match="shape mismatch"):
         S.topk_l2_ivfpq_index(spark, index, wrong, [0, 1], k=5)
     # matching shape still flows end-to-end
@@ -2199,7 +2207,7 @@ def test_graph_index_matches_inplan_search_and_skips_rebuild(spark, sf_dir):
     calls = []
     gen = staging.generation(
         "graph_index", sf_dir, ("embeddings",),
-        f"graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
+        f"{IS.LAYOUT}:graph:{S.KNN_G}:{S.N_CELLS}:{S.N_PLANES}:lowest_id:0",
     )
     p = staging.publish(gen, lambda path: calls.append(path))
     assert calls == []  # build skipped on hit
@@ -2302,12 +2310,12 @@ def test_graph_incremental_new_vectors_reachable_and_asymmetric(spark, sf_dir, t
     is_new = F.pmod(F.col("vec_id"), F.lit(100)) >= 90
     idx = str(tmp_path / "gidx")
     S.build_graph_index(e.filter(~is_new), idx)
-    edges_before = spark.read.parquet(f"{idx}/edges").count()
-    S.append_to_graph_index(spark, e.filter(is_new), idx)
-    assigned = spark.read.parquet(f"{idx}/assignments")
+    edges_before = IS.read(spark, idx, "graph", "edges").count()
+    S.append_to_graph_index(spark, e.filter(is_new), idx, seg=1)
+    assigned = IS.read(spark, idx, "graph", "assignments")
     new_ids = {r.vec_id for r in e.filter(is_new).select("vec_id").collect()}
     assert new_ids <= {r.vec_id for r in assigned.select("vec_id").collect()}
-    edges = spark.read.parquet(f"{idx}/edges").collect()
+    edges = IS.read(spark, idx, "graph", "edges").collect()
     assert len(edges) > edges_before
     srcs_new = {r.src_id for r in edges if r.src_id in new_ids}
     assert srcs_new == new_ids  # every batch vector got out-edges
@@ -2324,6 +2332,8 @@ def test_graph_compaction_erases_ingest_asymmetry(spark, sf_dir, tmp_path):
     """After compact_graph_index, the edge relation must equal the
     symmetric full-corpus graph under the stored quantizer — existing
     sources regain pointers into the ingested batch."""
+    import os as _os
+
     from pyspark.sql import functions as F
 
     from distributed_query_engine_spark.operators import similarity as S
@@ -2332,23 +2342,18 @@ def test_graph_compaction_erases_ingest_asymmetry(spark, sf_dir, tmp_path):
     is_new = F.pmod(F.col("vec_id"), F.lit(100)) >= 90
     idx = str(tmp_path / "gidx")
     S.build_graph_index(e.filter(~is_new), idx)
-    S.append_to_graph_index(spark, e.filter(is_new), idx)
+    S.append_to_graph_index(spark, e.filter(is_new), idx, seg=1)
     S.compact_graph_index(spark, idx)
-    # generational publish (r14): the pointer must name a new edges_v<N>
-    # directory, the pre-compaction dir must survive as reader grace,
-    # and readers resolve through edges_dir()
-    assert S.edges_dir(idx).endswith("edges_v1")
-    import os as _os
-
-    assert _os.path.isdir(f"{idx}/edges")  # grace generation kept
+    # the MANIFEST names the one base segment; the segments it replaced
+    # stay on disk as reader grace
+    (base,) = IS.segments(idx)
+    assert base < 0
+    assert {"seg=0", "seg=1", f"seg={base}"} <= set(_os.listdir(f"{idx}/edges"))
     got = sorted(
-        (r.src_id, r.dst_id)
-        for r in spark.read.parquet(S.edges_dir(idx)).collect()
+        (r.src_id, r.dst_id) for r in IS.read(spark, idx, "graph", "edges").collect()
     )
     # reference: symmetric edges over the SAME stored assignments
-    full = spark.read.parquet(f"{idx}/assignments").withColumn(
-        "cell_id", F.col("cell_id").cast("long")
-    )
+    full = IS.read(spark, idx, "graph", "assignments")
     want = sorted(
         (r.src_id, r.dst_id)
         for r in S._knn_edges(
@@ -2365,10 +2370,10 @@ def test_graph_compaction_erases_ingest_asymmetry(spark, sf_dir, tmp_path):
 
 
 def test_graph_rebuild_into_compacted_path_repoints_generation(spark, sf_dir, tmp_path):
-    """Rebuilding into a previously-compacted index_path must repoint
-    EDGES_CURRENT at the fresh ``edges/`` and GC the old-corpus
-    edges_v<N> generations — otherwise readers and append_to_graph_index
-    silently resolve stale edges from the PREVIOUS corpus (ADVICE r14)."""
+    """A build over an existing, compacted store starts a fresh MANIFEST:
+    no segment of the old corpus stays on disk or readable, so neither
+    readers nor append_to_graph_index can resolve stale edges from the
+    PREVIOUS corpus (ADVICE r14)."""
     import os as _os
 
     from pyspark.sql import functions as F
@@ -2379,17 +2384,17 @@ def test_graph_rebuild_into_compacted_path_repoints_generation(spark, sf_dir, tm
     idx = str(tmp_path / "gidx")
     S.build_graph_index(e.filter(F.col("vec_id") < 60), idx)
     S.compact_graph_index(spark, idx)
-    assert S.edges_dir(idx).endswith("edges_v1")
+    assert IS.segments(idx) == [-1]
     # REBUILD over a different corpus slice into the same path
     S.build_graph_index(e.filter(F.col("vec_id") >= 40), idx)
-    assert S.edges_dir(idx).endswith(_os.sep + "edges")
-    assert not [d for d in _os.listdir(idx) if d.startswith("edges_v")]
-    edges = spark.read.parquet(S.edges_dir(idx)).collect()
+    assert IS.segments(idx) == [0]
+    assert sorted(_os.listdir(f"{idx}/edges")) == ["seg=0"]
+    edges = IS.read(spark, idx, "graph", "edges").collect()
     srcs = {r.src_id for r in edges} | {r.dst_id for r in edges}
     assert srcs and all(v >= 40 for v in srcs), "stale old-corpus edges resolved"
-    # and incremental ingest after the rebuild appends to the fresh dir
-    S.append_to_graph_index(spark, e.filter(F.col("vec_id") < 10), idx)
-    assert spark.read.parquet(S.edges_dir(idx)).count() > len(edges)
+    # and incremental ingest after the rebuild adds to the fresh store
+    S.append_to_graph_index(spark, e.filter(F.col("vec_id") < 10), idx, seg=1)
+    assert IS.read(spark, idx, "graph", "edges").count() > len(edges)
 
 
 def test_sq8_index_ingest_clamps_against_stored_dims(spark, sf_dir, tmp_path):
@@ -2397,6 +2402,8 @@ def test_sq8_index_ingest_clamps_against_stored_dims(spark, sf_dir, tmp_path):
     encode against the STORED per-dim ranges (clamped — codes stay in
     [0,255] even for out-of-range values) and never rewrite existing
     codes or the dims relation."""
+    import pathlib
+
     from pyspark.sql import functions as F
 
     from distributed_query_engine_spark.operators import similarity as S
@@ -2405,27 +2412,20 @@ def test_sq8_index_ingest_clamps_against_stored_dims(spark, sf_dir, tmp_path):
     is_new = F.pmod(F.col("vec_id"), F.lit(100)) >= 90
     idx = str(tmp_path / "sq8idx")
     S.build_sq8_index(e.filter(~is_new), idx)
-    import pathlib
 
-    dims_before = {
-        p.name: p.stat().st_mtime_ns
-        for p in pathlib.Path(idx, "dims").glob("part-*.parquet")
-    }
-    codes_before = {
-        p.name: p.stat().st_mtime_ns
-        for p in pathlib.Path(idx, "codes").glob("part-*.parquet")
-    }
-    S.append_to_sq8_index(spark, e.filter(is_new), idx)
-    dims_after = {
-        p.name: p.stat().st_mtime_ns
-        for p in pathlib.Path(idx, "dims").glob("part-*.parquet")
-    }
-    assert dims_after == dims_before  # quantizer untouched
-    for name, m in codes_before.items():
-        assert (
-            pathlib.Path(idx, "codes", name).stat().st_mtime_ns == m
-        )  # existing codes never rewritten
-    codes = spark.read.parquet(f"{idx}/codes")
+    def stamps():
+        return {
+            p: p.stat().st_mtime_ns
+            for p in pathlib.Path(idx).rglob("part-*.parquet")
+        }
+
+    before = stamps()
+    S.append_to_sq8_index(spark, e.filter(is_new), idx, seg=1)
+    after = stamps()
+    # quantizer and existing codes untouched; the batch is a new segment
+    assert {p: after[p] for p in before} == before
+    assert all(p.parent.name == "seg=1" for p in set(after) - set(before))
+    codes = IS.read(spark, idx, "sq8", "codes")
     assert codes.count() == e.count()
     bad = codes.filter(
         F.exists("codes", lambda c: (c < 0) | (c > S.SQ_LEVELS))

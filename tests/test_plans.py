@@ -129,6 +129,7 @@ def test_ivf_incremental_assignment_broadcasts_and_search_prunes(
     # pruned probe reads.
     from pyspark.sql import functions as F
 
+    from distributed_query_engine_spark import index_store as IS
     from distributed_query_engine_spark.catalog import Tables
     from distributed_query_engine_spark.operators import similarity as S
     from distributed_query_engine_spark.plans.llm import (
@@ -141,7 +142,7 @@ def test_ivf_incremental_assignment_broadcasts_and_search_prunes(
     index = _ivf_incr_index_dir(sf_dir)
     is_new = F.pmod(F.col("vec_id"), F.lit(_IVF_NEW_MOD)) >= _IVF_NEW_LO
     S.build_ivf_index(e.filter(~is_new), index)
-    cents = spark.read.parquet(f"{index}/centroids")
+    cents = IS.quantizer(spark, index, "ivf", "centroids")
     base = S.with_int_vec(e.filter(is_new)).select("vec_id", "ivec", "nsq")
     assign_plan = _plan(S._assign_to(base, cents))
     assert "MapInPandas" in assign_plan, assign_plan

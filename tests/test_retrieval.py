@@ -274,47 +274,40 @@ def test_bm25_incremental_scan_still_bucket_prunes(spark, sf_dir):
 def test_bm25_append_is_batch_only_and_appends_partials(spark, sf_dir, tmp_path):
     # append_to_bm25_index must never rewrite existing index files
     # (ingest cost is the BATCH scan only), and stats/corpus gain
-    # per-batch partial files whose SUM equals the full-corpus stats.
+    # per-segment partials whose SUM equals the full-corpus stats.
+    from distributed_query_engine_spark import index_store as IS
     from distributed_query_engine_spark.operators import sparse as SP
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(60)
     old, new = d.filter("doc_id % 3 != 0"), d.filter("doc_id % 3 = 0")
-    base, tbl = tmp_path / "idx", "bm25_incr_unit_test"
-    try:
-        SP.write_bm25_index(spark, old, base, tbl)
-        before = {
-            p: p.stat().st_mtime_ns for p in (base / "postings").rglob("*.parquet")
-        }
-        SP.append_to_bm25_index(spark, new, base, tbl)
-        after = {
-            p: p.stat().st_mtime_ns for p in (base / "postings").rglob("*.parquet")
-        }
-        for p, m in before.items():
-            assert after[p] == m, f"existing index file rewritten: {p}"
-        assert len(after) > len(before)
-        # summed partials == full-corpus stats
-        from pyspark.sql import functions as F
+    base = tmp_path / "idx"
+    SP.write_bm25_index(old, base)
+    before = {p: p.stat().st_mtime_ns for p in base.rglob("*.parquet")}
+    SP.append_to_bm25_index(new, base, seg=1)
+    after = {p: p.stat().st_mtime_ns for p in base.rglob("*.parquet")}
+    for p, m in before.items():
+        assert after[p] == m, f"existing index file rewritten: {p}"
+    assert len(after) > len(before)
+    assert IS.segments(base) == [0, 1]
+    # summed partials == full-corpus stats
+    from pyspark.sql import functions as F
 
-        got = (
-            spark.read.parquet(str(base / "corpus"))
-            .agg(F.sum("n_docs"), F.sum("a_tok"))
-            .first()
-        )
-        rel = SP.tf_dl_relation(d)
-        want = rel.agg(
-            F.countDistinct("doc_id"), F.sum("tf")
-        ).first()
-        assert tuple(got) == tuple(want)
-        merged_df = (
-            spark.read.parquet(str(base / "stats"))
-            .groupBy("tok").agg(F.sum("df").alias("df"))
-        )
-        full_df = rel.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
-        assert sorted(map(tuple, merged_df.collect())) == sorted(
-            map(tuple, full_df.collect())
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    corpus = IS.read(spark, base, "bm25", "corpus")
+    assert corpus.count() == 2  # one partial per segment
+    got = corpus.agg(F.sum("n_docs"), F.sum("a_tok")).first()
+    rel = SP.tf_dl_relation(d)
+    want = rel.agg(
+        F.countDistinct("doc_id"), F.sum("tf")
+    ).first()
+    assert tuple(got) == tuple(want)
+    merged_df = (
+        IS.read(spark, base, "bm25", "stats")
+        .groupBy("tok").agg(F.sum("df").alias("df"))
+    )
+    full_df = rel.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    assert sorted(map(tuple, merged_df.collect())) == sorted(
+        map(tuple, full_df.collect())
+    )
 
 
 def test_panel_qterms_equal_tf_dl_terms_in_one_job(spark, sf_dir):
@@ -348,12 +341,15 @@ def test_panel_qterms_equal_tf_dl_terms_in_one_job(spark, sf_dir):
 
 
 def test_bm25_compaction_one_file_per_bucket_same_results(spark, sf_dir, tmp_path):
-    """Compaction contract: post-compact postings hold exactly one file
-    per non-empty bucket (appends had accumulated one per bucket per
-    batch), search results are bit-identical, and the compacted stats
-    fold to single-partial relations with unchanged totals."""
+    """Compaction contract: the base segment's postings hold exactly one
+    file per non-empty bucket (appends had accumulated one per bucket
+    per segment and task), search results are bit-identical, and the
+    compacted stats fold to single partials with unchanged totals."""
+    import re
+
     from pyspark.sql import functions as F
 
+    from distributed_query_engine_spark import index_store as IS
     from distributed_query_engine_spark.operators import sparse as SP
     from distributed_query_engine_spark.plans.retrieval import _Q_IDS, _BM25_K
 
@@ -361,52 +357,42 @@ def test_bm25_compaction_one_file_per_bucket_same_results(spark, sf_dir, tmp_pat
     old, new = d.filter("doc_id % 4 != 0"), d.filter("doc_id % 4 = 0")
     base, tbl = tmp_path / "idx", "bm25_cmp_unit_test"
     try:
-        SP.write_bm25_index(spark, old, base, tbl)
-        SP.append_to_bm25_index(spark, new, base, tbl)
-        files_before = len(list((base / "postings").glob("part-*.parquet")))
-        ctbl = SP.compact_bm25_index(spark, base, tbl)
-        files_after = len(
-            list((base / "postings_compact").glob("part-*.parquet"))
-        )
-        assert files_after < files_before
-        assert files_after <= SP.N_BUCKETS
-        # one file per bucket id present (bucket id = the _NNNNN suffix
-        # of a bucketed part file, not the leading task id)
-        import re
-
-        buckets = [
-            re.search(r"_(\d{5})\.c", p.name).group(1)
-            for p in (base / "postings_compact").glob("part-*.parquet")
-        ]
-        assert len(buckets) == len(set(buckets))
+        SP.write_bm25_index(old, base)
+        SP.append_to_bm25_index(new, base, seg=1)
+        files_before = len(list((base / "postings").rglob("part-*.parquet")))
         qterms = SP.panel_qterms(d, _Q_IDS)
-        before = sorted(
-            tuple(r)
-            for r in SP.bm25_search_index(
-                spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=tbl
-            ).collect()
-        )
-        after = sorted(
-            tuple(r)
-            for r in SP.bm25_search_index(
-                spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=ctbl,
-                compacted=True,
-            ).collect()
-        )
-        assert before == after
-        # folded stats: single partial, same totals
-        assert len(list((base / "stats_compact").glob("part-*.parquet"))) == 1
-        tot = spark.read.parquet(str(base / "corpus_compact")).collect()
-        assert len(tot) == 1
+
+        def search():
+            return sorted(
+                tuple(r)
+                for r in SP.bm25_search_index(
+                    spark, sf_dir, qterms, k=_BM25_K, base=base, tbl=tbl
+                ).collect()
+            )
+
+        before = search()
         raw = (
-            spark.read.parquet(str(base / "corpus"))
+            IS.read(spark, base, "bm25", "corpus")
             .agg(F.sum("n_docs"), F.sum("a_tok"))
             .first()
         )
+        SP.compact_bm25_index(spark, base)
+        (seg,) = IS.segments(base)
+        files = list((base / "postings" / f"seg={seg}").glob("part-*.parquet"))
+        assert len(files) < files_before
+        assert len(files) <= SP.N_BUCKETS
+        # one file per bucket id present (bucket id = the _NNNNN suffix
+        # of a bucketed part file, not the leading task id)
+        buckets = [re.search(r"_(\d{5})\.c", p.name).group(1) for p in files]
+        assert len(buckets) == len(set(buckets))
+        assert search() == before
+        # folded stats: single partial, same totals
+        assert len(list((base / "stats" / f"seg={seg}").glob("part-*.parquet"))) == 1
+        tot = IS.read(spark, base, "bm25", "corpus").collect()
+        assert len(tot) == 1
         assert (tot[0]["n_docs"], tot[0]["a_tok"]) == tuple(raw)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_compact")
 
 
 def test_bm25_compact_search_still_bucket_prunes(spark, sf_dir):
@@ -435,25 +421,38 @@ def test_stream_bm25_ingest_multibatch_and_matches_batch_index(spark, sf_dir):
 
 def test_bm25_ingest_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     """foreachBatch is at-least-once: replaying a batch under the same
-    batch_id must be a no-op (marker guard), never a double-append that
-    inflates df/n_docs/a_tok."""
-    from distributed_query_engine_spark.streaming.ops import _bm25_ingest_batch
+    batch_id (its segment id) must be a no-op, never a double-append
+    that inflates df/n_docs/a_tok. An empty batch commits a zero partial
+    the search still sums."""
+    from distributed_query_engine_spark import index_store as IS
+    from distributed_query_engine_spark.operators import sparse as SP
 
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     b0, b1 = d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1")
-    base, tbl = tmp_path / "idx", "bm25_replay_unit_test"
+    base = tmp_path / "idx"
+
+    def counts():
+        return tuple(
+            IS.read(spark, base, "bm25", r).count()
+            for r in ("postings", "stats", "corpus")
+        )
+
+    SP.append_to_bm25_index(b0, base, seg=0)
+    SP.append_to_bm25_index(b1, base, seg=1)
+    n = counts()
+    # replay both batches (same ids) — nothing may change
+    SP.append_to_bm25_index(b0, base, seg=0)
+    SP.append_to_bm25_index(b1, base, seg=1)
+    assert counts() == n
+    # a NEW batch id still applies
+    SP.append_to_bm25_index(b0.limit(3), base, seg=2)
+    assert counts()[0] > n[0]
+    tbl = "bm25_replay_unit_test"
     try:
-        _bm25_ingest_batch(spark, b0, 0, base, tbl)
-        _bm25_ingest_batch(spark, b1, 1, base, tbl)
-        n_post = spark.table(tbl).count()
-        n_corpus = spark.read.parquet(str(base / "corpus")).count()
-        # replay both batches (same ids) — nothing may change
-        _bm25_ingest_batch(spark, b0, 0, base, tbl)
-        _bm25_ingest_batch(spark, b1, 1, base, tbl)
-        assert spark.table(tbl).count() == n_post
-        assert spark.read.parquet(str(base / "corpus")).count() == n_corpus
-        # a NEW batch id still applies
-        _bm25_ingest_batch(spark, b0.limit(3), 2, base, tbl)
-        assert spark.table(tbl).count() > n_post
+        qterms = SP.panel_qterms(d, [0, 1])
+        before = SP.bm25_search_index(spark, sf_dir, qterms, base=base, tbl=tbl)
+        SP.append_to_bm25_index(b0.limit(0), base, seg=3)
+        after = SP.bm25_search_index(spark, sf_dir, qterms, base=base, tbl=tbl)
+        assert sorted(after.collect()) == sorted(before.collect())
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -12,9 +12,10 @@ here runs the loop TWICE:
    re-delivers batch N under the same batch_id.
 
 The final sink of (2) must be row-identical to (1): for the append
-sinks that exercises the per-batch_id marker (without it the replay
-doubles batch N's rows), and for the MV it exercises generational
-overwrite idempotence. Reference semantics: the host engine's exchange
+sinks that exercises the per-batch_id guard (the dedup sink's marker,
+the BM25 index's committed segment; without it the replay doubles batch
+N's rows), and for the MV it exercises generational overwrite
+idempotence. Reference semantics: the host engine's exchange
 operators assume exactly-once delivery from its runtime (reference
 diff:140-143 — CIterator materialization); Spark's foreachBatch is
 at-least-once, so the guard is repo-side and must be proven under an
@@ -64,9 +65,9 @@ def test_ingest_dedup_crash_after_batch2_resumes_row_identical(spark, sf_dir):
 def test_bm25_ingest_crash_after_batch2_resumes_score_identical(spark, sf_dir):
     expected = _rows(ops.stream_bm25_ingest(spark, sf_dir))
     got = _rows(_crash_resume(ops.stream_bm25_ingest, spark, sf_dir, 2))
-    # a replayed append without the marker would double batch 2's
-    # postings and stats partials — silently shifting every BM25 score;
-    # row-identity proves the guard held under an actual kill
+    # a replayed append of an uncommitted-looking batch would double
+    # batch 2's postings and stats partials — silently shifting every
+    # BM25 score; row-identity proves the guard held under an actual kill
     assert got == expected
 
 
@@ -104,20 +105,29 @@ def test_ingest_dedup_crash_MID_application_resumes_row_identical(spark, sf_dir)
     assert sigs.count() == sigs.distinct().count()
 
 
-def test_bm25_ingest_crash_DURING_batch0_bootstrap_rebuilds(spark, sf_dir):
-    """ADVICE r13: a crash after write_bm25_index but BEFORE the batch-0
-    marker used to send the replay down the append branch (tableExists
-    was the bootstrap key), doubling every batch-0 posting. The
-    pre-marker injection reproduces exactly that window; batch 0 now
-    always rebuilds from scratch, so the resumed scores must be exact."""
+def test_bm25_ingest_crash_DURING_batch0_bootstrap_rebuilds(spark, sf_dir, monkeypatch):
+    """ADVICE r13: a crash after batch 0's relations are written but
+    BEFORE it is committed used to send the replay down the append
+    branch, doubling every batch-0 posting. Failing the MANIFEST commit
+    of batch 0 reproduces exactly that window; the replay must find the
+    segment uncommitted, rewrite it from scratch, and score exactly."""
+    import os
+
     expected = _rows(ops.stream_bm25_ingest(spark, sf_dir))
-    ops._TEST_CRASH_BEFORE_MARKER.add(0)
-    try:
-        with pytest.raises((StreamingQueryException, RuntimeError)) as ei:
-            ops.stream_bm25_ingest(spark, sf_dir)
-        assert "injected crash" in str(ei.value)
-    finally:
-        ops._TEST_CRASH_BEFORE_MARKER.discard(0)
+    replace = os.replace
+    crashed = []
+
+    def commit_fails_once(src, dst):
+        if str(dst).endswith("MANIFEST") and not crashed:
+            crashed.append(dst)
+            raise RuntimeError("injected crash before the MANIFEST commit")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", commit_fails_once)
+    with pytest.raises((StreamingQueryException, RuntimeError)) as ei:
+        ops.stream_bm25_ingest(spark, sf_dir)
+    assert "injected crash" in str(ei.value)
+    monkeypatch.undo()
     got = _rows(ops.stream_bm25_ingest(spark, sf_dir, _resume=True))
     assert got == expected
 
