@@ -34,10 +34,14 @@ Design for 100 TB:
 
 from __future__ import annotations
 
+from pathlib import Path
+
+import pyarrow.parquet as pa_pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.session import positive_int_env
 
 P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
@@ -115,8 +119,7 @@ def doc_token_arrays(
     )
     if spread:
         base = _spread_narrow_scan(base)
-    toks = F.array_distinct(F.split(F.col("text"), " "))
-    return base.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
+    return base.selectExpr("doc_id", _TOKS_SQL).filter("size(toks) > 0")
 
 
 def _md5_60(col) -> Column:
@@ -145,6 +148,7 @@ def _tid_sql(tok: str) -> str:
 # did, so every expression types — and evaluates — exactly as its Column
 # form; the exploded minhash_signatures aggregation keeps the Column
 # arithmetic as the independent reference.
+_TOKS_SQL = "array_distinct(split(text, ' ')) AS toks"
 _TIDS_SQL = f"transform(toks, t -> {_tid_sql('t')}) AS tids"
 _MINHASH_SQL = [
     "array_min(transform(tids, t -> (t * {} + {}) % {})) AS m{}".format(
@@ -251,15 +255,15 @@ def minhash_signatures(tokens_tid: DataFrame) -> DataFrame:
     return tokens_tid.groupBy("doc_id").agg(*aggs)
 
 
-def _bands(df: DataFrame, id_col: str, keys: str) -> DataFrame:
-    """(id, band_keys, band, band_key): one row per band of each ``df``
-    row, for ``id_col`` (a SQL select item) and ``keys`` (SQL text of
-    the row's band-key array). Rows agreeing on a band's key collide.
-    ``band_keys`` carries ALL of the row's band keys so the pairing join
-    can dedupe multi-band collisions with a codegen filter
-    (:data:`_FIRST_BAND_SQL`) instead of a second (full-pair-set-sized)
-    distinct shuffle."""
-    return df.selectExpr(id_col, f"{keys} AS band_keys").selectExpr(
+def _bands(df: DataFrame, id_col: str, keys: str, *carry: str) -> DataFrame:
+    """(id, *carry, band_keys, band, band_key): one row per band of each
+    ``df`` row, for ``id_col`` and the ``carry`` columns (SQL select
+    items) and ``keys`` (SQL text of the row's band-key array). Rows
+    agreeing on a band's key collide. ``band_keys`` carries ALL of the
+    row's band keys so the pairing join can dedupe multi-band collisions
+    with a codegen filter (:data:`_FIRST_BAND_SQL`) instead of a second
+    (full-pair-set-sized) distinct shuffle."""
+    return df.selectExpr(id_col, *carry, f"{keys} AS band_keys").selectExpr(
         "*", "posexplode(band_keys) AS (band, band_key)"
     )
 
@@ -502,6 +506,14 @@ def signature_groups(sigs: DataFrame, keys: list[str] = SIG_COLS) -> DataFrame:
     )
 
 
+# The parquet schema of a signature store generation: the minhash
+# :func:`signature_groups` rows. Every read of a store the engine wrote
+# passes it, so Spark runs no schema-inference job over the footers.
+SIG_STORE_SCHEMA = ", ".join(
+    [f"{c} bigint" for c in SIG_COLS] + ["members array<bigint>", "rep bigint"]
+)
+
+
 def candidate_pairs_grouped(groups: DataFrame) -> DataFrame:
     """Candidate pairs via SIGNATURE GROUPING — same pair set as
     ``candidate_pairs(lsh_bands(sigs))`` for
@@ -669,8 +681,9 @@ def incremental_minhash_dedup(
       over the corpus partitions. A mega-bucket band key (boilerplate)
       fans out per corpus row bounded by the batch's docs in that
       bucket, spread across every corpus partition — no single-task k².
-    - In-batch candidates reuse :func:`candidate_pairs` (salted,
-      first-collision-deduped) over the SMALL batch band relation.
+    - In-batch candidates come from the same broadcast join: the SMALL
+      batch band relation probes it too (first-collision-deduped, each
+      rep pair once).
     - In production the corpus side of signature generation comes from a
       SIGNATURE STORE (grouped signature rows, appended per ingested
       batch — :func:`incremental_dedup_from_store`) rather than
@@ -711,14 +724,22 @@ def _incremental_candidates(
     size (per-doc banding measured 9.4 s vs 3.4 s grouped at sf0.1 for
     the 20% batch split — slower than the FULL all-pairs dedup until
     grouped).
-    Band-join the group REPRESENTATIVES (the batch's group-level band
-    relation broadcasts; the corpus side never shuffles; no salt and no
-    ordering filter, only :data:`_FIRST_BAND_SQL`). Identical signatures
-    across sides share every band key, so the rep join catches them at
-    band 0. The store hits and the in-batch grouped self-join
-    (:func:`candidate_pairs_grouped`'s within- and cross-group rows)
-    expand their member lists through ONE :func:`_expand_members` call —
-    one member fan-out exchange for the whole candidate relation.
+
+    ONE hit join: the batch's group bands, each carrying its member
+    list, are broadcast, and the store's group bands (members carried
+    too) plus the batch's own bands probe them — a map-side join, so no
+    store row is exchanged; only hit rows (batch-sized) reach the member
+    fan-out exchange and the verify. A store row hits the batch group it
+    first collides with (:data:`_FIRST_BAND_SQL`; no salt, no ordering
+    filter); a batch row hits the batch groups with a larger rep (each
+    unordered in-batch rep pair once). Identical signatures across sides
+    share every band key, so the join catches them at band 0. The hit
+    rows and the batch's within-group rows expand their member lists
+    through ONE :func:`_expand_members` call — one member fan-out
+    exchange for the whole candidate relation. The in-batch rep pairs
+    are built by one task per batch split instead of the salted
+    :func:`candidate_pairs`: the batch is small, and its quadratic part
+    is the member expansion, which the fan-out exchange spreads.
     Returns (pairs, hit_ids): pairs are (doc_a = batch doc, doc_b =
     corpus doc) plus in-batch pairs oriented later-as-new.
 
@@ -734,30 +755,25 @@ def _incremental_candidates(
     generation), so each (batch doc, store doc) pair still arises
     exactly once.
 
-    ``hit_ids`` are the store-side candidate-hit doc ids, derived from
-    the rep band join + a member explode of the HIT GROUPS — linear in
-    group membership, never touching the quadratic pair relation. The
-    set is exactly the distinct ``doc_b`` values of the cross pairs
-    (every member of a matched store group appears as a doc_b), which is
-    what the fetch-by-id verify needs; in-batch doc_b values are omitted
-    by construction, matching the caller's anti-join of the batch (r16 —
-    this is what lets the caller drop the pairs localCheckpoint: the
-    pair relation now has exactly ONE consumer, the verify join)."""
-    gn_bands = _rep_bands(gn)
-    rep_pairs = (
-        _rep_bands(gc)
-        .alias("a")
-        .join(F.broadcast(gn_bands.alias("b")), ["band", "band_key"])
-        .filter(F.expr(_FIRST_BAND_SQL))
-        .selectExpr("b.doc_id AS doc_a", "a.doc_id AS doc_b")
+    ``hit_ids`` are the members of the store groups the hit join
+    matched — linear in group membership, never touching the quadratic
+    pair relation, and exactly the distinct ``doc_b`` values of the
+    store pairs, which is what the fetch-by-id verify needs. A store
+    group matched by several batch groups repeats its members; the
+    caller's semi join ignores repeats, so no distinct shuffle."""
+    batch = _bands(gn, "rep", _BAND_KEYS_SQL, "members")
+    probe = _bands(gc, "rep", _BAND_KEYS_SQL, "members", "false AS in_batch")
+    probe = probe.unionByName(
+        _bands(gn, "rep", _BAND_KEYS_SQL, "members", "true AS in_batch")
     )
-    gn_members = gn.select("rep", "members")
-    batch_rows = _group_rows(gn).unionByName(
-        _pair_rows(candidate_pairs(gn_bands), gn_members, gn_members)
+    hits = (
+        probe.alias("a")
+        .join(F.broadcast(batch.alias("b")), ["band", "band_key"])
+        .filter(f"({_FIRST_BAND_SQL}) AND (NOT a.in_batch OR a.rep < b.rep)")
+        .selectExpr("a.in_batch", "b.members AS ma", "a.members AS mb")
     )
-    rows = batch_rows.withColumn("in_batch", F.lit(True)).unionByName(
-        _pair_rows(rep_pairs, gn_members, gc.select("rep", "members"))
-        .withColumn("in_batch", F.lit(False))
+    rows = _group_rows(gn).selectExpr("*", "true AS in_batch").unionByName(
+        hits.selectExpr("*", "false AS within")
     )
     # Store hits keep (batch doc, store doc); in-batch pairs put the
     # LATER arrival first — the "new" doc flagged against the earlier.
@@ -765,14 +781,38 @@ def _incremental_candidates(
         "IF(in_batch, greatest(xa, xb), xa) AS doc_a",
         "IF(in_batch, least(xa, xb), xb) AS doc_b",
     )
-    # Semi join (not inner): rep_pairs repeats a corpus rep once per
-    # matched batch group; semi keeps each hit group once. Members are
-    # disjoint across groups AND generations, so the explode is already
-    # duplicate-free — no distinct shuffle.
-    hit_ids = gc.join(
-        rep_pairs.select(F.col("doc_b").alias("rep")), "rep", "left_semi"
-    ).select(F.explode("members").alias("doc_id"))
+    hit_ids = hits.filter("NOT in_batch").selectExpr("explode(mb) AS doc_id")
     return pairs, hit_ids
+
+
+def _read_store(spark, paths: list[str], recursive: bool = False) -> DataFrame:
+    """The signature store generations at ``paths`` as one relation,
+    read with :data:`SIG_STORE_SCHEMA` (no schema-inference job).
+
+    An explicit schema would read a generation written in another layout
+    (the per-doc signature rows before r15, with no ``members``/``rep``)
+    as NULLs, so one data-file footer per generation dir is checked
+    first — a pyarrow metadata read, no Spark job — and such a store
+    raises ``ValueError``. ``recursive`` reads every parquet file under
+    the paths (a store whose generations are subdirs)."""
+    checked = set()
+    for path in map(Path, paths):
+        files = path.rglob("*.parquet") if recursive else path.glob("*.parquet")
+        for f in sorted(files):
+            hidden = any(x.startswith((".", "_")) for x in f.relative_to(path).parts)
+            if hidden or f.parent in checked:
+                continue
+            checked.add(f.parent)
+            names = pa_pq.read_schema(f).names
+            if "members" not in names or "rep" not in names:
+                raise ValueError(
+                    f"signature store generation {f.parent} is not in the "
+                    "grouped (r15) format — rebuild it with build_signature_store"
+                )
+    reader = spark.read.schema(SIG_STORE_SCHEMA)
+    if recursive:
+        reader = reader.option("recursiveFileLookup", "true")
+    return reader.parquet(*paths)
 
 
 def incremental_dedup_from_store(
@@ -792,18 +832,15 @@ def incremental_dedup_from_store(
       (m0..m{N_HASHES-1}, members, rep — :func:`signature_groups`
       output, maintained by appending each ingested batch's groups), not
       recomputed AND not regrouped: steady-state per-batch cost never
-      re-tokenizes the corpus, and since r15 never re-shuffles the
-      ever-growing store either (guide §2.4 — the per-batch
-      O(|store|) group exchange + eager checkpoint job are gone; the
-      candidate stage reads the grouped parquet straight into the rep
-      band join). Cross-generation group fragmentation is harmless —
-      see :func:`_incremental_candidates`.
+      re-tokenizes the corpus, and no store row is exchanged — the
+      store feeds one map-side join against the broadcast batch bands,
+      and only its hit rows move on (:func:`_incremental_candidates`).
+      Cross-generation group fragmentation is harmless (same place).
     - Exact-Jaccard verification tokenizes ONLY the corpus docs that
       actually appear in a candidate pair (fetch-by-id: a semi-join of
-      the corpus on the candidates' distinct dup-side ids) plus the
-      batch — at 100 TB the candidate-hit set is orders of magnitude
-      smaller than the corpus, so the verify stage's scan cost tracks
-      the batch too.
+      the corpus on the hit groups' members) plus the batch — at
+      100 TB the candidate-hit set is orders of magnitude smaller than
+      the corpus, so the verify stage's scan cost tracks the batch too.
 
     Signatures (stored and batch) are the row-local md5-mod-P path
     (:func:`signatures_rowlocal`), verified on row-local xxhash64 token
@@ -815,59 +852,50 @@ def incremental_dedup_from_store(
     ``store_dirs``: explicit store generation dirs to read instead of a
     recursive listing of ``store_path`` — the ingest loop's write-first
     layout (r16) appends the CURRENT batch's groups before computing the
-    report, so it must read every generation EXCEPT its own.
+    report, so it must read every generation EXCEPT its own. The store
+    must not hold the incoming docs (they would pair with themselves);
+    that is also why the store-side verify rows need no anti join
+    against the batch.
 
     Same output contract as :func:`incremental_minhash_dedup`; identical
     results for identical inputs, since the store holds exactly the
     signatures the self-contained variant recomputes (grouped)."""
     if store_dirs is not None:
-        gc = spark.read.parquet(*store_dirs)
+        gc = _read_store(spark, store_dirs)
     else:
         # Recursive lookup: the streaming ingest loop appends each batch
         # under a batch-scoped subdir (b<id>/ — overwrite-idempotent
         # replays, r15); a flat store reads identically, and _-prefixed
         # entries stay hidden either way.
-        gc = spark.read.option("recursiveFileLookup", "true").parquet(
-            store_path
-        )
-    if "members" not in gc.columns or "rep" not in gc.columns:
-        raise ValueError(
-            f"signature store at {store_path!r} is not in the grouped "
-            "(r15) format — rebuild it with build_signature_store"
-        )
+        gc = _read_store(spark, [store_path], recursive=True)
     # incoming is batch-sized (a streaming micro-batch in the ingest
     # loop): its md5 work fits one task, so the narrow-scan spread is
-    # pure per-batch exchange overhead — opted out.
+    # per-batch exchange overhead — opted out, as the ingest loop's own
+    # store write is (measured there).
     if batch_groups is None:
         batch_groups = signature_groups(
             signatures_rowlocal(incoming, spread=False)
         ).localCheckpoint()
     # The quadratic pair relation has exactly ONE consumer — the verify
-    # join: the fetch-by-id hit set is derived from the LINEAR rep band
-    # join + hit-group member explode inside _incremental_candidates
-    # (r16), so the r15 pairs localCheckpoint (a full per-batch driver
-    # job + a 192-partition materialization) is gone. Lineage is cut at
-    # the gc parquet scan and the materialized batch_groups, so the
-    # 16-alias constraint-propagation blowup that once forced the eager
-    # checkpoint cannot occur.
+    # join: the fetch-by-id hit set comes from the LINEAR hit join
+    # inside _incremental_candidates, so no pairs checkpoint is needed.
+    # Lineage is cut at the gc parquet scan and the materialized
+    # batch_groups, so the 16-alias constraint-propagation blowup that
+    # once forced an eager checkpoint cannot occur.
     pairs, hit_ids = _incremental_candidates(gc, batch_groups)
-    corpus_hits = corpus.join(hit_ids, "doc_id", "left_semi")
     # ``corpus`` may CONTAIN the incoming docs (the caller passes the
-    # full table so in-batch dup partners resolve too) — the exploded
-    # path's collect_set used to absorb that overlap; the row-local
-    # doc_sets relation must instead keep one row per doc explicitly,
-    # or overlapping docs join twice and duplicate every verified pair.
-    corpus_only = corpus_hits.join(
-        incoming.select("doc_id"), "doc_id", "left_anti"
-    )
-    # spread=False on BOTH sides: corpus_only is a join-bearing plan, so
+    # full table so in-batch dup partners resolve too), but the hit ids
+    # are store members, which never include a batch doc: one row per
+    # doc, so no verified pair is duplicated.
+    corpus_hits = corpus.join(hit_ids, "doc_id", "left_semi")
+    # spread=False on BOTH sides: corpus_hits is a join-bearing plan, so
     # the narrow-scan spread's .rdd partition probe would force an eager
-    # AQE materialization of the semi/anti subplan (one hidden driver
-    # job per batch — the cost the _spread_narrow_scan docstring warns
-    # about), to parallelize xxhash64 work over a candidate-hit set that
-    # is batch-sized. No _verify_build_hint: that set is batch-sized
-    # too, while the hint sizes a corpus scan.
-    doc_sets = doc_hash_sets_rowlocal(corpus_only, spread=False).unionByName(
+    # AQE materialization of the semi subplan (one hidden driver job per
+    # batch — the cost the _spread_narrow_scan docstring warns about),
+    # to parallelize xxhash64 work over a candidate-hit set that is
+    # batch-sized. No _verify_build_hint: that set is batch-sized too,
+    # while the hint sizes a corpus scan.
+    doc_sets = doc_hash_sets_rowlocal(corpus_hits, spread=False).unionByName(
         doc_hash_sets_rowlocal(incoming, spread=False)
     )
     return exact_jaccard(pairs, doc_sets, threshold=threshold).select(
@@ -886,11 +914,47 @@ def build_signature_store(spark, docs: DataFrame, store_path: str) -> None:
     write that maintains the store (r15, guide §2.4): production
     appends each ingested batch's groups (``mode("append")`` keyed by
     ingestion date — fragmentation across appends is harmless, see
-    :func:`_incremental_candidates`); here the store is (re)built whole
-    for a self-contained query."""
+    :func:`_incremental_candidates`)."""
     signature_groups(signatures_rowlocal(docs)).write.mode("overwrite").parquet(
         store_path
     )
+
+
+def _store_knobs() -> str:
+    """Every definition a stored signature row depends on: the row
+    schema, tokenization, token ids, the minhash family and its
+    parameters, and the band keys a reader derives from the row. A
+    change to any of them changes the store generation's hash, so a
+    store built under the old definitions is never served."""
+    return "\n".join(
+        [
+            SIG_STORE_SCHEMA,
+            _TOKS_SQL,
+            _TIDS_SQL,
+            *_MINHASH_SQL,
+            _BAND_KEYS_SQL,
+            repr([hash_params(i) for i in range(N_HASHES)]),
+        ]
+    )
+
+
+def corpus_signature_store(spark, sf_dir: str, corpus_sql: str) -> str:
+    """The signature store of ``sf_dir``'s documents matching the SQL
+    predicate ``corpus_sql``, built once per source fingerprint: a
+    staging generation (kind ``sig_store``) keyed on ``documents`` and
+    on :func:`_store_knobs`. Every query and every ingest run over the
+    same documents shares it; returns its dir."""
+    from distributed_query_engine_spark.catalog import Tables
+
+    gen = staging.generation(
+        "sig_store", sf_dir, ("documents",), f"{corpus_sql}\n{_store_knobs()}"
+    )
+
+    def build(d: Path) -> None:
+        docs = Tables(spark, sf_dir).documents.filter(corpus_sql)
+        build_signature_store(spark, docs, str(d))
+
+    return str(staging.publish(gen, build))
 
 
 def connected_components(

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from distributed_query_engine_spark import staging
 from distributed_query_engine_spark.catalog import Tables, local_rows
 from distributed_query_engine_spark.functions import text as T
 from distributed_query_engine_spark.functions.vectors import SCALE
@@ -205,17 +204,17 @@ def llm_dedup_incremental(spark, sf_dir):
 def llm_dedup_signature_store(spark, sf_dir):
     """Incremental dedup against a PERSISTED signature store — the
     production mechanics made real: corpus signatures are materialized
-    to parquet (the per-batch-appended store artifact) and the batch
-    dedups against the STORE, never re-tokenizing the corpus; the
-    exact-Jaccard verify fetches only candidate-hit corpus docs by id
-    (semi-join), so verify scan cost tracks the batch too. Identical
+    to parquet once per source fingerprint (the store generation
+    stream_ingest_dedup shares) and the batch dedups against the STORE,
+    never re-tokenizing the corpus; the exact-Jaccard verify fetches
+    only candidate-hit corpus docs by id (semi-join), so verify scan
+    cost tracks the batch too. Identical
     output to llm_dedup_incremental — same signatures, same candidates,
     same verification (operators/dedup.py::incremental_dedup_from_store)."""
     d = Tables(spark, sf_dir).documents
     incoming = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
-    store = staging.artifact_dir(sf_dir, "minhash_sig_store")
-    D.build_signature_store(spark, corpus, store)
+    store = D.corpus_signature_store(spark, sf_dir, "doc_id % 5 != 0")
     return D.incremental_dedup_from_store(
         spark, store, corpus, incoming, threshold=0.5
     )

@@ -406,12 +406,17 @@ _DOCS_SCHEMA = (
 )
 
 
+# The ingest sink's rows: the normalized report of every batch.
+_INGEST_SINK_SCHEMA = "new_doc bigint, dup_of bigint, jaccard double, is_dup boolean"
+
+
 def _prior_store_generations(store: Path, current: Path) -> list[str]:
-    """The signature store's generation dirs other than ``current``
-    (r16 layout: ``b_init`` plus one ``b<id>`` per applied batch).
-    A store from before that layout keeps its parquet files loose in
-    the root — resuming on one would hand ``spark.read.parquet`` an
-    empty list and fail opaquely, so it raises here instead."""
+    """The run's store generation dirs (one ``b<id>`` per applied batch)
+    other than ``current``; the corpus generation is the shared
+    ``sig_store`` one (:func:`operators.dedup.corpus_signature_store`).
+    A store from before the r16 layout keeps its parquet files loose in
+    the root — resuming on one would read none of them, so it raises
+    here instead."""
     prior = sorted(
         str(p)
         for p in store.iterdir()
@@ -420,7 +425,7 @@ def _prior_store_generations(store: Path, current: Path) -> list[str]:
     if not prior and any(store.glob("*.parquet")):
         raise RuntimeError(
             f"signature store {store} predates the r16 generation layout "
-            "(loose parquet files, no b_init/b<id> generation dirs); "
+            "(loose parquet files, no b<id> generation dirs); "
             "rebuild it with a fresh (non-resumed) run"
         )
     return prior
@@ -439,15 +444,17 @@ def stream_ingest_dedup(
     (maxFilesPerTrigger=1 over deterministic slices), and each
     ``foreachBatch`` body (1) dedups the batch against the SIGNATURE
     STORE via :func:`operators.dedup.incremental_dedup_from_store`
-    (batch bands broadcast; the GROUPED store — signature_groups rows
-    since r15 — is read straight into the rep band join, never
-    shuffled or regrouped), (2) appends the batch's own signature
-    GROUPS to the store FIRST (write-first, r16: that one parquet write
-    doubles as the lineage cut the per-batch localCheckpoint used to
-    pay a separate job for; the report's store read lists prior
-    generation dirs only), and (3) appends the verified near-dup report
-    to the sink — so later batches see earlier ones, exactly like
-    sequential production ingestion.
+    (the batch's group bands, member lists carried, are broadcast; the
+    GROUPED store — signature_groups rows since r15: the build-once
+    corpus generation plus one generation per earlier batch — is read
+    with its stated schema into one map-side hit join, so no store row
+    is exchanged or regrouped; only hit rows move on), (2) appends the
+    batch's own signature GROUPS to the store FIRST (write-first, r16:
+    that one parquet write doubles as the lineage cut the per-batch
+    localCheckpoint used to pay a separate job for; the report's store
+    read lists prior generation dirs only), and (3) appends the
+    verified near-dup report to the sink — so later batches see earlier
+    ones, exactly like sequential production ingestion.
 
     Batch ORDER is an engine detail (file mtime), so the sink contract
     must be order-independent: a cross-batch pair is discovered exactly
@@ -484,20 +491,17 @@ def stream_ingest_dedup(
     from distributed_query_engine_spark.operators import dedup as D
 
     d_all = Tables(spark, sf_dir).documents
-    corpus = d_all.filter(F.col("doc_id") % 5 != 0)
-    # pid-keyed like sink/ckpt below — unlike the artifact dirs that
-    # are rebuilt idempotently per call, this store MUTATES during the
-    # run (per-batch appends), so a concurrent process sharing the path
+    # The corpus side (llm_dedup_incremental's split) is the build-once
+    # signature store generation every call and llm_dedup_signature_store
+    # share; the batches' generations are this run's own.
+    corpus_store = D.corpus_signature_store(spark, sf_dir, "doc_id % 5 != 0")
+    # pid-keyed like sink/ckpt below: this store MUTATES during the run
+    # (per-batch generations), so a concurrent process sharing the path
     # rmtrees/appends under this run's feet and the sink gains phantom
     # pairs (observed r9: two concurrent driver sims → 24397 vs 22319).
     store = str(
         staging.run_dir("sig_store_stream", staging.key(sf_dir), keep=_resume)
     )
-    if not _resume:
-        # generation-dir layout (r16): the initial build is one more
-        # generation subdir, so each batch's store read is an explicit
-        # list of PRIOR generation dirs (write-first layout below)
-        D.build_signature_store(spark, corpus, str(Path(store) / "b_init"))
 
     # the INCOMING batch (doc_id % 5 = 0 — llm_dedup_incremental's split)
     # as n slices keyed (doc_id div 5) mod n
@@ -548,17 +552,17 @@ def stream_ingest_dedup(
             # job is gone. The report's store read lists the PRIOR
             # generation dirs explicitly, so the batch never sees its own
             # signatures (no self-pairs).
-            # spread=True: the micro-batch arrives as ONE file split, so
-            # unspread md5/minhash work runs on one core (~0.5 s/batch
-            # measured at sf0.1); the exchange moves only the batch's
-            # compact rows. Store file count is unaffected — the
-            # signature_groups groupBy re-partitions anyway and AQE
-            # coalesces the tiny shuffle before the write (r16; the old
-            # "32 tiny store files" caveat predates the r15 grouped store).
+            # spread=False: the micro-batch is one file split, and its
+            # md5/minhash work fits one task. Spreading it first costs one
+            # more exchange and job per batch and measured slower: median
+            # exec 6.8 s spread vs 6.3 s unspread per 4-batch call at
+            # sf0.01, 11.5 s vs 10.8 s at sf0.1 (BASELINE.md "stream_ingest
+            # per-batch jobs"). The signature_groups groupBy partitions the
+            # rows either way and AQE coalesces that shuffle before the write.
             D.signature_groups(
-                D.signatures_rowlocal(batch_df, spread=True)
+                D.signatures_rowlocal(batch_df, spread=False)
             ).write.mode("overwrite").parquet(str(store_b))
-            gn = spark.read.parquet(str(store_b))
+            gn = spark.read.schema(D.SIG_STORE_SCHEMA).parquet(str(store_b))
             prior_dirs = _prior_store_generations(Path(store), store_b)
             report = D.incremental_dedup_from_store(
                 spark,
@@ -567,7 +571,7 @@ def stream_ingest_dedup(
                 batch_df,
                 threshold=threshold,
                 batch_groups=gn,
-                store_dirs=prior_dirs,
+                store_dirs=[corpus_store, *prior_dirs],
             )
             both_batch = F.col("dup_of") % 5 == 0
             normalized = report.select(
@@ -616,7 +620,11 @@ def stream_ingest_dedup(
     )
     # recursive: batches live in sink/b<id> subdirs; _applied is
     # _-prefixed and therefore invisible to the file index
-    return spark.read.option("recursiveFileLookup", "true").parquet(str(sink))
+    return (
+        spark.read.schema(_INGEST_SINK_SCHEMA)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(sink))
+    )
 
 
 STRAGGLER_CUTOFF = "2024-01-06 00:00:00"
@@ -697,7 +705,8 @@ def run_foreach_batch_parquet(
 
     writer = result.writeStream.foreachBatch(write_batch).outputMode(output_mode)
     _run_available_now(spark, writer, name, ckpt, _state_partitions())
-    return spark.read.parquet(str(sink))
+    # the sink holds result's rows: its schema needs no inference job
+    return spark.read.schema(result.schema).parquet(str(sink))
 
 
 def tumbling_window_agg(events: DataFrame) -> DataFrame:
@@ -1130,11 +1139,13 @@ def stream_cdc_apply(
     run_key = f"{name}-{staging.key(sf_dir)}"
     root = staging.run_dir("cdc_dim", run_key)
     (root).mkdir(parents=True, exist_ok=True)
-    Tables(spark, sf_dir).customer.write.mode("overwrite").parquet(
-        str(root / "v0")
-    )
+    customer = Tables(spark, sf_dir).customer
+    customer.write.mode("overwrite").parquet(str(root / "v0"))
     pointer = root / "CURRENT"
     pointer.write_text("v0")
+    # version -> the schema of the frame written there: a snapshot read
+    # passes it and launches no inference job
+    written = {"v0": customer.schema}
 
     # the deterministic CDC batch (operators/cdc.cdc_batch over the
     # customer snapshot) as n slices keyed k mod n — a disjoint key
@@ -1151,16 +1162,21 @@ def stream_cdc_apply(
     batches = _slice_stream(spark, slices, "k long, op string, new_bal double")
     ckpt = staging.run_dir("checkpoints", run_key)
 
+    def snapshot() -> DataFrame:
+        v = pointer.read_text()
+        return spark.read.schema(written[v]).parquet(str(root / v))
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        snap = spark.read.parquet(str(root / pointer.read_text()))
         out = root / f"v_b{batch_id}"
-        apply_cdc(snap, batch_df).write.mode("overwrite").parquet(str(out))
+        merged = apply_cdc(snapshot(), batch_df)
+        merged.write.mode("overwrite").parquet(str(out))
+        written[out.name] = merged.schema
         pointer.write_text(out.name)
 
     _run_available_now(
         spark, batches.writeStream.foreachBatch(process), name, ckpt, {}
     )
-    return spark.read.parquet(str(root / pointer.read_text()))
+    return snapshot()
 
 
 def semi_join_converting_clicks(events: DataFrame) -> DataFrame:
@@ -1305,7 +1321,9 @@ def stream_mv_refresh(
         )
         merged = batch_df
         if prev_gens:
-            prev = spark.read.parquet(str(Path(mv_dir) / f"gen={prev_gens[-1]}"))
+            prev = spark.read.schema(agg.schema).parquet(
+                str(Path(mv_dir) / f"gen={prev_gens[-1]}")
+            )
             carried = prev.join(batch_df.select(*keys), keys, "left_anti")
             merged = carried.unionByName(batch_df)
         merged.write.mode("overwrite").parquet(
@@ -1322,7 +1340,10 @@ def stream_mv_refresh(
     gens = sorted(
         int(p.name.split("=", 1)[1]) for p in Path(mv_dir).glob("gen=*")
     )
-    return spark.read.parquet(str(Path(mv_dir) / f"gen={gens[-1]}"))
+    # every generation holds agg's rows: no inference job
+    return spark.read.schema(agg.schema).parquet(
+        str(Path(mv_dir) / f"gen={gens[-1]}")
+    )
 
 
 # Crash injection for the stream_ingest_dedup recovery test: batch_ids

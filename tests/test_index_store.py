@@ -220,3 +220,38 @@ def test_crash_anywhere_in_a_write_leaves_the_committed_index(
     if kind == "bm25":
         for p in (idx, ref):
             spark.sql(f"DROP TABLE IF EXISTS bm25_store_test_{os.path.basename(p)}")
+
+
+def test_bm25_search_registers_its_table_once_per_manifest(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A search registers the postings table (CREATE, ADD PARTITION,
+    REFRESH) only when the MANIFEST differs from the one this process
+    last registered it at, or the table is gone: an unchanged second
+    search issues no DDL; a search after an append, or after the table
+    was dropped, registers it again and sees the new segment."""
+    life = _Lifecycle("bm25", spark, sf_dir)
+    idx = str(tmp_path / "idx")
+    tbl = f"bm25_store_test_{os.path.basename(idx)}"
+    life.build(idx)
+    sql, ddl = spark.sql, []
+
+    def logged(q, *a, **kw):
+        if q.split(None, 1)[0].upper() in ("CREATE", "ALTER", "REFRESH"):
+            ddl.append(q.split(None, 1)[0].upper())
+        return sql(q, *a, **kw)
+
+    monkeypatch.setattr(spark, "sql", logged)
+    try:
+        pre = life.search(idx)
+        assert ddl == ["CREATE", "ALTER", "REFRESH"]
+        assert life.search(idx) == pre
+        assert len(ddl) == 3
+        life.append(idx)
+        post = life.search(idx)
+        assert len(ddl) == 6 and post != pre
+        sql(f"DROP TABLE {tbl}")
+        assert life.search(idx) == post
+        assert len(ddl) == 9
+    finally:
+        sql(f"DROP TABLE IF EXISTS {tbl}")

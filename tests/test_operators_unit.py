@@ -4,6 +4,8 @@ these edges, cf. its partial Hive type map)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -559,6 +561,55 @@ def test_signature_store_variant_matches_inline_incremental(spark, sf_dir):
     assert inline == stored
 
 
+def test_corpus_signature_store_is_built_once_per_definition(spark, sf_dir):
+    """The corpus store is one staging generation: a second call serves
+    it without a rebuild, and its hash covers every definition a stored
+    row depends on, so changing any of them names a new generation."""
+    from distributed_query_engine_spark import staging
+
+    pred = "doc_id % 5 != 0"
+    store = D.corpus_signature_store(spark, sf_dir, pred)
+    marker = (Path(store) / staging.MARKER).stat().st_mtime_ns
+    assert D.corpus_signature_store(spark, sf_dir, pred) == store
+    assert (Path(store) / staging.MARKER).stat().st_mtime_ns == marker
+
+    def gen_dir():
+        knobs = f"{pred}\n{D._store_knobs()}"
+        return str(staging.generation("sig_store", sf_dir, ("documents",), knobs).dir)
+
+    assert gen_dir() == store
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("SIG_STORE_SCHEMA", "_TOKS_SQL", "_TIDS_SQL", "_BAND_KEYS_SQL"):
+            mp.setattr(D, name, getattr(D, name) + " ")
+            assert gen_dir() != store, name
+            mp.undo()
+        mp.setattr(D, "_MINHASH_SQL", [*D._MINHASH_SQL[:-1], "0 AS m15"])
+        assert gen_dir() != store
+        mp.undo()
+        mp.setattr(D, "hash_params", lambda i: (1, i))
+        assert gen_dir() != store
+
+
+def test_store_read_rejects_an_ungrouped_generation(spark, tmp_path):
+    """The store is read with its stated schema, which would take a
+    generation without members/rep as NULLs: the footer check raises
+    instead, for a recursive store and an explicit generation list."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = tmp_path / "store"
+    (store / "b0").mkdir(parents=True)
+    per_doc = {"doc_id": [1, 2], **{c: [7, 8] for c in D.SIG_COLS}}
+    pq.write_table(pa.table(per_doc), store / "b0" / "part-0.parquet")
+    docs = _docs(spark, [(1, "a b", "en")])
+    with pytest.raises(ValueError, match="grouped"):
+        D.incremental_dedup_from_store(spark, str(store), docs, docs)
+    with pytest.raises(ValueError, match="grouped"):
+        D.incremental_dedup_from_store(
+            spark, str(store), docs, docs, store_dirs=[str(store / "b0")]
+        )
+
+
 def test_grouped_store_fragmented_generations_match_inline(
     spark, sf_dir, tmp_path
 ):
@@ -993,13 +1044,15 @@ def test_stream_ingest_dedup_crash_before_marker_replays_row_identical(spark, sf
 
 
 # py4j round trips to BUILD (not run) one ingest micro-batch's two
-# DataFrames: 275 and 1,009 measured at sf0.001 with the row-local
-# expressions as SQL text, plus 10% (the Column-tree builders took
-# 1,472 and 3,125). Each Column node is one driver→JVM call (~0.2 ms), so
-# a builder that goes back to Column trees for the signatures, band
-# keys, first-band predicate or verify sets blows these by thousands.
-INGEST_SIG_GROUPS_PY4J_BUDGET = 302
-INGEST_REPORT_PY4J_BUDGET = 1109
+# DataFrames: 219 and 692 measured at sf0.001 with the row-local
+# expressions (tokenization included) as SQL text and one store hit
+# join, plus 10% (275 and 1,009 before the tokenization and the hit
+# join; the Column-tree builders took 1,472 and 3,125). Each Column node
+# is one driver→JVM call (~0.2 ms), so a builder that goes back to
+# Column trees for the signatures, band keys, first-band predicate or
+# verify sets blows these by thousands.
+INGEST_SIG_GROUPS_PY4J_BUDGET = 240
+INGEST_REPORT_PY4J_BUDGET = 761
 
 
 def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
@@ -1023,7 +1076,7 @@ def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
             d_all,
             batch,
             threshold=0.5,
-            batch_groups=spark.read.parquet(store_b),
+            batch_groups=spark.read.schema(D.SIG_STORE_SCHEMA).parquet(store_b),
             store_dirs=[str(tmp_path / "b_init")],
         )
 
@@ -1034,6 +1087,69 @@ def test_ingest_batch_build_py4j_round_trip_budget(spark, sf_dir, tmp_path):
     print(f"py4j round trips: signature groups {n_sig}, report {n_report}")
     assert n_sig <= INGEST_SIG_GROUPS_PY4J_BUDGET, n_sig
     assert n_report <= INGEST_REPORT_PY4J_BUDGET, n_report
+
+
+# Spark jobs one ingest micro-batch may launch: the store generation
+# write (group shuffle, write), the report's query stages (batch bands
+# broadcast, the hit-id branch's pruned copy of it, member fan-out
+# shuffle, hit-id and doc-set broadcasts) and the sink write — 8 at
+# sf0.001 and sf0.01, where 16 ran before the store schema was stated
+# and the store joined once.
+INGEST_BATCH_JOB_BUDGET = 11
+
+_INGEST_JOBS_RUN = """
+import sys
+sys.path.insert(0, {repo!r})
+from distributed_query_engine_spark.session import get_spark
+spark = get_spark("ingest-jobs", extra_conf={{
+    "spark.eventLog.enabled": "true",
+    "spark.eventLog.dir": {log_uri!r},
+    "spark.eventLog.rolling.enabled": "false",
+    "spark.eventLog.compress": "false",
+}})
+from distributed_query_engine_spark.streaming import ops
+print("rows", ops.stream_ingest_dedup(spark, {sf_dir!r}).count())
+spark.stop()
+"""
+
+
+def test_ingest_micro_batch_job_budget(sf_dir, tmp_path):
+    """Count the jobs of every ``ingest_dedup b<id>`` description in the
+    event log of one stream_ingest_dedup run (its own Spark application:
+    the event log is a launch-time setting)."""
+    import json
+    import os
+    import re
+    import subprocess
+    import sys
+    from collections import Counter
+
+    from tests.conftest import REPO
+
+    logs = tmp_path / "events"
+    logs.mkdir()
+    run = _INGEST_JOBS_RUN.format(
+        repo=str(REPO), log_uri=logs.as_uri(), sf_dir=sf_dir
+    )
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "2g"}
+    out = subprocess.run(
+        [sys.executable, "-c", run], cwd=REPO, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert int(out.stdout.split("rows", 1)[1]) > 0
+    (log,) = logs.iterdir()
+    jobs: Counter = Counter()
+    for line in log.read_text().splitlines():
+        e = json.loads(line)
+        if e["Event"] == "SparkListenerJobStart":
+            desc = e.get("Properties", {}).get("spark.job.description") or ""
+            m = re.match(r"ingest_dedup (b\d+) ", desc)
+            if m:
+                jobs[m.group(1)] += 1
+    print(f"jobs per micro-batch: {dict(jobs)}")
+    assert len(jobs) >= 4
+    assert max(jobs.values()) <= INGEST_BATCH_JOB_BUDGET, jobs
 
 
 # py4j round trips to BUILD (not run) three llm_batch queries through
